@@ -765,10 +765,13 @@ def _run_curate(args) -> int:
     per-stage survivor report (<output>/report.json).
 
     Each stage is declarative on top of the ops/ library, so Catalyst
-    fuses the narrow ones; the per-stage counts cost one action each
-    (documented — drop the report for a single-action production run).
+    fuses the narrow ones. The recipe is one Spark action, the write,
+    after the id pre-check that must fail before anything is written
+    (its scan also counts the input). Every later stage's survivor count
+    is an Observation collected by the write job as it reads that stage's
+    node, which it does exactly once.
     Determinism end to end: no RNG, agg+join dedup, salted-md5 sample."""
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     from qamd_spark.ops import dedup as dd
@@ -784,26 +787,35 @@ def _run_curate(args) -> int:
         df = raw.withColumnRenamed(args.id_col, "doc_id").withColumnRenamed(
             args.text_col, "text"
         )
-        if df.filter(
-            F.col("doc_id").cast("long").isNull() & F.col("doc_id").isNotNull()
-        ).limit(1).count():
+        # The one action before the write: it must fail before anything
+        # is written, and its scan of the input also counts it.
+        n_read, n_bad = df.agg(
+            F.count(F.lit(1)),
+            F.count_if(
+                F.col("doc_id").try_cast("long").isNull()
+                & F.col("doc_id").isNotNull()
+            ),
+        ).first()
+        if n_bad:
             raise SystemExit(
                 f"id column {args.id_col!r} has values not castable to long"
             )
         df = df.withColumn("doc_id", F.col("doc_id").cast("long"))
-        report = {"input": args.input, "stages": []}
+
+        # Every later count is an Observation that the write job collects.
+        # Each observed node sits above the dedup join: when Spark proves
+        # one join side empty it drops the whole join subtree, and the
+        # observations inside it with it.
+        stages = [("read", n_read)]
 
         def stage(name, out_df):
-            n = out_df.count()
-            report["stages"].append({"stage": name, "rows": n})
-            return out_df
+            obs = Observation(f"qamd-curate-{name}")
+            stages.append((name, obs))
+            return out_df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-        df = stage("read", df)
         if not args.no_normalize:
-            df = stage(
-                "normalize",
-                df.withColumn("text", tx.normalize_ws(F.col("text"))),
-            )
+            df = df.withColumn("text", tx.normalize_ws(F.col("text")))
+            stages.append(("normalize", n_read))  # a projection keeps rows
         if args.dedup == "exact":
             dups = dd.exact_duplicates(df).filter(F.col("is_dup")).select("doc_id")
             df = stage("dedup_exact", df.join(dups, "doc_id", "left_anti"))
@@ -865,8 +877,16 @@ def _run_curate(args) -> int:
             df.write.mode("overwrite").json(data)
         else:
             df.write.mode("overwrite").parquet(data)
-        report["output"] = data
-        report["format"] = args.format
+        report = {
+            "input": args.input,
+            "stages": [
+                {"stage": name,
+                 "rows": n if isinstance(n, int) else n.get["rows"]}
+                for name, n in stages
+            ],
+            "output": data,
+            "format": args.format,
+        }
         with open(args.output + "/report.json", "w") as f:
             json.dump(report, f, indent=2)
         print(json.dumps({"status": "ok", "output": args.output,
@@ -882,7 +902,8 @@ def _run_export(args) -> int:
     shards. JSONL writes are Spark's native json sink (one object per
     line, splittable downstream); this is the export half of the
     `jsonl:` source."""
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = session.get_spark("qamd_spark.export", master=args.master)
@@ -890,10 +911,11 @@ def _run_export(args) -> int:
         df = io.read_table(spark, args.input)
         if args.repartition:
             df = df.repartition(args.repartition)
-        # count BEFORE the write: re-reading the fresh JSONL would need
-        # schema inference, which throws on an empty (but valid) output
-        # and costs a redundant second full scan otherwise
-        n = df.count()
+        # the row count rides on the write job: re-reading the fresh JSONL
+        # would need schema inference, which throws on an empty (but
+        # valid) output, and a count() before the write scans twice
+        obs = Observation("qamd-export")
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if args.format == "jsonl":
             df.write.mode("overwrite").json(args.output)
         elif args.format == "orc":
@@ -901,7 +923,7 @@ def _run_export(args) -> int:
         else:
             df.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"status": "ok", "format": args.format,
-                          "output": args.output, "rows": n}))
+                          "output": args.output, "rows": obs.get["rows"]}))
         return 0
     finally:
         if not preexisting:

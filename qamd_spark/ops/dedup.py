@@ -1278,10 +1278,6 @@ def setsim_join(
     # filter; the exact verify below is unchanged, so results are
     # bit-identical (the DuckDB all-pairs oracle re-proves this on
     # every gate run).
-    alpha2 = F.floor(
-        ((F.col("na") + F.col("nb")) * t_num + t_num + t_den - 1)
-        / F.lit(t_num + t_den)
-    )
     cand = (
         a.join(b, (a["token"] == b["tok_b"]) & (a["doc_a"] < b["doc_b"]))
         .filter(
@@ -1301,7 +1297,7 @@ def setsim_join(
             + F.least(
                 F.col("na") - 1 - F.col("pam"), F.col("nb") - 1 - F.col("pbm")
             )
-            >= alpha2
+            >= alpha
         )
         .select("doc_a", "doc_b")
     )

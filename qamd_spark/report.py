@@ -219,10 +219,17 @@ def _slug(rule) -> str:
     lookup builds ``getElementById('loc-' + rule)``, so the id and the
     ``data-rule`` attribute must both survive names with whitespace or
     punctuation. Snake_case names (every built-in rule) pass through
-    unchanged, keeping the golden report byte-identical."""
+    unchanged, keeping the golden report byte-identical. Any other name
+    gets a short hash of the raw name appended, so names that differ
+    only in replaced characters ('a b', 'a.b') keep distinct ids."""
+    import hashlib
     import re as _re
 
-    return _re.sub(r"[^A-Za-z0-9_-]", "_", str(rule))
+    name = str(rule)
+    slug = _re.sub(r"[^A-Za-z0-9_-]", "_", name)
+    if slug == name:
+        return slug
+    return slug + "-" + hashlib.md5(name.encode("utf-8")).hexdigest()[:8]
 
 
 def to_html(doc: dict) -> str:

@@ -9,7 +9,8 @@ r1 and r2 code as git worktrees (.ab/r1, .ab/r2), runs the SAME input
 through each code version in fresh JVM children, ABAB-interleaved within
 ONE session, and reports min-of-trials per version plus pairwise ratios.
 
-Usage: python scripts/ab_flagship.py [--trials N] [--sf 0.1]
+Usage: python scripts/ab_flagship.py [--trials N] [--versions r4,head]
+(the default compares the round-4 snapshot with the working tree, `head`)
 Writes JSON to stdout; meant to be pasted into BENCH/ANALYSIS.md.
 """
 
@@ -109,7 +110,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--trials", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--versions", default="r1,r2,r3")
+    ap.add_argument("--versions", default="r4,head")
     ap.add_argument(
         "--queries",
         default="",

@@ -328,6 +328,166 @@ def test_cli_curate_end_to_end(tmp_path, spark):
     assert set(r["lang"] for r in got3.select("lang").distinct().collect()) == {"en"}
 
 
+def _sequential_curate_counts(spark, path, dedup="exact", normalize=True,
+                              min_quality=0.5, langs=None, sample_pct=None):
+    """Reference for the curate report: the recipe rebuilt stage by stage
+    with a plain count() after each stage (each stage cached, so a count
+    runs only its own stage). Returns the (stage, rows) list and the
+    sorted survivor doc_ids."""
+    from pyspark.sql import functions as F
+
+    from qamd_spark import ngram
+    from qamd_spark.ops import dedup as dd
+    from qamd_spark.ops import sampling as smp
+    from qamd_spark.ops import text as tx
+
+    df = spark.read.parquet(path).withColumn(
+        "doc_id", F.col("doc_id").cast("long"))
+    counts, cached = [], []
+
+    def stage(name, d):
+        cached.append(d.cache())
+        counts.append((name, d.count()))
+        return d
+
+    df = stage("read", df)
+    if normalize:
+        df = stage("normalize",
+                   df.withColumn("text", tx.normalize_ws(F.col("text"))))
+    if dedup == "exact":
+        dups = dd.exact_duplicates(df).filter("is_dup").select("doc_id")
+        df = stage("dedup_exact", df.join(dups, "doc_id", "left_anti"))
+    elif dedup == "minhash":
+        dups = dd.minhash_duplicates(df).select("doc_id")
+        df = stage("dedup_minhash", df.join(dups, "doc_id", "left_anti"))
+    elif dedup == "span":
+        cleaned = dd.span_dedup(df).select(
+            "doc_id", F.col("clean_text").alias("text"))
+        df = stage("dedup_span", df.drop("text").join(cleaned, "doc_id"))
+    if min_quality > 0:
+        df = stage("quality", df.filter(
+            tx.quality_score(F.col("text")) >= F.lit(float(min_quality))))
+    if langs:
+        if "lang" not in df.columns:
+            def _lid(it):
+                for pdf in it:
+                    yield pdf.assign(
+                        lang=ngram.score_texts(pdf["text"].tolist())[0])
+
+            schema = ", ".join(f"{f} {t}" for f, t in df.dtypes)
+            df = df.mapInPandas(_lid, schema=schema + ", lang string")
+        df = stage("langid", df.filter(F.col("lang").isin(langs)))
+    if sample_pct:
+        df = stage("sample", df.filter(
+            smp.hash_pct_keep("doc_id", "curate", sample_pct)))
+    survivors = sorted(r["doc_id"] for r in df.select("doc_id").collect())
+    for d in cached:
+        d.unpersist()
+    return counts, survivors
+
+
+def test_curate_stage_counts_match_sequential_counts(tmp_path, spark,
+                                                     monkeypatch):
+    """curate is one Spark action after the id pre-check, and no stage
+    runs a count() of its own: the pre-check counts the input and the
+    later stages are Observations on the write job. The report must still
+    equal plain per-stage counts, over every dedup mode, --no-normalize,
+    both langid paths, --sample-pct, a zero-row input and a run whose
+    quality gate drops everything. The input plants exact, whitespace-only
+    and near duplicates so the exact and MinHash stages remove rows."""
+    import json as _json
+
+    import pandas as pd
+    import pytest
+
+    from qamd_spark import synth
+
+    # one short document per synthetic conversation: the first 40 words
+    # of its turns (span dedup costs grow with the words per document)
+    turns = synth.generate(n_convs=160, seed=5, hot_conv_turns=20)
+    turns = turns[turns["text"].fillna("") != ""]
+    joined = (turns.sort_values(["conv_id", "turn_idx"])
+              .groupby("conv_id", sort=True)["text"].agg(" ".join))
+    base = pd.DataFrame({
+        "doc_id": joined.index.str[4:].astype("int64"),
+        "text": [" ".join(t.split(" ")[:40]) for t in joined],
+        "lang": [("en", "en", "fr", "de")[i % 4] for i in range(len(joined))],
+    })
+    planted = [
+        base.head(12).assign(doc_id=base.doc_id.head(12) + 10_000),
+        base.iloc[20:32].assign(doc_id=base.doc_id.iloc[20:32] + 20_000,
+                                text=base.text.iloc[20:32].str.replace(
+                                    " ", "  ", n=3) + "  "),
+        base.iloc[40:52].assign(doc_id=base.doc_id.iloc[40:52] + 30_000,
+                                text=base.text.iloc[40:52] + " again"),
+    ]
+    docs = pd.concat([base, *planted], ignore_index=True)
+    with_lang = str(tmp_path / "docs.parquet")
+    no_lang = str(tmp_path / "nolang.parquet")
+    empty = str(tmp_path / "empty.parquet")
+    docs.to_parquet(with_lang, index=False)
+    docs.drop(columns="lang").to_parquet(no_lang, index=False)
+    spark.read.parquet(with_lang).limit(0).write.parquet(empty)
+
+    cases = [
+        (with_lang, dict(dedup="exact", langs=["en"], sample_pct=50)),
+        (no_lang, dict(dedup="minhash", langs=["en"])),
+        (with_lang, dict(dedup="span", normalize=False, sample_pct=70)),
+        (empty, dict(dedup="span", langs=["en"], sample_pct=50)),
+        (with_lang, dict(dedup="none", min_quality=1.5, langs=["en", "fr"])),
+    ]
+    df_cls = type(spark.range(1))
+    real_count = df_cls.count
+    reports = []
+    for i, (path, kw) in enumerate(cases):
+        argv = ["curate", "--input", path, "--output", str(tmp_path / f"o{i}"),
+                "--dedup", kw["dedup"], "--master", "local[4]"]
+        if not kw.get("normalize", True):
+            argv.append("--no-normalize")
+        if "min_quality" in kw:
+            argv += ["--min-quality", str(kw["min_quality"])]
+        if kw.get("langs"):
+            argv += ["--langs", ",".join(kw["langs"])]
+        if kw.get("sample_pct"):
+            argv += ["--sample-pct", str(kw["sample_pct"])]
+
+        calls = []
+
+        def counting(self):
+            calls.append(1)
+            return real_count(self)
+
+        with monkeypatch.context() as m:
+            m.setattr(df_cls, "count", counting)
+            assert main.main(argv) == 0
+        assert calls == [], kw
+
+        rep = _json.load(open(tmp_path / f"o{i}" / "report.json"))
+        want, survivors = _sequential_curate_counts(spark, path, **kw)
+        got = [(s["stage"], s["rows"]) for s in rep["stages"]]
+        assert got == want, kw
+        out = spark.read.parquet(str(tmp_path / f"o{i}" / "data"))
+        assert sorted(r["doc_id"] for r in out.collect()) == survivors
+        reports.append(dict(got))
+
+    # non-vacuous: each dedup mode removes rows, and the edge cases hit 0
+    exact, minhash, span, zero, dropped = reports
+    assert exact["dedup_exact"] < exact["normalize"]
+    assert minhash["dedup_minhash"] < minhash["normalize"]
+    assert span["dedup_span"] == span["read"]  # span rewrites text, keeps rows
+    assert zero["read"] == 0 and zero["sample"] == 0
+    assert dropped["read"] > 0 and dropped["quality"] == 0
+
+    # the pre-check stops a non-numeric id before anything is written
+    # (with ANSI casts on, a plain cast would raise a cast error instead)
+    bad = str(tmp_path / "bad_ids.parquet")
+    docs.head(3).assign(doc_id=["1", "x2", None]).to_parquet(bad, index=False)
+    with pytest.raises(SystemExit, match="not castable to long"):
+        main.main(["curate", "--input", bad, "--output",
+                   str(tmp_path / "bad_out"), "--master", "local[4]"])
+    assert not os.path.exists(tmp_path / "bad_out" / "data")
+
+
 def test_cli_validate(tmp_path):
     """validate: lints a rules.yaml — ok + enabled list on the default
     config, exit 1 + error string on an out-of-bounds setting."""

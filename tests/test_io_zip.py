@@ -174,20 +174,29 @@ def test_cli_run_over_jsonl(tmp_path, spark):
     assert a == b
 
 
-def test_cli_export_roundtrip(tmp_path, spark):
+def test_cli_export_roundtrip(tmp_path, spark, capsys):
     """export: parquet -> JSONL shards -> parquet, values preserved
-    (including the typed ts through the jsonl: source's parser)."""
+    (including the typed ts through the jsonl: source's parser). The
+    printed row count comes from the write job itself, so an empty input
+    prints rows: 0."""
+    import json as _json
+
     from qamd_spark import main, synth
+
+    def printed_rows():
+        return _json.loads(capsys.readouterr().out.splitlines()[-1])["rows"]
 
     src = str(tmp_path / "in.parquet")
     synth.write_parquet(src, n_convs=6, seed=9)
     n = spark.read.parquet(src).count()
 
     jl = str(tmp_path / "jl")
+    capsys.readouterr()
     rc = main.main(["export", "--input", src, "--output", jl,
                     "--format", "jsonl", "--repartition", "2",
                     "--master", "local[4]"])
     assert rc == 0
+    assert printed_rows() == n
     import glob
     assert len(glob.glob(jl + "/part-*")) == 2
 
@@ -202,6 +211,15 @@ def test_cli_export_roundtrip(tmp_path, spark):
          .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
          .orderBy("conv_id", "turn_idx").collect())
     assert len(a) == n and a == b
+
+    empty = str(tmp_path / "empty.parquet")
+    spark.read.parquet(src).limit(0).write.parquet(empty)
+    for fmt, extra in (("jsonl", ["--repartition", "2"]), ("parquet", [])):
+        rc = main.main(["export", "--input", empty,
+                        "--output", str(tmp_path / f"empty_{fmt}"),
+                        "--format", fmt, *extra, "--master", "local[4]"])
+        assert rc == 0
+        assert printed_rows() == 0
 
 
 def test_spark_submit_py_files_end_to_end(tmp_path):

@@ -174,21 +174,29 @@ def test_html_rule_name_slugged_for_ids():
     """A rule name with whitespace/punctuation (possible via custom
     configs) must produce a valid HTML id and a matching data-rule
     attribute so the click-to-reveal getElementById lookup works, while
-    the visible heading keeps the raw (escaped) name (ADVICE r4)."""
+    the visible heading keeps the raw (escaped) name (ADVICE r4). Names
+    that differ only in replaced characters ('a b', 'a.b') keep distinct
+    ids, and slug-safe names pass through unchanged."""
     from qamd_spark import report
 
+    rules = ("my odd rule!", "a b", "a.b", "a_b")
     doc = {
         "metadata": {"source": "x", "variable_count": 1,
                      "raw_case_count": 1, "engine": "qamd_spark"},
         "summary": [
-            {"category": "quality", "rule": "my odd rule!",
-             "desc": "d", "action": "fail", "pass": 0, "fail": 1},
+            {"category": "quality", "rule": r, "desc": "d",
+             "action": "fail", "pass": 0, "fail": 1}
+            for r in rules
         ],
-        "locators": {"my odd rule!": {"n_fail": 1, "first": [["c0", 0]]}},
+        "locators": {r: {"n_fail": 1, "first": [["c0", 0]]} for r in rules},
     }
     got = report.to_html(doc)
-    assert "data-rule='my_odd_rule_'" in got
-    assert "id='loc-my_odd_rule_'" in got
+    # an md5 suffix, not Python's salted hash(): ids are reproducible
+    slugs = ["my_odd_rule_-cd9789f8", "a_b-0cc9cd4d", "a_b-e32b629f", "a_b"]
+    assert [report._slug(r) for r in rules] == slugs
+    for s in slugs:
+        assert got.count(f"data-rule='{s}'") == 1
+        assert got.count(f"id='loc-{s}'") == 1
     # raw name survives for display (escaped), slug only in id plumbing
     assert "data-rule-label='my odd rule!'" in got
     assert "<h3>my odd rule! (1 failing" in got
