@@ -306,9 +306,6 @@ def run_benchmarks() -> dict:
         "scd2_build",
         "triplet_mine",
         "trend_slope",
-        "spearman_signals",
-        "hybrid_search",
-        "substr_dedup",
         "tool_assoc",
         "weighted_sample",
         "skyline_docs",

@@ -342,8 +342,11 @@ def run_with_checkpoints(
             part_in = df.filter(F.col("bucket").isin(group)).drop("bucket")
         else:
             part_in = df.filter(_bucket_col(cfg).isin(group))
-        part = pipeline.label(
-            part_in, cfg, text_stats_df=ts, conv_stats_df=cs, conv_dup_df=cd
+        part = pipeline.salted_repartition(
+            pipeline.label(
+                part_in, cfg, text_stats_df=ts, conv_stats_df=cs, conv_dup_df=cd
+            ),
+            cfg,
         )
         # Per-bucket manifest counters: piggyback on the write via the
         # Observation API for normal group sizes (no extra pass). The
@@ -353,7 +356,10 @@ def run_with_checkpoints(
         # come instead from one cheap post-write aggregation over the
         # just-written parquet (reads only the bucket partition column +
         # keep; dynamic overwrite guarantees the group's partitions hold
-        # exactly this run's rows).
+        # exactly this run's rows). The Observation sits above the salted
+        # shuffle, in the write's own stage: below it, AQE drops the
+        # observed node once the labeling stages prove empty, and
+        # ``obs.get`` then fails instead of reporting zeros.
         use_obs = len(group) <= _MAX_OBSERVED_BUCKETS
         obs = Observation(f"qamd-group-{group[0]}")
         if use_obs:
@@ -366,8 +372,7 @@ def run_with_checkpoints(
                 )
             part = part.observe(obs, *metrics)
         (
-            pipeline.salted_repartition(part, cfg)
-            .write.mode("overwrite")
+            part.write.mode("overwrite")
             .partitionBy("bucket")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(store.data_dir)

@@ -13,12 +13,23 @@ aggregates; SURVEY.md §7 determinism rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qamd_spark.config import QamdConfig
 
 PPL_QUANTILES = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+
+
+def rule_hit_sums(cfg: QamdConfig) -> dict[str, Column]:
+    """Rule name → #rows whose rule_hits names it, per enabled rule in
+    registry order: the one definition of a rule's hit count, shared by
+    the per-bucket lineage and the summary report. The sum is null over
+    zero rows."""
+    return {
+        r.name: F.sum(F.array_contains("rule_hits", r.name).cast("long"))
+        for r in cfg.enabled_rules()
+    }
 
 
 def per_bucket(labeled: DataFrame, cfg: QamdConfig) -> DataFrame:
@@ -32,11 +43,9 @@ def per_bucket(labeled: DataFrame, cfg: QamdConfig) -> DataFrame:
             "ppl_quantiles"
         ),
     ]
-    rule_names = [r.name for r in cfg.enabled_rules()]
-    for name in rule_names:
-        aggs.append(
-            F.sum(F.array_contains("rule_hits", name).cast("long")).alias(f"_rh_{name}")
-        )
+    hits = rule_hit_sums(cfg)
+    rule_names = list(hits)
+    aggs += [c.alias(f"_rh_{name}") for name, c in hits.items()]
     # language histogram via conditional sums (langs are a small closed
     # set), fused into the SAME single aggregation pass
     from qamd_spark import ngram

@@ -16,7 +16,7 @@ import argparse
 import json
 import sys
 
-from qamd_spark import checkpoint, config as C, io, lineage, pipeline, report, session
+from qamd_spark import checkpoint, config as C, io, lineage, report, schema as S, session
 
 
 DEFAULT_YAML = """\
@@ -115,7 +115,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     runp.add_argument("--master", default=None)
     runp.add_argument("--summary-json", default=None)
-    runp.add_argument("--no-checkpoint", action="store_true")
     runp.add_argument(
         "--bucket-batch", type=int, default=None,
         help="buckets per checkpoint group job; default: adaptive (fresh run"
@@ -383,20 +382,15 @@ def main(argv: list[str] | None = None) -> int:
     preexisting = SparkSession.getActiveSession() is not None
     spark = session.get_spark("qamd_spark.run", master=args.master)
     try:
-        if args.no_checkpoint:
-            labeled = pipeline.run(spark, args.input, cfg)
-            (
-                pipeline.salted_repartition(labeled, cfg)
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(args.output + "/data")
-            )
-        else:
-            checkpoint.run_with_checkpoints(
-                spark, args.input, args.output, cfg,
-                bucket_batch=args.bucket_batch, progress=args.progress,
-            )
-        labeled = spark.read.parquet(args.output + "/data")
+        checkpoint.run_with_checkpoints(
+            spark, args.input, args.output, cfg,
+            bucket_batch=args.bucket_batch, progress=args.progress,
+        )
+        # explicit schema: a zero-row input writes no bucket directory,
+        # so there is nothing to infer one from
+        labeled = spark.read.schema(S.labeled_schema(cfg)).parquet(
+            args.output + "/data"
+        )
         if not args.metadata_only:
             lineage.per_bucket(labeled, cfg).write.mode("overwrite").parquet(
                 args.output + "/lineage"

@@ -1232,9 +1232,7 @@ def setsim_join(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ceil_tn = F.floor(
-        (F.col("nt") * t_num + t_den - 1) / F.lit(t_den)
-    ).cast("long")
+    ceil_tn = F.expr(f"(nt * {t_num} + {t_den - 1}) div {t_den}")
     plen = (F.col("nt") - ceil_tn + 1).cast("int")
     pref = ranked.select(
         "doc",
@@ -1256,9 +1254,8 @@ def setsim_join(
         F.col("token").alias("tok_b"),
     )
     # required overlap for J >= t: alpha = ceil(t/(1+t) * (na+nb))
-    alpha = F.floor(
-        ((F.col("na") + F.col("nb")) * t_num + t_num + t_den - 1)
-        / F.lit(t_num + t_den)
+    alpha = F.expr(
+        f"((na + nb) * {t_num} + {t_num + t_den - 1}) div {t_num + t_den}"
     )
     ubound = 1 + F.least(
         F.col("na") - 1 - F.col("pa"), F.col("nb") - 1 - F.col("pb")

@@ -32,7 +32,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qamd_spark import schema as S
@@ -438,17 +438,3 @@ def salted_repartition(df: DataFrame, cfg: QamdConfig) -> DataFrame:
     """
     salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(cfg.salt_buckets))
     return df.repartition(F.col("bucket"), salt)
-
-
-def run(
-    spark: SparkSession,
-    input_path: str,
-    cfg: QamdConfig | None = None,
-) -> DataFrame:
-    from qamd_spark import io
-
-    cfg = cfg or QamdConfig()
-    df = io.normalize_input(io.read_table(spark, input_path))
-    if "bucket" in df.columns:
-        df = df.drop("bucket")
-    return label(df, cfg)

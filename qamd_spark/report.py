@@ -23,75 +23,48 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qamd_spark.config import QamdConfig
+from qamd_spark.lineage import rule_hit_sums
 
 LOCATOR_CAP = 1000  # reference src/report/html/mod.rs:115
 
+# summarize's output contract; the cast also types the empty array that
+# a config with no enabled rules produces
+_SUMMARY_ROWS = (
+    "array<struct<rule:string,category:string,action:string,desc:string,"
+    "pass:bigint,fail:bigint>>"
+)
+
 
 def summarize(labeled: DataFrame, cfg: QamdConfig) -> DataFrame:
-    """One aggregation pass → (rule, category, action, desc, pass, fail).
+    """One aggregation pass → (rule, category, action, desc, pass, fail),
+    one row per enabled rule in registry order.
 
-    Single job: every rule's fail count is a conditional sum over
-    rule_hits, fused by whole-stage codegen — the Spark translation of the
-    reference's run-every-post-check-over-one-frequency-table pattern.
+    One global aggregate (the Spark translation of the reference's
+    run-every-post-check-over-one-frequency-table pattern) yields one
+    struct per rule: name/category/action/desc as literals, pass/fail
+    from the turn total and :func:`lineage.rule_hit_sums`. ``inline``
+    unrolls that single row, so the plan reads nothing but ``labeled``.
+    Zero enabled rules give an empty frame with the same schema; a
+    zero-row input gives pass = fail = 0.
     """
-    spark = labeled.sparkSession
-    if not cfg.enabled_rules():
-        # a config with every rule absent is valid (labels everything
-        # keep=true); stack(0, ) would be a ParseException, so short-
-        # circuit to an empty summary with the contract schema
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("rule", T.StringType()),
-                    T.StructField("category", T.StringType()),
-                    T.StructField("action", T.StringType()),
-                    T.StructField("desc", T.StringType()),
-                    T.StructField("pass", T.LongType()),
-                    T.StructField("fail", T.LongType()),
-                ]
-            ),
-        )
-    aggs = [F.count(F.lit(1)).alias("_total")]
+    hits = rule_hit_sums(cfg)
+    total = F.count(F.lit(1))
+    rows = []
     for spec in cfg.enabled_rules():
-        aggs.append(
-            F.sum(F.array_contains("rule_hits", spec.name).cast("long")).alias(
-                f"fail_{spec.name}"
+        fail = F.coalesce(hits[spec.name], F.lit(0))
+        rows.append(
+            F.struct(
+                F.lit(spec.name),
+                F.lit(spec.category),
+                F.lit(cfg.action(spec.name)),
+                F.lit(spec.desc),
+                total - fail,
+                fail,
             )
         )
-    row = labeled.agg(*aggs)
-    meta = [
-        (i, r.name, r.category, cfg.action(r.name), r.desc)
-        for i, r in enumerate(cfg.enabled_rules())
-    ]
-    meta_df = spark.createDataFrame(
-        meta, "ord int, rule string, category string, action string, desc string"
-    )
-    # one-row crossJoin (broadcast, trivial) then unpivot to registry order
-    wide = meta_df.crossJoin(F.broadcast(row))
-    stack_expr = "stack({n}, {args}) as (rule_match, fail)".format(
-        n=len(meta),
-        args=", ".join(f"'{r.name}', fail_{r.name}" for r in cfg.enabled_rules()),
-    )
-    out = (
-        wide.select("ord", "rule", "category", "action", "desc", "_total",
-                    F.expr(stack_expr))
-        .filter(F.col("rule") == F.col("rule_match"))
-        .select(
-            "ord",
-            "rule",
-            "category",
-            "action",
-            "desc",
-            (F.col("_total") - F.col("fail")).alias("pass"),
-            F.col("fail"),
-        )
-        .orderBy("ord")
-        .drop("ord")
-    )
-    return out
+    return labeled.agg(
+        F.array(*rows).cast(_SUMMARY_ROWS).alias("_rows")
+    ).select(F.inline("_rows"))
 
 
 def locators(labeled: DataFrame, cap: int = LOCATOR_CAP) -> DataFrame:

@@ -82,7 +82,7 @@ def _run_cli(tmp_path, synth_path, name, extra):
         f.write(SMALL_YAML)
     rc = main.main(
         ["run", "--input", synth_path, "--output", out, "--config", cfgp,
-         "--master", "local[4]", "--no-checkpoint"] + extra
+         "--master", "local[4]"] + extra
     )
     assert rc == 0
     with open(out + "/summary.json") as f:
@@ -114,7 +114,7 @@ def test_base64_config(tmp_path, synth_path):
     enc = base64.b64encode(SMALL_YAML.encode()).decode()
     rc = main.main(
         ["run", "--input", synth_path, "--output", out, "--master", "local[4]",
-         "--no-checkpoint", "--metadata-only", "--base64-config", enc]
+         "--metadata-only", "--base64-config", enc]
     )
     assert rc == 0
     with open(out + "/summary.json") as f:

@@ -149,7 +149,7 @@ def test_cli_run_over_jsonl(tmp_path, spark):
             f.write(_json.dumps({k: v for k, v in r.items()}) + "\n")
     out = str(tmp_path / "out")
     rc = main.main(["run", "--input", src, "--output", out,
-                    "--master", "local[4]", "--no-checkpoint"])
+                    "--master", "local[4]"])
     assert rc == 0
     got = spark.read.parquet(out + "/data")
     assert got.count() == len(pdf)
@@ -163,7 +163,7 @@ def test_cli_run_over_jsonl(tmp_path, spark):
     pdf2.to_parquet(pq)
     out2 = str(tmp_path / "out2")
     rc = main.main(["run", "--input", pq, "--output", out2,
-                    "--master", "local[4]", "--no-checkpoint"])
+                    "--master", "local[4]"])
     assert rc == 0
     a = (spark.read.parquet(out + "/data")
          .select("conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text")
@@ -255,7 +255,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     driver.write_text(
         "from qamd_spark import main\n"
         f"raise SystemExit(main.main(['run', '--input', {src!r}, "
-        f"'--output', {outd!r}, '--no-checkpoint']))\n"
+        f"'--output', {outd!r}]))\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
@@ -312,11 +312,11 @@ def test_cli_run_over_orc_and_export_orc(tmp_path, spark):
 
     out = str(tmp_path / "out")
     rc = main.main(["run", "--input", f"orc:{orc_dir}", "--output", out,
-                    "--master", "local[4]", "--no-checkpoint"])
+                    "--master", "local[4]"])
     assert rc == 0
     out2 = str(tmp_path / "out2")
     rc = main.main(["run", "--input", pq, "--output", out2,
-                    "--master", "local[4]", "--no-checkpoint"])
+                    "--master", "local[4]"])
     assert rc == 0
     cols = ["conv_id", "turn_idx", "keep", "rule_hits", "scrubbed_text"]
     a = (spark.read.parquet(out + "/data").select(*cols)

@@ -64,6 +64,21 @@ def test_pipeline_has_single_python_stage(spark, synth_path):
     assert "ArrowEvalPython" not in plan  # no scalar-UDF stages either
 
 
+def test_summary_plan_reads_only_labeled(spark, synth_path):
+    """The summary is one aggregate over the labeled frame: no literal
+    table (LocalTableScan / ExistingRDD) is read and nothing is joined."""
+    from qamd_spark import report
+
+    labeled = spark.read.parquet(synth_path).withColumn(
+        "rule_hits", F.array(F.col("role"))
+    )
+    plan = _fmt_plan(report.summarize(labeled, QamdConfig()))
+    assert "LocalTableScan" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert "Join" not in plan, plan
+    assert "Scan parquet" in plan, plan
+
+
 def test_pipeline_aggregates_are_partial_final(spark, synth_path):
     """text/conv stats must be partial+final hash aggregates (map-side
     combine before the shuffle — a hot duplicate text collapses locally)."""

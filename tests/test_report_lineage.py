@@ -20,6 +20,10 @@ def test_summary_matches_oracle(labeled, synth_pdf):
     assert summ["pass"].tolist() == orc["pass"].tolist()
     # counting contract: pass + fail == total turns for every rule
     assert ((summ["pass"] + summ["fail"]) == len(synth_pdf)).all()
+    # zero rows: every rule reports 0/0 (not null), like the oracle
+    empty = report.summarize(lab.limit(0), cfg).toPandas()
+    orc0 = oracle.summary_pdf(oracle.label_pdf(synth_pdf, cfg).iloc[:0], cfg)
+    assert empty.to_dict("records") == orc0.to_dict("records")
 
 
 def test_locators_capped_and_sorted(labeled):
@@ -106,7 +110,7 @@ def test_cli_writes_html(tmp_path, synth_path):
     out = str(tmp_path / "html_out")
     rc = main.main(
         ["run", "--input", synth_path, "--output", out, "--master", "local[4]",
-         "--no-checkpoint", "--output-format", "html"]
+         "--output-format", "html"]
     )
     assert rc == 0
     assert os.path.exists(out + "/summary.json")
@@ -114,6 +118,35 @@ def test_cli_writes_html(tmp_path, synth_path):
     doc = _json.load(open(out + "/summary.json"))
     for r in doc["summary"]:
         assert r["rule"] in html
+
+
+def test_cli_zero_row_input(spark, tmp_path):
+    """A zero-row input runs end to end through the checkpointed write:
+    every manifest says 0 rows, the summary reports 0/0 per rule and the
+    HTML sink renders it."""
+    import glob
+    import json as _json
+    import os
+
+    from qamd_spark import main
+    from qamd_spark.schema import TRANSCRIPT_SCHEMA
+
+    src = str(tmp_path / "empty.parquet")
+    spark.createDataFrame([], TRANSCRIPT_SCHEMA).write.parquet(src)
+    out = str(tmp_path / "out")
+    rc = main.main(
+        ["run", "--input", src, "--output", out, "--master", "local[4]",
+         "--output-format", "html"]
+    )
+    assert rc == 0
+    doc = _json.load(open(out + "/summary.json"))
+    assert doc["metadata"]["raw_case_count"] == 0
+    assert len(doc["summary"]) == len(QamdConfig().enabled_rules())
+    assert all(r["pass"] == r["fail"] == 0 for r in doc["summary"])
+    assert os.path.exists(out + "/summary.html")
+    manifests = glob.glob(out + "/_manifests/bucket-*.json")
+    assert len(manifests) == QamdConfig().n_buckets
+    assert sum(_json.load(open(m))["n_rows"] for m in manifests) == 0
 
 
 def test_html_report_byte_golden():
