@@ -6883,67 +6883,6 @@ def q_token_concentration(spark, sf_dir):
     )
 
 
-# Benford expected leading-digit probabilities log10(1+1/d), d=1..9 —
-# frozen decimal literals so Spark and DuckDB parse the IDENTICAL doubles
-# (computing log10 in-engine would race transcendental libm variants)
-BENFORD_P = (
-    "0.3010299956639812",
-    "0.17609125905568124",
-    "0.12493873660829992",
-    "0.09691001300805642",
-    "0.07918124604762482",
-    "0.06694678963061322",
-    "0.05799194697768673",
-    "0.05115252244738129",
-    "0.04575749056067514",
-)
-
-
-def q_benford_amounts(spark, sf_dir):
-    """Benford's-law audit on order amounts: observed vs expected
-    leading-digit distribution + per-digit chi-square contribution —
-    the fabricated-/synthetic-numeric-data screen a pipeline runs on
-    transaction-like columns before trusting them as training signal
-    (naturally occurring multi-scale amounts follow log10(1+1/d);
-    uniform or generator-striped data does not).
-
-    Exactness: the leading digit comes from the DECIMAL STRING of the
-    exact bigint floor(amount) — never from floor(log10(x)), whose
-    1-ulp races at power-of-10 boundaries differ across engines.
-    Expected counts are exact-int × frozen-literal products; each chi2
-    term is computed once per digit row, no float sums at all.
-    All 9 digits are materialized (missing digits contribute their
-    full expected mass) via a static 9-row frame.
-
-    Scale: one partial+final hash aggregate over the scan onto a 9-row
-    grid; the digit frame is a driver-side literal."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    digit = F.substring(
-        F.floor(F.col("o_totalprice")).cast("long").cast("string"), 1, 1
-    ).cast("int")
-    obs = orders.groupBy(digit.alias("digit")).agg(
-        F.count(F.lit(1)).alias("n_obs")
-    )
-    total = orders.agg(F.count(F.lit(1)).alias("n_total"))
-    digits = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
-    p = F.element_at(
-        F.array(*[F.lit(float(x)) for x in BENFORD_P]), F.col("digit")
-    )
-    grid = (
-        digits.crossJoin(F.broadcast(total))
-        .join(obs, ["digit"], "left")
-        .withColumn("n_obs", F.coalesce(F.col("n_obs"), F.lit(0)))
-    )
-    expected = F.col("n_total").cast("double") * p
-    diff = F.col("n_obs").cast("double") - expected
-    return grid.select(
-        "digit",
-        "n_obs",
-        expected.alias("expected"),
-        ((diff * diff) / expected).alias("chi2_term"),
-    )
-
-
 COLLOC_MIN_SUPPORT = 5
 COLLOC_TOPK = 30
 
@@ -6999,54 +6938,6 @@ def q_collocations(spark, sf_dir):
         j.select("w1", "w2", "c_xy", "c1", "c2", lift.alias("lift"))
         .orderBy(F.desc("lift"), F.asc("w1"), F.asc("w2"))
         .limit(COLLOC_TOPK)
-    )
-
-
-def q_revenue_by_region(spark, sf_dir):
-    """Star-join rollup across the relational side of the corpus:
-    region → nation → customer → orders → lineitem, revenue
-    Σ price·(1−discount) per region — the canonical
-    fact-table-joins-dimension-chain shape (TPC-H Q5 flavor) that
-    exercises broadcast-dimension planning on tables the transcript
-    queries never touch.
-
-    Exactness: price and discount are 2-decimal doubles; both are
-    rescaled to exact ints FIRST (floor(x·100 + 0.5) — explicit
-    half-up, round()'s tie rule differs across engines), so each line's
-    revenue contribution price_cents·(100−disc_pct) is an exact bigint
-    (≤1e9/row; Σ < 2^53 at bench scale — per-shard decimals are the
-    10^12 swap), summed exactly and divided ONCE at the end.
-
-    Scale: lineitem⨝orders and orders⨝customer are equi-joins on their
-    keys (AQE picks shuffle strategy + skew splits); nation and region
-    are broadcast by hint — the fact table never shuffles for them."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    rev = cents * (F.lit(100) - disc)
-    return (
-        li.select(F.col("l_orderkey").alias("ok"), rev.alias("rev_e4"))
-        .join(o.select(F.col("o_orderkey").alias("ok"), "o_custkey"), "ok")
-        .join(c.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey"),
-              "o_custkey")
-        .join(F.broadcast(n.select(F.col("n_nationkey").alias("c_nationkey"),
-                                   "n_regionkey")), "c_nationkey")
-        .join(F.broadcast(r.select(F.col("r_regionkey").alias("n_regionkey"),
-                                   "r_name")), "n_regionkey")
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum("rev_e4").alias("rev_e4"),
-        )
-        .select(
-            "r_name",
-            "n_lines",
-            (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias("revenue"),
-        )
     )
 
 
@@ -7864,101 +7755,6 @@ def q_tool_error_cascade(spark, sf_dir):
     )
 
 
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-shape pricing summary over lineitem: per (returnflag,
-    linestatus) the qty / base / discounted / charged sums and averages
-    — the canonical full-scan aggregate that proves classic OLAP rollups
-    next to the corpus analytics. Exactness: price/discount/tax/qty are
-    rescaled to exact ints FIRST (explicit half-up floor — round()'s tie
-    rule differs across engines); each line's discounted (e4) and
-    charged (e6) contributions are exact bigints summed exactly (int64
-    headroom ≥ 100× bench scale; per-shard decimals are the 10^12 swap);
-    every float output is ONE division (or one int64→double cast) of the
-    same exact integer on both engines. One partial+final hash aggregate
-    onto a ≤9-group grid."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    tax = F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    d = li.select(
-        "l_returnflag",
-        "l_linestatus",
-        qty.alias("q"),
-        cents.alias("p"),
-        (cents * (F.lit(100) - disc)).alias("dp"),
-        (cents * (F.lit(100) - disc) * (F.lit(100) + tax)).alias("ch"),
-        disc.alias("dc"),
-    )
-    a = d.groupBy("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum("q").alias("sum_qty"),
-        F.sum("p").alias("p_e2"),
-        F.sum("dp").alias("dp_e4"),
-        F.sum("ch").alias("ch_e6"),
-        F.sum("dc").alias("dc_e2"),
-    )
-    return a.select(
-        "l_returnflag",
-        "l_linestatus",
-        "n_lines",
-        "sum_qty",
-        (F.col("p_e2").cast("double") / F.lit(100.0)).alias("sum_base_price"),
-        (F.col("dp_e4").cast("double") / F.lit(10000.0)).alias("sum_disc_price"),
-        (F.col("ch_e6").cast("double") / F.lit(1000000.0)).alias("sum_charge"),
-        (
-            F.col("sum_qty").cast("double") / F.col("n_lines").cast("double")
-        ).alias("avg_qty"),
-        (
-            F.col("p_e2").cast("double") / (F.col("n_lines") * 100).cast("double")
-        ).alias("avg_price"),
-        (
-            F.col("dc_e2").cast("double") / (F.col("n_lines") * 100).cast("double")
-        ).alias("avg_disc"),
-    )
-
-
-LATE_SHIP_DAYS = 60
-
-
-def q_order_fulfillment(spark, sf_dir):
-    """TPC-H Q4-shape fulfillment audit: per order priority, how many
-    orders have at least one line shipped more than LATE_SHIP_DAYS after
-    the order date — the EXISTS-semi-join capability row (the join
-    carries an equi key plus a non-equi timestamp predicate, exactly the
-    shape Spark plans as SortMergeJoin LeftSemi with a join-side
-    filter). late_frac is one division of exact counts."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderpriority", "o_orderdate"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_shipdate"
-    )
-    late = o.join(
-        li,
-        (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr(f"INTERVAL {LATE_SHIP_DAYS} DAYS")
-        ),
-        "left_semi",
-    )
-    tot = o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_orders"))
-    nl = late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_late"))
-    return (
-        tot.join(nl, "o_orderpriority", "left")
-        .fillna(0, ["n_late"])
-        .select(
-            "o_orderpriority",
-            "n_orders",
-            "n_late",
-            (
-                F.col("n_late").cast("double") / F.col("n_orders").cast("double")
-            ).alias("late_frac"),
-        )
-    )
-
-
 def q_jackknife_keep(spark, sf_dir):
     """Leave-one-source-out influence audit on the quality gate: for each
     source, the corpus keep rate WITHOUT that source next to the overall
@@ -8457,54 +8253,6 @@ def q_prefix_neardup(spark, sf_dir):
     )
 
 
-def q_entity_resolution(spark, sf_dir):
-    """Entity resolution over the customer dimension: blocked pairwise
-    linkage with an edit-distance verifier — the structured-record
-    sibling of prefix_neardup (dirty CRM feeds duplicate entities with
-    single-char typos; linking them is a prerequisite for any per-entity
-    rollup). Dirty variants are stamped deterministically on both
-    engines (last name char -> 'X' for custkey%5==2). Blocking key =
-    (nation, name digits 10..17) so a last-char typo stays in its block;
-    within a block ALL ordered pairs are verified (bounded: the block
-    key fixes all but the last digit, so a block is <= ~20 records by
-    construction — this is blocking-bounds-the-quadratic, not an
-    all-pairs self-join). is_synth distinguishes planted links from the
-    natural lev-1 neighbors (adjacent custkeys), so precision of the
-    threshold is measurable from the output."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    clean = c.select(
-        (F.col("c_custkey") * 2).cast("long").alias("rec_id"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").cast("long").alias("nat"),
-    )
-    dirty = c.filter(F.col("c_custkey") % 5 == 2).select(
-        (F.col("c_custkey") * 2 + 1).cast("long").alias("rec_id"),
-        F.concat(
-            F.expr("substring(c_name, 1, length(c_name) - 1)"), F.lit("X")
-        ).alias("name"),
-        F.col("c_nationkey").cast("long").alias("nat"),
-    )
-    recs = clean.unionByName(dirty).select(
-        "rec_id", "name", "nat", F.substring("name", 10, 8).alias("blk")
-    )
-    a = recs.select(
-        F.col("rec_id").alias("rec_a"), F.col("name").alias("name_a"), "nat", "blk"
-    )
-    b = recs.select(
-        F.col("rec_id").alias("rec_b"), F.col("name").alias("name_b"), "nat", "blk"
-    )
-    pairs = a.join(b, ["nat", "blk"]).filter(F.col("rec_a") < F.col("rec_b"))
-    lev = F.levenshtein("name_a", "name_b").cast("long")
-    return (
-        pairs.select("nat", "blk", "rec_a", "rec_b", lev.alias("lev"))
-        .filter(F.col("lev") <= 1)
-        .withColumn(
-            "is_synth",
-            (F.col("rec_b") == F.col("rec_a") + 1) & (F.col("rec_a") % 2 == 0),
-        )
-    )
-
-
 def q_ngram_lm(spark, sf_dir):
     """Count-based trigram language-model training from the corpus
     itself: P(w3 | w1 w2) as exact-count ratios — the estimation step
@@ -8589,102 +8337,6 @@ def q_lm_score(spark, sf_dir):
             "CASE WHEN n_seen > 0 THEN sum_p_e6 div n_seen END"
         ).cast("long").alias("mean_p_e6"),
     )
-
-
-Q3_CUTOFF = "1998-06-01"
-
-
-def q_top_unshipped(spark, sf_dir):
-    """TPC-H Q3-shape shipping-priority top-k: revenue still in flight
-    per order for one market segment — the join-agg-global-top-k
-    capability row (Q1 = full-scan rollup, Q4 = semi-join; this adds the
-    deterministic global top-k, which Spark plans as
-    TakeOrderedAndProject: per-partition heaps + one driver merge of k
-    rows, NOT a single-partition window sort). Revenue uses the
-    pricing_summary exact-int idiom (half-up rescale first, int64 sums,
-    one final division); the top-10 order is total (rev desc, orderkey
-    asc) so ties cannot make the row set engine-dependent. Both date
-    filters reach the scans as pushed predicates; the customer segment
-    filter joins post-AQE (broadcast at test scale, shuffle at 100 TB —
-    no forced hint)."""
-    c = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .filter(F.col("o_orderdate") < F.lit(Q3_CUTOFF).cast("timestamp"))
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .filter(F.col("l_shipdate") > F.lit(Q3_CUTOFF).cast("timestamp"))
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).join(
-        c, F.col("o_custkey") == F.col("c_custkey")
-    )
-    a = (
-        j.select(
-            "l_orderkey",
-            "o_orderdate",
-            "o_orderpriority",
-            (cents * (F.lit(100) - disc)).alias("dp"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum("dp").alias("rev_e4"))
-    )
-    top = a.orderBy(F.col("rev_e4").desc(), F.col("l_orderkey").asc()).limit(10)
-    return top.select(
-        "l_orderkey",
-        "o_orderdate",
-        "o_orderpriority",
-        (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias("revenue"),
-    )
-
-
-def q_fk_integrity(spark, sf_dir):
-    """Referential-integrity audit across the star schema: orphan fact
-    rows whose foreign key misses the dimension — the data-quality
-    staple for ingest pipelines (a partial dimension load silently drops
-    every joined row downstream; this measures the blast radius BEFORE
-    the join). Partial loads are simulated deterministically on both
-    engines (customer minus custkey%11==5, orders minus orderkey%13==3).
-    Scale: each check is one LeftAnti shuffle equi-join (the dimension
-    side is broadcast at test scale, AQE decides at 100 TB) feeding a
-    partial+final count — no row ever leaves the executors; output is
-    one row per declared FK edge."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_custkey") % 11 != 5)
-        .select("c_custkey")
-    )
-    o_dim = o.filter(F.col("o_orderkey") % 13 != 3).select("o_orderkey")
-
-    def check(name, fact, dim, fk, pk):
-        orphans = fact.join(dim, fact[fk] == dim[pk], "left_anti")
-        n = fact.agg(F.count(F.lit(1)).alias("n_rows"))
-        m = orphans.agg(F.count(F.lit(1)).alias("n_orphans"))
-        return n.crossJoin(m).select(
-            F.lit(name).alias("fk_edge"),
-            "n_rows",
-            "n_orphans",
-            (
-                F.col("n_orphans").cast("double")
-                / F.col("n_rows").cast("double")
-            ).alias("orphan_frac"),
-        )
-
-    a = check("lineitem.l_orderkey->orders", li, o_dim, "l_orderkey", "o_orderkey")
-    b = check("orders.o_custkey->customer", o, cust, "o_custkey", "c_custkey")
-    return a.unionByName(b)
 
 
 def q_curriculum_buckets(spark, sf_dir):
@@ -8796,89 +8448,6 @@ def q_unicode_nfc(spark, sf_dir):
         F.length("t").cast("long").alias("n_before"),
         F.length("nfc_text").cast("long").alias("n_after"),
     )
-
-
-Q18_MIN_QTY = 180
-
-
-def q_big_spenders(spark, sf_dir):
-    """TPC-H Q18-shape large-volume-customer query: orders whose total
-    lineitem quantity exceeds a threshold, decorated with the customer
-    and ranked by order value — the HAVING-over-a-big-aggregate shape
-    that completes the relational set (Q1 rollup / Q3 top-k / Q4
-    semi-join / Q5 star join). Planned the scalable way: lineitem is
-    aggregated ONCE and the HAVING filter runs on the aggregate BEFORE
-    any join (the textbook Q18 IN-subquery rescans and re-aggregates
-    lineitem; this form is one scan, one partial+final hash aggregate,
-    then joins that touch only qualifying orders). Quantities are
-    integral doubles (verified) summed as int64 — exact. The top-100 is
-    a total order (o_totalprice desc, o_orderkey asc; orderkey unique)
-    planned as TakeOrderedAndProject, never a global sort. o_totalprice
-    is compared as the stored double on both engines (no arithmetic)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey",
-        # half-up like the pricing idiom: Spark cast truncates but DuckDB
-        # CAST rounds — floor(x+0.5) is identical on both engines
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("qty").alias("total_qty"))
-        .filter(F.col("total_qty") > Q18_MIN_QTY)
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_name"
-    )
-    j = big.join(o, F.col("l_orderkey") == F.col("o_orderkey")).join(
-        c, F.col("o_custkey") == F.col("c_custkey")
-    )
-    top = j.orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    ).limit(100)
-    return top.select(
-        "c_name", "c_custkey", "o_orderkey", "o_orderdate",
-        "o_totalprice", "total_qty",
-    )
-
-
-def q_supplier_parts(spark, sf_dir):
-    """TPC-H Q16-shape supplier-count query: distinct suppliers able to
-    supply each (brand, type, size), excluding a flagged supplier set —
-    the count-distinct-with-NOT-IN shape. The flagged set (s_suppkey %
-    7 == 0, deterministic on both engines) is removed with a LeftAnti
-    equi-join; the distinct count is the two-level aggregate (distinct
-    tuple hash-agg, then a plain count) so the plan never grows a
-    count-distinct Expand and both levels get map-side partial
-    aggregation. Part join is broadcast at test scale, AQE-decided at
-    100 TB. Top-50 by (count desc, brand, type, size) is a total order
-    planned as TakeOrderedAndProject."""
-    flagged = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        .filter(F.col("s_suppkey") % 7 == 0)
-        .select("s_suppkey")
-    )
-    pairs = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select("l_partkey", "l_suppkey")
-        .join(flagged, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-    )
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        "p_partkey", "p_brand", "p_type", "p_size"
-    )
-    d = (
-        pairs.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .select("p_brand", "p_type", "p_size", "l_suppkey")
-        .distinct()
-    )
-    cnt = d.groupBy("p_brand", "p_type", "p_size").agg(
-        F.count(F.lit(1)).alias("supplier_cnt")
-    )
-    return cnt.orderBy(
-        F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size"
-    ).limit(50)
 
 
 def q_key_skew(spark, sf_dir):
@@ -9065,251 +8634,6 @@ def q_zorder_key(spark, sf_dir):
     )
 
 
-def q_promo_parts(spark, sf_dir):
-    """TPC-H Q19-shape disjunctive-predicate join: revenue from
-    lineitems matching ANY of three (brand, size-range, qty-range)
-    clauses — the OR-of-ANDs shape that separates engines that can
-    factor a disjunction from ones that rescan per clause. The
-    p_partkey = l_partkey equi-key and the common qty upper bound are
-    conjunctive and evaluate BEFORE the join / at the scan (pushed
-    filter pinned); the residual OR runs once on joined rows. Revenue
-    is the exact-int cents idiom; the single output row makes the gate
-    compare the full aggregate."""
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .filter(F.col("l_quantity") <= 30)  # common bound: pushed to scan
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-    )
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        "p_partkey", "p_brand", "p_size"
-    )
-    j = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    clause = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    return (
-        j.filter(clause)
-        .select((cents * (F.lit(100) - disc)).alias("dp"))
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            (F.sum("dp").cast("double") / F.lit(10000.0)).alias("revenue"),
-        )
-    )
-
-
-def q_order_count_histogram(spark, sf_dir):
-    """TPC-H Q13-shape count-distribution histogram: how many customers
-    placed exactly k orders, INCLUDING k = 0 — the left-outer +
-    two-stacked-aggregates pattern (per-customer count, then histogram
-    of counts) that a naive inner join silently corrupts by dropping
-    the zero bucket. Both aggregates are partial+final hash aggregates
-    over shrinking keys (customers, then distinct counts); the
-    histogram output is tiny regardless of input scale."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_custkey")
-    per = (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_custkey").alias("n_orders"))  # count skips NULLs
-    )
-    return (
-        per.groupBy("n_orders")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-def q_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17-shape correlated-scalar query: revenue lost to orders
-    whose quantity is below 20% of the part's average order quantity —
-    the correlated scalar subquery (per-group avg compared against each
-    member row) that a naive engine re-executes per row. Planned
-    decorrelated: per-part (count, sum_qty) is aggregated ONCE and
-    joined back; the DuckDB twin keeps the textbook correlated form so
-    the gate proves the decorrelation exact. The avg comparison
-    qty < 0.2 * (sum/cnt) is restated all-integer as
-    5*qty*cnt < sum_qty (quantities are integral doubles) — no
-    division, no float threshold race. Revenue is the exact-cents sum
-    with ONE final division by 700.0 (cents and the Q17 /7.0 year
-    normalizer folded together)."""
-    p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_partkey",
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    lib = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    stats = lib.groupBy(F.col("l_partkey").alias("sk")).agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("qty").alias("sum_qty")
-    )
-    probe = lib.join(stats, F.col("l_partkey") == F.col("sk")).filter(
-        F.lit(5) * F.col("qty") * F.col("cnt") < F.col("sum_qty")
-    )
-    return probe.agg(
-        F.count(F.lit(1)).alias("n_items"),
-        (F.sum("cents").cast("double") / F.lit(700.0)).alias("avg_yearly"),
-    )
-
-
-def q_late_suppliers(spark, sf_dir):
-    """TPC-H Q21-shape EXISTS + NOT-EXISTS query: suppliers who were
-    the ONLY supplier shipping late (> 90 days after the order date) in
-    a multi-supplier finalized order. The two correlated quantifiers
-    are decorrelated into per-(order, supplier) then per-order
-    aggregates — EXISTS(other supplier) becomes n_supp >= 2,
-    NOT EXISTS(other late supplier) becomes n_late_supp = 1 for a row
-    that is itself late; the DuckDB twin keeps the textbook
-    EXISTS/NOT EXISTS form so the gate proves the rewrite exact. Both
-    aggregate levels are partial+final hash aggregates (no
-    count-distinct Expand); the per-(order, supplier) table is
-    persisted because it feeds both the order rollup and the qualifying
-    probe. Top-20 by (numwait desc, s_suppkey) is a total order planned
-    as TakeOrderedAndProject."""
-    f = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    late = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    persupp = (
-        li.join(f, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(late).alias("is_late"))
-        .persist()  # feeds the per-order rollup and the qualifying probe
-    )
-    perord = persupp.groupBy(F.col("l_orderkey").alias("ok")).agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("is_late").alias("n_late_supp"),
-    )
-    qual = persupp.filter(F.col("is_late") == 1).join(
-        perord.filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1)),
-        F.col("l_orderkey") == F.col("ok"),
-    )
-    counts = qual.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("numwait"))
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        "s_suppkey", "s_name"
-    )
-    return (
-        counts.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .orderBy(F.col("numwait").desc(), F.col("s_suppkey").asc())
-        .limit(20)
-        .select("s_suppkey", "s_name", "numwait")
-    )
-
-
-def q_important_parts(spark, sf_dir):
-    """TPC-H Q11-shape global-threshold HAVING: parts whose revenue
-    share exceeds 1.3x the uniform share — the HAVING-vs-global-scalar
-    shape where the threshold is itself an aggregate of the same table.
-    A relative threshold (vs Q11's fixed fraction) stays meaningful at
-    every scale factor; 1.3x sits between this corpus's p90 (~1.26)
-    and max (~1.75) relative share so the gate exercises both branches.
-    The per-part aggregate is computed declaratively and the 1-row
-    global (total, n_parts) crossJoins back broadcast-style (never a
-    shuffle); the share gate 10 * value_q * n_parts > 13 * total_q is
-    all-integer (at extreme scale where the product overflows, flip to
-    value_q > 13 * (total_q div (10 * n_parts)) — documented, not
-    needed at 10^12 cents * 10^5 parts). share is ONE division of the
-    two exact int64s."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    per = li.select(
-        "l_partkey", (cents * (F.lit(100) - disc)).alias("dp")
-    ).groupBy(F.col("l_partkey").alias("partkey")).agg(
-        F.sum("dp").alias("value_q")
-    )
-    total = per.agg(
-        F.sum("value_q").alias("total_q"),
-        F.count(F.lit(1)).alias("n_parts"),
-    )
-    return (
-        per.crossJoin(F.broadcast(total))
-        .filter(
-            F.lit(10) * F.col("value_q") * F.col("n_parts")
-            > F.lit(13) * F.col("total_q")
-        )
-        .select(
-            "partkey",
-            "value_q",
-            (
-                F.col("value_q").cast("double")
-                / F.col("total_q").cast("double")
-            ).alias("share"),
-        )
-    )
-
-
-def q_inactive_buyers(spark, sf_dir):
-    """TPC-H Q22-shape anti-join + scalar-subquery query: customers in
-    a nation band holding above-average positive balances but no
-    finalized ('F') order — the global-customer-base shape (who has
-    money parked but stopped transacting). The scalar average is the
-    usual integer restatement: cents * n_pos > sum_pos_cents (both
-    exact int64 aggregates of the SAME band, broadcast back as one
-    row); 'no F order' is a LeftAnti equi-join, never NOT IN (NULL-safe
-    by construction). The twin keeps the textbook correlated
-    NOT EXISTS + scalar AVG subquery. total_bal is ONE division of the
-    exact cents sum."""
-    c = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_nationkey") < 10)
-        .select(
-            "c_custkey",
-            "c_nationkey",
-            F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    stats = c.filter(F.col("cents") > 0).agg(
-        F.count(F.lit(1)).alias("n_pos"), F.sum("cents").alias("sum_pos")
-    )
-    cand = c.crossJoin(F.broadcast(stats)).filter(
-        F.col("cents") * F.col("n_pos") > F.col("sum_pos")
-    )
-    fo = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_custkey")
-    )
-    return (
-        cand.join(fo, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            (F.sum("cents").cast("double") / F.lit(100.0)).alias("total_bal"),
-        )
-    )
-
-
 def q_merge_upsert(spark, sf_dir):
     """Warehouse MERGE INTO (upsert) applied as one declarative plan:
     a CDC changeset of inserts / updates / deletes is merged into the
@@ -9449,557 +8773,6 @@ def q_cube_counts(spark, sf_dir):
         "sum_chars",
         "gid",
     )
-
-
-def _li_money():
-    """The shared exact-int money columns for the relational queries:
-    price cents, discount pct, quantity — all floor(x·scale + 0.5)
-    half-up (Spark cast truncates, DuckDB CAST rounds; explicit floor
-    makes both engines agree bit-for-bit)."""
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    return cents, disc, qty
-
-
-def q_forecast_revenue(spark, sf_dir):
-    """TPC-H Q6-shape forecasting-revenue-change: one full-scan
-    filter + sum, the simplest relational shape and the purest
-    pushdown test — the date window reaches the parquet scan as a
-    pushed predicate, the discount/quantity gates are exact-int
-    comparisons on the rescaled columns (never float between), and the
-    whole query is one partial+final aggregate with no shuffle of rows.
-    revenue = Σ price_cents · disc_pct is an exact bigint divided ONCE."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    cents, disc, qty = _li_money()
-    g = li.select(
-        cents.alias("cents"), disc.alias("disc"), qty.alias("qty")
-    ).filter(disc.between(5, 7) & (qty < 24))
-    return g.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        (
-            F.sum(F.col("cents") * F.col("disc")).cast("double")
-            / F.lit(10000.0)
-        ).alias("revenue"),
-    )
-
-
-def q_priority_shipping(spark, sf_dir):
-    """TPC-H Q12-shape shipping-mode priority split: per line status
-    (the corpus's shipmode stand-in — lineitem carries no shipmode
-    column), how many 1996-shipped lines belong to urgent/high-priority
-    orders vs the rest. The CASE counts fold into ONE partial+final
-    hash aggregate after a single orders⨝lineitem equi-join; the date
-    window is pushed to the lineitem scan. All-integer output."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.select(F.col("l_orderkey").alias("ok"), "l_linestatus")
-        .join(o.select(F.col("o_orderkey").alias("ok"), "o_orderpriority"),
-              "ok")
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(hi, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
-
-
-def q_promo_share(spark, sf_dir):
-    """TPC-H Q14-shape promotion-effect ratio: the share of one
-    month's revenue from promo-type parts. The ratio is (100 ·
-    promo_e4) / total_e4 — ONE division of two exact bigints, so both
-    engines compute the identical double. The part dimension joins as
-    a projected (partkey, is_promo) table; the month window is pushed
-    to the lineitem scan; everything folds into a single aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        F.col("p_partkey").alias("pk"),
-        (F.col("p_type") == "PROMO").alias("is_promo"),
-    )
-    cents, disc, _ = _li_money()
-    j = li.select(
-        F.col("l_partkey").alias("pk"),
-        (cents * (F.lit(100) - disc)).alias("rev_e4"),
-    ).join(p, "pk")
-    a = j.agg(
-        F.sum(F.when(F.col("is_promo"), F.col("rev_e4")).otherwise(0)).alias(
-            "promo_e4"
-        ),
-        F.sum("rev_e4").alias("total_e4"),
-    )
-    return a.select(
-        (F.col("promo_e4").cast("double") / F.lit(10000.0)).alias(
-            "promo_revenue"
-        ),
-        (F.col("total_e4").cast("double") / F.lit(10000.0)).alias(
-            "total_revenue"
-        ),
-        (
-            (F.col("promo_e4") * 100).cast("double")
-            / F.col("total_e4").cast("double")
-        ).alias("promo_share"),
-    )
-
-
-def q_top_supplier(spark, sf_dir):
-    """TPC-H Q15-shape top supplier: the supplier(s) whose quarterly
-    revenue equals the global maximum — the view-then-scalar-max shape.
-    The per-supplier aggregate is computed once and persisted (it feeds
-    both the 1-row max and the equality probe); the max crossJoins back
-    broadcast-style (a broadcast cross join of one row, never a
-    shuffle), and the equality gate compares exact bigints so a 1-ulp
-    float tie can never drop or double the winner. Q15's 'no supplier
-    name' decoration joins after the gate touches only winner rows."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    cents, disc, _ = _li_money()
-    per = (
-        li.select(
-            F.col("l_suppkey").alias("suppkey"),
-            (cents * (F.lit(100) - disc)).alias("rev_e4"),
-        )
-        .groupBy("suppkey")
-        .agg(F.sum("rev_e4").alias("rev_e4"))
-        .persist()
-    )
-    mx = per.agg(F.max("rev_e4").alias("max_e4"))
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        F.col("s_suppkey").alias("suppkey"), "s_name"
-    )
-    return (
-        per.crossJoin(F.broadcast(mx))
-        .filter(F.col("rev_e4") == F.col("max_e4"))
-        .join(s, "suppkey")
-        .select(
-            "suppkey",
-            "s_name",
-            (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias(
-                "total_revenue"
-            ),
-        )
-    )
-
-
-def q_returned_revenue(spark, sf_dir):
-    """TPC-H Q10-shape returned-item report: top-20 customers by
-    revenue of returned lines in one quarter, decorated with nation.
-    The returnflag filter is pushed to the lineitem scan and the date
-    window to the orders scan; nation broadcasts; the global top-20
-    plans as TakeOrderedAndProject (per-partition heaps + a 20-row
-    driver merge, never a single-partition sort). The order is total
-    (rev_e4 desc, custkey asc) so ties cannot make the row set
-    engine-dependent; c_acctbal passes through untransformed."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        F.col("l_returnflag") == "R"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cents, disc, _ = _li_money()
-    j = (
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            (cents * (F.lit(100) - disc)).alias("rev_e4"),
-        )
-        .join(o.select(F.col("o_orderkey").alias("ok"), "o_custkey"), "ok")
-        .join(
-            c.select(
-                F.col("c_custkey").alias("o_custkey"),
-                "c_name",
-                "c_acctbal",
-                "c_nationkey",
-            ),
-            "o_custkey",
-        )
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("c_nationkey"), "n_name")
-            ),
-            "c_nationkey",
-        )
-    )
-    a = j.groupBy(
-        F.col("o_custkey").alias("custkey"), "c_name", "c_acctbal", "n_name"
-    ).agg(F.sum("rev_e4").alias("rev_e4"))
-    top = a.orderBy(F.col("rev_e4").desc(), F.col("custkey").asc()).limit(20)
-    return top.select(
-        "custkey",
-        "c_name",
-        "n_name",
-        "c_acctbal",
-        (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias("revenue"),
-    )
-
-
-def q_volume_shipping(spark, sf_dir):
-    """TPC-H Q7-shape bilateral volume shipping: revenue between two
-    nations in both directions per ship year. Both nation dimensions
-    broadcast (the fact table shuffles only for the supplier/order
-    equi-joins, which AQE plans); the two-nation pair filter is applied
-    as soon as both nation names are bound so non-qualifying rows die
-    before the aggregate. Years as exact ints; revenue exact bigint
-    divided once."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cents, disc, _ = _li_money()
-    j = (
-        li.select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_suppkey").alias("sk"),
-            F.year("l_shipdate").cast("long").alias("ship_year"),
-            (cents * (F.lit(100) - disc)).alias("rev_e4"),
-        )
-        .join(s.select(F.col("s_suppkey").alias("sk"), "s_nationkey"), "sk")
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("s_nationkey"),
-                    F.col("n_name").alias("supp_nation"),
-                )
-            ),
-            "s_nationkey",
-        )
-        .join(o.select(F.col("o_orderkey").alias("ok"), "o_custkey"), "ok")
-        .join(
-            c.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey"),
-            "o_custkey",
-        )
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("c_nationkey"),
-                    F.col("n_name").alias("cust_nation"),
-                )
-            ),
-            "c_nationkey",
-        )
-        .filter(
-            (
-                (F.col("supp_nation") == "NATION_1")
-                & (F.col("cust_nation") == "NATION_2")
-            )
-            | (
-                (F.col("supp_nation") == "NATION_2")
-                & (F.col("cust_nation") == "NATION_1")
-            )
-        )
-    )
-    return (
-        j.groupBy("supp_nation", "cust_nation", "ship_year")
-        .agg(F.sum("rev_e4").alias("rev_e4"))
-        .select(
-            "supp_nation",
-            "cust_nation",
-            "ship_year",
-            (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias("volume"),
-        )
-    )
-
-
-def q_market_share(spark, sf_dir):
-    """TPC-H Q8-shape national market share: per order year, the share
-    of one part type's European-customer revenue supplied from
-    NATION_3. share = num_e4 / den_e4 is ONE division of exact bigints
-    computed in the SAME aggregate (a separate numerator job would
-    rescan). The part-type filter prunes the fact rows through the
-    projected (partkey) dimension before any wide join; region gates
-    the customer side through two broadcast dims."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_type") == "ECONOMY")
-        .select(F.col("p_partkey").alias("pk"))
-    )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
-        F.col("r_name") == "EUROPE"
-    )
-    cents, disc, _ = _li_money()
-    j = (
-        li.select(
-            F.col("l_partkey").alias("pk"),
-            F.col("l_suppkey").alias("sk"),
-            F.col("l_orderkey").alias("ok"),
-            (cents * (F.lit(100) - disc)).alias("rev_e4"),
-        )
-        .join(p, "pk")
-        .join(s.select(F.col("s_suppkey").alias("sk"), "s_nationkey"), "sk")
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("s_nationkey"),
-                    F.col("n_name").alias("supp_nation"),
-                )
-            ),
-            "s_nationkey",
-        )
-        .join(
-            o.select(
-                F.col("o_orderkey").alias("ok"),
-                "o_custkey",
-                F.year("o_orderdate").cast("long").alias("o_year"),
-            ),
-            "ok",
-        )
-        .join(
-            c.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey"),
-            "o_custkey",
-        )
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("c_nationkey"),
-                    F.col("n_regionkey").alias("rk"),
-                )
-            ),
-            "c_nationkey",
-        )
-        .join(
-            F.broadcast(r.select(F.col("r_regionkey").alias("rk"))), "rk"
-        )
-    )
-    a = j.groupBy("o_year").agg(
-        F.sum(
-            F.when(F.col("supp_nation") == "NATION_3", F.col("rev_e4"))
-            .otherwise(0)
-        ).alias("num_e4"),
-        F.sum("rev_e4").alias("den_e4"),
-    )
-    return a.select(
-        "o_year",
-        (F.col("num_e4").cast("double") / F.lit(10000.0)).alias(
-            "nation_volume"
-        ),
-        (F.col("den_e4").cast("double") / F.lit(10000.0)).alias(
-            "total_volume"
-        ),
-        (
-            F.col("num_e4").cast("double") / F.col("den_e4").cast("double")
-        ).alias("mkt_share"),
-    )
-
-
-def q_product_profit(spark, sf_dir):
-    """TPC-H Q9-shape product-type profit: per (supplier nation, order
-    year), Σ revenue − cost for parts whose name contains 'bolt'.
-    The corpus has no partsupp table, so cost is the documented
-    deterministic stand-in 80% of retail: qty · retail_cents · 80 —
-    the same e4 scale as revenue, so amount_e4 = rev_e4 − cost_e4 is an
-    exact bigint per line (possibly negative), summed exactly and
-    divided once. The name-filtered part dimension carries retail_cents
-    through the join; nation broadcasts."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_name").contains("bolt"))
-        .select(
-            F.col("p_partkey").alias("pk"),
-            F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("retail_c"),
-        )
-    )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cents, disc, qty = _li_money()
-    j = (
-        li.select(
-            F.col("l_partkey").alias("pk"),
-            F.col("l_suppkey").alias("sk"),
-            F.col("l_orderkey").alias("ok"),
-            (cents * (F.lit(100) - disc)).alias("rev_e4"),
-            qty.alias("qty"),
-        )
-        .join(p, "pk")
-        .join(s.select(F.col("s_suppkey").alias("sk"), "s_nationkey"), "sk")
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("s_nationkey"), "n_name")
-            ),
-            "s_nationkey",
-        )
-        .join(
-            o.select(
-                F.col("o_orderkey").alias("ok"),
-                F.year("o_orderdate").cast("long").alias("o_year"),
-            ),
-            "ok",
-        )
-    )
-    amount = F.col("rev_e4") - F.col("qty") * F.col("retail_c") * F.lit(80)
-    return (
-        j.select("n_name", "o_year", amount.alias("amount_e4"))
-        .groupBy(F.col("n_name").alias("nation"), "o_year")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            (F.sum("amount_e4").cast("double") / F.lit(10000.0)).alias(
-                "profit"
-            ),
-        )
-    )
-
-
-def q_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2-shape minimum-cost supplier: for each size-3 part, the
-    European supplier(s) with the minimum account balance among those
-    that actually shipped it (the corpus has no partsupp, so the
-    supplies-relation is the distinct (partkey, suppkey) pairs observed
-    in lineitem and 'cost' is the documented acctbal stand-in). The
-    correlated min decorrelates to aggregate-once + equality join-back
-    on exact cents (never float min); Q2 returns ALL suppliers at the
-    minimum, so ties are part of the contract, not a hazard. Dimension
-    gates (region, size) prune before the per-part aggregate."""
-    pairs = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk"))
-        .distinct()
-    )
-    p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_size") == 3)
-        .select(F.col("p_partkey").alias("pk"), "p_name")
-    )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        F.col("s_suppkey").alias("sk"),
-        "s_name",
-        "s_nationkey",
-        F.floor(F.col("s_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("acct_c"),
-    )
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
-        F.col("r_name") == "EUROPE"
-    )
-    cand = (
-        pairs.join(p, "pk")
-        .join(s, "sk")
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("s_nationkey"),
-                    "n_name",
-                    F.col("n_regionkey").alias("rk"),
-                )
-            ),
-            "s_nationkey",
-        )
-        .join(F.broadcast(r.select(F.col("r_regionkey").alias("rk"))), "rk")
-        .persist()
-    )
-    mins = cand.groupBy(F.col("pk").alias("mpk")).agg(
-        F.min("acct_c").alias("min_c")
-    )
-    return (
-        cand.join(
-            mins,
-            (F.col("pk") == F.col("mpk")) & (F.col("acct_c") == F.col("min_c")),
-        )
-        .select(
-            F.col("pk").alias("partkey"),
-            "p_name",
-            F.col("sk").alias("suppkey"),
-            "s_name",
-            "n_name",
-            (F.col("acct_c").cast("double") / F.lit(100.0)).alias("acctbal"),
-        )
-    )
-
-
-def q_dominant_suppliers(spark, sf_dir):
-    """TPC-H Q20-shape excess-availability suppliers: Asian suppliers
-    whose shipped share of some small-prefix part exceeds 2× the
-    uniform share among that part's suppliers (the corpus's
-    partsupp-free restatement of Q20's availqty > 0.5·Σqty correlated
-    threshold; a RELATIVE gate like important_parts' 1.3× so the
-    qualifying set stays non-empty at every scale factor — a fixed
-    fraction dilutes as supplier count grows with SF). The nested
-    aggregate stacks: per-(part, supplier) quantity, then per-part
-    (total, n_suppliers) from the SAME aggregated table (never a
-    second corpus scan), all-integer gate sup_qty·n_sup > 2·tot_qty,
-    and the supplier dimension semi-joins against the qualifying set
-    (LeftSemi — the fact side never duplicates supplier rows)."""
-    p = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_name").startswith("small"))
-        .select(F.col("p_partkey").alias("pk"))
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    _, _, qty = _li_money()
-    per = (
-        li.select(
-            F.col("l_partkey").alias("pk"),
-            F.col("l_suppkey").alias("sk"),
-            qty.alias("qty"),
-        )
-        .join(p, "pk")
-        .groupBy("pk", "sk")
-        .agg(F.sum("qty").alias("sup_qty"))
-    )
-    tot = per.groupBy(F.col("pk").alias("tpk")).agg(
-        F.sum("sup_qty").alias("tot_qty"),
-        F.count(F.lit(1)).alias("n_sup"),
-    )
-    dominant = (
-        per.join(tot, F.col("pk") == F.col("tpk"))
-        .filter(F.col("sup_qty") * F.col("n_sup") > F.col("tot_qty") * 2)
-        .select("sk")
-        .distinct()
-    )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    asian = (
-        s.join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("s_nationkey"),
-                    "n_name",
-                    F.col("n_regionkey").alias("rk"),
-                )
-            ),
-            "s_nationkey",
-        )
-        .join(
-            F.broadcast(
-                spark.read.parquet(f"{sf_dir}/region.parquet")
-                .filter(F.col("r_name") == "ASIA")
-                .select(F.col("r_regionkey").alias("rk"))
-            ),
-            "rk",
-        )
-    )
-    return asian.join(
-        dominant, asian["s_suppkey"] == dominant["sk"], "left_semi"
-    ).select(F.col("s_suppkey").alias("suppkey"), "s_name", "n_name")
 
 
 def q_inverted_index(spark, sf_dir):
@@ -13210,9 +11983,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_calibration": q_quality_calibration,
         "k_anonymity": q_k_anonymity,
         "token_concentration": q_token_concentration,
-        "benford_amounts": q_benford_amounts,
         "collocations": q_collocations,
-        "revenue_by_region": q_revenue_by_region,
         "tool_usage": q_tool_usage,
         "role_patterns": q_role_patterns,
         "split_leakage": q_split_leakage,
@@ -13229,8 +12000,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_agreement": q_lang_agreement,
         "conv_pii_rollup": q_conv_pii_rollup,
         "tool_error_cascade": q_tool_error_cascade,
-        "pricing_summary": q_pricing_summary,
-        "order_fulfillment": q_order_fulfillment,
         "jackknife_keep": q_jackknife_keep,
         "injection_scan": q_injection_scan,
         "code_detect": q_code_detect,
@@ -13239,17 +12008,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "year_mentions": q_year_mentions,
         "neardup_by_source": q_neardup_by_source,
         "prefix_neardup": q_prefix_neardup,
-        "entity_resolution": q_entity_resolution,
         "ngram_lm": q_ngram_lm,
         "lm_score": q_lm_score,
-        "top_unshipped": q_top_unshipped,
-        "fk_integrity": q_fk_integrity,
         "curriculum_buckets": q_curriculum_buckets,
         "shard_plan": q_shard_plan,
         "unigram_lm_train": q_unigram_lm_train,
         "unicode_nfc": q_unicode_nfc,
-        "big_spenders": q_big_spenders,
-        "supplier_parts": q_supplier_parts,
         "key_skew": q_key_skew,
         "join_cardinality": q_join_cardinality,
         "pagerank": q_pagerank,
@@ -13260,26 +12024,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_key": q_zorder_key,
         "ann_recall": q_ann_recall,
         "file_stats": q_file_stats,
-        "promo_parts": q_promo_parts,
-        "order_count_histogram": q_order_count_histogram,
-        "small_qty_revenue": q_small_qty_revenue,
-        "late_suppliers": q_late_suppliers,
-        "important_parts": q_important_parts,
-        "inactive_buyers": q_inactive_buyers,
         "merge_upsert": q_merge_upsert,
         "gap_fill": q_gap_fill,
         "hopping_counts": q_hopping_counts,
         "cube_counts": q_cube_counts,
-        "forecast_revenue": q_forecast_revenue,
-        "priority_shipping": q_priority_shipping,
-        "promo_share": q_promo_share,
-        "top_supplier": q_top_supplier,
-        "returned_revenue": q_returned_revenue,
-        "volume_shipping": q_volume_shipping,
-        "market_share": q_market_share,
-        "product_profit": q_product_profit,
-        "min_cost_supplier": q_min_cost_supplier,
-        "dominant_suppliers": q_dominant_suppliers,
         "inverted_index": q_inverted_index,
         "bm25_search": q_bm25_search,
         "view_maintain": q_view_maintain,
@@ -16877,27 +15625,6 @@ def oracle_sql() -> dict[str, str]:
                    (n_tokens * n_tokens)::DOUBLE / sumsq::DOUBLE AS inv_simpson
             FROM agg
         """,
-        "benford_amounts": f"""
-            WITH obs AS (
-              SELECT substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
-                                    AS VARCHAR), 1, 1)::INT AS digit,
-                     count(*)::BIGINT AS n_obs
-              FROM orders GROUP BY 1),
-            total AS (SELECT count(*)::BIGINT AS n_total FROM orders),
-            grid AS (
-              SELECT d.digit::INT AS digit, t.n_total,
-                     coalesce(o.n_obs, 0) AS n_obs,
-                     ([{', '.join(f"{p}::DOUBLE" for p in BENFORD_P)}])[d.digit]
-                       AS p
-              FROM generate_series(1, 9) AS d(digit)
-              CROSS JOIN total t LEFT JOIN obs o ON o.digit = d.digit)
-            SELECT digit, n_obs,
-                   n_total::DOUBLE * p AS expected,
-                   ((n_obs::DOUBLE - n_total::DOUBLE * p)
-                    * (n_obs::DOUBLE - n_total::DOUBLE * p))
-                     / (n_total::DOUBLE * p) AS chi2_term
-            FROM grid
-        """,
         "collocations": r"""
             WITH arr AS (
               SELECT list_filter(regexp_split_to_array(lower(coalesce(text,'')),
@@ -16919,20 +15646,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN unic u2 ON u2.tok = b.w2
             CROSS JOIN n
             ORDER BY lift DESC, b.w1 ASC, b.w2 ASC LIMIT 30
-        """,
-        "revenue_by_region": """
-            SELECT r.r_name,
-                   count(*)::BIGINT AS n_lines,
-                   sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                       * (100 - CAST(floor(l.l_discount * 100 + 0.5)
-                                     AS BIGINT)))::DOUBLE
-                     / 10000.0 AS revenue
-            FROM lineitem l
-            JOIN orders o   ON o.o_orderkey  = l.l_orderkey
-            JOIN customer c ON c.c_custkey   = o.o_custkey
-            JOIN nation n   ON n.n_nationkey = c.c_nationkey
-            JOIN region r   ON r.r_regionkey = n.n_regionkey
-            GROUP BY r.r_name
         """,
         "tool_usage": f"""
             WITH t AS (
@@ -17284,51 +15997,6 @@ def oracle_sql() -> dict[str, str]:
                      AS cascade_lift
             FROM agg
         """,
-        "pricing_summary": """
-            WITH d AS (
-              SELECT l_returnflag, l_linestatus,
-                     floor(l_quantity + 0.5)::BIGINT AS q,
-                     floor(l_extendedprice * 100 + 0.5)::BIGINT AS p,
-                     floor(l_discount * 100 + 0.5)::BIGINT AS dc,
-                     floor(l_tax * 100 + 0.5)::BIGINT AS tx
-              FROM lineitem),
-            a AS (
-              SELECT l_returnflag, l_linestatus,
-                     count(*)::BIGINT AS n_lines,
-                     sum(q)::BIGINT AS sum_qty,
-                     sum(p)::BIGINT AS p_e2,
-                     sum(p * (100 - dc))::BIGINT AS dp_e4,
-                     sum(p * (100 - dc) * (100 + tx))::BIGINT AS ch_e6,
-                     sum(dc)::BIGINT AS dc_e2
-              FROM d GROUP BY l_returnflag, l_linestatus)
-            SELECT l_returnflag, l_linestatus, n_lines, sum_qty,
-                   p_e2::DOUBLE / 100.0 AS sum_base_price,
-                   dp_e4::DOUBLE / 10000.0 AS sum_disc_price,
-                   ch_e6::DOUBLE / 1000000.0 AS sum_charge,
-                   sum_qty::DOUBLE / n_lines::DOUBLE AS avg_qty,
-                   p_e2::DOUBLE / (n_lines * 100)::DOUBLE AS avg_price,
-                   dc_e2::DOUBLE / (n_lines * 100)::DOUBLE AS avg_disc
-            FROM a
-        """,
-        "order_fulfillment": f"""
-            WITH tot AS (
-              SELECT o_orderpriority, count(*)::BIGINT AS n_orders
-              FROM orders GROUP BY o_orderpriority),
-            nl AS (
-              SELECT o_orderpriority, count(*)::BIGINT AS n_late
-              FROM orders o
-              WHERE EXISTS (
-                SELECT 1 FROM lineitem l
-                WHERE l.l_orderkey = o.o_orderkey
-                  AND l.l_shipdate > o.o_orderdate
-                        + INTERVAL {LATE_SHIP_DAYS} DAY)
-              GROUP BY o_orderpriority)
-            SELECT t.o_orderpriority, t.n_orders,
-                   coalesce(nl.n_late, 0)::BIGINT AS n_late,
-                   coalesce(nl.n_late, 0)::DOUBLE / t.n_orders::DOUBLE
-                     AS late_frac
-            FROM tot t LEFT JOIN nl USING (o_orderpriority)
-        """,
         "jackknife_keep": f"""
             WITH per AS (
               SELECT source, count(*)::BIGINT AS n_docs,
@@ -17475,26 +16143,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT blk, keep_id, dup_id, lev
             FROM p WHERE lev <= {NEARDUP_MAXLEV}
         """,
-        "entity_resolution": """
-            WITH recs AS (
-              SELECT (c_custkey * 2)::BIGINT AS rec_id, c_name AS name,
-                     c_nationkey::BIGINT AS nat
-              FROM customer
-              UNION ALL
-              SELECT (c_custkey * 2 + 1)::BIGINT,
-                     substr(c_name, 1, length(c_name) - 1) || 'X',
-                     c_nationkey::BIGINT
-              FROM customer WHERE c_custkey % 5 = 2),
-            k AS (
-              SELECT rec_id, name, nat, substr(name, 10, 8) AS blk
-              FROM recs)
-            SELECT a.nat, a.blk, a.rec_id AS rec_a, b.rec_id AS rec_b,
-                   levenshtein(a.name, b.name)::BIGINT AS lev,
-                   (b.rec_id = a.rec_id + 1 AND a.rec_id % 2 = 0) AS is_synth
-            FROM k a JOIN k b ON a.nat = b.nat AND a.blk = b.blk
-                              AND a.rec_id < b.rec_id
-            WHERE levenshtein(a.name, b.name) <= 1
-        """,
         "ngram_lm": """
             WITH d AS (
               SELECT list_filter(string_split(coalesce(text,''), ' '),
@@ -17555,32 +16203,6 @@ def oracle_sql() -> dict[str, str]:
                    (CASE WHEN n_seen > 0
                          THEN sum_p_e6 // n_seen END)::BIGINT AS mean_p_e6
             FROM per
-        """,
-        "top_unshipped": f"""
-            WITH c AS (
-              SELECT c_custkey FROM customer
-              WHERE c_mktsegment = 'BUILDING'),
-            o AS (
-              SELECT o_orderkey, o_custkey, o_orderdate, o_orderpriority
-              FROM orders
-              WHERE o_orderdate < TIMESTAMP '{Q3_CUTOFF}'),
-            l AS (
-              SELECT l_orderkey,
-                     CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) *
-                       (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                       AS dp
-              FROM lineitem
-              WHERE l_shipdate > TIMESTAMP '{Q3_CUTOFF}'),
-            a AS (
-              SELECT l_orderkey, o_orderdate, o_orderpriority,
-                     sum(dp)::BIGINT AS rev_e4
-              FROM l
-              JOIN o ON o.o_orderkey = l.l_orderkey
-              JOIN c ON c.c_custkey = o.o_custkey
-              GROUP BY 1, 2, 3)
-            SELECT l_orderkey, o_orderdate, o_orderpriority,
-                   rev_e4::DOUBLE / 10000.0 AS revenue
-            FROM a ORDER BY rev_e4 DESC, l_orderkey LIMIT 10
         """,
         "char_entropy": r"""
             WITH ch AS (
@@ -18312,96 +16934,6 @@ def oracle_sql() -> dict[str, str]:
                (zkey >> {2 * ZORDER_BITS - 10})::BIGINT AS file_bucket
         FROM z
     """
-    sqls["promo_parts"] = """
-        SELECT count(*)::BIGINT AS n_items,
-               (sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                    * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-                )::BIGINT::DOUBLE / 10000.0 AS revenue
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE l_quantity <= 30 AND (
-          (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-             AND l_quantity BETWEEN 1 AND 11)
-          OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
-             AND l_quantity BETWEEN 10 AND 20)
-          OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-             AND l_quantity BETWEEN 20 AND 30))
-    """
-    sqls["order_count_histogram"] = """
-        WITH per AS (
-          SELECT c_custkey, count(o_custkey)::BIGINT AS n_orders
-          FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-          GROUP BY 1)
-        SELECT n_orders, count(*)::BIGINT AS n_customers
-        FROM per GROUP BY 1
-    """
-    # Textbook CORRELATED form on purpose: the Spark side plans the
-    # decorrelated aggregate+join, the twin re-executes the scalar
-    # subquery per row — the gate proves the rewrite exact.
-    sqls["small_qty_revenue"] = """
-        SELECT count(*)::BIGINT AS n_items,
-               (sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-                )::BIGINT::DOUBLE / 700.0 AS avg_yearly
-        FROM lineitem l JOIN part p ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#1'
-          AND 5 * CAST(floor(l_quantity + 0.5) AS BIGINT)
-                * (SELECT count(*) FROM lineitem l2
-                   WHERE l2.l_partkey = l.l_partkey)
-              < (SELECT sum(CAST(floor(l2.l_quantity + 0.5) AS BIGINT))
-                 FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-    """
-    sqls["late_suppliers"] = """
-        WITH f AS (SELECT o_orderkey, o_orderdate FROM orders
-                   WHERE o_orderstatus = 'F'),
-        l1 AS (SELECT DISTINCT l_orderkey, l_suppkey
-               FROM lineitem l JOIN f ON o_orderkey = l_orderkey
-               WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        SELECT s_suppkey, s_name, count(*)::BIGINT AS numwait
-        FROM l1 JOIN supplier ON s_suppkey = l_suppkey
-        WHERE EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                        AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (
-                SELECT 1 FROM lineitem l3 JOIN f f3
-                  ON f3.o_orderkey = l3.l_orderkey
-                WHERE l3.l_orderkey = l1.l_orderkey
-                  AND l3.l_suppkey <> l1.l_suppkey
-                  AND l3.l_shipdate > f3.o_orderdate + INTERVAL 90 DAY)
-        GROUP BY 1, 2
-        ORDER BY numwait DESC, s_suppkey
-        LIMIT 20
-    """
-    sqls["important_parts"] = """
-        WITH per AS (
-          SELECT l_partkey AS partkey,
-                 sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                 )::BIGINT AS value_q
-          FROM lineitem GROUP BY 1)
-        SELECT partkey, value_q,
-               value_q::DOUBLE / total_q::DOUBLE AS share
-        FROM per, (SELECT sum(value_q)::BIGINT AS total_q,
-                          count(*)::BIGINT AS n_parts FROM per) t
-        WHERE 10 * value_q * n_parts > 13 * total_q
-    """
-    sqls["inactive_buyers"] = """
-        SELECT c_nationkey, count(*)::BIGINT AS n_customers,
-               sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-               )::BIGINT::DOUBLE / 100.0 AS total_bal
-        FROM customer c
-        WHERE c_nationkey < 10
-          AND CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-              * (SELECT count(*) FROM customer c2
-                 WHERE c2.c_nationkey < 10
-                   AND floor(c2.c_acctbal * 100 + 0.5) > 0)
-              > (SELECT sum(CAST(floor(c2.c_acctbal * 100 + 0.5) AS BIGINT))
-                 FROM customer c2
-                 WHERE c2.c_nationkey < 10
-                   AND floor(c2.c_acctbal * 100 + 0.5) > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'F')
-        GROUP BY 1
-    """
     sqls["merge_upsert"] = """
         WITH d AS (SELECT doc_id, text FROM documents),
         ch AS (
@@ -18453,184 +16985,6 @@ def oracle_sql() -> dict[str, str]:
              (SELECT unnest([0, 1, 2, 3]) AS k) kk
         GROUP BY 1, 2
     """
-    sqls["forecast_revenue"] = """
-        WITH g AS (
-          SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
-                 CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc,
-                 CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-            AND l_shipdate <  TIMESTAMP '1997-01-01')
-        SELECT count(*)::BIGINT AS n_lines,
-               sum(cents * disc)::DOUBLE / 10000.0 AS revenue
-        FROM g WHERE disc BETWEEN 5 AND 7 AND qty < 24
-    """
-    sqls["priority_shipping"] = """
-        SELECT l.l_linestatus,
-               sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                        THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-               sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                        THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-        WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-        GROUP BY 1
-    """
-    sqls["promo_share"] = """
-        WITH j AS (
-          SELECT CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                 * (100 - CAST(floor(l.l_discount * 100 + 0.5) AS BIGINT))
-                   AS rev_e4,
-                 (p.p_type = 'PROMO') AS is_promo
-          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-          WHERE l.l_shipdate >= TIMESTAMP '1996-03-01'
-            AND l.l_shipdate <  TIMESTAMP '1996-04-01'),
-        a AS (
-          SELECT sum(CASE WHEN is_promo THEN rev_e4 ELSE 0 END)::BIGINT
-                   AS promo_e4,
-                 sum(rev_e4)::BIGINT AS total_e4
-          FROM j)
-        SELECT promo_e4::DOUBLE / 10000.0 AS promo_revenue,
-               total_e4::DOUBLE / 10000.0 AS total_revenue,
-               (promo_e4 * 100)::DOUBLE / total_e4::DOUBLE AS promo_share
-        FROM a
-    """
-    sqls["top_supplier"] = """
-        WITH per AS (
-          SELECT l_suppkey AS suppkey,
-                 sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l_discount * 100 + 0.5)
-                                   AS BIGINT)))::BIGINT AS rev_e4
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-            AND l_shipdate <  TIMESTAMP '1996-04-01'
-          GROUP BY 1)
-        SELECT per.suppkey, s.s_name,
-               per.rev_e4::DOUBLE / 10000.0 AS total_revenue
-        FROM per
-        JOIN supplier s ON s.s_suppkey = per.suppkey
-        WHERE per.rev_e4 = (SELECT max(rev_e4) FROM per)
-    """
-    sqls["returned_revenue"] = """
-        WITH a AS (
-          SELECT c.c_custkey AS custkey, c.c_name, c.c_acctbal, n.n_name,
-                 sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l.l_discount * 100 + 0.5)
-                                   AS BIGINT)))::BIGINT AS rev_e4
-          FROM lineitem l
-          JOIN orders o   ON o.o_orderkey  = l.l_orderkey
-          JOIN customer c ON c.c_custkey   = o.o_custkey
-          JOIN nation n   ON n.n_nationkey = c.c_nationkey
-          WHERE l.l_returnflag = 'R'
-            AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-            AND o.o_orderdate <  TIMESTAMP '1996-04-01'
-          GROUP BY 1, 2, 3, 4)
-        SELECT custkey, c_name, n_name, c_acctbal,
-               rev_e4::DOUBLE / 10000.0 AS revenue
-        FROM a ORDER BY rev_e4 DESC, custkey ASC LIMIT 20
-    """
-    sqls["volume_shipping"] = """
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               EXTRACT(year FROM l.l_shipdate)::BIGINT AS ship_year,
-               sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                   * (100 - CAST(floor(l.l_discount * 100 + 0.5)
-                                 AS BIGINT)))::DOUBLE / 10000.0 AS volume
-        FROM lineitem l
-        JOIN supplier s ON s.s_suppkey   = l.l_suppkey
-        JOIN nation n1  ON n1.n_nationkey = s.s_nationkey
-        JOIN orders o   ON o.o_orderkey  = l.l_orderkey
-        JOIN customer c ON c.c_custkey   = o.o_custkey
-        JOIN nation n2  ON n2.n_nationkey = c.c_nationkey
-        WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        GROUP BY 1, 2, 3
-    """
-    sqls["market_share"] = """
-        WITH a AS (
-          SELECT EXTRACT(year FROM o.o_orderdate)::BIGINT AS o_year,
-                 sum(CASE WHEN n1.n_name = 'NATION_3'
-                     THEN CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                          * (100 - CAST(floor(l.l_discount * 100 + 0.5)
-                                        AS BIGINT))
-                     ELSE 0 END)::BIGINT AS num_e4,
-                 sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l.l_discount * 100 + 0.5)
-                                   AS BIGINT)))::BIGINT AS den_e4
-          FROM lineitem l
-          JOIN part p     ON p.p_partkey   = l.l_partkey
-          JOIN supplier s ON s.s_suppkey   = l.l_suppkey
-          JOIN nation n1  ON n1.n_nationkey = s.s_nationkey
-          JOIN orders o   ON o.o_orderkey  = l.l_orderkey
-          JOIN customer c ON c.c_custkey   = o.o_custkey
-          JOIN nation n2  ON n2.n_nationkey = c.c_nationkey
-          JOIN region r   ON r.r_regionkey = n2.n_regionkey
-          WHERE p.p_type = 'ECONOMY' AND r.r_name = 'EUROPE'
-            AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-            AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-          GROUP BY 1)
-        SELECT o_year,
-               num_e4::DOUBLE / 10000.0 AS nation_volume,
-               den_e4::DOUBLE / 10000.0 AS total_volume,
-               num_e4::DOUBLE / den_e4::DOUBLE AS mkt_share
-        FROM a
-    """
-    sqls["product_profit"] = """
-        SELECT n.n_name AS nation,
-               EXTRACT(year FROM o.o_orderdate)::BIGINT AS o_year,
-               count(*)::BIGINT AS n_lines,
-               sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                   * (100 - CAST(floor(l.l_discount * 100 + 0.5) AS BIGINT))
-                   - CAST(floor(l.l_quantity + 0.5) AS BIGINT)
-                     * CAST(floor(p.p_retailprice * 100 + 0.5) AS BIGINT)
-                     * 80)::DOUBLE / 10000.0 AS profit
-        FROM lineitem l
-        JOIN part p     ON p.p_partkey   = l.l_partkey
-        JOIN supplier s ON s.s_suppkey   = l.l_suppkey
-        JOIN nation n   ON n.n_nationkey = s.s_nationkey
-        JOIN orders o   ON o.o_orderkey  = l.l_orderkey
-        WHERE p.p_name LIKE '%bolt%'
-        GROUP BY 1, 2
-    """
-    sqls["min_cost_supplier"] = """
-        WITH cand AS (
-          SELECT DISTINCT l.l_partkey AS partkey, p.p_name,
-                 l.l_suppkey AS suppkey, s.s_name, n.n_name,
-                 CAST(floor(s.s_acctbal * 100 + 0.5) AS BIGINT) AS acct_c
-          FROM lineitem l
-          JOIN part p     ON p.p_partkey   = l.l_partkey
-          JOIN supplier s ON s.s_suppkey   = l.l_suppkey
-          JOIN nation n   ON n.n_nationkey = s.s_nationkey
-          JOIN region r   ON r.r_regionkey = n.n_regionkey
-          WHERE p.p_size = 3 AND r.r_name = 'EUROPE')
-        SELECT partkey, p_name, suppkey, s_name, n_name,
-               acct_c::DOUBLE / 100.0 AS acctbal
-        FROM cand c
-        WHERE acct_c = (SELECT min(acct_c) FROM cand m
-                        WHERE m.partkey = c.partkey)
-    """
-    sqls["dominant_suppliers"] = """
-        WITH per AS (
-          SELECT l.l_partkey AS pk, l.l_suppkey AS sk,
-                 sum(CAST(floor(l.l_quantity + 0.5) AS BIGINT))::BIGINT
-                   AS sup_qty
-          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-          WHERE p.p_name LIKE 'small%'
-          GROUP BY 1, 2),
-        tot AS (SELECT pk, sum(sup_qty)::BIGINT AS tot_qty,
-                       count(*)::BIGINT AS n_sup FROM per
-                GROUP BY 1),
-        dom AS (SELECT DISTINCT per.sk FROM per
-                JOIN tot ON tot.pk = per.pk
-                WHERE per.sup_qty * tot.n_sup > tot.tot_qty * 2)
-        SELECT s.s_suppkey AS suppkey, s.s_name, n.n_name
-        FROM supplier s
-        JOIN nation n ON n.n_nationkey = s.s_nationkey
-        JOIN region r ON r.r_regionkey = n.n_regionkey
-        WHERE r.r_name = 'ASIA'
-          AND EXISTS (SELECT 1 FROM dom WHERE dom.sk = s.s_suppkey)
-    """
     sqls["inverted_index"] = r"""
         WITH raw AS (
           SELECT doc_id,
@@ -18675,36 +17029,6 @@ def oracle_sql() -> dict[str, str]:
                     THEN cnt * n_trail > 3 * sum_trail
                     ELSE FALSE END AS spike
         FROM g
-    """
-    sqls["big_spenders"] = f"""
-        WITH big AS (
-          SELECT l_orderkey,
-                 sum(CAST(floor(l_quantity + 0.5) AS BIGINT))::BIGINT
-                   AS total_qty
-          FROM lineitem GROUP BY 1
-          HAVING sum(CAST(floor(l_quantity + 0.5) AS BIGINT))
-                   > {Q18_MIN_QTY})
-        SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-               total_qty
-        FROM big
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
-    """
-    sqls["supplier_parts"] = """
-        WITH ok AS (
-          -- NOT EXISTS, not NOT IN: a NULL l_suppkey must survive the
-          -- exclusion exactly like Spark's left_anti keeps it
-          SELECT l_partkey, l_suppkey FROM lineitem l
-          WHERE NOT EXISTS (SELECT 1 FROM supplier s
-                            WHERE s.s_suppkey % 7 = 0
-                              AND s.s_suppkey = l.l_suppkey)),
-        d AS (
-          SELECT DISTINCT p_brand, p_type, p_size, l_suppkey
-          FROM ok JOIN part ON p_partkey = l_partkey)
-        SELECT p_brand, p_type, p_size, count(*)::BIGINT AS supplier_cnt
-        FROM d GROUP BY 1, 2, 3
-        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size LIMIT 50
     """
     sqls["key_skew"] = """
         WITH src AS (
@@ -18784,27 +17108,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT doc_id, n_chars, cum_weight,
                ((cum_weight - n_chars) // {SHARD_TOKENS})::BIGINT AS shard_id
         FROM c
-    """
-    sqls["fk_integrity"] = """
-        WITH cust AS (
-          SELECT c_custkey FROM customer WHERE c_custkey % 11 <> 5),
-        odim AS (
-          SELECT o_orderkey FROM orders WHERE o_orderkey % 13 <> 3),
-        a AS (
-          SELECT 'lineitem.l_orderkey->orders' AS fk_edge,
-                 (SELECT count(*) FROM lineitem)::BIGINT AS n_rows,
-                 (SELECT count(*) FROM lineitem
-                  WHERE l_orderkey NOT IN (SELECT o_orderkey FROM odim)
-                 )::BIGINT AS n_orphans),
-        b AS (
-          SELECT 'orders.o_custkey->customer' AS fk_edge,
-                 (SELECT count(*) FROM orders)::BIGINT AS n_rows,
-                 (SELECT count(*) FROM orders
-                  WHERE o_custkey NOT IN (SELECT c_custkey FROM cust)
-                 )::BIGINT AS n_orphans)
-        SELECT fk_edge, n_rows, n_orphans,
-               n_orphans::DOUBLE / n_rows::DOUBLE AS orphan_frac
-        FROM (SELECT * FROM a UNION ALL SELECT * FROM b)
     """
     _bm25_vals = ", ".join(
         f"({qid}, '{t}')" for qid, ts in BM25_QUERIES for t in ts

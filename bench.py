@@ -26,6 +26,189 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
+# operator benchmarks timed after the pipeline runs; every name is a key
+# of __spark_entry__.queries() (tests/test_entry_contract.py checks it)
+BENCH_QUERIES = (
+    "odd_char_ratio",
+    "stopword_fraction",
+    "dedup_exact",
+    "summary_report",
+    "ann_cosine_topk",
+    "minhash_dedup",
+    "simhash_neardup",
+    "dedup_clusters",
+    "winnow_containment",
+    "contamination",
+    "corpus_curate",
+    "quality_topk_lang",
+    "gopher_repetition",
+    "span_dedup",
+    "substr_dedup",
+    "hybrid_search",
+    "spearman_signals",
+    "corpus_transform",
+    "semantic_dedup",
+    "tfidf_topk",
+    "quality_classifier",
+    "source_divergence",
+    "bloom_dedup",
+    "pack_sequences",
+    "line_filter",
+    "fingerprint",
+    "dsir_weights",
+    "refusal_scan",
+    "cohort_retention",
+    "sketch_profile",
+    "bpe_train",
+    "echo_detect",
+    "prototypicality",
+    "quality_gate_by_source",
+    "chunk_text",
+    "soft_dedup",
+    "source_overlap",
+    "embedding_quantize",
+    "rule_ablation",
+    "ks_drift",
+    "length_outliers",
+    "ngram_novelty",
+    "embedding_pca",
+    "lang_source_chi2",
+    "token_concentration",
+    "collocations",
+    "tool_usage",
+    "split_leakage",
+    "compression_ratio",
+    "agent_loop_detect",
+    "readability",
+    "url_dedup",
+    "vocab_coverage",
+    "injection_scan",
+    "prefix_neardup",
+    "ngram_lm",
+    "lm_score",
+    "curriculum_buckets",
+    "shard_plan",
+    "unigram_lm_train",
+    "unicode_nfc",
+    "key_skew",
+    "join_cardinality",
+    "pagerank",
+    "triangles",
+    "components",
+    "rate_anomaly",
+    "table_stats",
+    "zorder_key",
+    "ann_recall",
+    "file_stats",
+    "merge_upsert",
+    "gap_fill",
+    "hopping_counts",
+    "cube_counts",
+    "inverted_index",
+    "bm25_search",
+    "view_maintain",
+    "bitext_mine",
+    "pruning_audit",
+    "window_suite",
+    "changepoint_cusum",
+    "concurrency_profile",
+    "scd2_build",
+    "triplet_mine",
+    "trend_slope",
+    "tool_assoc",
+    "weighted_sample",
+    "skyline_docs",
+    "setsim_join",
+    "rank_rbo",
+    "typo_mine",
+    "quantile_norm",
+    "kcenter_coreset",
+    "wav_profile",
+    "png_profile",
+    "l_diversity",
+    "header_footer_strip",
+    "isotonic_calibrate",
+    "threshold_sweep",
+    "ann_dim_audit",
+    "dedup_recall_audit",
+    "response_rouge",
+    "special_tokens",
+    "ann_pq",
+    "ann_ivfpq",
+    "bootstrap_keep",
+    "blocklist_phrases",
+    "dangling_tools",
+    "watermark_scan",
+    "citation_check",
+    "tool_args_valid",
+    "bot_detect",
+    "conv_fork_detect",
+    "homoglyph_scan",
+    "kendall_tau",
+    "km_survival",
+    "toxicity_escalation",
+    "wilson_winrate",
+    "mann_whitney",
+    "dp_release",
+    "bh_fdr",
+    "mcnemar",
+    "theil_sen",
+    "mann_kendall",
+    "krippendorff_alpha",
+    "shapley_rules",
+    "user_retry_detect",
+    "pii_echo",
+    "emd_drift",
+    "weekday_profile",
+    "autocorr_lag1",
+    "runs_test",
+    "markdown_audit",
+    "number_grounding",
+    "embedding_align",
+    "conformal_gate",
+    "dedup_survivorship",
+    "shapley_pipeline",
+    "kcore",
+    "rule_phi",
+    "leet_scan",
+    "conv_quality_card",
+    "t_closeness",
+    "fleiss_kappa",
+    "fd_mine",
+    "cdc_dedup",
+    "char_entropy",
+    "truncation_scan",
+    "dialog_acts",
+    "pseudonymize",
+    "winsorized_stats",
+    "bigram_diversity",
+    "levenshtein_neardup",
+    "bidi_scan",
+    "shuffle_quality",
+    "response_rouge_l",
+    "split_leakage_semantic",
+    "json_keys_profile",
+    "source_vocab_overlap",
+    "knn_label_purity",
+    "ngram_entropy",
+    "lpa_communities",
+    "keep_by_position",
+    "degree_profile",
+    "entropy_secrets",
+    "chunk_anomaly",
+    "ann_multiprobe_topk",
+    "dedup_transitivity",
+    "degree_assortativity",
+    "length_gini",
+    "source_share_gini",
+    "mix_weights_langid",
+    "cjk_token_count",
+    "heaps_law",
+    "source_dup_affinity",
+    "role_alternation",
+    "turn_latency",
+)
+
 
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
@@ -200,205 +383,7 @@ def run_benchmarks() -> dict:
     timed("cli_curate", _curate)
 
     # operator benchmarks over the driver tables at this SF
-    for name in [
-        "odd_char_ratio",
-        "stopword_fraction",
-        "dedup_exact",
-        "summary_report",
-        "ann_cosine_topk",
-        "minhash_dedup",
-        "simhash_neardup",
-        "dedup_clusters",
-        "winnow_containment",
-        "contamination",
-        "corpus_curate",
-        "quality_topk_lang",
-        "gopher_repetition",
-        "span_dedup",
-        "substr_dedup",
-        "hybrid_search",
-        "spearman_signals",
-        "corpus_transform",
-        "semantic_dedup",
-        "tfidf_topk",
-        "quality_classifier",
-        "source_divergence",
-        "bloom_dedup",
-        "pack_sequences",
-        "line_filter",
-        "fingerprint",
-        "dsir_weights",
-        "refusal_scan",
-        "cohort_retention",
-        "sketch_profile",
-        "bpe_train",
-        "echo_detect",
-        "prototypicality",
-        "quality_gate_by_source",
-        "chunk_text",
-        "soft_dedup",
-        "source_overlap",
-        "embedding_quantize",
-        "rule_ablation",
-        "ks_drift",
-        "length_outliers",
-        "ngram_novelty",
-        "embedding_pca",
-        "lang_source_chi2",
-        "token_concentration",
-        "collocations",
-        "tool_usage",
-        "split_leakage",
-        "compression_ratio",
-        "agent_loop_detect",
-        "readability",
-        "url_dedup",
-        "pricing_summary",
-        "vocab_coverage",
-        "injection_scan",
-        "prefix_neardup",
-        "entity_resolution",
-        "ngram_lm",
-        "lm_score",
-        "top_unshipped",
-        "fk_integrity",
-        "curriculum_buckets",
-        "shard_plan",
-        "unigram_lm_train",
-        "unicode_nfc",
-        "big_spenders",
-        "supplier_parts",
-        "key_skew",
-        "join_cardinality",
-        "pagerank",
-        "triangles",
-        "components",
-        "rate_anomaly",
-        "table_stats",
-        "zorder_key",
-        "ann_recall",
-        "file_stats",
-        "promo_parts",
-        "order_count_histogram",
-        "small_qty_revenue",
-        "late_suppliers",
-        "important_parts",
-        "inactive_buyers",
-        "merge_upsert",
-        "gap_fill",
-        "hopping_counts",
-        "cube_counts",
-        "inverted_index",
-        "forecast_revenue",
-        "top_supplier",
-        "returned_revenue",
-        "market_share",
-        "product_profit",
-        "min_cost_supplier",
-        "dominant_suppliers",
-        "bm25_search",
-        "view_maintain",
-        "bitext_mine",
-        "pruning_audit",
-        "window_suite",
-        "changepoint_cusum",
-        "concurrency_profile",
-        "scd2_build",
-        "triplet_mine",
-        "trend_slope",
-        "tool_assoc",
-        "weighted_sample",
-        "skyline_docs",
-        "setsim_join",
-        "rank_rbo",
-        "typo_mine",
-        "quantile_norm",
-        "kcenter_coreset",
-        "wav_profile",
-        "png_profile",
-        "l_diversity",
-        "header_footer_strip",
-        "isotonic_calibrate",
-        "threshold_sweep",
-        "ann_dim_audit",
-        "dedup_recall_audit",
-        "response_rouge",
-        "special_tokens",
-        "ann_pq",
-        "ann_ivfpq",
-        "bootstrap_keep",
-        "blocklist_phrases",
-        "dangling_tools",
-        "watermark_scan",
-        "citation_check",
-        "tool_args_valid",
-        "bot_detect",
-        "conv_fork_detect",
-        "homoglyph_scan",
-        "kendall_tau",
-        "km_survival",
-        "toxicity_escalation",
-        "wilson_winrate",
-        "mann_whitney",
-        "dp_release",
-        "bh_fdr",
-        "mcnemar",
-        "theil_sen",
-        "mann_kendall",
-        "krippendorff_alpha",
-        "shapley_rules",
-        "user_retry_detect",
-        "pii_echo",
-        "emd_drift",
-        "weekday_profile",
-        "autocorr_lag1",
-        "runs_test",
-        "markdown_audit",
-        "number_grounding",
-        "embedding_align",
-        "conformal_gate",
-        "dedup_survivorship",
-        "shapley_pipeline",
-        "kcore",
-        "rule_phi",
-        "leet_scan",
-        "conv_quality_card",
-        "t_closeness",
-        "fleiss_kappa",
-        "fd_mine",
-        "cdc_dedup",
-        "char_entropy",
-        "truncation_scan",
-        "dialog_acts",
-        "pseudonymize",
-        "winsorized_stats",
-        "bigram_diversity",
-        "levenshtein_neardup",
-        "bidi_scan",
-        "shuffle_quality",
-        "response_rouge_l",
-        "split_leakage_semantic",
-        "json_keys_profile",
-        "source_vocab_overlap",
-        "knn_label_purity",
-        "ngram_entropy",
-        "lpa_communities",
-        "keep_by_position",
-        "degree_profile",
-        "entropy_secrets",
-        "chunk_anomaly",
-        "ann_multiprobe_topk",
-        "dedup_transitivity",
-        "degree_assortativity",
-        "length_gini",
-        "source_share_gini",
-        "mix_weights_langid",
-        "cjk_token_count",
-        "heaps_law",
-        "source_dup_affinity",
-        "role_alternation",
-        "turn_latency",
-    ]:
+    for name in BENCH_QUERIES:
         q = E.queries()[name]
         timed(name, lambda q=q: q(spark, SF_DIR).count())
 

@@ -463,7 +463,3 @@ def from_yaml(path_or_str: str) -> QamdConfig:
     if "salt_buckets" in extra:
         kw["salt_buckets"] = int(extra["salt_buckets"])
     return QamdConfig(settings=settings, actions=actions, **kw)
-
-
-def default_config() -> QamdConfig:
-    return QamdConfig()

@@ -155,30 +155,6 @@ def csv_metadata(spark: SparkSession, path: str) -> dict:
     }
 
 
-def write_labeled(df: DataFrame, ref: str, mode: str = "overwrite") -> None:
-    """Write the labeled table partitioned by bucket."""
-    if ref.startswith(ICEBERG_PREFIX):
-        name = ref[len(ICEBERG_PREFIX):]
-        w = df.writeTo(name).using("iceberg")
-        if mode == "append":
-            # append() requires the table to exist and never drops rows;
-            # an unconditional createOrReplace here would silently wipe a
-            # table a caller was incrementally appending to.
-            w.append()
-        elif mode == "overwrite":
-            (
-                w.partitionedBy(df.bucket)  # bucket column from pipeline.label
-                .createOrReplace()
-            )
-        else:
-            raise ValueError(
-                f"unsupported write mode {mode!r} for iceberg ref {ref!r}: "
-                "use 'append' or 'overwrite'"
-            )
-        return
-    df.write.mode(mode).partitionBy("bucket").parquet(ref)
-
-
 def normalize_input(df: DataFrame) -> DataFrame:
     """Project an input table down to the transcript columns (plus the
     bucket partition column when present): labeled OUTPUT fed back as

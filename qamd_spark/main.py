@@ -2,7 +2,7 @@
 
     spark-submit --py-files qamd_spark.zip -m qamd_spark.main \
         run --input <parquet dir> --output <dir> [--config rules.yaml] \
-            [--resume] [--summary-json out.json]
+            [--summary-json out.json]
     python -m qamd_spark.main init > rules.yaml
 
 Mirrors the reference CLI surface (qamd run <file> [-c config] [-o out]
@@ -115,11 +115,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     runp.add_argument("--master", default=None)
     runp.add_argument("--summary-json", default=None)
-    runp.add_argument(
-        "--bucket-batch", type=int, default=None,
-        help="buckets per checkpoint group job; default: adaptive (fresh run"
-        " = one job, resume = groups of 8)",
-    )
     runp.add_argument(
         "--output-format", choices=("json", "html"), default="json",
         help="also write summary.html when html (the reference's default "
@@ -383,8 +378,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = session.get_spark("qamd_spark.run", master=args.master)
     try:
         checkpoint.run_with_checkpoints(
-            spark, args.input, args.output, cfg,
-            bucket_batch=args.bucket_batch, progress=args.progress,
+            spark, args.input, args.output, cfg, progress=args.progress
         )
         # explicit schema: a zero-row input writes no bucket directory,
         # so there is nothing to infer one from

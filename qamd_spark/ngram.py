@@ -50,8 +50,6 @@ def _build_table(text: str) -> np.ndarray:
 
 # Frozen model tables (float64, shape (n_langs, TABLE)).
 LANG_TABLES = np.stack([_build_table(corpora.LANG_CORPORA[l]) for l in LANGS])
-# The perplexity LM is the English table (the "target distribution").
-LM_TABLE = LANG_TABLES[LANGS.index("en")]
 
 
 def _batch_buffers(texts) -> tuple[np.ndarray, np.ndarray]:

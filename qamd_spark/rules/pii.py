@@ -80,8 +80,6 @@ PII_PATTERNS: list[tuple[str, re.Pattern, str]] = [
     ),
 ]
 
-PII_NAMES = [name for name, _, _ in PII_PATTERNS]
-
 
 def profanity_pattern(lexicon: list[str]) -> re.Pattern:
     """Word-boundary alternation over the toxicity lexicon (case-insensitive).

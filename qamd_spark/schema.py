@@ -14,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-ROLES = ("user", "assistant", "system", "tool")
-
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),

@@ -291,12 +291,6 @@ def main() -> None:
             E.q_tool_error_cascade(spark, SF),
         ),
         (
-            "pricing_summary",
-            "TPC-H Q1 shape: one partial+final hash aggregate onto a "
-            "<=9-group grid; all money math in exact rescaled bigints.",
-            E.q_pricing_summary(spark, SF),
-        ),
-        (
             "locators (report.locators, 130-partition input)",
             "Per-rule first-cap failing (conv_id, turn_idx): phase-1 "
             "partial top-k per (rule, scan partition), then a fan-in-64 "
@@ -322,28 +316,6 @@ def main() -> None:
             "table shuffle equi-join (unique-key build side, AQE "
             "skew-splittable), integer-exact per-doc rollup.",
             E.q_lm_score(spark, SF),
-        ),
-        (
-            "top_unshipped",
-            "TPC-H Q3 shape: pushed date/segment filters, equi-joins, "
-            "partial+final revenue aggregate, TakeOrderedAndProject "
-            "global top-k (per-partition heaps + k-row driver merge).",
-            E.q_top_unshipped(spark, SF),
-        ),
-        (
-            "big_spenders",
-            "TPC-H Q18 shape: HAVING evaluated on the lineitem aggregate "
-            "BEFORE any join (one lineitem scan — no IN-subquery rescan), "
-            "joins touch only qualifying orders, TakeOrderedAndProject "
-            "top-100.",
-            E.q_big_spenders(spark, SF),
-        ),
-        (
-            "supplier_parts",
-            "TPC-H Q16 shape: LeftAnti exclusion of flagged suppliers, "
-            "two-level distinct count (stacked hash aggregates, no "
-            "count-distinct Expand), TakeOrderedAndProject top-50.",
-            E.q_supplier_parts(spark, SF),
         ),
         (
             "key_skew",

@@ -5,6 +5,7 @@ since every float is produced by an IEEE-identical expression on both sides.
 """
 
 import math
+import os
 
 import duckdb
 import numpy as np
@@ -70,6 +71,40 @@ def test_rows_only_queries_run(spark):
         n = df.count()
         assert n >= 0
         assert len(df.columns) > 0
+
+
+def test_bench_queries_are_registered_once():
+    import bench
+
+    names = bench.BENCH_QUERIES
+    assert [n for n in names if n not in E.queries()] == []
+    assert len(set(names)) == len(names)
+
+
+def _operators_md_query_names():
+    """Query cells of OPERATORS.md's `| query | ...` tables, combined
+    cells ("a / b") split; parenthesised cells name a pipeline rule or a
+    helper, not a registered query."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names, in_table = [], False
+    with open(os.path.join(repo, "OPERATORS.md")) as f:
+        for line in f:
+            if not line.startswith("|"):
+                in_table = False
+                continue
+            cell = line.split("|")[1].strip()
+            if cell == "query":
+                in_table = True
+            elif in_table and not cell.startswith(("---", "(")):
+                names += [n.strip() for n in cell.split(" / ")]
+    return names
+
+
+def test_operators_md_rows_match_registry():
+    names = _operators_md_query_names()
+    assert sorted(set(names) - set(E.queries())) == []
+    assert sorted(set(E.queries()) - set(names)) == []
+    assert len(set(names)) == len(names)
 
 
 def test_entry_runs(spark):

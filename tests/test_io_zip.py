@@ -64,9 +64,8 @@ def test_iceberg_roundtrip_when_runtime_present(tmp_path):
     """Iceberg smoke (r2 VERDICT item 10) — SKIPPED in this sandbox (no
     iceberg-spark-runtime jar on the classpath; see README 'Iceberg' for
     the jar coordinates). When the jar is present: create a hadoop-catalog
-    table, read it through the iceberg: ref, write labeled output with
-    write_labeled, and check table_fingerprint returns the snapshot id
-    (and changes after a new commit)."""
+    table, read it through the iceberg: ref, and check table_fingerprint
+    returns the snapshot id (and changes after a new commit)."""
     import pytest
     from pyspark.sql import SparkSession
 
