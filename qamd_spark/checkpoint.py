@@ -140,12 +140,6 @@ def input_fingerprint(spark, input_path: str) -> str:
 _MAX_OBSERVED_BUCKETS = 256
 
 
-def _bucket_col(cfg: QamdConfig):
-    # MUST match pipeline.label's bucket derivation so the input pre-filter
-    # selects exactly the rows the group's output partitions will hold
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.n_buckets))
-
-
 def global_stats_tables(
     spark, df, out_dir: str, cfg: QamdConfig, in_fp: str, cfg_fp: str
 ):
@@ -299,7 +293,7 @@ def run_with_checkpoints(
             # validation and then silently match no group's isin filter)
             bad = (
                 df.select("conv_id", "bucket")
-                .filter(~F.col("bucket").eqNullSafe(_bucket_col(cfg)))
+                .filter(~F.col("bucket").eqNullSafe(pipeline.bucket_col(cfg)))
                 .limit(1)
                 .count()
             )
@@ -341,7 +335,7 @@ def run_with_checkpoints(
         elif bucket_partitioned:
             part_in = df.filter(F.col("bucket").isin(group)).drop("bucket")
         else:
-            part_in = df.filter(_bucket_col(cfg).isin(group))
+            part_in = df.filter(pipeline.bucket_col(cfg).isin(group))
         part = pipeline.salted_repartition(
             pipeline.label(
                 part_in, cfg, text_stats_df=ts, conv_stats_df=cs, conv_dup_df=cd

@@ -1,9 +1,12 @@
-"""spark-submit entrypoint.
+"""The `qamd` command line, one handler per subcommand.
 
-    spark-submit --py-files qamd_spark.zip -m qamd_spark.main \
-        run --input <parquet dir> --output <dir> [--config rules.yaml] \
-            [--summary-json out.json]
     python -m qamd_spark.main init > rules.yaml
+    python -m qamd_spark.main run --input <parquet dir> --output <dir> \
+        [--config rules.yaml] [--summary-json out.json]
+
+spark-submit takes a script, not -m: ship the package with
+`--py-files qamd_spark.zip` and submit a driver script that calls
+`main.main([...])` (README, Usage).
 
 Mirrors the reference CLI surface (qamd run <file> [-c config] [-o out]
 [--output-format ...], reference src/bin/qamd.rs:57-135) with `init`
@@ -13,6 +16,7 @@ emitting a default config (reference `gen_config`, src/bin/gen_config.rs).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 
@@ -104,7 +108,12 @@ engine:
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="qamd_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
-    runp = sub.add_parser("run", help="label + scrub a transcript table")
+    # the options every Spark subcommand shares
+    spark_opts = argparse.ArgumentParser(add_help=False)
+    spark_opts.add_argument("--master", default=None)
+    runp = sub.add_parser("run", parents=[spark_opts],
+                          help="label + scrub a transcript table")
+    runp.set_defaults(func=_run_run)
     runp.add_argument("--input", required=True)
     runp.add_argument("--output", required=True)
     runp.add_argument("--config", default=None)
@@ -113,7 +122,6 @@ def main(argv: list[str] | None = None) -> int:
         help="rules.yaml as a base64-encoded string (reference --base64 "
              "flag, src/bin/qamd.rs:200-207); --config takes precedence",
     )
-    runp.add_argument("--master", default=None)
     runp.add_argument("--summary-json", default=None)
     runp.add_argument(
         "--output-format", choices=("json", "html"), default="json",
@@ -131,13 +139,16 @@ def main(argv: list[str] | None = None) -> int:
              "metadata + pass/fail summary only (reference -m flag, "
              "src/bin/qamd.rs:214-218)",
     )
-    sub.add_parser("init", help="print the default rules.yaml")
+    sub.add_parser("init", help="print the default rules.yaml").set_defaults(
+        func=_run_init
+    )
     ded = sub.add_parser(
-        "dedup",
+        "dedup", parents=[spark_opts],
         help="near-duplicate analysis over a (doc_id, text) table: "
              "exact | minhash | simhash | clusters | containment | span "
              "| canonical",
     )
+    ded.set_defaults(func=_run_dedup)
     ded.add_argument("--input", required=True, help="parquet with doc_id+text")
     ded.add_argument("--output", required=True, help="output parquet path")
     ded.add_argument(
@@ -146,24 +157,23 @@ def main(argv: list[str] | None = None) -> int:
                  "span", "canonical"),
         default="minhash",
     )
-    ded.add_argument("--master", default=None)
     ded.add_argument("--id-col", default="doc_id")
     ded.add_argument("--text-col", default="text")
 
     smp = sub.add_parser(
-        "sample",
+        "sample", parents=[spark_opts],
         help="deterministic corpus sampling / data selection: "
              "hash (salted md5 pct) | budget (per-group token quota) | "
              "dsir (importance weights) | dsir-topk (Gumbel-top-k "
              "selection)",
     )
+    smp.set_defaults(func=_run_sample)
     smp.add_argument("--input", required=True, help="parquet table")
     smp.add_argument("--output", required=True, help="output parquet path")
     smp.add_argument(
         "--method", choices=("hash", "budget", "dsir", "dsir-topk"),
         default="hash",
     )
-    smp.add_argument("--master", default=None)
     smp.add_argument("--id-col", default="doc_id")
     smp.add_argument("--text-col", default="text")
     smp.add_argument("--group-col", default="lang",
@@ -179,15 +189,15 @@ def main(argv: list[str] | None = None) -> int:
     smp.add_argument("--salt", default="s")
 
     prof = sub.add_parser(
-        "profile",
+        "profile", parents=[spark_opts],
         help="one-shot corpus profile (datasheet JSON): cardinalities, "
              "size totals, dup/empty fractions, per-language histogram "
              "and tokenizer fertility, per-source length percentiles",
     )
+    prof.set_defaults(func=_run_profile)
     prof.add_argument("--input", required=True, help="parquet table")
     prof.add_argument("--output", default=None,
                       help="write the JSON here (default: stdout)")
-    prof.add_argument("--master", default=None)
     prof.add_argument("--text-col", default="text")
     prof.add_argument("--lang-col", default="lang",
                       help="optional; omitted from the profile if absent")
@@ -195,11 +205,12 @@ def main(argv: list[str] | None = None) -> int:
                       help="optional; omitted from the profile if absent")
 
     bp = sub.add_parser(
-        "bpe",
+        "bpe", parents=[spark_opts],
         help="train a BPE tokenizer over a parquet corpus (writes the "
              "merge list as JSON) or encode a corpus with a trained one "
              "(adds a bpe_tokens array column)",
     )
+    bp.set_defaults(func=_run_bpe)
     bp.add_argument("--input", required=True, help="parquet table")
     bp.add_argument("--output", required=True,
                     help="merges JSON path (train) / parquet path (encode)")
@@ -210,24 +221,24 @@ def main(argv: list[str] | None = None) -> int:
                     help="merges JSON from a train run (encode mode)")
     bp.add_argument("--min-pair-count", type=int, default=2)
     bp.add_argument("--text-col", default="text")
-    bp.add_argument("--master", default=None)
 
     val = sub.add_parser(
         "validate",
         help="lint a rules.yaml: load + bounds-check it and print the "
              "enabled rules with their actions (exit 1 on invalid)",
     )
+    val.set_defaults(func=_run_validate)
     val.add_argument("--config", required=True)
 
     cur = sub.add_parser(
-        "curate",
+        "curate", parents=[spark_opts],
         help="end-to-end corpus curation over a (doc_id, text) table: "
              "normalize -> dedup -> quality gate -> language allowlist "
              "-> deterministic sample -> write, with a per-stage report",
     )
+    cur.set_defaults(func=_run_curate)
     cur.add_argument("--input", required=True)
     cur.add_argument("--output", required=True)
-    cur.add_argument("--master", default=None)
     cur.add_argument("--id-col", default="doc_id")
     cur.add_argument("--text-col", default="text")
     cur.add_argument("--no-normalize", action="store_true")
@@ -247,26 +258,27 @@ def main(argv: list[str] | None = None) -> int:
                      default="parquet")
 
     exp = sub.add_parser(
-        "export",
+        "export", parents=[spark_opts],
         help="convert a table between parquet and JSONL shards "
              "(the LLM-corpus interchange format); arrays/structs "
              "serialize as JSON natively",
     )
+    exp.set_defaults(func=_run_export)
     exp.add_argument("--input", required=True,
                      help="parquet / csv: / jsonl: table ref")
     exp.add_argument("--output", required=True)
     exp.add_argument("--format", choices=("jsonl", "parquet", "orc"),
                      default="jsonl")
-    exp.add_argument("--master", default=None)
     exp.add_argument("--repartition", type=int, default=None,
                      help="shard count (default: keep input partitioning)")
 
     st = sub.add_parser(
-        "stream",
+        "stream", parents=[spark_opts],
         help="incremental per-turn labeling via Structured Streaming "
              "(availableNow trigger: process new files then stop; rerun "
              "with the same --checkpoint to pick up only NEW files)",
     )
+    st.set_defaults(func=_run_stream)
     st.add_argument("--input", required=True, help="parquet file/dir source")
     st.add_argument("--output", required=True)
     st.add_argument(
@@ -274,7 +286,6 @@ def main(argv: list[str] | None = None) -> int:
         help="streaming checkpointLocation (default <output>/_checkpoint)",
     )
     st.add_argument("--config", default=None)
-    st.add_argument("--master", default=None)
     st.add_argument(
         "--continuous", action="store_true",
         help="keep running on the micro-batch trigger instead of "
@@ -282,11 +293,12 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     qr = sub.add_parser(
-        "query",
+        "query", parents=[spark_opts],
         help="run a registered corpus-analytics query over a table "
              "directory (the __spark_entry__ registry: dedup, quality, "
              "readability, contamination, ... — `query --list` for names)",
     )
+    qr.set_defaults(func=_run_query)
     qr.add_argument("--name", default=None, help="query name (see --list)")
     qr.add_argument(
         "--sf-dir", default=None, required=False,
@@ -305,15 +317,15 @@ def main(argv: list[str] | None = None) -> int:
                          "running the query (plan-first workflow: check "
                          "pushdown/broadcast/shuffles before paying for "
                          "the scan)")
-    qr.add_argument("--master", default=None)
 
     au = sub.add_parser(
-        "audit",
+        "audit", parents=[spark_opts],
         help="one-shot corpus QA report: run the bounded audit panel "
              "(datasheet, split leakage, KS drift, vocabulary coverage, "
              "injection scan, jackknife influence, ...) and write one "
              "JSON document",
     )
+    au.set_defaults(func=_run_audit)
     au.add_argument("--sf-dir", required=True,
                     help="directory holding the parquet tables")
     au.add_argument("--output", required=True, help="audit JSON path")
@@ -321,47 +333,72 @@ def main(argv: list[str] | None = None) -> int:
         "--queries", default=None,
         help="comma-separated panel override (bounded-output queries only)",
     )
-    au.add_argument("--master", default=None)
 
     args = p.parse_args(argv)
-    if args.cmd == "query":
-        return _run_query(args)
-    if args.cmd == "audit":
-        return _run_audit(args)
-    if args.cmd == "init":
-        sys.stdout.write(DEFAULT_YAML)
-        return 0
-    if args.cmd == "dedup":
-        return _run_dedup(args)
-    if args.cmd == "sample":
-        return _run_sample(args)
-    if args.cmd == "profile":
-        return _run_profile(args)
-    if args.cmd == "export":
-        return _run_export(args)
-    if args.cmd == "curate":
-        return _run_curate(args)
-    if args.cmd == "validate":
-        try:
-            cfg = C.from_yaml(args.config)
-        except C.ConfigError as e:
-            print(json.dumps({"status": "invalid", "error": str(e)}))
-            return 1
-        print(json.dumps({
-            "status": "ok",
-            "enabled": [
-                {"rule": r.name, "category": r.category,
-                 "action": cfg.action(r.name)}
-                for r in cfg.enabled_rules()
-            ],
-            "n_buckets": cfg.n_buckets,
-        }))
-        return 0
-    if args.cmd == "bpe":
-        return _run_bpe(args)
-    if args.cmd == "stream":
-        return _run_stream(args)
+    return args.func(args)
 
+
+@contextlib.contextmanager
+def _spark(args):
+    """The session for one subcommand, stopped afterwards only if this
+    call created it: getOrCreate may hand back a session owned by an
+    embedding application (or a test harness)."""
+    from pyspark.sql import SparkSession
+
+    preexisting = SparkSession.getActiveSession() is not None
+    spark = session.get_spark(f"qamd_spark.{args.cmd}", master=args.master)
+    try:
+        yield spark
+    finally:
+        if not preexisting:
+            spark.stop()
+
+
+def _write(df, path: str, fmt: str = "parquet") -> int:
+    """Write df to path (overwrite) as parquet, jsonl or orc and return its
+    row count, observed by the write job itself: reading the output back
+    costs another job, and fresh JSONL has no schema to read it with when
+    it is empty."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).format("json" if fmt == "jsonl" else fmt).save(path)
+    return obs.get["rows"]
+
+
+def _require_columns(df, cols) -> None:
+    for col in cols:
+        if col not in df.columns:
+            raise SystemExit(f"input is missing column {col!r}")
+
+
+def _run_init(args) -> int:
+    sys.stdout.write(DEFAULT_YAML)
+    return 0
+
+
+def _run_validate(args) -> int:
+    try:
+        cfg = C.from_yaml(args.config)
+    except C.ConfigError as e:
+        print(json.dumps({"status": "invalid", "error": str(e)}))
+        return 1
+    print(json.dumps({
+        "status": "ok",
+        "enabled": [
+            {"rule": r.name, "category": r.category,
+             "action": cfg.action(r.name)}
+            for r in cfg.enabled_rules()
+        ],
+        "n_buckets": cfg.n_buckets,
+    }))
+    return 0
+
+
+def _run_run(args) -> int:
     if args.config:
         cfg = C.from_yaml(args.config)
     elif args.base64_config:
@@ -370,13 +407,7 @@ def main(argv: list[str] | None = None) -> int:
         cfg = C.from_yaml(base64.b64decode(args.base64_config).decode("utf-8"))
     else:
         cfg = C.QamdConfig()
-    from pyspark.sql import SparkSession
-
-    # getOrCreate may hand back a session owned by an embedding application
-    # (or a test harness) — only stop what we actually created
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.run", master=args.master)
-    try:
+    with _spark(args) as spark:
         checkpoint.run_with_checkpoints(
             spark, args.input, args.output, cfg, progress=args.progress
         )
@@ -405,9 +436,6 @@ def main(argv: list[str] | None = None) -> int:
                 f.write(report.to_html(json.loads(summ)))
         print(json.dumps({"status": "ok", "output": args.output}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _load_query_registry():
@@ -448,11 +476,7 @@ def _run_query(args) -> int:
         )
     if not args.sf_dir:
         raise SystemExit("--sf-dir is required to run a query")
-    from pyspark.sql import SparkSession
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.query", master=args.master)
-    try:
+    with _spark(args) as spark:
         df = qs[args.name](spark, args.sf_dir)
         if args.explain:
             print(df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -462,10 +486,9 @@ def _run_query(args) -> int:
                               "explained": True}))
             return 0
         if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-            n = spark.read.parquet(args.output).count()
             print(json.dumps({"status": "ok", "query": args.name,
-                              "rows": n, "output": args.output}))
+                              "rows": _write(df, args.output),
+                              "output": args.output}))
         else:
             rows = df.limit(args.limit).collect()
             for r in rows:
@@ -475,9 +498,6 @@ def _run_query(args) -> int:
             print(json.dumps({"status": "ok", "query": args.name,
                               "printed": len(rows)}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 # bounded-output audit queries: every entry's row count is capped by the
@@ -520,11 +540,7 @@ def _run_audit(args) -> int:
     unknown = [q for q in panel if q not in qs]
     if unknown:
         raise SystemExit(f"unknown audit queries: {unknown}")
-    from pyspark.sql import SparkSession
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.audit", master=args.master)
-    try:
+    with _spark(args) as spark:
         report: dict = {"sf_dir": args.sf_dir, "panel": panel, "sections": {}}
         for name in panel:
             # the report is a driver-side collect by design — enforce the
@@ -548,9 +564,6 @@ def _run_audit(args) -> int:
             "sections": {n: len(report["sections"][n]) for n in panel},
         }))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _json_safe(v):
@@ -575,14 +588,10 @@ def _run_stream(args) -> int:
     Cross-row rules are stripped per streaming.CROSS_ROW_RULES — the
     checkpointed batch `run` remains the system of record for global
     dedup/aggregates."""
-    from pyspark.sql import SparkSession
-
     from qamd_spark import streaming
 
     cfg = C.from_yaml(args.config) if args.config else C.QamdConfig()
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.stream", master=args.master)
-    try:
+    with _spark(args) as spark:
         q = streaming.stream_label(
             spark,
             args.input,
@@ -592,12 +601,10 @@ def _run_stream(args) -> int:
             available_now=not args.continuous,
         )
         q.awaitTermination()
+        # the sink's cumulative total, across every run on this checkpoint
         n = spark.read.parquet(args.output + "/data").count()
         print(json.dumps({"status": "ok", "output": args.output, "rows": n}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_dedup(args) -> int:
@@ -605,26 +612,21 @@ def _run_dedup(args) -> int:
     reference's single-purpose CLI has no analogue for): reads a parquet
     table with (id, text) columns, writes the operator's output parquet,
     prints one JSON status line."""
-    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from qamd_spark.ops import dedup as dd
     from qamd_spark.ops import text as tx
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.dedup", master=args.master)
-    try:
+    with _spark(args) as spark:
         raw = spark.read.parquet(args.input)
-        for col in (args.id_col, args.text_col):
-            if col not in raw.columns:
-                raise SystemExit(f"input is missing column {col!r}")
-        from pyspark.sql import functions as F
-
+        _require_columns(raw, (args.id_col, args.text_col))
         docs = raw.select(
-            F.col(args.id_col).cast("long").alias("doc_id"),
+            F.col(args.id_col).try_cast("long").alias("doc_id"),
             F.col(args.text_col).alias("text"),
         )
-        # a non-numeric id column casts to all-NULL doc_ids and the
-        # operators would return empty/garbage with exit code 0 — fail loud
+        # a NULL or non-numeric id would make the operators return
+        # empty/garbage with exit code 0 — fail loud (try_cast: a plain
+        # cast raises its own error under ANSI mode instead)
         if docs.filter(F.col("doc_id").isNull()).limit(1).count():
             raise SystemExit(
                 f"id column {args.id_col!r} has values not castable to long "
@@ -648,35 +650,25 @@ def _run_dedup(args) -> int:
             out = dd.canonical_keepers(docs, dd.minhash_duplicates(docs))
         else:
             out = tx.winnow_containment(docs)
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
         print(json.dumps({"status": "ok", "method": args.method,
-                          "output": args.output, "rows": n}))
+                          "output": args.output,
+                          "rows": _write(out, args.output)}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_sample(args) -> int:
     """CLI front-end for the ops/sampling family: deterministic (no-RNG)
     corpus sampling and DSIR data selection over a parquet table."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
     from qamd_spark.ops import sampling as smp
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.sample", master=args.master)
-    try:
+    with _spark(args) as spark:
         df = spark.read.parquet(args.input)
-        need = {"hash": [args.id_col],
-                "budget": [args.group_col, args.id_col, args.weight_col],
-                "dsir": [args.id_col, args.text_col],
-                "dsir-topk": [args.id_col, args.text_col]}[args.method]
-        for col in need:
-            if col not in df.columns:
-                raise SystemExit(f"input is missing column {col!r}")
+        _require_columns(df, {
+            "hash": [args.id_col],
+            "budget": [args.group_col, args.id_col, args.weight_col],
+            "dsir": [args.id_col, args.text_col],
+            "dsir-topk": [args.id_col, args.text_col],
+        }[args.method])
         if args.method == "hash":
             if not (0 < args.pct <= 100):
                 raise SystemExit("--pct must be in (0, 100]")
@@ -692,14 +684,10 @@ def _run_sample(args) -> int:
             if args.k < 1:
                 raise SystemExit("--k must be >= 1")
             out = smp.dsir_resample(df, args.k, args.id_col, args.text_col)
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
         print(json.dumps({"status": "ok", "method": args.method,
-                          "output": args.output, "rows": n}))
+                          "output": args.output,
+                          "rows": _write(out, args.output)}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_bpe(args) -> int:
@@ -707,16 +695,11 @@ def _run_bpe(args) -> int:
     rank-greedy corpus encoding (encode). The merges JSON is the
     interchange between the two modes (and with external tooling):
     {"merges": [[left, right, pair_count], ...]} in rank order."""
-    from pyspark.sql import SparkSession
-
     from qamd_spark.ops import bpe
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.bpe", master=args.master)
-    try:
+    with _spark(args) as spark:
         df = spark.read.parquet(args.input)
-        if args.text_col not in df.columns:
-            raise SystemExit(f"input is missing column {args.text_col!r}")
+        _require_columns(df, [args.text_col])
         if args.mode == "train":
             if args.merges < 1:
                 raise SystemExit("--merges must be >= 1")
@@ -736,14 +719,10 @@ def _run_bpe(args) -> int:
             with open(args.merges_file, encoding="utf-8") as f:
                 merges = [tuple(m) for m in json.load(f)["merges"]]
             out = bpe.bpe_encode(df, merges, text_col=args.text_col)
-            out.write.mode("overwrite").parquet(args.output)
-            n = spark.read.parquet(args.output).count()
             print(json.dumps({"status": "ok", "mode": "encode",
-                              "rows": n, "output": args.output}))
+                              "rows": _write(out, args.output),
+                              "output": args.output}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_curate(args) -> int:
@@ -759,19 +738,15 @@ def _run_curate(args) -> int:
     is an Observation collected by the write job as it reads that stage's
     node, which it does exactly once.
     Determinism end to end: no RNG, agg+join dedup, salted-md5 sample."""
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from qamd_spark.ops import dedup as dd
     from qamd_spark.ops import text as tx
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.curate", master=args.master)
-    try:
+    with _spark(args) as spark:
         raw = io.read_table(spark, args.input)
-        for col in (args.id_col, args.text_col):
-            if col not in raw.columns:
-                raise SystemExit(f"input is missing column {col!r}")
+        _require_columns(raw, (args.id_col, args.text_col))
         df = raw.withColumnRenamed(args.id_col, "doc_id").withColumnRenamed(
             args.text_col, "text"
         )
@@ -829,8 +804,6 @@ def _run_curate(args) -> int:
             if "lang" in df.columns:
                 df = stage("langid", df.filter(F.col("lang").isin(allowed)))
             else:
-                import pandas as pd
-
                 from qamd_spark import ngram
 
                 def _lid(it):
@@ -861,10 +834,7 @@ def _run_curate(args) -> int:
                 ),
             )
         data = args.output + "/data"
-        if args.format == "jsonl":
-            df.write.mode("overwrite").json(data)
-        else:
-            df.write.mode("overwrite").parquet(data)
+        _write(df, data, args.format)
         report = {
             "input": args.input,
             "stages": [
@@ -880,9 +850,6 @@ def _run_curate(args) -> int:
         print(json.dumps({"status": "ok", "output": args.output,
                           "stages": report["stages"]}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_export(args) -> int:
@@ -890,32 +857,14 @@ def _run_export(args) -> int:
     shards. JSONL writes are Spark's native json sink (one object per
     line, splittable downstream); this is the export half of the
     `jsonl:` source."""
-    from pyspark.sql import Observation, SparkSession
-    from pyspark.sql import functions as F
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.export", master=args.master)
-    try:
+    with _spark(args) as spark:
         df = io.read_table(spark, args.input)
         if args.repartition:
             df = df.repartition(args.repartition)
-        # the row count rides on the write job: re-reading the fresh JSONL
-        # would need schema inference, which throws on an empty (but
-        # valid) output, and a count() before the write scans twice
-        obs = Observation("qamd-export")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if args.format == "jsonl":
-            df.write.mode("overwrite").json(args.output)
-        elif args.format == "orc":
-            df.write.mode("overwrite").orc(args.output)
-        else:
-            df.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"status": "ok", "format": args.format,
-                          "output": args.output, "rows": obs.get["rows"]}))
+                          "output": args.output,
+                          "rows": _write(df, args.output, args.format)}))
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 def _run_profile(args) -> int:
@@ -923,17 +872,13 @@ def _run_profile(args) -> int:
     column: the profile a curation run reads before deciding filters
     (Datasheets-for-Datasets style). All counts exact; fractions are
     single divisions; everything is one scan per section."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from qamd_spark.ops import text as tx
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = session.get_spark("qamd_spark.profile", master=args.master)
-    try:
+    with _spark(args) as spark:
         df = spark.read.parquet(args.input)
-        if args.text_col not in df.columns:
-            raise SystemExit(f"input is missing column {args.text_col!r}")
+        _require_columns(df, [args.text_col])
         t = F.coalesce(F.col(args.text_col), F.lit(""))
         have_lang = args.lang_col in df.columns
         have_src = args.source_col in df.columns
@@ -1023,9 +968,6 @@ def _run_profile(args) -> int:
         else:
             print(out)
         return 0
-    finally:
-        if not preexisting:
-            spark.stop()
 
 
 if __name__ == "__main__":

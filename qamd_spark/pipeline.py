@@ -416,11 +416,15 @@ def label(
         dropped = e if dropped is None else (dropped | e)
     keep = ~dropped if dropped is not None else F.lit(True)
     out = joined.withColumn("rule_hits", rule_hits).withColumn("keep", keep)
-    out = out.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.n_buckets)).cast("int"),
-    )
+    out = out.withColumn("bucket", bucket_col(cfg).cast("int"))
     return out.select(*[f.name for f in S.labeled_schema(cfg).fields])
+
+
+def bucket_col(cfg: QamdConfig) -> "F.Column":
+    """The output bucket of a turn: pmod(xxhash64(conv_id), n_buckets).
+    The checkpoint's input pre-filter and bucket-spec check use it too, so
+    a group job reads exactly the rows its output partitions will hold."""
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.n_buckets))
 
 
 def salted_repartition(df: DataFrame, cfg: QamdConfig) -> DataFrame:

@@ -121,6 +121,7 @@ def test_bpe_cli_train_and_encode(spark, tmp_path):
     assert rc == 0
     enc = spark.read.parquet(out)
     assert "bpe_tokens" in enc.columns
+    assert json.loads(s.getvalue())["rows"] == enc.count()
     ranks = {(a, b): i for i, (a, b, _) in enumerate(got)}
     r = enc.orderBy("doc_id").limit(1).collect()[0]
     want = []

@@ -105,7 +105,7 @@ def test_group_job_prefilters_scan_and_reuses_stats(spark, synth_path, tmp_path,
     out = str(tmp_path / "out")
     df = spark.read.parquet(synth_path)
     ts, cs, _cd = checkpoint.global_stats_tables(spark, df, out, cfg, "fp_i", "fp_c")
-    part_in = df.filter(checkpoint._bucket_col(cfg).isin([0, 1]))
+    part_in = df.filter(pipeline.bucket_col(cfg).isin([0, 1]))
     part = pipeline.label(part_in, cfg, text_stats_df=ts, conv_stats_df=cs)
     plan = part._sc._jvm.PythonSQLUtils.explainString(
         part._jdf.queryExecution(), "formatted"

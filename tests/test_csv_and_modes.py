@@ -148,7 +148,7 @@ def test_checkpointed_run_over_csv_source(spark, tmp_path):
     assert "c9" not in kept and "c0" in kept
 
 
-def test_cli_dedup_subcommand(tmp_path, spark):
+def test_cli_dedup_subcommand(tmp_path, spark, capsys):
     """The dedup CLI front-end: every method runs over a (doc_id, text)
     parquet and writes its output parquet; minhash output matches the
     library call."""
@@ -176,6 +176,8 @@ def test_cli_dedup_subcommand(tmp_path, spark):
         got = spark.read.parquet(out)
         assert set(got.columns) == cols, (method, got.columns)
         assert got.count() > 0
+        status = _json.loads(capsys.readouterr().out.splitlines()[-1])
+        assert status["rows"] == got.count(), method
     lib = dd.minhash_duplicates(spark.read.parquet(src)).toPandas()
     cli = spark.read.parquet(str(tmp_path / "minhash")).toPandas()
     a = lib.sort_values(["doc_id"]).reset_index(drop=True)
@@ -184,7 +186,7 @@ def test_cli_dedup_subcommand(tmp_path, spark):
     assert (a["dup_of"].to_numpy() == b["dup_of"].to_numpy()).all()
 
 
-def test_cli_sample_subcommand(tmp_path, spark):
+def test_cli_sample_subcommand(tmp_path, spark, capsys):
     """The sample CLI front-end: all four methods run over a documents
     parquet and write their outputs; hash is reproducible and ~pct-sized;
     dsir-topk returns exactly k rows matching the library call."""
@@ -201,6 +203,8 @@ def test_cli_sample_subcommand(tmp_path, spark):
     assert rc == 0
     got = spark.read.parquet(out)
     assert 0 < got.count() < n_src * 0.2
+    status = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert status["rows"] == got.count()
     rc = main.main(["sample", "--input", src, "--output", str(tmp_path / "h2"),
                     "--method", "hash", "--pct", "10",
                     "--master", "local[4]"])
@@ -486,6 +490,62 @@ def test_curate_stage_counts_match_sequential_counts(tmp_path, spark,
         main.main(["curate", "--input", bad, "--output",
                    str(tmp_path / "bad_out"), "--master", "local[4]"])
     assert not os.path.exists(tmp_path / "bad_out" / "data")
+    # dedup rejects it the same way (and, unlike curate, a NULL id too)
+    with pytest.raises(SystemExit, match="not castable to long"):
+        main.main(["dedup", "--input", bad, "--output",
+                   str(tmp_path / "bad_dedup"), "--master", "local[4]"])
+    assert not os.path.exists(tmp_path / "bad_dedup")
+
+
+# every subcommand's option strings, as `qamd <cmd> --help` lists them
+CLI_OPTIONS = {
+    "run": {"-h", "--help", "--master", "--input", "--output", "--config",
+            "--base64-config", "--summary-json", "--output-format",
+            "-p", "--progress", "-m", "--metadata-only"},
+    "init": {"-h", "--help"},
+    "dedup": {"-h", "--help", "--master", "--input", "--output", "--method",
+              "--id-col", "--text-col"},
+    "sample": {"-h", "--help", "--master", "--input", "--output", "--method",
+               "--id-col", "--text-col", "--group-col", "--weight-col",
+               "--pct", "--budget", "--k", "--salt"},
+    "profile": {"-h", "--help", "--master", "--input", "--output",
+                "--text-col", "--lang-col", "--source-col"},
+    "bpe": {"-h", "--help", "--master", "--input", "--output", "--mode",
+            "--merges", "--merges-file", "--min-pair-count", "--text-col"},
+    "validate": {"-h", "--help", "--config"},
+    "curate": {"-h", "--help", "--master", "--input", "--output", "--id-col",
+               "--text-col", "--no-normalize", "--dedup", "--min-quality",
+               "--langs", "--sample-pct", "--salt", "--format"},
+    "export": {"-h", "--help", "--master", "--input", "--output", "--format",
+               "--repartition"},
+    "stream": {"-h", "--help", "--master", "--input", "--output",
+               "--checkpoint", "--config", "--continuous"},
+    "query": {"-h", "--help", "--master", "--name", "--sf-dir", "--output",
+              "--limit", "--list", "--explain"},
+    "audit": {"-h", "--help", "--master", "--sf-dir", "--output",
+              "--queries"},
+}
+
+
+def test_cli_option_table(capsys):
+    """No subcommand gains or loses an option: each `--help` lists exactly
+    the option strings of CLI_OPTIONS. Parses arguments only; no Spark."""
+    import re
+
+    import pytest
+
+    for cmd, want in CLI_OPTIONS.items():
+        with pytest.raises(SystemExit) as e:
+            main.main([cmd, "--help"])
+        assert e.value.code == 0
+        got = set()
+        for line in capsys.readouterr().out.splitlines():
+            # an option line: two spaces, then the invocation column
+            m = re.match(r"  (-\S.*?)(?:\s{2,}|$)", line)
+            if m:
+                got.update(re.findall(r"(?<![\w-])--?[A-Za-z][\w-]*",
+                                      m.group(1)))
+        assert got == want, cmd
 
 
 def test_cli_validate(tmp_path):
@@ -545,6 +605,7 @@ def test_cli_query_runner(tmp_path, spark, capsys):
     assert rc == 0
     status = _json.loads(capsys.readouterr().out.splitlines()[-1])
     assert status["status"] == "ok"
+    assert status["rows"] == spark.read.parquet(out).count()
     got = {
         (r["log2_len"], r["n_docs"]) for r in spark.read.parquet(out).collect()
     }
