@@ -13,8 +13,9 @@ transcript_pipeline, ccnet_buckets), deterministic-hash ops (minhash,
 simhash(+neardup), ngram_jaccard, winnow(+containment), dedup_clusters,
 dedup_canonical — exact twins in oracle/), ANN (ann_lsh_topk and
 embedding_neardup_lsh exact twins; ann_ivf_topk recall-pinned;
-prototypicality exact twin), iterative training (bpe_train /
-unigram_lm_train — bit-exact vs pure-Python twins), iterative graph
+prototypicality exact twin), tokenizer training (bpe_train /
+unigram_lm_train — one Spark pass for the word histogram, then driver
+learners; BPE bit-exact vs a naive spec), iterative graph
 fixpoints (pagerank — integer fixed-point, bit-exact Python twin;
 components — union-find twin), physical-layout audits whose oracles
 cannot see file paths or index internals (file_stats — pyarrow footer
@@ -6121,12 +6122,12 @@ def q_prototypicality(spark, sf_dir):
 
 
 def q_bpe_train(spark, sf_dir):
-    """Distributed BPE tokenizer training (ops/bpe.py): learn the top-30
-    merges over the documents corpus. Iterative (one pair-count hash
-    aggregate per round over the DISTINCT-word table, single winning row
-    to the driver per round) — non-SQL-expressible, so rows-only in the
-    driver gate; tests/test_bpe.py pins the merge list bit-exact against
-    the pure-Python twin and the encoder's replay property."""
+    """BPE tokenizer training (ops/bpe.py): learn the top-30 merges over
+    the documents corpus. One Spark pass builds the distinct-word
+    histogram (at most bpe.MAX_DISTINCT_WORDS words, collected); the
+    merges are learned on the driver — non-SQL-expressible, so rows-only
+    in the driver gate; tests/test_bpe.py pins the merge list bit-exact
+    against a naive spec and the encoder's replay property."""
     from qamd_spark.ops import bpe
 
     merges = bpe.train_bpe(
@@ -8394,13 +8395,12 @@ def q_unigram_lm_train(spark, sf_dir):
     vocabulary from the word histogram, Viterbi-E-step over the
     HISTOGRAM (never the corpus), integer M-step counts, prune to the
     vocab budget. Rows-only (an EM-trained vocabulary has no SQL twin);
-    evidence = tests/test_bpe.py unigram section: bit-exact equality
-    with the pure-Python twin (shared viterbi/logp/prune helpers),
+    evidence = tests/test_bpe.py unigram section: the Spark-built and
+    pandas-built histograms train a bit-identical vocabulary,
     planted-pattern capture, determinism across partitionings, and the
-    encode round-trip. Scale: one corpus pass for the histogram; per
-    iteration one Arrow stage + one hash aggregate over the
-    vocabulary-sized histogram; only the <=seed_size piece table ever
-    reaches the driver (ivf_train's bounded-coordination contract)."""
+    encode round-trip. Scale: one corpus pass for the histogram (at most
+    bpe.MAX_DISTINCT_WORDS words, collected); seed, EM and prune run on
+    the driver, so the Spark jobs do not grow with the iterations."""
     from qamd_spark.ops import unigram as ug
 
     pieces = ug.train_unigram(

@@ -691,7 +691,8 @@ def _run_sample(args) -> int:
 
 
 def _run_bpe(args) -> int:
-    """CLI front-end for ops/bpe: distributed merge learning (train) and
+    """CLI front-end for ops/bpe: merge learning over the corpus's word
+    histogram (train; exits if the histogram is over the driver cap) and
     rank-greedy corpus encoding (encode). The merges JSON is the
     interchange between the two modes (and with external tooling):
     {"merges": [[left, right, pair_count], ...]} in rank order."""
@@ -703,10 +704,13 @@ def _run_bpe(args) -> int:
         if args.mode == "train":
             if args.merges < 1:
                 raise SystemExit("--merges must be >= 1")
-            merges = bpe.train_bpe(
-                df, text_col=args.text_col, num_merges=args.merges,
-                min_pair_count=args.min_pair_count,
-            )
+            try:
+                merges = bpe.train_bpe(
+                    df, text_col=args.text_col, num_merges=args.merges,
+                    min_pair_count=args.min_pair_count,
+                )
+            except ValueError as e:
+                raise SystemExit(str(e)) from None
             with open(args.output, "w", encoding="utf-8") as f:
                 json.dump({"merges": [list(m) for m in merges]}, f,
                           ensure_ascii=False)

@@ -1,64 +1,73 @@
-"""Distributed BPE tokenizer training + encoding.
+"""BPE tokenizer training + encoding.
 
 Classic byte-pair-encoding merge learning (Sennrich et al. 2016,
-"Neural Machine Translation of Rare Words with Subword Units") expressed
-as DataFrame jobs:
+"Neural Machine Translation of Rare Words with Subword Units"):
 
-- the corpus reduces ONCE to the distinct (word, count) table — at
-  100 TB the distinct vocabulary is millions of rows, not trillions, so
-  every subsequent round runs over a small table;
-- each merge round is one partial+final hash aggregate over adjacent
-  symbol pairs (weighted by word count) and only the single winning
-  pair crosses the driver (the bounded-coordination precedent set by
-  IVF's centroid collect, ops/similarity.py);
-- applying a merge is a JVM-side left fold over the segment array
-  (greedy leftmost-first, non-overlapping — the textbook semantics),
-  with a localCheckpoint per round so the plan stays flat across
-  rounds (the dedup_clusters precedent, ops/dedup.py).
+- the corpus reduces ONCE, in Spark, to the distinct (word, count)
+  histogram (``word_counts``, one partial+final hash aggregate), which
+  ``word_hist`` collects to the driver in one action;
+- the merges are learned on the driver over that histogram
+  (``learn_merges``): an incremental pair index (pair -> weighted count,
+  pair -> ids of the words holding it) and a lazy max-heap, so a merge
+  re-counts only the words that contain the winning pair — the index
+  Sennrich et al.'s ``learn_bpe`` keeps. Merges are greedy leftmost
+  non-overlapping, the textbook semantics.
+
+Scale: training runs the same Spark jobs whatever ``num_merges`` is —
+the histogram aggregate and its collect. The bound is the driver: the
+distinct vocabulary must hold at most ``MAX_DISTINCT_WORDS`` words, and
+``word_hist`` raises above it after reading cap + 1 rows.
 
 Encoding applies the learned ranks in a single Arrow-batched stage with
 the rank table shipped in the task closure (GPT-2-style rank-greedy
 merge loop, memoized per distinct word within each batch).
 
-Determinism: winner selection orders by (count DESC, left ASC,
-right ASC) over STRUCT pair keys — exact integer counts and binary
-string order, identical in the pure-Python twin (``train_bpe_py``,
-tuple keys), so the learned merge list is bit-reproducible across
-engines and cluster sizes. Struct keys (not a joined string) mean a
-separator character appearing inside a symbol can never make two
-distinct pairs collide.
+Determinism: the winner is the pair with the largest count, ties
+broken by (left, right) ascending in code-point order — exact integer
+counts and tuple keys, so the merge list does not depend on the
+partitioning of the corpus or the order of the histogram.
 
 Reference scope: the reference (ukdataservice/qamd) has no tokenizer;
 this extends the training-data-pipeline surface (token_count_bpe /
 fertility_by_lang use a FIXED regex tokenizer — this is the learned
 one that the fertility/token-budget math ultimately serves).
 
-Unicode note: symbols are Java UTF-16 code units on the Spark side and
-codepoints in the twin — identical for all BMP text (the corpora here);
-astral codepoints would split differently and are out of scope.
+Unicode note: symbols are Python code points, both in training and in
+encoding, so astral text (emoji) merges like any other: ``"😀😀 😀😀"``
+learns the single merge ('😀', '😀', 2). Spark's ``lower``/``\\s+`` split
+and ``_py_words`` agree on the word boundary; tests/test_bpe.py pins
+that on hostile text.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
+import heapq
 import re
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Java regex \s (the training-side tokenizer) is the ASCII class below —
-# NOT Python's Unicode \s (which also matches NBSP etc.). The encoder and
-# the pure-Python twin split on exactly this class so training and
-# encoding always agree on what a word is.
+# NOT Python's Unicode \s (which also matches NBSP etc.). The encoder
+# splits on exactly this class so training and encoding always agree on
+# what a word is.
 _JAVA_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+# Training holds the word histogram on the driver. The BPE learner's pair
+# index peaks at about 1.2 kB per distinct word (116 MB for 100k synthetic
+# words), so the cap keeps the driver near 1.2 GB. A larger vocabulary is
+# refused after cap + 1 rows, not collected; train on a sample of such a
+# corpus (``qamd sample``) instead.
+MAX_DISTINCT_WORDS = 1_000_000
 
 
 def _py_words(text: str | None) -> list[str]:
     """Python twin of the Spark-side tokenization (lower + \\s+ split +
-    drop empties). str.lower() vs Java toLowerCase differ only on locale
-    edge cases (e.g. dotted İ) absent from these corpora."""
+    drop empties), used by the encoders. tests/test_bpe.py pins it equal
+    to ``word_counts`` on hostile text (NBSP, vertical tab, CRLF, C0
+    controls and separators, astral code points, dotted İ, final sigma)."""
     return [w for w in _JAVA_WS_RE.split((text or "").lower()) if w]
 
 
@@ -74,21 +83,31 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _apply_merge(segs, left: str, right: str):
-    """Greedy leftmost non-overlapping merge of (left, right) -> left+right
-    as a JVM left fold (no Python)."""
-    a, b = F.lit(left), F.lit(right)
-    return F.aggregate(
-        segs,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (x == b),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(F.element_at(acc, -1), x)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
+def word_hist(df: DataFrame, text_col: str = "text") -> dict[str, int]:
+    """Collect the word histogram to the driver, refusing one over
+    ``MAX_DISTINCT_WORDS`` distinct words. The ``limit`` makes the bound
+    cost no extra job: an over-cap vocabulary stops after cap + 1 rows
+    instead of being collected whole."""
+    rows = word_counts(df, text_col).limit(MAX_DISTINCT_WORDS + 1).collect()
+    if len(rows) > MAX_DISTINCT_WORDS:
+        raise ValueError(
+            f"{text_col!r} has more than {MAX_DISTINCT_WORDS:,} distinct "
+            "words; tokenizer training holds the word histogram on the driver"
+        )
+    return {r["word"]: r["cnt"] for r in rows}
+
+
+def _merge_pair(syms: list[str], a: str, b: str) -> list[str]:
+    """Greedy leftmost non-overlapping merge of (a, b) -> a+b."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 def train_bpe(
@@ -100,39 +119,56 @@ def train_bpe(
     """Learn ``num_merges`` BPE merges; returns [(left, right, pair_count)]
     in rank order. Stops early when the best remaining pair occurs fewer
     than ``min_pair_count`` times."""
-    words = (
-        word_counts(df, text_col)
-        .withColumn("segs", F.split(F.col("word"), ""))
-        .select("cnt", "segs")
-        .localCheckpoint(eager=True)
-    )
+    return learn_merges(word_hist(df, text_col), num_merges, min_pair_count)
+
+
+def learn_merges(
+    wc: dict[str, int], num_merges: int = 50, min_pair_count: int = 2
+) -> list[tuple[str, str, int]]:
+    """The merge learner over a {word: count} histogram. ``count`` holds
+    every adjacent pair's weighted count and ``where`` the ids of the
+    words that may contain it (stale ids are harmless: merging them is
+    a no-op), so a merge re-counts only the words holding the winner.
+    The heap is lazy: an entry whose count is no longer current is
+    dropped when popped, and every count change pushes a fresh entry."""
+    syms = [list(w) for w in wc]
+    weight = list(wc.values())
+    count: dict[tuple[str, str], int] = {}
+    where: dict[tuple[str, str], set[int]] = {}
+
+    def tally(i: int, sign: int, touched: set) -> None:
+        s = syms[i]
+        for p in zip(s, s[1:]):
+            count[p] = count.get(p, 0) + sign * weight[i]
+            touched.add(p)
+            if sign > 0:
+                where.setdefault(p, set()).add(i)
+
+    pairs: set[tuple[str, str]] = set()
+    for i in range(len(syms)):
+        tally(i, 1, pairs)
+    heap = [(-count[p], p) for p in pairs]
+    heapq.heapify(heap)
     merges: list[tuple[str, str, int]] = []
-    for _ in range(num_merges):
-        pair = F.explode(
-            F.zip_with(
-                F.slice("segs", 1, F.greatest(F.size("segs") - 1, F.lit(0))),
-                F.slice("segs", 2, F.greatest(F.size("segs") - 1, F.lit(0))),
-                lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-            )
-        ).alias("p")
-        best = (
-            words.select("cnt", pair)
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_count:
+    while heap and len(merges) < num_merges:
+        neg, (a, b) = heapq.heappop(heap)
+        if count.get((a, b)) != -neg:
+            continue
+        if -neg < min_pair_count:
             break
-        left, right = best[0]["l"], best[0]["r"]
-        merges.append((left, right, int(best[0]["n"])))
-        prev = words
-        words = words.select(
-            "cnt", _apply_merge(F.col("segs"), left, right).alias("segs")
-        ).localCheckpoint(eager=True)
-        prev.unpersist()
-    words.unpersist()
+        merges.append((a, b, -neg))
+        touched: set[tuple[str, str]] = set()
+        for i in where.pop((a, b)):
+            new = _merge_pair(syms[i], a, b)
+            if len(new) < len(syms[i]):
+                tally(i, -1, touched)
+                syms[i] = new
+                tally(i, 1, touched)
+        for p in touched:
+            if count[p]:
+                heapq.heappush(heap, (-count[p], p))
+            else:
+                del count[p]
     return merges
 
 
@@ -158,16 +194,7 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
         if best_rank is None:
             break
         # merge ALL leftmost non-overlapping occurrences of that pair
-        a, b = syms[best_i], syms[best_i + 1]
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
+        syms = _merge_pair(syms, syms[best_i], syms[best_i + 1])
     return syms
 
 
@@ -201,40 +228,3 @@ def bpe_encode(
         return s.map(enc_text)
 
     return df.select(*fields, _enc(F.col(text_col)).alias(out_col))
-
-
-# ------------------------------------------------------------- exact twin
-def train_bpe_py(
-    wc: dict[str, int], num_merges: int = 50, min_pair_count: int = 2
-) -> list[tuple[str, str, int]]:
-    """Pure-Python twin of train_bpe over a word->count dict (same
-    tie-break: count desc, then (left, right) tuple ascending by
-    codepoint — binary order on the corpora's BMP text, matching
-    Spark's (l ASC, r ASC) over UTF-8 binary string order)."""
-    segs = {w: list(w) for w in wc}
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(num_merges):
-        pc: dict[tuple[str, str], int] = {}
-        for w, ss in segs.items():
-            c = wc[w]
-            for i in range(len(ss) - 1):
-                p = (ss[i], ss[i + 1])
-                pc[p] = pc.get(p, 0) + c
-        if not pc:
-            break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), n = best
-        if n < min_pair_count:
-            break
-        merges.append((a, b, n))
-        for w, ss in segs.items():
-            out, i = [], 0
-            while i < len(ss):
-                if i + 1 < len(ss) and ss[i] == a and ss[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(ss[i])
-                    i += 1
-            segs[w] = out
-    return merges

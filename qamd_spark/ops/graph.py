@@ -7,7 +7,7 @@ graph algorithm, and this module expresses it the Spark-first way: the
 edge table is the only large state, each iteration is ONE shuffle
 equi-join (ranks -> edges on src) plus ONE partial+final hash aggregate
 (sum of contributions per dst), and lineage is truncated per round with
-``localCheckpoint`` (the dedup_clusters / bpe_train precedent). The only
+``localCheckpoint`` (the dedup_clusters precedent). The only
 driver-side values are the node count and the iteration counter —
 bounded by construction.
 

@@ -1,6 +1,6 @@
 """SentencePiece-style unigram-LM tokenizer training (Kudo 2018,
 "Subword Regularization", §3 — the unigram language model tokenizer;
-public algorithm, re-derived here as a DataFrame job).
+public algorithm, re-derived here over a Spark-built word histogram).
 
 This is the second trainable tokenizer family next to ops/bpe.py:
 where BPE grows a vocabulary bottom-up by merging pairs, the unigram
@@ -13,25 +13,22 @@ deterministic hard-EM (Viterbi-EM) variant:
            (count desc, piece asc) plus EVERY single character seen
            (guarantees every word stays segmentable).
   E-step : Viterbi-segment each DISTINCT word under the current piece
-           log-probs — one Arrow-batched stage over the word HISTOGRAM
-           (vocabulary-sized, not corpus-sized), piece table in the
-           task closure, per-batch memoisation.
+           log-probs.
   M-step : integer piece counts (sum of word counts along Viterbi
-           paths) via partial+final hash aggregate; probabilities are
-           recomputed on the driver from the collected counts.
+           paths); probabilities are recomputed from the counts.
   prune  : keep all single characters + the top multi-char pieces by
            (count desc, piece asc) until ``vocab_size``.
 
-Determinism: all counts are exact integers; log-probs are
-``log(c) - log(total)`` on the same int64s in both the Spark path and
-the pure-Python twin (shared helpers below), so results are bit-equal.
-Viterbi ties break toward the smaller split point (longer last piece).
+Scale: the corpus is touched exactly once — the word histogram
+(``bpe.word_hist``: one partial+final hash aggregate, collected). Seed,
+EM and prune run on the driver over that histogram, so the Spark jobs
+do not grow with ``iters``. The bound is the driver: the distinct
+vocabulary must hold at most ``bpe.MAX_DISTINCT_WORDS`` words.
 
-Scale: the corpus is touched exactly once (word histogram = one
-partial+final hash aggregate); every EM iteration runs over the
-histogram; only the piece table (<= seed_size rows of short strings)
-ever reaches the driver per iteration — the same bounded-coordination
-contract as similarity.ivf_train's centroid collect.
+Determinism: all counts are exact integers; log-probs are
+``log(c) - log(total)`` on those integers (``_logp_from_counts``), and
+Viterbi ties break toward the smaller split point (longer last piece),
+so the vocabulary does not depend on the partitioning of the corpus.
 """
 
 from __future__ import annotations
@@ -42,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qamd_spark.ops.bpe import word_counts, _py_words
+from qamd_spark.ops.bpe import _py_words, word_hist
 
 __all__ = [
     "viterbi_segment",
@@ -87,9 +84,8 @@ def viterbi_segment(
 
 
 def _logp_from_counts(counts: dict[str, int]) -> dict[str, float]:
-    """log(c) - log(total) on exact int64s — the ONE formula shared by
-    the Spark path and the pure-Python twin (bit-equal by construction).
-    Zero-count pieces are dropped."""
+    """log(c) - log(total) on exact integer counts. Zero-count pieces
+    are dropped."""
     total = sum(counts.values())
     lt = math.log(total)
     return {p: math.log(c) - lt for p, c in counts.items() if c > 0}
@@ -113,65 +109,6 @@ def _prune(
     return keep
 
 
-def _seed_pieces(
-    words: DataFrame, max_piece_len: int, seed_size: int
-) -> dict[str, int]:
-    """Corpus-weighted substring counts from the word histogram; top
-    ``seed_size`` by (count desc, piece asc) plus every single char.
-    sequence(1, x) is always ascending here (x >= 1 for every start
-    position), so no descending-sequence trap."""
-    subs = F.explode(
-        F.flatten(
-            F.expr(
-                "transform(sequence(1, length(word)), s -> "
-                f"transform(sequence(1, least({int(max_piece_len)}, "
-                "length(word) - s + 1)), l -> substring(word, s, l)))"
-            )
-        )
-    ).alias("piece")
-    counts = (
-        words.select(F.col("cnt"), subs)
-        .groupBy("piece")
-        .agg(F.sum("cnt").cast("long").alias("n"))
-    )
-    top = counts.orderBy(
-        F.col("n").desc(), F.col("piece").asc()
-    ).limit(int(seed_size))
-    chars = counts.filter(F.length("piece") == 1)
-    rows = top.unionByName(chars).dropDuplicates(["piece"]).collect()
-    return {r["piece"]: int(r["n"]) for r in rows}
-
-
-def _estep_counts(
-    words: DataFrame, logp: dict[str, float], max_piece_len: int
-) -> dict[str, int]:
-    """One Viterbi-E-step over the word histogram: piece counts weighted
-    by word count, aggregated JVM-side, collected bounded (<= current
-    vocab size rows)."""
-    items = tuple(sorted(logp.items()))
-    mpl = int(max_piece_len)
-
-    @F.pandas_udf("array<string>")
-    def _seg(s: pd.Series) -> pd.Series:
-        lp = dict(items)
-        memo: dict[str, list[str]] = {}
-
-        def seg(w):
-            got = memo.get(w)
-            if got is None:
-                got = memo[w] = viterbi_segment(w, lp, mpl)
-            return got
-
-        return s.map(seg)
-
-    per = (
-        words.select("cnt", F.explode(_seg(F.col("word"))).alias("piece"))
-        .groupBy("piece")
-        .agg(F.sum("cnt").cast("long").alias("n"))
-    )
-    return {r["piece"]: int(r["n"]) for r in per.collect()}
-
-
 def train_unigram(
     df: DataFrame,
     text_col: str = "text",
@@ -180,24 +117,12 @@ def train_unigram(
     max_piece_len: int = 6,
     iters: int = 3,
 ) -> list[tuple[str, int, float]]:
-    """Train the unigram-LM vocabulary; returns
-    [(piece, count, logp)] sorted by (count desc, piece asc).
-
-    Note: hard-EM keeps only pieces that win at least one Viterbi path
-    — characters the corpus never needs as fallback drop out, so words
-    unseen at encode time pass through whole (viterbi_segment's
-    unsegmentable contract) rather than erroring."""
-    words = word_counts(df, text_col).localCheckpoint(eager=True)
-    counts = _seed_pieces(words, max_piece_len, seed_size)
-    for _ in range(int(iters)):
-        logp = _logp_from_counts(counts)
-        counts = _estep_counts(words, logp, max_piece_len)
-        counts = _prune(counts, vocab_size)
-    words.unpersist()
-    logp = _logp_from_counts(counts)
-    out = [(p, c, logp[p]) for p, c in counts.items()]
-    out.sort(key=lambda r: (-r[1], r[0]))
-    return out
+    """Train the unigram-LM vocabulary from ``df``: collect the word
+    histogram (``word_hist``, the one Spark pass) and run
+    ``train_unigram_py`` on the driver."""
+    return train_unigram_py(
+        word_hist(df, text_col), vocab_size, seed_size, max_piece_len, iters
+    )
 
 
 def train_unigram_py(
@@ -207,9 +132,13 @@ def train_unigram_py(
     max_piece_len: int = 6,
     iters: int = 3,
 ) -> list[tuple[str, int, float]]:
-    """Pure-Python twin of train_unigram over a {word: count} histogram
-    — same seeding, same shared viterbi/logp/prune helpers, so the
-    equality test is exact, not approximate."""
+    """The unigram-LM trainer over a {word: count} histogram; returns
+    [(piece, count, logp)] sorted by (count desc, piece asc).
+
+    Note: hard-EM keeps only pieces that win at least one Viterbi path
+    — characters the corpus never needs as fallback drop out, so words
+    unseen at encode time pass through whole (viterbi_segment's
+    unsegmentable contract) rather than erroring."""
     sub: dict[str, int] = {}
     for w, c in word_cnt.items():
         for s in range(len(w)):

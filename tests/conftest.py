@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -14,6 +15,29 @@ def spark():
     sp = qsession.get_spark("qamd-tests", master="local[4]", shuffle_partitions=8)
     yield sp
     sp.stop()
+
+
+_job_groups = itertools.count()  # group ids unique across the session
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` (typically one ``main.main(argv)``
+    call) in a fresh Spark job group and returns ``(result, jobs)``, the
+    number of Spark jobs it started. CLI tests assert ``jobs <= budget``:
+    AQE can skip a job, so a budget is an upper bound, not an equality."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

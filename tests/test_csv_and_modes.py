@@ -186,7 +186,7 @@ def test_cli_dedup_subcommand(tmp_path, spark, capsys):
     assert (a["dup_of"].to_numpy() == b["dup_of"].to_numpy()).all()
 
 
-def test_cli_sample_subcommand(tmp_path, spark, capsys):
+def test_cli_sample_subcommand(tmp_path, spark, capsys, count_jobs):
     """The sample CLI front-end: all four methods run over a documents
     parquet and write their outputs; hash is reproducible and ~pct-sized;
     dsir-topk returns exactly k rows matching the library call."""
@@ -197,10 +197,10 @@ def test_cli_sample_subcommand(tmp_path, spark, capsys):
     n_src = spark.read.parquet(src).count()
 
     out = str(tmp_path / "hash")
-    rc = main.main(["sample", "--input", src, "--output", out,
-                    "--method", "hash", "--pct", "10",
-                    "--master", "local[4]"])
-    assert rc == 0
+    rc, jobs = count_jobs(lambda: main.main(
+        ["sample", "--input", src, "--output", out,
+         "--method", "hash", "--pct", "10", "--master", "local[4]"]))
+    assert rc == 0 and jobs <= 2
     got = spark.read.parquet(out)
     assert 0 < got.count() < n_src * 0.2
     status = json.loads(capsys.readouterr().out.splitlines()[-1])
@@ -581,7 +581,7 @@ def test_cli_validate(tmp_path):
     assert _json.loads(buf.getvalue())["status"] == "invalid"
 
 
-def test_cli_query_runner(tmp_path, spark, capsys):
+def test_cli_query_runner(tmp_path, spark, capsys, count_jobs):
     """query: --list names every registry entry with its evidence tier;
     --name runs the query and the parquet output equals the library
     call exactly."""
@@ -599,10 +599,10 @@ def test_cli_query_runner(tmp_path, spark, capsys):
     assert tiers == {"oracle", "rows-only"}
 
     out = str(tmp_path / "q")
-    rc = main.main(["query", "--name", "length_histogram",
+    rc, jobs = count_jobs(lambda: main.main(["query", "--name", "length_histogram",
                     "--sf-dir", "/root/testdata/sf0.001",
-                    "--output", out, "--master", "local[4]"])
-    assert rc == 0
+                    "--output", out, "--master", "local[4]"]))
+    assert rc == 0 and jobs <= 3
     status = _json.loads(capsys.readouterr().out.splitlines()[-1])
     assert status["status"] == "ok"
     assert status["rows"] == spark.read.parquet(out).count()

@@ -413,7 +413,7 @@ def test_pii_rollup_and_cascade_plans(spark):
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
 
 
-def test_pricing_fulfillment_jackknife_plans(spark):
+def test_jackknife_keep_plan(spark):
     """jackknife_keep broadcasts its 1-row totals — never a
     CartesianProduct."""
     import __spark_entry__ as E
