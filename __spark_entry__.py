@@ -22,6 +22,15 @@ cannot see file paths or index internals (file_stats — pyarrow footer
 twin; ann_recall — recall floors), and the import-gated binary
 multimodal plumbing (media_features, frame_plan).
 
+One definition per rule: the pipeline's checks (odd characters, length
+bounds, stopwords, PII scrub, sentinels, custom regex, repetition, rare
+signature, ...) are not restated here. Their per-turn verdicts come from
+``transcript_pipeline`` (``pipeline.label`` under ``QamdConfig()``), and
+the report layer from qamd_spark/report.py. Where a query needs a rule's
+parameter it imports it from ``config.DEFAULT_SETTINGS``, ``corpora``,
+``rules.pii`` or ``ops.text``; tests/test_entry_contract.py fails on a
+re-typed copy.
+
 Column-name and float-determinism discipline:
 - every computed column is aliased identically on both sides;
 - ratios are single divisions of exact integer aggregates (IEEE-identical
@@ -47,11 +56,24 @@ from pyspark.sql import functions as F
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
-# ---- shared constants (both Spark and DuckDB expressions derive from these)
-ODD_CHARS = ["&", "#", "@", "*", "ç", "ô", "ü"]  # single-char odd set
-ODD_ALL = ODD_CHARS + ["  "]  # + double-space (reference default.yaml:111-119)
-STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
-# line_filter / pii_luhn shared parameters (Spark query + DuckDB twin)
+# ---- rule parameters: imported from the pipeline's one definition, never
+# re-typed here (tests/test_entry_contract.py guards this), so a query and
+# its DuckDB twin apply the same value as `qamd run`
+from qamd_spark.config import DEFAULT_ODD_CHARS, DEFAULT_SETTINGS
+from qamd_spark.corpora import STOPWORDS
+from qamd_spark.ops.text import BPE_TOK_RX, PUNCT_CLASS
+from qamd_spark.rules.pii import PII_PATTERNS
+
+_PII_RX = {name: rx.pattern for name, rx, _ in PII_PATTERNS}
+EMAIL_RX, SSN_RX = _PII_RX["email"], _PII_RX["ssn"]
+LEN_MIN = DEFAULT_SETTINGS["length_bounds"]["min"]
+LEN_MAX = DEFAULT_SETTINGS["length_bounds"]["max"]
+MISS_PCT = DEFAULT_SETTINGS["conv_missing_fraction"]  # percent
+# the single-character members of the odd set (field_odd_chars)
+ODD_SINGLE_CHARS = [c for c in DEFAULT_ODD_CHARS if len(c) == 1]
+
+# ---- query parameters (Spark query and DuckDB twin derive from these)
+# line_filter / pii_luhn shared parameters
 LINE_WORDS_PER_LINE = 7
 LINE_MIN_WORDS = 5
 LINE_BANNED = ("slow",)
@@ -60,9 +82,6 @@ PACK_SEQ_LEN = 2048
 MIX_TARGETS = {"en": 0.4, "de": 0.2, "fr": 0.15, "es": 0.15, "zh": 0.10}
 BLOOM_M = 1 << 20
 BLOOM_K = 7
-# exact ASCII-punctuation class (reference normalize_word,
-# src/check/dictionary.rs:110-115) — valid in both Java regex and RE2
-PUNCT_CLASS = r"[!-/:-@\[-`{-~]"
 
 # ops/text.quality_score as one DuckDB SQL expression (shared by the
 # corpus_curate and quality_topk_lang oracles — keep in lockstep with
@@ -353,13 +372,6 @@ def _url_canon_sql() -> str:
         """
 
 
-EMAIL_RX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-SSN_RX = r"\b\d{3}-\d{2}-\d{4}\b"
-LEN_MIN, LEN_MAX = 2, 8000
-RARE_THRESHOLD = 1
-MISS_PCT = 25.0
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -403,57 +415,52 @@ def _sql_list(values) -> str:
     return "[" + ", ".join(f"'{w}'" for w in values) + "]"
 
 
-def _sql_stop_list() -> str:
-    return _sql_list(STOPWORDS)
+# the four ablation-rule flags shared by rule_ablation, shapley_rules and
+# rule_phi, in this order; both definitions below build on STOPWORDS and
+# PUNCT_CLASS, so the Spark side and its twin cannot drift apart
+ABLATION_RULES = ["short_doc", "short_chars", "no_stopwords", "all_stopwords"]
+
+
+def _ablation_flags() -> list:
+    """Boolean Columns over documents.text, in ABLATION_RULES order:
+    fewer than 50 space-split tokens, fewer than 280 chars, no stopword
+    among the lowercased tokens, and only stopwords once punctuation is
+    stripped (non-empty text)."""
+    t = _txt()
+    stop = F.array(*[F.lit(w) for w in STOPWORDS])
+    norm = F.lower(F.regexp_replace(t, PUNCT_CLASS, ""))
+    return [
+        F.size(F.split(t, " ", -1)) < 50,
+        F.length(t) < 280,
+        F.size(F.array_intersect(F.split(F.lower(t), " ", -1), stop)) == 0,
+        (F.size(F.array_except(F.split(norm, " ", -1), stop)) == 0)
+        & (norm != F.lit("")),
+    ]
+
+
+def _ablation_flags_sql() -> str:
+    """DuckDB twin of _ablation_flags: boolean f0..f3 per document."""
+    stop = _sql_list(STOPWORDS)
+    return f"""
+        SELECT len(str_split(t, ' ')) < 50 AS f0,
+               length(t) < 280 AS f1,
+               len(list_intersect(str_split(lower(t), ' '), {stop})) = 0
+                 AS f2,
+               (len(list_filter(str_split(norm, ' '),
+                                x -> NOT list_contains({stop}, x))) = 0
+                AND norm <> '') AS f3
+        FROM (SELECT coalesce(text,'') AS t,
+                     lower(regexp_replace(coalesce(text,''),
+                           '{PUNCT_CLASS}', '', 'g')) AS norm
+              FROM documents)"""
 
 
 # ------------------------------------------------------------------ queries
-def q_odd_chars_contains(spark, sf_dir):
-    # StringValueOddCharacters analogue (reference src/check/post.rs:262-299)
-    c = None
-    for ch in ODD_ALL:
-        e = _txt().contains(F.lit(ch))
-        c = e if c is None else (c | e)
-    return _docs(spark, sf_dir).select(
-        "doc_id", c.alias("has_odd")
-    )
-
-
-def q_odd_char_ratio(spark, sf_dir):
-    t = _txt()
-    cnt = None
-    for ch in ODD_CHARS:
-        e = F.length(t) - F.length(F.replace(t, F.lit(ch), F.lit("")))
-        cnt = e if cnt is None else (cnt + e)
-    cnt = cnt + (F.length(t) - F.length(F.replace(t, F.lit("  "), F.lit("")))) / F.lit(2)
-    ratio = F.when(F.length(t) > 0, cnt.cast("double") / F.length(t).cast("double")).otherwise(0.0)
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        ratio.alias("odd_ratio"),
-        (ratio > F.lit(0.05)).alias("odd_fail"),
-    )
-
-
-def q_length_bounds(spark, sf_dir):
-    n = F.length(_txt())
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        n.cast("int").alias("n_chars_txt"),
-        ((n < LEN_MIN) | (n > LEN_MAX)).alias("len_fail"),
-    )
-
-
 def q_token_count(spark, sf_dir):
     return _docs(spark, sf_dir).select(
         "doc_id",
         F.size(F.split(_txt(), " ", -1)).cast("int").alias("n_tok"),
     )
-
-
-# BPE-ish pre-tokenizer classes (disjoint first-character alternatives, so
-# Java regex and RE2 agree without relying on alternation-order semantics):
-# letter runs, digit runs, symbol runs
-from qamd_spark.ops.text import BPE_TOK_RX  # one shared definition
 
 
 def q_token_count_bpe(spark, sf_dir):
@@ -465,28 +472,6 @@ def q_token_count_bpe(spark, sf_dir):
         .cast("int")
         .alias("n_bpe_tok"),
     )
-
-
-def q_stopword_fraction(spark, sf_dir):
-    norm = F.lower(F.regexp_replace(_txt(), PUNCT_CLASS, ""))
-    toks = F.split(norm, " ", -1)
-    arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    nstop = F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
-    frac = nstop.cast("double") / F.size(toks).cast("double")
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        nstop.cast("int").alias("n_stop"),
-        frac.alias("stop_frac"),
-    )
-
-
-def q_all_stopwords(spark, sf_dir):
-    # only_contains semantics (reference src/check/dictionary.rs:117-122)
-    norm = F.lower(F.regexp_replace(_txt(), PUNCT_CLASS, ""))
-    toks = F.split(norm, " ", -1)
-    arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    allstop = (F.size(F.array_except(toks, arr)) == 0) & (norm != F.lit(""))
-    return _docs(spark, sf_dir).select("doc_id", allstop.alias("all_stop"))
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -519,31 +504,6 @@ def q_dup_counts(spark, sf_dir):
     )
 
 
-def q_rare_signature(spark, sf_dir):
-    # VariablesWithUniqueValues analogue (reference src/check/post.rs:394-418)
-    d = _docs(spark, sf_dir)
-    occ = d.groupBy("text").agg(F.count(F.lit(1)).alias("occ"))
-    return d.join(occ, "text").select(
-        "doc_id", (F.col("occ") <= RARE_THRESHOLD).alias("is_rare")
-    )
-
-
-def q_pii_detect(spark, sf_dir):
-    t = _txt()
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        t.rlike(EMAIL_RX).alias("has_email"),
-        t.rlike(SSN_RX).alias("has_ssn"),
-    )
-
-
-def q_scrub(spark, sf_dir):
-    t = _txt()
-    s = F.regexp_replace(t, EMAIL_RX, "<EMAIL>")
-    s = F.regexp_replace(s, SSN_RX, "<SSN>")
-    return _docs(spark, sf_dir).select("doc_id", s.alias("scrubbed"))
-
-
 def q_missing_fraction_by_source(spark, sf_dir):
     # SystemMissingOverThreshold analogue, grouped by source
     # (reference src/check/post.rs:303-351: pct = miss/total*100)
@@ -568,24 +528,6 @@ def q_lang_distribution(spark, sf_dir):
 
 def q_fingerprint(spark, sf_dir):
     return _docs(spark, sf_dir).select("doc_id", F.md5(_txt()).alias("fp"))
-
-
-def q_summary_report(spark, sf_dir):
-    """Per-rule pass/fail counts — the Report.summary analogue
-    (reference src/report/mod.rs:16-19) over the documents table."""
-    rules = _rule_conds()
-    d = _docs(spark, sf_dir)
-    aggs = [F.count(F.lit(1)).alias("_total")] + [
-        F.sum(cond.cast("long")).alias(f"f_{name}") for name, cond in rules
-    ]
-    row = d.agg(*aggs)
-    stack = "stack({n}, {args}) as (rule, fail)".format(
-        n=len(rules),
-        args=", ".join(f"'{name}', f_{name}" for name, _ in rules),
-    )
-    return row.select(F.expr(stack), F.col("_total")).select(
-        "rule", (F.col("_total") - F.col("fail")).alias("pass"), "fail"
-    )
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -616,70 +558,6 @@ def q_ann_cosine_topk(spark, sf_dir):
             F.round(F.col("sim"), 9).alias("sim"),
             F.col("rank").cast("int").alias("rank"),
         )
-    )
-
-
-VOCAB = ["the", "a", "and", "of", "to", "data", "table", "value", "row",
-         "key", "fast", "slow", "small", "big"]
-SENTINELS = ["N/A", "null", "-9", "none"]
-CUSTOM_PATTERNS = [r"^key ", r"spark.*window"]
-
-
-def q_oov_fraction(spark, sf_dir):
-    # spellcheck/OOV analogue (reference src/check/post.rs:205-226 with
-    # normalize_word + only_contains tokenization)
-    norm = F.lower(F.regexp_replace(_txt(), PUNCT_CLASS, ""))
-    toks = F.split(norm, " ", -1)
-    arr = F.array(*[F.lit(w) for w in VOCAB])
-    noov = F.size(F.filter(toks, lambda x: ~F.array_contains(arr, x)))
-    frac = noov.cast("double") / F.size(toks).cast("double")
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        noov.cast("int").alias("n_oov"),
-        frac.alias("oov_frac"),
-        (frac > F.lit(0.5)).alias("oov_fail"),
-    )
-
-
-def q_sentinel_text(spark, sf_dir):
-    sents = [F.lit(x) for x in SENTINELS]
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.trim(_txt()).isin(*sents).alias("is_sentinel")
-    )
-
-
-def q_custom_regex(spark, sf_dir):
-    # ValueRegexPatterns analogue (reference src/check/post.rs:354-391)
-    t = _txt()
-    c = None
-    for p in CUSTOM_PATTERNS:
-        e = t.rlike(p)
-        c = e if c is None else (c | e)
-    return _docs(spark, sf_dir).select("doc_id", c.alias("rx_hit"))
-
-
-def q_repetition_ratio(spark, sf_dir):
-    """Most-frequent-token fraction = max run length in the sorted token
-    array / token count (fold with a struct accumulator, JVM-side)."""
-    toks = F.array_sort(F.split(F.lower(_txt()), " ", -1))
-    acc0 = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    fold = F.aggregate(
-        toks,
-        acc0,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best, F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    rep = fold.cast("double") / F.size(toks).cast("double")
-    return _docs(spark, sf_dir).select(
-        "doc_id", fold.cast("int").alias("max_tok_count"), rep.alias("rep_ratio")
     )
 
 
@@ -1171,7 +1049,7 @@ def q_field_odd_chars(spark, sf_dir):
     set over variable names/labels) applied to the non-text string FIELD
     values: does source or lang contain any odd character."""
     c = None
-    for ch in ODD_CHARS:
+    for ch in ODD_SINGLE_CHARS:
         e = F.col("source").contains(F.lit(ch)) | F.col("lang").contains(F.lit(ch))
         c = e if c is None else (c | e)
     return _docs(spark, sf_dir).select(
@@ -3001,22 +2879,7 @@ def q_shapley_rules(spark, sf_dir):
     the pytest; n_unique misses every shared doc). Plan: one fused
     projection + ONE single-row aggregate + stack — rule_ablation's
     exact shape."""
-    t = _txt()
-    toks = F.split(t, " ", -1)
-    arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    f_short = F.size(toks) < 50
-    f_chars = F.length(t) < 280
-    f_nostop = F.size(F.array_intersect(F.split(F.lower(t), " ", -1), arr)) == 0
-    norm = F.lower(F.regexp_replace(t, PUNCT_CLASS, ""))
-    f_allstop = (F.size(F.array_except(F.split(norm, " ", -1), arr)) == 0) & (
-        norm != F.lit("")
-    )
-    flags = [
-        ("short_doc", f_short),
-        ("short_chars", f_chars),
-        ("no_stopwords", f_nostop),
-        ("all_stopwords", f_allstop),
-    ]
+    flags = list(zip(ABLATION_RULES, _ablation_flags()))
     k = sum(c.cast("long") for _, c in flags)
     d = _docs(spark, sf_dir).select(
         k.alias("k"), *[c.alias(f"f_{i}") for i, (_, c) in enumerate(flags)]
@@ -3126,9 +2989,6 @@ def q_user_retry_detect(spark, sf_dir):
     )
 
 
-_EMAIL_RX = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-
-
 def q_pii_echo(spark, sf_dir):
     """PII-echo audit — the scrubber-completeness check a per-turn
     scrub cannot make: when a user shares an email and the ASSISTANT
@@ -3140,8 +3000,9 @@ def q_pii_echo(spark, sf_dir):
     assistant turns; an assistant text containing that literal is an
     echo. Planted: convs % 8 == 1 share 'user<conv>@example.com' in
     user turn 0; HALF of those (convs % 16 == 1) have the assistant
-    echo it at idx 3. The email regex is the pii_detect pattern with
-    established Java↔RE2 extraction parity. Plan: filter + min_by hash
+    echo it at idx 3. The email regex is the `email` pattern of
+    rules.pii.PII_PATTERNS, which extracts the same spans in Java regex
+    and RE2. Plan: filter + min_by hash
     agg for the per-conv email (one exchange), broadcast-able join to
     assistant turns, one final agg — no window over raw turns."""
     idx = F.floor(F.col("doc_id") / 97).cast("long")
@@ -3164,7 +3025,7 @@ def q_pii_echo(spark, sf_dir):
     shared = (
         t.filter(F.col("i") % 4 == 0)
         .select(
-            "conv", "i", F.regexp_extract(F.col("text"), _EMAIL_RX, 0).alias("em")
+            "conv", "i", F.regexp_extract(F.col("text"), EMAIL_RX, 0).alias("em")
         )
         .filter(F.col("em") != "")
         .groupBy("conv")
@@ -3397,23 +3258,7 @@ def q_rule_phi(spark, sf_dir):
     intermediate ≤ n² — int64-safe to ~3e9 docs. Plan: one fused
     projection + ONE single-row aggregate, then an explode over the 6
     unordered pairs (6 literals on one row — no second scan)."""
-    t = _txt()
-    toks = F.split(t, " ", -1)
-    arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    norm = F.lower(F.regexp_replace(t, PUNCT_CLASS, ""))
-    flags = [
-        ("short_doc", F.size(toks) < 50),
-        ("short_chars", F.length(t) < 280),
-        (
-            "no_stopwords",
-            F.size(F.array_intersect(F.split(F.lower(t), " ", -1), arr)) == 0,
-        ),
-        (
-            "all_stopwords",
-            (F.size(F.array_except(F.split(norm, " ", -1), arr)) == 0)
-            & (norm != F.lit("")),
-        ),
-    ]
+    flags = list(zip(ABLATION_RULES, _ablation_flags()))
     pairs = [(i, j) for i in range(4) for j in range(i + 1, 4)]
     aggs = [F.count(F.lit(1)).alias("n")]
     for i in range(4):
@@ -5054,70 +4899,6 @@ def q_text_profile(spark, sf_dir):
     )
 
 
-LOC_CAP = 100  # locator cap (reference caps HTML locators at 1000,
-               # src/report/html/mod.rs:115; smaller here for test speed)
-
-
-def _rule_conds():
-    """The 4 SQL-expressible demo rules shared by summary/locators/lineage."""
-    t = _txt()
-    n = F.length(t)
-    odd = None
-    for ch in ODD_ALL:
-        e = t.contains(F.lit(ch))
-        odd = e if odd is None else (odd | e)
-    return [
-        ("length_bounds", (n < LEN_MIN) | (n > LEN_MAX)),
-        ("odd_characters", odd),
-        ("pii_email", t.rlike(EMAIL_RX)),
-        ("empty_text", F.col("text").isNull() | (F.col("text") == "")),
-    ]
-
-
-def q_locators(spark, sf_dir):
-    """Per-rule first-LOC_CAP failing doc_ids — the Report locator analogue
-    (reference src/report/mod.rs:163-186) via the skew-safe two-phase top-k
-    of qamd_spark/report.py: per-partition sorted slice, then a global
-    merge over <= cap x #partitions rows (no single task ever holds a hot
-    rule's full hit set)."""
-    rules = _rule_conds()
-    hit_arrays = [
-        F.when(c, F.array(F.lit(nm))).otherwise(F.array().cast("array<string>"))
-        for nm, c in rules
-    ]
-    exploded = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.concat(*hit_arrays)).alias("rule"))
-        .select("rule", "doc_id", F.spark_partition_id().alias("_pid"))
-    )
-    stage1 = exploded.groupBy("rule", "_pid").agg(
-        F.slice(F.sort_array(F.collect_list("doc_id")), 1, LOC_CAP).alias("locs")
-    )
-    merged = stage1.groupBy("rule").agg(
-        F.slice(F.sort_array(F.flatten(F.collect_list("locs"))), 1, LOC_CAP).alias(
-            "locs"
-        )
-    )
-    return merged.select(
-        "rule", F.posexplode("locs").alias("pos", "doc_id")
-    ).select("rule", (F.col("pos") + 1).cast("int").alias("rank"), "doc_id")
-
-
-def q_lineage_counts(spark, sf_dir):
-    """Per-partition lineage counts (north_star observability rows) with
-    bucket = doc_id % 64 — one fused aggregation pass, map-side combined,
-    mirroring qamd_spark/lineage.py (quantiles omitted: approx != oracle)."""
-    rules = _rule_conds()
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(c.cast("long")).alias(f"n_{nm}") for nm, c in rules
-    ]
-    return (
-        _docs(spark, sf_dir)
-        .groupBy((F.col("doc_id") % 64).cast("long").alias("bucket"))
-        .agg(*aggs)
-    )
-
-
 # ---- non-SQL-expressible (rows-only check; pytest oracle covers them) ----
 def q_langid_docs(spark, sf_dir):
     from qamd_spark import pipeline
@@ -5864,14 +5645,6 @@ def q_sft_pairs(spark, sf_dir):
     )
 
 
-ABLATION_RULES = [
-    ("short_doc", "f_short"),
-    ("short_chars", "f_chars"),
-    ("no_stopwords", "f_nostop"),
-    ("all_stopwords", "f_allstop"),
-]
-
-
 def q_rule_ablation(spark, sf_dir):
     """Filter-stack ablation audit: for each drop rule, how many docs it
     fires on (n_fires) and how many it is the ONLY rule to fire on
@@ -5885,37 +5658,22 @@ def q_rule_ablation(spark, sf_dir):
     hits — word-salad/code smell), all-stopwords (no content words).
     One fused projection computes every flag in a single scan pass, one
     partial+final aggregate reduces to a single row, stack() pivots it
-    to long format — the summary_report shape, no per-rule scans."""
-    t = _txt()
-    n = F.length(t)
-    toks = F.split(t, " ", -1)
-    arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    f_short = F.size(toks) < 50
-    f_chars = n < 280
-    f_nostop = (
-        F.size(F.array_intersect(F.split(F.lower(t), " ", -1), arr)) == 0
-    )
-    norm = F.lower(F.regexp_replace(t, PUNCT_CLASS, ""))
-    f_allstop = (F.size(F.array_except(F.split(norm, " ", -1), arr)) == 0) & (
-        norm != F.lit("")
-    )
-    flags = dict(
-        f_short=f_short, f_chars=f_chars, f_nostop=f_nostop, f_allstop=f_allstop
-    )
+    to long format — one fused aggregate, no per-rule scans."""
+    flags = [f"f{i}" for i in range(len(ABLATION_RULES))]
     d = _docs(spark, sf_dir).select(
-        *[c.alias(name) for name, c in flags.items()]
+        *[c.alias(f) for f, c in zip(flags, _ablation_flags())]
     )
     aggs = [F.count(F.lit(1)).alias("n_docs")]
-    for _, c in ABLATION_RULES:
-        others = [o for _, o in ABLATION_RULES if o != c]
-        uniq = F.col(c)
-        for o in others:
-            uniq = uniq & ~F.col(o)
-        aggs.append(F.sum(F.col(c).cast("long")).alias(f"n_{c}"))
-        aggs.append(F.sum(uniq.cast("long")).alias(f"u_{c}"))
+    for f in flags:
+        uniq = F.col(f)
+        for o in flags:
+            if o != f:
+                uniq = uniq & ~F.col(o)
+        aggs.append(F.sum(F.col(f).cast("long")).alias(f"n_{f}"))
+        aggs.append(F.sum(uniq.cast("long")).alias(f"u_{f}"))
     row = d.agg(*aggs)
     stack_args = ", ".join(
-        f"'{rule}', n_{c}, u_{c}" for rule, c in ABLATION_RULES
+        f"'{rule}', n_{f}, u_{f}" for rule, f in zip(ABLATION_RULES, flags)
     )
     return row.select(
         F.expr(
@@ -11795,22 +11553,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "odd_chars_contains": q_odd_chars_contains,
-        "odd_char_ratio": q_odd_char_ratio,
-        "length_bounds": q_length_bounds,
         "token_count": q_token_count,
         "token_count_bpe": q_token_count_bpe,
-        "stopword_fraction": q_stopword_fraction,
-        "all_stopwords": q_all_stopwords,
         "dedup_exact": q_dedup_exact,
         "dup_counts": q_dup_counts,
-        "rare_signature": q_rare_signature,
-        "pii_detect": q_pii_detect,
-        "scrub": q_scrub,
         "missing_fraction_by_source": q_missing_fraction_by_source,
         "lang_distribution": q_lang_distribution,
         "fingerprint": q_fingerprint,
-        "summary_report": q_summary_report,
         "ann_cosine_topk": q_ann_cosine_topk,
         "text_profile": q_text_profile,
         "quality_topk_lang": q_quality_topk_lang,
@@ -11895,10 +11644,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_recall_audit": q_dedup_recall_audit,
         "rank_rbo": q_rank_rbo,
         "corpus_curate": q_corpus_curate,
-        "oov_fraction": q_oov_fraction,
-        "sentinel_text": q_sentinel_text,
-        "custom_regex": q_custom_regex,
-        "repetition_ratio": q_repetition_ratio,
         "gopher_repetition": q_gopher_repetition,
         "gopher_quality": q_gopher_quality,
         "source_divergence": q_source_divergence,
@@ -11941,8 +11686,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_props": q_json_props,
         "token_topk": q_token_topk,
         "length_histogram": q_length_histogram,
-        "locators": q_locators,
-        "lineage_counts": q_lineage_counts,
         "embedding_neardup": q_embedding_neardup,
         "embedding_neardup_lsh": q_embedding_neardup_lsh,
         "metadata": q_metadata,
@@ -12254,7 +11997,6 @@ def _phash_neardup_oracle_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    stop = _sql_stop_list()
     from qamd_spark import corpora as _corp
 
     _zh_lines = [ln for ln in _corp.ZH.split("\n") if ln.strip()]
@@ -12302,13 +12044,6 @@ def oracle_sql() -> dict[str, str]:
             for col in _procrustes_closed_R()
         )
         + "]"
-    )
-    odd_contains = " OR ".join(
-        "contains(coalesce(text,''), '{}')".format(c.replace("'", "''"))
-        for c in ODD_ALL
-    )
-    odd_cnt_terms = " + ".join(
-        "(length(t) - length(replace(t, '{}', '')))".format(c) for c in ODD_CHARS
     )
     from qamd_spark.rules.refusal import DEFAULT_REFUSAL_PHRASES as _RFP
 
@@ -12996,23 +12731,8 @@ def oracle_sql() -> dict[str, str]:
                              / (2 * n0 * n1) END AS alpha
             FROM a
         """,
-        "shapley_rules": """
-            WITH b AS (
-              SELECT
-                len(str_split(t, ' ')) < 50 AS f0,
-                length(t) < 280 AS f1,
-                len(list_intersect(str_split(lower(t), ' '),
-                    ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'])) = 0
-                  AS f2,
-                (len(list_filter(str_split(norm, ' '),
-                     x -> NOT list_contains(
-                       ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'],
-                       x))) = 0
-                 AND norm <> '') AS f3
-              FROM (SELECT coalesce(text,'') AS t,
-                           lower(regexp_replace(coalesce(text,''),
-                                 '[!-/:-@\\[-`{-~]', '', 'g')) AS norm
-                    FROM documents)),
+        "shapley_rules": f"""
+            WITH b AS ({_ablation_flags_sql()}),
             k AS (
               SELECT f0, f1, f2, f3,
                      (CASE WHEN f0 THEN 1 ELSE 0 END
@@ -13080,7 +12800,7 @@ def oracle_sql() -> dict[str, str]:
                    sum(is_retry) > 0 AS retry_flag
             FROM f GROUP BY conv
         """,
-        "pii_echo": """
+        "pii_echo": f"""
             WITH t AS (
               SELECT (doc_id % 97)::BIGINT AS conv,
                      (doc_id // 97)::BIGINT AS i,
@@ -13099,9 +12819,7 @@ def oracle_sql() -> dict[str, str]:
             sh AS (
               SELECT conv, arg_min(em, i) AS email
               FROM (SELECT conv, i,
-                           regexp_extract(text,
-                             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                             0) AS em
+                           regexp_extract(text, '{EMAIL_RX}', 0) AS em
                     FROM t WHERE i % 4 = 0)
               WHERE em <> '' GROUP BY conv),
             ast AS (SELECT conv, text FROM t WHERE i % 4 = 3)
@@ -13350,23 +13068,11 @@ def oracle_sql() -> dict[str, str]:
             FROM losers l JOIN k ON l.keeper = k.keeper
             GROUP BY l.source, k.keeper_source
         """,
-        "rule_phi": """
+        "rule_phi": f"""
             WITH b AS (
-              SELECT
-                (len(str_split(t, ' ')) < 50)::BIGINT AS f0,
-                (length(t) < 280)::BIGINT AS f1,
-                (len(list_intersect(str_split(lower(t), ' '),
-                    ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'])) = 0)
-                  ::BIGINT AS f2,
-                (len(list_filter(str_split(norm, ' '),
-                     x -> NOT list_contains(
-                       ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'],
-                       x))) = 0
-                 AND norm <> '')::BIGINT AS f3
-              FROM (SELECT coalesce(text,'') AS t,
-                           lower(regexp_replace(coalesce(text,''),
-                                 '[!-/:-@\\[-`{-~]', '', 'g')) AS norm
-                    FROM documents)),
+              SELECT f0::BIGINT AS f0, f1::BIGINT AS f1,
+                     f2::BIGINT AS f2, f3::BIGINT AS f3
+              FROM ({_ablation_flags_sql()})),
             a AS (
               SELECT count(*)::BIGINT AS n,
                      sum(f0)::BIGINT AS m0, sum(f1)::BIGINT AS m1,
@@ -14070,37 +13776,22 @@ def oracle_sql() -> dict[str, str]:
             FROM p
             WHERE turn_idx % 2 = 0 AND resp IS NOT NULL
         """,
-        "rule_ablation": """
-            WITH b AS (
-              SELECT
-                len(str_split(t, ' ')) < 50 AS f_short,
-                length(t) < 280 AS f_chars,
-                len(list_intersect(str_split(lower(t), ' '),
-                    ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'])) = 0
-                  AS f_nostop,
-                (len(list_filter(str_split(norm, ' '),
-                     x -> NOT list_contains(
-                       ['the', 'a', 'and', 'of', 'to', 'in', 'is', 'it'],
-                       x))) = 0
-                 AND norm <> '') AS f_allstop
-              FROM (SELECT coalesce(text,'') AS t,
-                           lower(regexp_replace(coalesce(text,''),
-                                 '[!-/:-@\\[-`{-~]', '', 'g')) AS norm
-                    FROM documents)),
+        "rule_ablation": f"""
+            WITH b AS ({_ablation_flags_sql()}),
             a AS (
               SELECT count(*)::BIGINT AS n_docs,
-                (sum(CASE WHEN f_short THEN 1 ELSE 0 END))::BIGINT AS n_s,
-                (sum(CASE WHEN f_short AND NOT f_chars AND NOT f_nostop
-                          AND NOT f_allstop THEN 1 ELSE 0 END))::BIGINT AS u_s,
-                (sum(CASE WHEN f_chars THEN 1 ELSE 0 END))::BIGINT AS n_c,
-                (sum(CASE WHEN f_chars AND NOT f_short AND NOT f_nostop
-                          AND NOT f_allstop THEN 1 ELSE 0 END))::BIGINT AS u_c,
-                (sum(CASE WHEN f_nostop THEN 1 ELSE 0 END))::BIGINT AS n_n,
-                (sum(CASE WHEN f_nostop AND NOT f_short AND NOT f_chars
-                          AND NOT f_allstop THEN 1 ELSE 0 END))::BIGINT AS u_n,
-                (sum(CASE WHEN f_allstop THEN 1 ELSE 0 END))::BIGINT AS n_a,
-                (sum(CASE WHEN f_allstop AND NOT f_short AND NOT f_chars
-                          AND NOT f_nostop THEN 1 ELSE 0 END))::BIGINT AS u_a
+                (sum(CASE WHEN f0 THEN 1 ELSE 0 END))::BIGINT AS n_s,
+                (sum(CASE WHEN f0 AND NOT f1 AND NOT f2
+                          AND NOT f3 THEN 1 ELSE 0 END))::BIGINT AS u_s,
+                (sum(CASE WHEN f1 THEN 1 ELSE 0 END))::BIGINT AS n_c,
+                (sum(CASE WHEN f1 AND NOT f0 AND NOT f2
+                          AND NOT f3 THEN 1 ELSE 0 END))::BIGINT AS u_c,
+                (sum(CASE WHEN f2 THEN 1 ELSE 0 END))::BIGINT AS n_n,
+                (sum(CASE WHEN f2 AND NOT f0 AND NOT f1
+                          AND NOT f3 THEN 1 ELSE 0 END))::BIGINT AS u_n,
+                (sum(CASE WHEN f3 THEN 1 ELSE 0 END))::BIGINT AS n_a,
+                (sum(CASE WHEN f3 AND NOT f0 AND NOT f1
+                          AND NOT f2 THEN 1 ELSE 0 END))::BIGINT AS u_a
               FROM b)
             SELECT 'short_doc' AS rule, n_s AS n_fires,
                    u_s AS n_unique, n_docs FROM a
@@ -14345,31 +14036,6 @@ def oracle_sql() -> dict[str, str]:
                    quantile_cont(n_chars, 0.95) AS p95
             FROM documents GROUP BY source
         """,
-        "odd_chars_contains": f"""
-            SELECT doc_id, ({odd_contains}) AS has_odd FROM documents
-        """,
-        "odd_char_ratio": f"""
-            WITH b AS (SELECT doc_id, coalesce(text,'') AS t FROM documents)
-            SELECT doc_id,
-              CASE WHEN length(t) > 0 THEN
-                ({odd_cnt_terms}
-                 + (length(t) - length(replace(t, '  ', ''))) / 2
-                )::DOUBLE / length(t)::DOUBLE
-              ELSE 0.0 END AS odd_ratio,
-              CASE WHEN length(t) > 0 THEN
-                (({odd_cnt_terms}
-                 + (length(t) - length(replace(t, '  ', ''))) / 2
-                )::DOUBLE / length(t)::DOUBLE) > 0.05
-              ELSE FALSE END AS odd_fail
-            FROM b
-        """,
-        "length_bounds": f"""
-            SELECT doc_id,
-                   length(coalesce(text,''))::INT AS n_chars_txt,
-                   (length(coalesce(text,'')) < {LEN_MIN}
-                    OR length(coalesce(text,'')) > {LEN_MAX}) AS len_fail
-            FROM documents
-        """,
         "token_count": """
             SELECT doc_id,
                    len(str_split(coalesce(text,''), ' '))::INT AS n_tok
@@ -14381,29 +14047,6 @@ def oracle_sql() -> dict[str, str]:
                      AS n_bpe_tok
             FROM documents
         """,
-        "stopword_fraction": f"""
-            WITH b AS (
-              SELECT doc_id,
-                str_split(lower(regexp_replace(coalesce(text,''),
-                    '{PUNCT_CLASS}', '', 'g')), ' ') AS toks
-              FROM documents)
-            SELECT doc_id,
-              len(list_filter(toks, t -> list_contains({stop}, t)))::INT AS n_stop,
-              len(list_filter(toks, t -> list_contains({stop}, t)))::DOUBLE
-                / len(toks)::DOUBLE AS stop_frac
-            FROM b
-        """,
-        "all_stopwords": f"""
-            WITH b AS (
-              SELECT doc_id,
-                lower(regexp_replace(coalesce(text,''), '{PUNCT_CLASS}', '', 'g')) AS norm
-              FROM documents)
-            SELECT doc_id,
-              (len(list_filter(str_split(norm, ' '),
-                               t -> NOT list_contains({stop}, t))) = 0
-               AND norm <> '') AS all_stop
-            FROM b
-        """,
         "dedup_exact": """
             SELECT doc_id,
                    (row_number() OVER (PARTITION BY text ORDER BY doc_id) > 1)
@@ -14413,24 +14056,6 @@ def oracle_sql() -> dict[str, str]:
         "dup_counts": """
             SELECT text, count(*)::BIGINT AS occ
             FROM documents GROUP BY text HAVING count(*) > 1
-        """,
-        "rare_signature": f"""
-            SELECT doc_id,
-                   (count(*) OVER (PARTITION BY text) <= {RARE_THRESHOLD}) AS is_rare
-            FROM documents
-        """,
-        "pii_detect": f"""
-            SELECT doc_id,
-                   regexp_matches(coalesce(text,''), '{EMAIL_RX}') AS has_email,
-                   regexp_matches(coalesce(text,''), '{SSN_RX}') AS has_ssn
-            FROM documents
-        """,
-        "scrub": f"""
-            SELECT doc_id,
-                   regexp_replace(
-                     regexp_replace(coalesce(text,''), '{EMAIL_RX}', '<EMAIL>', 'g'),
-                     '{SSN_RX}', '<SSN>', 'g') AS scrubbed
-            FROM documents
         """,
         "missing_fraction_by_source": f"""
             WITH g AS (
@@ -14447,58 +14072,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "fingerprint": """
             SELECT doc_id, md5(coalesce(text,'')) AS fp FROM documents
-        """,
-        "summary_report": f"""
-            WITH agg AS (
-              SELECT count(*)::BIGINT AS _total,
-                sum((length(coalesce(text,'')) < {LEN_MIN}
-                     OR length(coalesce(text,'')) > {LEN_MAX})::INT)::BIGINT AS f_length_bounds,
-                sum(({odd_contains})::INT)::BIGINT AS f_odd_characters,
-                sum(regexp_matches(coalesce(text,''), '{EMAIL_RX}')::INT)::BIGINT AS f_pii_email,
-                sum((text IS NULL OR text = '')::INT)::BIGINT AS f_empty_text
-              FROM documents)
-            SELECT rule, _total - fail AS pass, fail FROM (
-              SELECT 'length_bounds' AS rule, f_length_bounds AS fail, _total FROM agg
-              UNION ALL SELECT 'odd_characters', f_odd_characters, _total FROM agg
-              UNION ALL SELECT 'pii_email', f_pii_email, _total FROM agg
-              UNION ALL SELECT 'empty_text', f_empty_text, _total FROM agg)
-        """,
-        "oov_fraction": f"""
-            WITH b AS (
-              SELECT doc_id,
-                str_split(lower(regexp_replace(coalesce(text,''),
-                    '{PUNCT_CLASS}', '', 'g')), ' ') AS toks
-              FROM documents)
-            SELECT doc_id,
-              len(list_filter(toks, t -> NOT list_contains({_sql_list(VOCAB)}, t)))::INT AS n_oov,
-              len(list_filter(toks, t -> NOT list_contains({_sql_list(VOCAB)}, t)))::DOUBLE
-                / len(toks)::DOUBLE AS oov_frac,
-              (len(list_filter(toks, t -> NOT list_contains({_sql_list(VOCAB)}, t)))::DOUBLE
-                / len(toks)::DOUBLE) > 0.5 AS oov_fail
-            FROM b
-        """,
-        "sentinel_text": f"""
-            SELECT doc_id,
-                   list_contains({_sql_list(SENTINELS)}, trim(coalesce(text,''))) AS is_sentinel
-            FROM documents
-        """,
-        "custom_regex": f"""
-            SELECT doc_id,
-                   (regexp_matches(coalesce(text,''), '{CUSTOM_PATTERNS[0]}')
-                    OR regexp_matches(coalesce(text,''), '{CUSTOM_PATTERNS[1]}')) AS rx_hit
-            FROM documents
-        """,
-        "repetition_ratio": """
-            WITH toks AS (
-              SELECT doc_id, unnest(str_split(lower(coalesce(text,'')), ' ')) AS tok
-              FROM documents),
-            counts AS (
-              SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok),
-            mx AS (SELECT doc_id, max(c) AS max_tok_count FROM counts GROUP BY doc_id),
-            tot AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id)
-            SELECT mx.doc_id, mx.max_tok_count::INT AS max_tok_count,
-                   mx.max_tok_count::DOUBLE / tot.n::DOUBLE AS rep_ratio
-            FROM mx JOIN tot ON mx.doc_id = tot.doc_id
         """,
         "gopher_repetition": """
             WITH d AS (
@@ -14559,7 +14132,7 @@ def oracle_sql() -> dict[str, str]:
                   AS sum_len,
                 len(list_filter(w, x -> regexp_matches(x, '[a-z]')))
                   AS alpha,
-                len(list_intersect(w, {_sql_stop_list()})) AS stop_hits,
+                len(list_intersect(w, {_sql_list(STOPWORDS)})) AS stop_hits,
                 (length(raw) - length(replace(raw, '#', '')))
                   + (length(raw) - length(replace(raw, '...', ''))) / 3
                   AS symbols
@@ -14909,7 +14482,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
                    coalesce({" OR ".join(
                        f"contains(source, '{c}') OR contains(lang, '{c}')"
-                       for c in ODD_CHARS)}, FALSE) AS field_odd
+                       for c in ODD_SINGLE_CHARS)}, FALSE) AS field_odd
             FROM documents
         """,
         "line_filter": f"""
@@ -15125,39 +14698,6 @@ def oracle_sql() -> dict[str, str]:
                        / length(t)::DOUBLE > 0.3 THEN 0.2 ELSE 0.0 END)
               )) AS quality
             FROM c
-        """,
-        "locators": f"""
-            WITH hits AS (
-              SELECT 'length_bounds' AS rule, doc_id FROM documents
-              WHERE length(coalesce(text,'')) < {LEN_MIN}
-                 OR length(coalesce(text,'')) > {LEN_MAX}
-              UNION ALL
-              SELECT 'odd_characters', doc_id FROM documents
-              WHERE {odd_contains}
-              UNION ALL
-              SELECT 'pii_email', doc_id FROM documents
-              WHERE regexp_matches(coalesce(text,''), '{EMAIL_RX}')
-              UNION ALL
-              SELECT 'empty_text', doc_id FROM documents
-              WHERE text IS NULL OR text = ''),
-            r AS (
-              SELECT rule, doc_id,
-                     row_number() OVER (PARTITION BY rule ORDER BY doc_id)
-                       AS rank
-              FROM hits)
-            SELECT rule, rank::INT AS rank, doc_id FROM r WHERE rank <= {LOC_CAP}
-        """,
-        "lineage_counts": f"""
-            SELECT (doc_id % 64)::BIGINT AS bucket,
-                   count(*)::BIGINT AS n_rows,
-                   sum((length(coalesce(text,'')) < {LEN_MIN}
-                        OR length(coalesce(text,'')) > {LEN_MAX})::INT)::BIGINT
-                     AS n_length_bounds,
-                   sum(({odd_contains})::INT)::BIGINT AS n_odd_characters,
-                   sum(regexp_matches(coalesce(text,''), '{EMAIL_RX}')::INT)::BIGINT
-                     AS n_pii_email,
-                   sum((text IS NULL OR text = '')::INT)::BIGINT AS n_empty_text
-            FROM documents GROUP BY 1
         """,
         "field_length": f"""
             SELECT doc_id,

@@ -29,10 +29,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 # operator benchmarks timed after the pipeline runs; every name is a key
 # of __spark_entry__.queries() (tests/test_entry_contract.py checks it)
 BENCH_QUERIES = (
-    "odd_char_ratio",
-    "stopword_fraction",
     "dedup_exact",
-    "summary_report",
     "ann_cosine_topk",
     "minhash_dedup",
     "simhash_neardup",

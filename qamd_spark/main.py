@@ -455,8 +455,10 @@ def _load_query_registry():
 def _run_query(args) -> int:
     """Run one registered analytics query by name over a table directory
     and either write the result as parquet or print the head — the CLI
-    face of the 140+-query registry (every entry is the same
-    (spark, sf_dir) -> DataFrame contract the external driver uses)."""
+    face of the analytics registry in ``__spark_entry__.queries()``
+    (every entry is the same (spark, sf_dir) -> DataFrame contract).
+    Per-turn rule verdicts are not separate queries: they come from
+    ``transcript_pipeline``, which runs ``pipeline.label``."""
     E = _load_query_registry()
     qs = E.queries()
     if args.list:

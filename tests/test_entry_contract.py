@@ -107,6 +107,77 @@ def test_operators_md_rows_match_registry():
     assert len(set(names)) == len(names)
 
 
+# module-level word lists of __spark_entry__.py that hold stopwords but
+# are other checks, not a copy of corpora.STOPWORDS
+_OTHER_WORD_LISTS = {
+    "_WM_WORDS": "watermark green-list vocabulary",
+    "DANGLING_WORDS": "words a cut-off sentence ends on (truncation_scan)",
+    "QUESTION_WORDS": "question openers (dialog_acts)",
+}
+
+
+def test_entry_restates_no_rule_parameter():
+    """A rule's parameters are written once, in config.DEFAULT_SETTINGS,
+    corpora, rules.pii and ops.text; __spark_entry__.py imports them.
+    Fails when its text spells out a PII pattern or PUNCT_CLASS, or holds
+    a run of three quoted stopwords (a re-typed stopword list, in Python
+    or in a SQL twin), or when a module-level name is bound to a literal
+    equal to a DEFAULT_SETTINGS value. Int settings (1, 25) are left to
+    review: small ints collide with unrelated query parameters."""
+    import ast
+    import re
+
+    from qamd_spark import corpora
+    from qamd_spark.config import DEFAULT_SETTINGS
+    from qamd_spark.ops.text import PUNCT_CLASS
+    from qamd_spark.rules.pii import PII_PATTERNS
+
+    with open(E.__file__, encoding="utf-8") as f:
+        src = f.read()
+    for lit in [rx.pattern for _, rx, _ in PII_PATTERNS] + [PUNCT_CLASS]:
+        # as written in a raw string and in a plain one
+        for spelling in {lit, lit.replace("\\", "\\\\")}:
+            assert spelling not in src, f"re-typed rule pattern {spelling!r}"
+
+    tree = ast.parse(src)
+    assigns = [n for n in tree.body if isinstance(n, ast.Assign)]
+    lines = src.split("\n")
+    for node in assigns:
+        if any(getattr(t, "id", None) in _OTHER_WORD_LISTS for t in node.targets):
+            for i in range(node.lineno - 1, node.end_lineno):
+                lines[i] = ""
+    stop = set(corpora.STOPWORDS)
+    quoted = r"""['"]([a-z]+)['"]"""
+    for run in re.finditer(rf"{quoted}(?:\s*,\s*{quoted})+", "\n".join(lines)):
+        words = re.findall(quoted, run.group(0))
+        for i in range(len(words) - 2):
+            assert not set(words[i:i + 3]) <= stop, (
+                f"re-typed stopword run {run.group(0)[:60]!r}"
+            )
+
+    def norm(v):
+        if isinstance(v, (list, tuple)):
+            return [norm(x) for x in v]
+        if isinstance(v, dict):
+            return {k: norm(x) for k, x in v.items()}
+        return v
+
+    values = []
+    for v in DEFAULT_SETTINGS.values():
+        if v is None or isinstance(v, int):  # bool is an int too
+            continue
+        values.append(norm(v))
+        if isinstance(v, dict):
+            values.append(norm(list(v.values())))
+    for node in assigns:
+        try:
+            lit = norm(ast.literal_eval(node.value))
+        except ValueError:
+            continue
+        names = [ast.unparse(t) for t in node.targets]
+        assert lit not in values, f"{names} restates a DEFAULT_SETTINGS value"
+
+
 def test_entry_runs(spark):
     df = E.entry(spark)
     assert df.count() > 0

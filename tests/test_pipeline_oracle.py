@@ -82,7 +82,7 @@ def test_every_rule_fires_somewhere(labeled_pair):
         "empty_turn", "length_bounds", "odd_characters", "odd_char_ratio",
         "repetition", "duplicate_turn", "conv_missing_fraction", "pii",
         "profanity", "all_stopwords", "stopword_fraction", "rare_signature",
-        "langid", "perplexity",
+        "langid", "perplexity", "sentinel_text", "ts_regression",
     }
     assert expected <= fired
 

@@ -801,14 +801,17 @@ def test_rule_phi_matches_bruteforce(spark):
 
     import duckdb
 
+    from qamd_spark.corpora import STOPWORDS
+    from qamd_spark.ops.text import PUNCT_CLASS
+
     rows = entry.q_rule_phi(spark, "/root/testdata/sf0.001").collect()
     df = duckdb.sql(
         "select coalesce(text,'') as t,"
         " lower(regexp_replace(coalesce(text,''),"
-        " '[!-/:-@\\[-`{-~]', '', 'g')) as norm"
+        f" '{PUNCT_CLASS}', '', 'g')) as norm"
         " from read_parquet('/root/testdata/sf0.001/documents.parquet')"
     ).df()
-    stop = {"the", "a", "and", "of", "to", "in", "is", "it"}
+    stop = set(STOPWORDS)
     f = {
         "short_doc": df.t.str.split(" ").map(len) < 50,
         "short_chars": df.t.str.len() < 280,
