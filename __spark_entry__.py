@@ -5757,10 +5757,6 @@ def q_html_strip(spark, sf_dir):
     )
 
 
-URL_CANON_STAMP_DOC = """stamped messy URL (per doc): HTTPS://WWW.Ex{k}.
-Example.COM[:443]/Path[/]?utm_source=x&page={m}&utm_medium=y#Frag"""
-
-
 def q_url_normalize(spark, sf_dir):
     """Canonical-URL normalization — the dedup key for web corpora
     (the same page is crawled under scheme/host case variants, default
@@ -8982,7 +8978,6 @@ def q_hybrid_search(spark, sf_dir):
 
 
 RBO_K = 10  # rank-biased overlap truncation depth
-RBO_P_NUM, RBO_P_DEN = 1, 2  # persistence p = 1/2 (dyadic => exact terms)
 
 
 def q_rank_rbo(spark, sf_dir):

@@ -399,6 +399,30 @@ def _run_validate(args) -> int:
 
 
 def _run_run(args) -> int:
+    """Label the input into ``--output``, then write its lineage and report.
+
+    The Spark actions, each started once what it reads exists::
+
+        input ──> metadata_stats ──────────────────────────┐
+          └─────> labeled write ──> data/ ─┬─> lineage/    │
+                                           ├─> summarize ──┼─> summary.json
+                                           └─> locators ───┘
+
+    The input metadata reads only the input, so a worker runs it while
+    the label plan is built and the write runs. Lineage, the
+    summary aggregate and the locators all read the one ``labeled`` frame
+    and run side by side: lineage on a worker here, the other two inside
+    :func:`report.summary_json`. ``summary.json`` is assembled once every
+    result is in. Workers carry the caller's job group, tags and local
+    properties (``inheritable_thread_target``). Leaving the ``with`` block
+    joins them, so no job or thread outlives the command, also when it
+    fails; a worker's error surfaces only where its result is read, so a
+    missing input still fails in the write's ``input_fingerprint``.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     if args.config:
         cfg = C.from_yaml(args.config)
     elif args.base64_config:
@@ -407,7 +431,16 @@ def _run_run(args) -> int:
         cfg = C.from_yaml(base64.b64decode(args.base64_config).decode("utf-8"))
     else:
         cfg = C.QamdConfig()
-    with _spark(args) as spark:
+    with _spark(args) as spark, ThreadPoolExecutor(max_workers=2) as pool:
+
+        def submit(fn):
+            return pool.submit(inheritable_thread_target(spark)(fn))
+
+        # metadata describes the INPUT table (reference Metadata semantics,
+        # src/report/mod.rs:45-61), not the labeled output
+        input_meta = submit(
+            lambda: report.metadata_stats(io.read_table(spark, args.input))
+        )
         checkpoint.run_with_checkpoints(
             spark, args.input, args.output, cfg, progress=args.progress
         )
@@ -417,16 +450,17 @@ def _run_run(args) -> int:
             args.output + "/data"
         )
         if not args.metadata_only:
-            lineage.per_bucket(labeled, cfg).write.mode("overwrite").parquet(
-                args.output + "/lineage"
+            lineage_written = submit(
+                lambda: lineage.per_bucket(labeled, cfg)
+                .write.mode("overwrite")
+                .parquet(args.output + "/lineage")
             )
-        meta = {"input": args.input}
-        # metadata describes the INPUT table (reference Metadata semantics,
-        # src/report/mod.rs:45-61), not the labeled output
-        meta.update(report.metadata_stats(io.read_table(spark, args.input)))
+        meta = {"input": args.input, **input_meta.result()}
         summ = report.summary_json(
             labeled, cfg, meta, include_locators=not args.metadata_only
         )
+        if not args.metadata_only:
+            lineage_written.result()
         with open(
             args.summary_json or (args.output + "/summary.json"), "w"
         ) as f:

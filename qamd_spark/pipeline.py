@@ -49,8 +49,10 @@ def score_stage(df: DataFrame, cfg: QamdConfig) -> DataFrame:
     """Arrow-batched vectorized scoring (turnscore.score_pdf) via mapInPandas.
 
     Pass-through append: runs AFTER the narrow flag joins, so the wide
-    score columns (scrubbed text etc.) are born post-shuffle and never
-    travel through an exchange.
+    score columns (scrubbed text etc.) cross none of the join exchanges.
+    They do cross one: the checkpointed write applies
+    :func:`salted_repartition` to the labeled rows, which puts an
+    Exchange on (bucket, salt) just above this MapInPandas stage.
     """
     out_schema = S.score_schema(df.schema, cfg)
     if cfg.enabled("quality_classifier"):
@@ -320,9 +322,12 @@ def label(
     Stage order is deliberate, for two shuffle/Python-boundary reasons:
     1. The cross-row joins run on the NARROW input rows first, and the
        (wide) Python scoring stage runs last as a pass-through append —
-       so scrubbed text / score columns never cross an exchange. (The
-       naive order — score, then join by text, then by conv_id — shuffled
-       the wide rows twice.)
+       so scrubbed text / score columns cross none of the join
+       exchanges. (The naive order — score, then join by text, then by
+       conv_id — shuffled the wide rows twice.) The wide rows still cross
+       one exchange downstream: the checkpointed write shuffles the
+       labeled rows on (bucket, salt) (:func:`salted_repartition`), so
+       the Python stage writes its full output as shuffle.
     2. The joined helper columns (text_occ, first keeper, conv counts) are
        folded into their three BOOLEAN rule flags immediately after the
        joins, JVM-side, and dropped — so the Arrow channel into and out of

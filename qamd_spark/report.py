@@ -18,9 +18,11 @@ per-item and variable_count−fail schemes across checks).
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from qamd_spark.config import QamdConfig
 from qamd_spark.lineage import rule_hit_sums
@@ -162,8 +164,19 @@ def summary_json(
     sink analogue, src/bin/qamd.rs:233). ``include_locators=False`` is the
     metadata-only mode: pass/fail counts still emitted, the locator
     collection job suppressed (reference -m flag, src/bin/qamd.rs:214-218;
-    locator suppression src/check/macros.rs:12-13)."""
-    summ = [r.asDict() for r in summarize(labeled, cfg).collect()]
+    locator suppression src/check/macros.rs:12-13).
+
+    The summary aggregate and the locators are independent actions over
+    ``labeled``: the locators run on a worker thread, which carries the
+    caller's job group and tags, beside the aggregate."""
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        if include_locators:
+            loc_rows = pool.submit(
+                inheritable_thread_target(labeled.sparkSession)(
+                    lambda: locators(labeled).collect()
+                )
+            )
+        summ = [r.asDict() for r in summarize(labeled, cfg).collect()]
     doc: dict = {
         "metadata": metadata or {},
         "summary": summ,
@@ -176,7 +189,7 @@ def summary_json(
                     [loc["conv_id"], int(loc["turn_idx"])] for loc in r["locators"]
                 ],
             }
-            for r in locators(labeled).collect()
+            for r in loc_rows.result()
         }
     return json.dumps(doc, indent=2, default=str)
 

@@ -23,19 +23,25 @@ _job_groups = itertools.count()  # group ids unique across the session
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` runs ``fn()`` (typically one ``main.main(argv)``
-    call) in a fresh Spark job group and returns ``(result, jobs)``, the
-    number of Spark jobs it started. CLI tests assert ``jobs <= budget``:
-    AQE can skip a job, so a budget is an upper bound, not an equality."""
+    call) in a fresh Spark job group and returns ``(result, jobs,
+    escaped)``: the number of Spark jobs it started in that group, and the
+    number it started with no group at all. CLI tests assert ``jobs <=
+    budget`` (AQE can skip a job, so a budget is an upper bound, not an
+    equality) and ``escaped == 0``: a job that runs on a thread which did
+    not inherit the caller's local properties loses the group."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
     def run(fn):
         group = f"count-jobs-{next(_job_groups)}"
+        ungrouped = set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup(group, group)
         try:
             result = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+        escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        return result, len(tracker.getJobIdsForGroup(group)), len(escaped)
 
     return run
 

@@ -73,8 +73,9 @@ def _replay(word: str, merges) -> list[str]:
 
 def test_train_matches_python_twin_exactly(spark, count_jobs):
     df = spark.read.parquet(DOCS)
-    got, jobs = count_jobs(lambda: bpe.train_bpe(df, num_merges=25))
-    assert jobs <= 2  # the histogram pass, whatever num_merges is
+    got, jobs, escaped = count_jobs(lambda: bpe.train_bpe(df, num_merges=25))
+    # the histogram pass, whatever num_merges is
+    assert jobs <= 2 and escaped == 0
     want = _spec_merges(_wc_pdf(), num_merges=25)
     assert got == want
     # merges are well-formed and counts non-increasing is NOT guaranteed
@@ -184,18 +185,18 @@ def test_bpe_cli_train_and_encode(spark, tmp_path, count_jobs):
     mjson = str(tmp_path / "merges.json")
     out = str(tmp_path / "enc")
     with contextlib.redirect_stdout(_io.StringIO()) as s:
-        rc, jobs = count_jobs(lambda: qmain.main(
+        rc, jobs, escaped = count_jobs(lambda: qmain.main(
             ["bpe", "--input", DOCS, "--output", mjson, "--merges", "15"]))
     assert rc == 0 and json.loads(s.getvalue())["n_merges"] == 15
-    assert jobs <= 3
+    assert jobs <= 3 and escaped == 0
     got = [tuple(m) for m in json.load(open(mjson))["merges"]]
     assert got == _spec_merges(_wc_pdf(), num_merges=15)
 
     with contextlib.redirect_stdout(_io.StringIO()) as s:
-        rc, jobs = count_jobs(lambda: qmain.main(
+        rc, jobs, escaped = count_jobs(lambda: qmain.main(
             ["bpe", "--mode", "encode", "--input", DOCS,
              "--merges-file", mjson, "--output", out]))
-    assert rc == 0 and jobs <= 2
+    assert rc == 0 and jobs <= 2 and escaped == 0
     enc = spark.read.parquet(out)
     assert "bpe_tokens" in enc.columns
     assert json.loads(s.getvalue())["rows"] == enc.count()
@@ -241,10 +242,10 @@ def test_unigram_train_matches_python_twin_exactly(spark, count_jobs):
     bit-identical to the trainer over the pandas-built histogram, in
     the Spark jobs of the one histogram pass whatever ``iters`` is."""
     df = spark.read.parquet(DOCS)
-    got, jobs = count_jobs(
+    got, jobs, escaped = count_jobs(
         lambda: ug.train_unigram(df, vocab_size=120, seed_size=400, iters=2)
     )
-    assert jobs <= 2
+    assert jobs <= 2 and escaped == 0
     want = ug.train_unigram_py(_wc_pdf(), vocab_size=120, seed_size=400, iters=2)
     assert got == want
     assert all(c > 0 for _, c, _ in got)

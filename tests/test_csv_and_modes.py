@@ -197,10 +197,10 @@ def test_cli_sample_subcommand(tmp_path, spark, capsys, count_jobs):
     n_src = spark.read.parquet(src).count()
 
     out = str(tmp_path / "hash")
-    rc, jobs = count_jobs(lambda: main.main(
+    rc, jobs, escaped = count_jobs(lambda: main.main(
         ["sample", "--input", src, "--output", out,
          "--method", "hash", "--pct", "10", "--master", "local[4]"]))
-    assert rc == 0 and jobs <= 2
+    assert rc == 0 and jobs <= 2 and escaped == 0
     got = spark.read.parquet(out)
     assert 0 < got.count() < n_src * 0.2
     status = json.loads(capsys.readouterr().out.splitlines()[-1])
@@ -599,10 +599,10 @@ def test_cli_query_runner(tmp_path, spark, capsys, count_jobs):
     assert tiers == {"oracle", "rows-only"}
 
     out = str(tmp_path / "q")
-    rc, jobs = count_jobs(lambda: main.main(["query", "--name", "length_histogram",
+    rc, jobs, escaped = count_jobs(lambda: main.main(["query", "--name", "length_histogram",
                     "--sf-dir", "/root/testdata/sf0.001",
                     "--output", out, "--master", "local[4]"]))
-    assert rc == 0 and jobs <= 3
+    assert rc == 0 and jobs <= 3 and escaped == 0
     status = _json.loads(capsys.readouterr().out.splitlines()[-1])
     assert status["status"] == "ok"
     assert status["rows"] == spark.read.parquet(out).count()

@@ -191,20 +191,20 @@ def test_cli_export_roundtrip(tmp_path, spark, capsys, count_jobs):
 
     jl = str(tmp_path / "jl")
     capsys.readouterr()
-    rc, jobs = count_jobs(lambda: main.main(
+    rc, jobs, escaped = count_jobs(lambda: main.main(
         ["export", "--input", src, "--output", jl, "--format", "jsonl",
          "--repartition", "2", "--master", "local[4]"]))
     # parquet schema inference, the repartition's map stage, the write
-    assert rc == 0 and jobs <= 3
+    assert rc == 0 and jobs <= 3 and escaped == 0
     assert printed_rows() == n
     import glob
     assert len(glob.glob(jl + "/part-*")) == 2
 
     back = str(tmp_path / "back")
-    rc, jobs = count_jobs(lambda: main.main(
+    rc, jobs, escaped = count_jobs(lambda: main.main(
         ["export", "--input", "jsonl:" + jl, "--output", back,
          "--format", "parquet", "--master", "local[4]"]))
-    assert rc == 0 and jobs <= 1  # jsonl: has a fixed schema; the write
+    assert rc == 0 and jobs <= 1 and escaped == 0  # jsonl: has a fixed schema; the write
     a = (spark.read.parquet(src)
          .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
          .orderBy("conv_id", "turn_idx").collect())

@@ -101,23 +101,47 @@ def test_html_report_golden(labeled):
     assert not _re.search(r"<td>[^<]*<[^/t]", html)
 
 
-def test_cli_writes_html(tmp_path, synth_path):
+def test_cli_writes_html(tmp_path, synth_path, count_jobs):
+    """Also the job budget of ``qamd run``: 27 jobs on synth_path (the
+    labeled write, the listing of data/, lineage, input metadata, summary
+    and locators), every one in the caller's job group, including those
+    the command runs on its worker threads."""
     import json as _json
     import os
 
     from qamd_spark import main
 
     out = str(tmp_path / "html_out")
-    rc = main.main(
+    rc, jobs, escaped = count_jobs(lambda: main.main(
         ["run", "--input", synth_path, "--output", out, "--master", "local[4]",
          "--output-format", "html"]
-    )
+    ))
     assert rc == 0
+    assert jobs <= 27 and escaped == 0
     assert os.path.exists(out + "/summary.json")
     html = open(out + "/summary.html").read()
     doc = _json.load(open(out + "/summary.json"))
     for r in doc["summary"]:
         assert r["rule"] in html
+
+
+def test_cli_missing_input_raises_and_leaves_nothing_running(spark, tmp_path):
+    """A missing input fails in ``checkpoint.input_fingerprint`` with
+    FileNotFoundError, not with the AnalysisException the input-metadata
+    worker meets first; the command returns only after that worker, so
+    no Spark job and no thread outlives it."""
+    import threading
+
+    from qamd_spark import main
+
+    threads = threading.active_count()
+    with pytest.raises(FileNotFoundError, match="no data files"):
+        main.main(
+            ["run", "--input", str(tmp_path / "missing.parquet"),
+             "--output", str(tmp_path / "out"), "--master", "local[4]"]
+        )
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert threading.active_count() == threads
 
 
 def test_cli_zero_row_input(spark, tmp_path):
