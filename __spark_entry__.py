@@ -3,8 +3,8 @@
 ``entry(spark)`` runs the flagship transcript-quality pipeline on the
 sf0.001 documents table (each document = a single-turn conversation, per
 FIXTURES.md §5). ``queries()`` exposes the operator inventory from
-SURVEY.md §2 (plus the training-data-pipeline, event-analytics, and
-streaming extensions) re-expressed over the driver's parquet tables;
+SURVEY.md §2 (plus the training-data-pipeline and event-analytics
+extensions) re-expressed over the driver's parquet tables;
 each entry has a DuckDB ``oracle_sql()`` twin unless the operator is
 genuinely non-SQL-expressible. The rows-only entries all carry exact
 pandas twins or recall/quality tests instead (see OPERATORS.md for the
@@ -19,8 +19,8 @@ learners; BPE bit-exact vs a naive spec), iterative graph
 fixpoints (pagerank — integer fixed-point, bit-exact Python twin;
 components — union-find twin), physical-layout audits whose oracles
 cannot see file paths or index internals (file_stats — pyarrow footer
-twin; ann_recall — recall floors), and the import-gated binary
-multimodal plumbing (media_features, frame_plan).
+twin; ann_recall — recall floors). Every query reads its tables under
+``sf_dir``; none builds its own synthetic input.
 
 One definition per rule: the pipeline's checks (odd characters, length
 bounds, stopwords, PII scrub, sentinels, custom regex, repetition, rare
@@ -1115,7 +1115,7 @@ def q_line_dedup(spark, sf_dir):
 def q_pii_luhn(spark, sf_dir):
     """Luhn-verified payment-card detection: regex candidates (13-19
     digits, space/dash separators) validated by the mod-10 checksum as a
-    pure-JVM higher-order fold (rules/pii.luhn_cards) — the validated
+    pure-JVM higher-order fold (rules/pii.luhn_valid) — the validated
     upgrade of the reference's regex disclosure check (src/check/
     post.rs:354-391). The corpus has no digits, so a deterministic
     synthetic card (arithmetic on doc_id, ~10% Luhn-valid) plus a
@@ -5066,98 +5066,6 @@ def q_metadata(spark, sf_dir):
     return tot.select("stat", F.col("value").cast("long").alias("value")).unionAll(
         per_source
     )
-
-
-def q_media_features(spark, sf_dir):
-    """Multimodal plumbing through the driver contract: deterministic fake
-    media table → Arrow-batched feature extraction (decode stubbed; see
-    qamd_spark/ops/multimodal.py). VALUE-ORACLED since r5: n_bytes +
-    sha256 literals from the shared payload generator — an externally
-    gated determinism pin of the binary Arrow channel + hash stage."""
-    from qamd_spark.ops import multimodal as mm
-
-    feats = mm.extract_features(mm.synth_media(spark, n=50, seed=11))
-    return feats.select("media_id", "n_bytes", "sha256")
-
-
-def q_frame_plan(spark, sf_dir):
-    from qamd_spark.ops import multimodal as mm
-
-    return mm.frame_sample_plan(mm.synth_media(spark, n=50, seed=11))
-
-
-def q_wav_profile(spark, sf_dir):
-    """REAL audio decode through the driver contract: deterministic
-    16-bit PCM WAV payloads (stdlib `wave` ENCODER — genuine RIFF files)
-    → stdlib `wave` DECODE inside an Arrow-batched mapInPandas stage →
-    per-clip signal profile (rate/frames/duration/peak/RMS/zero
-    crossings), with planted corrupt/empty payloads exercising the
-    dead-letter NULL row. VALUE-ORACLED since r5 (the literal-collapse
-    pattern): the DuckDB twin embeds stats computed from the PRE-ENCODE
-    samples (_wav_profile_oracle_sql), so the gate proves the RIFF
-    encode + decode round-trip recovers exactly the synthesized int16
-    stream; the bit-exact struct.unpack twin (oracle.wav_features_pdf)
-    + tone goldens remain as the pytest layer."""
-    from qamd_spark.ops import multimodal as mm
-
-    return mm.wav_features(mm.synth_wav_media(spark, n=48, seed=11))
-
-
-def q_png_profile(spark, sf_dir):
-    """REAL image decode through the driver contract (r5 — the image
-    sibling of wav_profile, closing the last stubbed modality): genuine
-    PNG payloads (stdlib zlib/CRC ENCODER, gradients + checkerboards
-    cycling all four 8-bit color types and all five scanline filters) →
-    stdlib inflate + per-scanline filter reconstruction inside an
-    Arrow-batched mapInPandas stage → per-image profile (dims, channel
-    count, exact channel means = int64 sums + ONE IEEE division, sha256
-    of the decoded pixel buffer — the decoded-content dedup key), with
-    planted corrupt/empty payloads exercising the dead-letter NULL row.
-
-    VALUE-ORACLED despite the binary payloads (the embedding_align
-    literal-collapse pattern): the planted pixel patterns have a closed
-    form in (i, seed) integer arithmetic, so the ENTIRE expected
-    profile — dims, exact means, pixel sha256 — is computable without
-    ever running the codec, and the DuckDB twin embeds it as a VALUES
-    literal (_png_profile_oracle_rows). The gate therefore checks that
-    the real inflate + filter reconstruction recovers EXACTLY the
-    planted pixels on every run, not merely that encode/decode agree
-    with each other. channel_means is posexplode_outer'd to scalar
-    (channel, channel_mean) rows so the comparison is all-scalar
-    (dead-letter rows keep one NULL-channel row)."""
-    from qamd_spark.ops import multimodal as mm
-
-    prof = mm.png_profile(mm.synth_png_media(spark, n=40, seed=11))
-    return prof.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.posexplode_outer("channel_means").alias("channel", "channel_mean"),
-        "pixel_sha256",
-    )
-
-
-def q_phash_neardup(spark, sf_dir):
-    """Perceptual-hash near-duplicates over media payloads (aHash on
-    the decoded feature histogram, banded Hamming join — ops/
-    multimodal.phash_neardups): the multimodal member of the near-dup
-    family. Planted duplicates: every 5th synthetic media row gets a
-    payload-doubled copy (identical normalized histogram => identical
-    signature, Hamming 0). VALUE-ORACLED since r5: the bit-exact pandas
-    twin's output is embedded as a VALUES literal
-    (_phash_neardup_oracle_sql), so the twin equality that was only
-    pytest-pinned now gates externally every round; tests/test_ops.py
-    keeps the planted-link pins."""
-    from qamd_spark.ops import multimodal as mm
-
-    base = mm.synth_media(spark, n=60, seed=11)
-    copies = base.filter(F.col("media_id") % 5 == 0).select(
-        (F.col("media_id") + 1000).alias("media_id"),
-        F.concat("payload", "payload").alias("payload"),
-        "meta",
-    )
-    return mm.phash_neardups(base.unionByName(copies), max_hamming=2)
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -11782,11 +11690,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_clusters": q_dedup_clusters,
         "contamination": q_contamination,
         "ngram_jaccard": q_ngram_jaccard,
-        "media_features": q_media_features,
-        "phash_neardup": q_phash_neardup,
-        "frame_plan": q_frame_plan,
-        "wav_profile": q_wav_profile,
-        "png_profile": q_png_profile,
         "char_entropy": q_char_entropy,
         "truncation_scan": q_truncation_scan,
         "dialog_acts": q_dialog_acts,
@@ -11813,182 +11716,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_gini": q_length_gini,
         "source_share_gini": q_source_share_gini,
     }
-
-
-def _png_profile_oracle_rows(n: int = 40, seed: int = 11):
-    """Closed-form expected png_profile rows, computed WITHOUT the codec:
-    synth_png_media's planted patterns are pure (i, seed) integer
-    arithmetic, so dims, int64-exact channel sums (one IEEE division
-    each) and the decoded-pixel sha256 all have literal values the SQL
-    oracle can embed — the gate then proves the stdlib inflate + filter
-    reconstruction recovers exactly the planted pixels."""
-    import hashlib as _hl
-
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        if i % 16 in (13, 15):  # planted corrupt / empty: dead-letter
-            rows.append((i, None, None, None, None, None, None))
-            continue
-        w = 8 + (i * 3 + seed) % 25
-        h = 8 + (i * 5 + seed) % 17
-        nch = 1 + i % 4
-        yy, xx = np.mgrid[0:h, 0:w]
-        base = (
-            (xx * 255) // max(w - 1, 1)
-            if i % 2 == 0
-            else ((xx // 4 + yy // 4) % 2) * 255
-        )
-        px = np.stack(
-            [(base + 31 * c + i) % 256 for c in range(nch)], axis=2
-        ).astype(np.uint8)
-        sha = _hl.sha256(px.tobytes()).hexdigest()
-        sums = px.reshape(h * w, nch).astype(np.int64).sum(axis=0)
-        for c in range(nch):
-            rows.append(
-                (i, w, h, nch, c, float(int(sums[c]) / (h * w)), sha)
-            )
-    return rows
-
-
-def _png_profile_oracle_sql() -> str:
-    parts = []
-    for r in _png_profile_oracle_rows():
-        if r[1] is None:
-            parts.append(
-                f"(CAST({r[0]} AS BIGINT), CAST(NULL AS INTEGER), "
-                "CAST(NULL AS INTEGER), CAST(NULL AS INTEGER), "
-                "CAST(NULL AS INTEGER), CAST(NULL AS DOUBLE), "
-                "CAST(NULL AS VARCHAR))"
-            )
-        else:
-            # repr() emits the shortest round-tripping decimal. The mean
-            # goes through CAST('…' AS DOUBLE) — the STRING form — because
-            # a bare decimal literal parses as DECIMAL first and the
-            # DECIMAL→DOUBLE cast lands 1 ulp off (measured); strtod on
-            # the string is correctly rounded, hence bit-identical to the
-            # Python float the Spark stage emits
-            parts.append(
-                f"(CAST({r[0]} AS BIGINT), {r[1]}, {r[2]}, {r[3]}, "
-                f"{r[4]}, CAST('{r[5]!r}' AS DOUBLE), '{r[6]}')"
-            )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(parts)
-        + ") AS t(media_id, width, height, n_channels, channel, "
-        "channel_mean, pixel_sha256)"
-    )
-
-
-def _wav_profile_oracle_sql(n: int = 48, seed: int = 11) -> str:
-    """Closed-form expected wav_profile rows, computed from the
-    PRE-ENCODE samples (multimodal.synth_wav_clip exposes them), never
-    from the `wave` decoder — the gate proves RIFF encode + decode
-    recovers exactly the synthesized int16 stream: rate/frames/duration
-    are header-exact, peak/zero-crossings/sumsq are int64-exact over
-    the samples, rms is ONE division + sqrt (string-cast double, the
-    DECIMAL-literal-ulp rule)."""
-    import math as _math
-
-    from qamd_spark.ops import multimodal as mm
-
-    parts = []
-    for i in range(n):
-        _payload, s = mm.synth_wav_clip(i, seed)
-        if s is None:  # planted corrupt/empty -> dead-letter NULL row
-            parts.append(
-                f"(CAST({i} AS BIGINT), CAST(NULL AS INTEGER), "
-                "CAST(NULL AS INTEGER), CAST(NULL AS BIGINT), "
-                "CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), "
-                "CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT))"
-            )
-            continue
-        import numpy as _np
-
-        a = s.astype(_np.int64)
-        nf = int(a.size)
-        sumsq = int(_np.add.reduce(a * a)) if nf else 0
-        neg = a < 0
-        zc = int(_np.add.reduce((neg[:-1] != neg[1:]).astype(_np.int64))) if nf > 1 else 0
-        peak = int(_np.abs(a).max()) if nf else 0
-        rms = float(_math.sqrt(sumsq / nf)) if nf else 0.0
-        parts.append(
-            f"(CAST({i} AS BIGINT), 8000, 1, CAST({nf} AS BIGINT), "
-            f"CAST({1000 * nf // 8000} AS BIGINT), CAST({peak} AS BIGINT), "
-            f"CAST('{rms!r}' AS DOUBLE), CAST({zc} AS BIGINT))"
-        )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(parts)
-        + ") AS t(media_id, sample_rate, n_channels, n_frames, "
-        "duration_ms, peak, rms, zero_crossings)"
-    )
-
-
-def _media_features_oracle_sql(n: int = 50, seed: int = 11) -> str:
-    """Expected (media_id, n_bytes, sha256) literals from the shared
-    payload generator (multimodal.synth_media_rows) — a determinism pin
-    of the Arrow binary channel + hashing stage, externally gated each
-    round instead of only pytest-pinned."""
-    import hashlib as _hl
-
-    from qamd_spark.ops import multimodal as mm
-
-    parts = [
-        f"(CAST({i} AS BIGINT), {len(p)}, '{_hl.sha256(p).hexdigest()}')"
-        for i, p, _meta in mm.synth_media_rows(n, seed)
-    ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(parts)
-        + ") AS t(media_id, n_bytes, sha256)"
-    )
-
-
-def _frame_plan_oracle_sql(n: int = 50, every_ms: int = 1000) -> str:
-    """Expected frame-sampling plan: synth_media videos are ids i%3==2
-    with duration_ms 3500, so each plans max(1, 3500 div every_ms)
-    frames at multiples of every_ms — pure closed form."""
-    n_frames = max(1, 3500 // every_ms)
-    parts = [
-        f"(CAST({i} AS BIGINT), CAST({k * every_ms} AS BIGINT))"
-        for i in range(n)
-        if i % 3 == 2
-        for k in range(n_frames)
-    ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(parts)
-        + ") AS t(media_id, frame_ts_ms)"
-    )
-
-
-def _phash_neardup_oracle_sql() -> str:
-    """Expected phash near-dup links from the bit-exact pandas twin
-    (multimodal.phash_neardups_pdf) over the same deterministic media
-    table q_phash_neardup builds — the twin that was previously only
-    pytest-pinned now gates externally as a VALUES literal (pure
-    Python, no Spark, runs in milliseconds at oracle-build time)."""
-    import pandas as _pd
-
-    from qamd_spark.ops import multimodal as mm
-
-    rows = mm.synth_media_rows(60, 11)
-    base = [(i, p) for i, p, _meta in rows]
-    copies = [(i + 1000, p + p) for i, p, _meta in rows if i % 5 == 0]
-    pdf = _pd.DataFrame(base + copies, columns=["media_id", "payload"])
-    out = mm.phash_neardups_pdf(pdf, max_hamming=2)
-    parts = [
-        f"(CAST({int(r.media_id)} AS BIGINT), "
-        f"CAST({int(r.dup_of)} AS BIGINT), {int(r.hamming)})"
-        for r in out.itertuples()
-    ]
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(parts)
-        + ") AS t(media_id, dup_of, hamming)"
-    )
 
 
 def oracle_sql() -> dict[str, str]:
@@ -17040,9 +16767,4 @@ def oracle_sql() -> dict[str, str]:
         JOIN te ON dt.conv = te.conv
         LEFT JOIN pe ON dt.conv = pe.conv
     """
-    sqls["png_profile"] = _png_profile_oracle_sql()
-    sqls["wav_profile"] = _wav_profile_oracle_sql()
-    sqls["media_features"] = _media_features_oracle_sql()
-    sqls["frame_plan"] = _frame_plan_oracle_sql()
-    sqls["phash_neardup"] = _phash_neardup_oracle_sql()
     return {k: v.strip() for k, v in sqls.items()}

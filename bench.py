@@ -120,8 +120,6 @@ BENCH_QUERIES = (
     "typo_mine",
     "quantile_norm",
     "kcenter_coreset",
-    "wav_profile",
-    "png_profile",
     "l_diversity",
     "header_footer_strip",
     "isotonic_calibrate",

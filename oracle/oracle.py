@@ -735,61 +735,6 @@ def kcenter_select_pdf(
     return pd.DataFrame(out, columns=["sel_order", "vec_id", "radius_sq"])
 
 
-def wav_features_pdf(media: pd.DataFrame) -> pd.DataFrame:
-    """Exact twin of ops.multimodal.wav_features: the same stdlib wave
-    decode, but all sample math re-implemented as a pure-Python
-    struct.unpack loop with exact integer accumulation (no numpy), so
-    any vectorization bug in the Spark stage surfaces as a mismatch."""
-    import io
-    import math
-    import struct
-    import wave
-
-    out = []
-    for mid, payload in zip(media["media_id"], media["payload"]):
-        b = bytes(payload) if payload is not None else b""
-        try:
-            with wave.open(io.BytesIO(b)) as w:
-                if w.getsampwidth() != 2:
-                    raise ValueError("non-16-bit PCM")
-                sr = w.getframerate()
-                nch = w.getnchannels()
-                nf = w.getnframes()
-                raw = w.readframes(nf)
-            n = len(raw) // 2
-            samples = struct.unpack("<%dh" % n, raw[: 2 * n])
-            sumsq = 0
-            peak = 0
-            zc = 0
-            prev_neg = None
-            for s in samples:
-                sumsq += s * s
-                if abs(s) > peak:
-                    peak = abs(s)
-                neg = s < 0
-                if prev_neg is not None and neg != prev_neg:
-                    zc += 1
-                prev_neg = neg
-            out.append(
-                (
-                    mid, sr, nch, nf,
-                    1000 * nf // sr if sr else None,
-                    peak,
-                    math.sqrt(sumsq / n) if n else 0.0,
-                    zc,
-                )
-            )
-        except Exception:
-            out.append((mid, None, None, None, None, None, None, None))
-    return pd.DataFrame(
-        out,
-        columns=[
-            "media_id", "sample_rate", "n_channels", "n_frames",
-            "duration_ms", "peak", "rms", "zero_crossings",
-        ],
-    )
-
-
 def cdc_chunks_pdf(pdf, min_size: int = 16, max_size: int = 256,
                    avg_bits: int = 6, id_col: str = "doc_id",
                    text_col: str = "text") -> pd.DataFrame:

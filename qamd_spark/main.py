@@ -784,6 +784,9 @@ def _run_curate(args) -> int:
     from qamd_spark.ops import dedup as dd
     from qamd_spark.ops import text as tx
 
+    # 0 is a bad value, not "omitted": reject it before any Spark work
+    if args.sample_pct is not None and not (0 < args.sample_pct <= 100):
+        raise SystemExit("--sample-pct must be in (0, 100]")
     with _spark(args) as spark:
         raw = io.read_table(spark, args.input)
         _require_columns(raw, (args.id_col, args.text_col))
@@ -862,9 +865,7 @@ def _run_curate(args) -> int:
                         F.col("lang").isin(allowed)
                     ),
                 )
-        if args.sample_pct:
-            if not (0 < args.sample_pct <= 100):
-                raise SystemExit("--sample-pct must be in (0, 100]")
+        if args.sample_pct is not None:
             from qamd_spark.ops import sampling as smp
 
             df = stage(

@@ -1027,55 +1027,6 @@ def procrustes_train(
     return u @ vt
 
 
-def procrustes_apply(
-    pairs: DataFrame,
-    rot: np.ndarray,
-    id_col: str = "vec_id",
-    old_col: str = "v_old",
-    new_col: str = "v_new",
-) -> DataFrame:
-    """Apply a trained rotation and score the per-vector residuals:
-    pre_err = ||v_new − v_old|| (what naive index reuse would suffer),
-    align_err = ||v_new − v_old·R|| (what remains after alignment —
-    near zero when the new space really is a rigid motion of the old,
-    large exactly where the re-embedding changed semantics, making the
-    residual a per-item drift detector). One narrow Arrow stage, no
-    shuffle — only the d×d rotation rides the closure; reductions use
-    np.add.reduce over fixed axes (the pca_project determinism
-    discipline)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    R = np.asarray(rot, dtype=np.float64)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("pre_err", T.DoubleType()),
-            T.StructField("align_err", T.DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf.iloc[:, 1]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf.iloc[:, 2]])
-            pre = B - A
-            post = B - np.add.reduce(A[:, :, None] * R[None, :, :], axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf.iloc[:, 0].to_numpy(dtype=np.int64),
-                    "pre_err": np.sqrt(np.add.reduce(pre * pre, axis=1)),
-                    "align_err": np.sqrt(np.add.reduce(post * post, axis=1)),
-                }
-            )
-
-    return pairs.select(id_col, old_col, new_col).mapInPandas(run, schema=schema)
-
-
 def cross_set_leakage(
     train: DataFrame,
     probe: DataFrame,

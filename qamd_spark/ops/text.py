@@ -14,23 +14,6 @@ from pyspark.sql import functions as F
 # src/check/dictionary.rs:110-115); valid in Java regex and RE2
 PUNCT_CLASS = r"[!-/:-@\[-`{-~]"
 
-# a BPE-ish word/number/punct splitter: words, digit runs, single punct
-TOKEN_RX = r"[A-Za-z]+(?:'[a-z]+)?|\d+|[^\sA-Za-z\d]"
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count (cheap); null/empty → 0."""
-    t = F.trim(F.coalesce(text, F.lit("")))
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+", -1)))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Regex token count approximating a BPE pre-tokenizer's word splits."""
-    return F.size(
-        F.regexp_extract_all(F.coalesce(text, F.lit("")), F.lit(TOKEN_RX), F.lit(0))
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     t = F.coalesce(text, F.lit(""))
     stripped = F.regexp_replace(t, PUNCT_CLASS, "")
@@ -55,18 +38,6 @@ def digit_ratio(text: Column) -> Column:
     return F.when(
         F.length(t) > 0,
         (F.length(t) - F.length(nod)).cast("double") / F.length(t).cast("double"),
-    ).otherwise(0.0)
-
-
-def mean_word_length(text: Column) -> Column:
-    t = F.trim(F.coalesce(text, F.lit("")))
-    toks = F.split(t, r"\s+", -1)
-    return F.when(
-        t != "",
-        F.aggregate(
-            toks, F.lit(0.0), lambda acc, x: acc + F.length(x).cast("double")
-        )
-        / F.size(toks).cast("double"),
     ).otherwise(0.0)
 
 
@@ -109,14 +80,6 @@ def quality_score(text: Column) -> Column:
     )
     score = len_ok - penalty
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
-
-
-def rolling_fingerprint(text: Column) -> Column:
-    """Deterministic document fingerprint: xxhash64 of the
-    whitespace-normalized, lowercased text (content-defined identity for
-    exact dedup across whitespace variants)."""
-    norm = F.lower(F.regexp_replace(F.trim(F.coalesce(text, F.lit(""))), r"\s+", " "))
-    return F.xxhash64(norm)
 
 
 def grouped_topk(
@@ -290,22 +253,6 @@ def repetition_signals(text: Column) -> dict[str, Column]:
         "dup5gram_frac": dup5,
         "repetition_keep": keep,
     }
-
-
-def profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set (narrow, codegen-fused)."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("tok_ws"),
-        bpe_ish_token_count(t).alias("tok_bpe"),
-        punct_ratio(t).alias("punct_ratio"),
-        uppercase_ratio(t).alias("upper_ratio"),
-        digit_ratio(t).alias("digit_ratio"),
-        mean_word_length(t).alias("mean_word_len"),
-        quality_score(t).alias("quality"),
-        rolling_fingerprint(t).alias("fingerprint64"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -35,17 +35,14 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from qamd_spark.ops.bpe import _py_words, word_hist
+from qamd_spark.ops.bpe import word_hist
 
 __all__ = [
     "viterbi_segment",
     "train_unigram",
     "train_unigram_py",
-    "unigram_encode",
 ]
 
 
@@ -169,36 +166,3 @@ def pieces_df(
     return spark.createDataFrame(
         pieces, "piece string, cnt long, logp double"
     )
-
-
-def unigram_encode(
-    df: DataFrame,
-    pieces: list[tuple[str, int, float]],
-    text_col: str = "text",
-    out_col: str = "unigram_tokens",
-    max_piece_len: int = 6,
-) -> DataFrame:
-    """Apply half: Viterbi-segment every word of ``text_col`` under the
-    trained piece log-probs (same word boundary as training). One
-    Arrow-batched stage; the piece table rides the closure."""
-    items = tuple((p, lp) for p, _, lp in pieces)
-    mpl = int(max_piece_len)
-    fields = df.schema.fieldNames()
-
-    @F.pandas_udf("array<string>")
-    def _enc(s: pd.Series) -> pd.Series:
-        lp = dict(items)
-        memo: dict[str, list[str]] = {}
-
-        def enc(t):
-            toks: list[str] = []
-            for w in _py_words(t):
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = viterbi_segment(w, lp, mpl)
-                toks.extend(got)
-            return toks
-
-        return s.map(enc)
-
-    return df.select(*fields, _enc(F.col(text_col)).alias(out_col))

@@ -314,14 +314,6 @@ def luhn_valid(candidate):
     )
 
 
-def luhn_cards(text):
-    """Array Column of Luhn-VALID card numbers found in text (raw form,
-    separators preserved) — input to counting or scrubbing."""
-    from pyspark.sql import functions as F
-
-    return F.filter(luhn_candidates(text), luhn_valid)
-
-
 # pure-Python twin of luhn_valid for the pandas oracle / property tests
 def luhn_valid_py(candidate: str) -> bool:
     d = re.sub(r"[^0-9]", "", candidate)

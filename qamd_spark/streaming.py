@@ -60,7 +60,7 @@ def streaming_config(cfg: QamdConfig | None = None) -> QamdConfig:
     return dataclasses.replace(cfg, settings=settings)
 
 
-def read_stream(spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None) -> DataFrame:
+def read_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """File-source stream over the transcript table: parquet by default,
     JSONL when the path says so (jsonl: prefix / .jsonl/.ndjson files or
     a directory of them) — same imposed schema and epoch/ISO ts parsing
@@ -72,16 +72,12 @@ def read_stream(spark: SparkSession, input_path: str, max_files_per_trigger: int
         "/"
     ).endswith((".jsonl", ".ndjson"))
     if is_jsonl:
-        r = spark.readStream.schema(qio.jsonl_raw_schema())
-        if max_files_per_trigger is not None:
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
         return qio.jsonl_project(
-            r.json(input_path.removeprefix(qio.JSONL_PREFIX))
+            spark.readStream.schema(qio.jsonl_raw_schema()).json(
+                input_path.removeprefix(qio.JSONL_PREFIX)
+            )
         )
-    r = spark.readStream.schema(S.TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(input_path)
+    return spark.readStream.schema(S.TRANSCRIPT_SCHEMA).parquet(input_path)
 
 
 def stream_label(
@@ -104,400 +100,6 @@ def stream_label(
     labeled = pipeline.label(read_stream(spark, input_path), scfg)
     w = (
         labeled.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def stream_dedup(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stateful cross-batch exact dedup under Structured Streaming: the
-    one cross-row rule the stripped streaming pipeline cannot express is
-    implemented with applyInPandasWithState, keyed on sha2(text) — state
-    per text hash is a single seen-count, so a turn is a duplicate iff
-    any earlier micro-batch (or earlier row of this one, in
-    (conv_id, turn_idx) order) already carried the same text.
-
-    Semantics vs batch keep-first: within the processed prefix of the
-    stream the flags agree with the batch agg+join dedup whenever files
-    arrive in (conv_id, turn_idx) order; under out-of-order arrival
-    "first" means first-SEEN — the standard streaming relaxation,
-    documented here deliberately. Empty/null texts are never duplicates
-    (same as the batch rule). State is one long per distinct text hash:
-    at 10^12 turns the state store shards by the hash key across
-    executors and a hot duplicate text is one state entry, not a skewed
-    partition.
-    """
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    src = read_stream(spark, input_path)
-    keyed = src.withColumn(
-        "_h",
-        F.sha2(F.coalesce(F.col("text"), F.lit("")), 256),
-    ).withColumn(
-        "_empty", F.col("text").isNull() | (F.col("text") == F.lit(""))
-    ).groupBy("_h")
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import numpy as np
-
-        seen = state.get[0] if state.exists else 0
-        # applyInPandasWithState delivers the group as an ITERATOR of
-        # Arrow-sized chunks (~10k rows each); sorting per chunk would
-        # make "first" the minimum of chunk 1 only, mislabeling a
-        # globally-smaller (conv_id, turn_idx) row in a later chunk.
-        # Concatenate before sorting: the group is one distinct text's
-        # rows in this micro-batch, so memory is bounded by that text's
-        # batch multiplicity, not by the batch size.
-        frames = list(pdfs)
-        if frames:
-            pdf = pd.concat(frames, ignore_index=True).sort_values(
-                ["conv_id", "turn_idx"]
-            )
-            is_dup = (np.arange(len(pdf)) + seen > 0) & ~pdf["_empty"].to_numpy()
-            seen += int((~pdf["_empty"]).sum())
-            out = pdf[["conv_id", "turn_idx"]].copy()
-            out["is_dup"] = is_dup
-            yield out
-        state.update((seen,))
-
-    out = keyed.applyInPandasWithState(
-        fn,
-        outputStructType="conv_id string, turn_idx int, is_dup boolean",
-        stateStructType="seen long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    w = (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def stream_windowed_counts(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watermarked tumbling-window lineage counts over the turn stream:
-    per (window, role) turn/empty counts — the streaming analogue of the
-    per-bucket batch lineage rows. The watermark bounds state (windows
-    older than max(ts) - watermark are finalized and evicted) and defines
-    the late-data contract: rows later than the watermark are dropped,
-    the standard Structured Streaming trade between completeness and
-    unbounded state. Append mode emits each window exactly once, on
-    finalization.
-
-    Rows with NULL ts (nullable in the schema; the JSONL reader nulls
-    unparseable timestamps) cannot be windowed. They are filtered
-    EXPLICITLY here — not silently discarded by the watermark — and
-    surfaced per micro-batch as the `null_ts_rows` observed metric
-    (query.lastProgress["observedMetrics"]["lineage_drops"]), so the
-    windowed counts can be reconciled against the batch lineage."""
-    from pyspark.sql import functions as F
-
-    src = read_stream(spark, input_path)
-    src = src.observe(
-        "lineage_drops",
-        F.sum(F.col("ts").isNull().cast("long")).alias("null_ts_rows"),
-    )
-    src = src.filter(F.col("ts").isNotNull()).withWatermark("ts", watermark)
-    agg = (
-        src.groupBy(F.window("ts", window).alias("w"), "role")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(
-                (F.col("text").isNull() | (F.col("text") == "")).cast("long")
-            ).alias("n_empty"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "role",
-            "n_turns",
-            "n_empty",
-        )
-    )
-    w = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-FLAG_SCHEMA = "conv_id string, flag_ts timestamp, flag string"
-
-
-def stream_flag_join(
-    spark: SparkSession,
-    turns_path: str,
-    flags_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    watermark: str = "2 minutes",
-    lookback_s: int = 60,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stream-stream interval join: attach moderation flags to the turns
-    they cover — a flag raised at ``flag_ts`` applies to every turn of
-    that conversation whose ``ts`` lands in [flag_ts, flag_ts +
-    lookback_s). This is the live-enrichment shape (labels arriving on
-    one stream, content on another) that neither a static-broadcast join
-    nor a stateful aggregate expresses.
-
-    Structured-streaming mechanics: BOTH sides carry an event-time
-    watermark and the join predicate bounds their time distance, so
-    Spark can size the join state — each side buffers only rows newer
-    than the other side's watermark minus the interval, and evicts the
-    rest (an unconstrained stream-stream join would buffer both streams
-    forever). Inner join in append mode emits a match exactly once, when
-    both inputs have arrived; the sink checkpoint makes restarts
-    idempotent (already-committed files are never reprocessed — same
-    contract as ``stream_label``, tested). Batch parity: the identical
-    join predicate over the complete inputs equals the streamed output
-    (tests/test_streaming.py).
-
-    Scale: the join keys on conv_id, so state and shuffle partition on
-    the conversation — skew-safe for transcript data (a conversation is
-    bounded); watermark delay, not input size, bounds the state store.
-    """
-    from pyspark.sql import functions as F
-
-    turns = (
-        read_stream(spark, turns_path)
-        .filter(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark)
-    )
-    flags = (
-        spark.readStream.schema(FLAG_SCHEMA)
-        .parquet(flags_path)
-        .withWatermark("flag_ts", watermark)
-        .withColumnRenamed("conv_id", "f_conv_id")
-    )
-    j = turns.join(
-        flags,
-        (F.col("conv_id") == F.col("f_conv_id"))
-        & (F.col("ts") >= F.col("flag_ts"))
-        & (
-            F.col("ts")
-            < F.col("flag_ts") + F.expr(f"INTERVAL {int(lookback_s)} SECONDS")
-        ),
-        "inner",
-    ).select("conv_id", "turn_idx", "ts", "flag", "flag_ts")
-    w = (
-        j.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def stream_session_counts(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Session-window aggregation over the turn stream (the streaming
-    twin of the batch ``sessionize`` query): per-conversation activity
-    sessions that close after ``gap`` of inactivity, via the built-in
-    ``F.session_window`` — Spark merges overlapping per-row windows
-    [ts, ts+gap) into sessions in the state store, so this is the
-    idiomatic form (no applyInPandasWithState needed for gap semantics).
-
-    Append mode emits each session exactly once, when the event-time
-    watermark passes its end; a session is therefore final and immutable
-    in the sink (late rows inside an emitted session are dropped by the
-    watermark, the same completeness/state trade as
-    ``stream_windowed_counts``). Batch parity: the SAME
-    session_window aggregation run in batch over the complete input
-    equals the streamed output restricted to finalized sessions
-    (tests/test_streaming.py)."""
-    from pyspark.sql import functions as F
-
-    src = read_stream(spark, input_path)
-    src = src.filter(F.col("ts").isNotNull()).withWatermark("ts", watermark)
-    agg = (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "conv_id",
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
-    w = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def stream_heavy_hitters(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    capacity: int = 64,
-    n_shards: int = 16,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming heavy hitters over the token stream: the SpaceSaving
-    algorithm (Metwally et al., ICDT 2005) as a custom stateful operator
-    in ``applyInPandasWithState`` — the bounded-memory "what are the hot
-    tokens right now" sketch the batch ``heavy_hitters_sketch`` query
-    answers offline.
-
-    Sharding: tokens hash into ``n_shards`` state groups (xxhash64 %
-    n_shards), each shard keeping its own ``capacity``-entry summary —
-    state is O(n_shards * capacity) TOTAL regardless of stream length or
-    vocabulary, and shards spread across executors at scale (a hot token
-    is one state entry, never a skewed partition). Per shard the
-    SpaceSaving guarantees hold: every stored count obeys
-    true <= count <= true + err, every token with true frequency
-    > n_shard/capacity is IN the summary, and err <= n_shard/capacity.
-    With ``capacity`` >= the shard's distinct tokens there are no
-    evictions and counts are EXACT (err = 0) — the test anchor.
-
-    Determinism: batch tokens merge in lexicographic order and eviction
-    ties break on (count, token), so a given arrival order yields one
-    summary; under evictions the content is arrival-order-dependent
-    (inherent to SpaceSaving — documented, like stream_dedup's
-    first-SEEN relaxation).
-
-    Append-mode contract: each micro-batch emits every updated shard's
-    FULL summary tagged with the shard's batch sequence number ``batch``;
-    the live summary is the rows with the max ``batch`` per shard
-    (consumers: ``QUALIFY row_number() OVER (PARTITION BY shard, token
-    ORDER BY batch DESC) = 1`` or a groupBy max) — the standard
-    append-only-sink encoding of evolving state.
-    """
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    src = read_stream(spark, input_path)
-    toks = src.select(
-        F.explode(
-            F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", -1)
-        ).alias("token")
-    ).filter(F.col("token") != "")
-    keyed = toks.withColumn(
-        "shard", F.pmod(F.xxhash64("token"), F.lit(n_shards)).cast("int")
-    ).groupBy("shard")
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        shard = int(key[0])
-        if state.exists:
-            tokens, counts, errs, n_seen, batch = state.get
-            summary = {
-                t: [c, e] for t, c, e in zip(tokens, counts, errs)
-            }
-        else:
-            summary, n_seen, batch = {}, 0, 0
-        frames = list(pdfs)
-        if frames:
-            vc = (
-                pd.concat(frames, ignore_index=True)["token"]
-                .value_counts()
-                .sort_index()  # lexicographic merge order: deterministic
-            )
-            for tok, c in vc.items():
-                c = int(c)
-                n_seen += c
-                if tok in summary:
-                    summary[tok][0] += c
-                elif len(summary) < capacity:
-                    summary[tok] = [c, 0]
-                else:
-                    # evict the min-count entry, ties on token: the
-                    # newcomer inherits min_count as its overcount bound
-                    evict = min(summary, key=lambda t: (summary[t][0], t))
-                    floor = summary.pop(evict)[0]
-                    summary[tok] = [floor + c, floor]
-        batch += 1
-        items = sorted(summary.items())
-        out = pd.DataFrame(
-            {
-                "shard": shard,
-                "token": [t for t, _ in items],
-                "count": [v[0] for _, v in items],
-                "err": [v[1] for _, v in items],
-                "n_shard": n_seen,
-                "batch": batch,
-            }
-        )
-        yield out
-        state.update(
-            (
-                [t for t, _ in items],
-                [v[0] for _, v in items],
-                [v[1] for _, v in items],
-                n_seen,
-                batch,
-            )
-        )
-
-    out = keyed.applyInPandasWithState(
-        fn,
-        outputStructType=(
-            "shard int, token string, count long, err long, "
-            "n_shard long, batch long"
-        ),
-        stateStructType=(
-            "tokens array<string>, counts array<long>, errs array<long>, "
-            "n_seen long, batch long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    w = (
-        out.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")

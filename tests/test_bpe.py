@@ -285,17 +285,3 @@ def test_unigram_viterbi_properties():
     assert ug.viterbi_segment("xyz", lp, 6) == ["xyz"]  # unsegmentable
     # 'abab' as one piece beats 'ab'+'ab' (P(abab) > P(ab)^2)
     assert ug.viterbi_segment("abab", lp, 6) == ["abab"]
-
-
-def test_unigram_encode_dataframe(spark):
-    """unigram_encode: per-row tokens equal the Python-side Viterbi of
-    each word, concatenated in order."""
-    df = spark.read.parquet(DOCS)
-    pieces = ug.train_unigram(df, vocab_size=80, seed_size=300, iters=2)
-    enc = ug.unigram_encode(df.limit(5), pieces)
-    lp = {p: l for p, _, l in pieces}
-    for r in enc.collect():
-        want = []
-        for w in bpe._py_words(r["text"]):
-            want.extend(ug.viterbi_segment(w, lp, 6))
-        assert list(r["unigram_tokens"]) == want

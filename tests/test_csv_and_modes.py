@@ -244,18 +244,19 @@ def test_cli_sample_subcommand(tmp_path, spark, capsys, count_jobs):
     assert sorted(r["doc_id"] for r in sel.collect()) == sorted(lib["doc_id"])
 
 
-def test_cli_profile_and_canonical(tmp_path, spark):
+def test_cli_profile_and_canonical(tmp_path, spark, count_jobs):
     """profile: datasheet JSON with language + source sections when those
-    columns exist; canonical dedup method writes keeper assignments."""
+    columns exist; canonical dedup method writes keeper assignments. Each
+    command keeps its Spark job budget."""
     import json as _json
 
     from qamd_spark import main
 
     src = "/root/testdata/sf0.001/documents.parquet"
     out = str(tmp_path / "profile.json")
-    rc = main.main(["profile", "--input", src, "--output", out,
-                    "--master", "local[4]"])
-    assert rc == 0
+    rc, jobs, escaped = count_jobs(lambda: main.main(
+        ["profile", "--input", src, "--output", out, "--master", "local[4]"]))
+    assert rc == 0 and jobs <= 12 and escaped == 0
     prof = _json.load(open(out))
     assert prof["n_docs"] == spark.read.parquet(src).count()
     assert 0 <= prof["dup_frac"] < 1 and prof["mean_chars"] > 0
@@ -268,9 +269,10 @@ def test_cli_profile_and_canonical(tmp_path, spark):
         assert s["p25"] <= s["p50"] <= s["p75"] <= s["p95"]
 
     outp = str(tmp_path / "canon")
-    rc = main.main(["dedup", "--input", src, "--output", outp,
-                    "--method", "canonical", "--master", "local[4]"])
-    assert rc == 0
+    rc, jobs, escaped = count_jobs(lambda: main.main(
+        ["dedup", "--input", src, "--output", outp,
+         "--method", "canonical", "--master", "local[4]"]))
+    assert rc == 0 and jobs <= 41 and escaped == 0
     got = spark.read.parquet(outp)
     assert set(got.columns) == {"doc_id", "cluster_id", "keeper_id",
                                 "is_canonical"}
@@ -282,11 +284,12 @@ def test_cli_profile_and_canonical(tmp_path, spark):
     assert per.filter("n_keep != 1").count() == 0
 
 
-def test_cli_curate_end_to_end(tmp_path, spark):
+def test_cli_curate_end_to_end(tmp_path, spark, count_jobs):
     """curate: normalize -> exact dedup -> quality -> langid allowlist
     -> deterministic sample -> write + per-stage report; stage counts
     monotonically non-increasing; rerun bit-identical; computed-langid
-    path exercised when the lang column is absent."""
+    path exercised when the lang column is absent. The first run keeps
+    its Spark job budget."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -295,10 +298,10 @@ def test_cli_curate_end_to_end(tmp_path, spark):
 
     src = "/root/testdata/sf0.001/documents.parquet"
     out = str(tmp_path / "cur")
-    rc = main.main(["curate", "--input", src, "--output", out,
-                    "--dedup", "exact", "--langs", "en",
-                    "--sample-pct", "50", "--master", "local[4]"])
-    assert rc == 0
+    rc, jobs, escaped = count_jobs(lambda: main.main(
+        ["curate", "--input", src, "--output", out, "--dedup", "exact",
+         "--langs", "en", "--sample-pct", "50", "--master", "local[4]"]))
+    assert rc == 0 and jobs <= 8 and escaped == 0
     rep = _json.load(open(out + "/report.json"))
     names = [s["stage"] for s in rep["stages"]]
     assert names == ["read", "normalize", "dedup_exact", "quality",
@@ -495,6 +498,14 @@ def test_curate_stage_counts_match_sequential_counts(tmp_path, spark,
         main.main(["dedup", "--input", bad, "--output",
                    str(tmp_path / "bad_dedup"), "--master", "local[4]"])
     assert not os.path.exists(tmp_path / "bad_dedup")
+    # an out-of-range --sample-pct (0 included: it is not "omitted") is
+    # rejected before the session opens, so nothing is written
+    for pct in ("0", "200"):
+        with pytest.raises(SystemExit, match="sample-pct"):
+            main.main(["curate", "--input", with_lang, "--output",
+                       str(tmp_path / f"pct{pct}"), "--sample-pct", pct,
+                       "--master", "local[4]"])
+        assert not os.path.exists(tmp_path / f"pct{pct}" / "data")
 
 
 # every subcommand's option strings, as `qamd <cmd> --help` lists them

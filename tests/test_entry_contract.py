@@ -178,6 +178,119 @@ def test_entry_restates_no_rule_parameter():
         assert lit not in values, f"{names} restates a DEFAULT_SETTINGS value"
 
 
+# top-level qamd_spark names that only tests call, on purpose (the pandas
+# and pure-Python twins, named *_py / *_pdf, are exempt by name)
+_TEST_ONLY_LIBRARY = {
+    ("qamd_spark.io", "csv_metadata"): "the reference's CSV metadata golden",
+    ("qamd_spark.io", "write_bucketed_table"): "the co-located-join plan pin",
+}
+
+
+def _reached_library():
+    """Static walk from the program's roots: the module-level code of
+    every module outside tests/ (qamd_spark's import-time statements, and
+    the scripts main.py, bench.py, perfbench/*.py and scripts/*.py) and
+    the bodies of queries(), oracle_sql() and entry() in
+    __spark_entry__.py. A reached function or class has its whole body
+    walked. Names resolve through the module's own top-level definitions
+    and through its imports, wherever in the file they are (lazy imports
+    included), so ``dd.f`` after ``from qamd_spark.ops import dedup as
+    dd`` reaches ``qamd_spark.ops.dedup.f``. Returns every top-level
+    definition and the reached ones, as (module, name) keys. oracle/ is
+    walked only where reached code calls it: its twins serve the tests."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(E.__file__).resolve().parent
+    paths = {}
+    for p in sorted(repo.glob("qamd_spark/**/*.py")) + sorted(repo.glob("oracle/*.py")):
+        parts = p.relative_to(repo).with_suffix("").parts
+        paths[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = p
+    for name in ("__spark_entry__", "bench"):
+        paths[name] = repo / f"{name}.py"
+    for d in ("perfbench", "scripts"):
+        for p in sorted((repo / d).glob("*.py")):
+            paths[p.stem] = p  # run as scripts: siblings import each other bare
+    trees = {m: ast.parse(p.read_text(encoding="utf-8")) for m, p in paths.items()}
+    scopes = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    defs = {(m, n.name): n for m, t in trees.items() for n in t.body
+            if isinstance(n, scopes)}
+
+    # per module: local name -> {(module, None) | (module, attr)}
+    imports = {m: {} for m in trees}
+    for m, t in trees.items():
+        for n in ast.walk(t):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    tgt = a.name if a.asname else a.name.split(".")[0]
+                    imports[m].setdefault(a.asname or tgt, set()).add((tgt, None))
+            elif isinstance(n, ast.ImportFrom) and n.module and not n.level:
+                for a in n.names:
+                    sub = f"{n.module}.{a.name}"
+                    tgt = (sub, None) if sub in trees else (n.module, a.name)
+                    imports[m].setdefault(a.asname or a.name, set()).add(tgt)
+
+    reached, work = set(), []
+
+    def reach(mod, name, seen=frozenset()):
+        if (mod, name) in defs:
+            if (mod, name) not in reached:
+                reached.add((mod, name))
+                work.append((mod, defs[mod, name]))
+        elif mod in imports and (mod, name) not in seen:  # imported by mod
+            for tgt_mod, attr in imports[mod].get(name, ()):
+                if attr is not None:
+                    reach(tgt_mod, attr, seen | {(mod, name)})
+
+    def visit(mod, node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                reach(mod, n.id)
+            elif isinstance(n, ast.Attribute):
+                chain, base = [], n
+                while isinstance(base, ast.Attribute):
+                    chain.append(base.attr)
+                    base = base.value
+                if not isinstance(base, ast.Name):
+                    continue
+                for cur, attr in imports[mod].get(base.id, ()):
+                    if attr is not None:
+                        continue
+                    for part in reversed(chain):  # a.b.c: longest module prefix
+                        if f"{cur}.{part}" not in trees:
+                            reach(cur, part)
+                            break
+                        cur = f"{cur}.{part}"
+
+    for m, t in trees.items():
+        for stmt in t.body:
+            if isinstance(stmt, scopes):
+                for d in stmt.decorator_list:
+                    visit(m, d)
+            elif not m.startswith("oracle"):
+                visit(m, stmt)
+    for name in ("queries", "oracle_sql", "entry"):
+        reach("__spark_entry__", name)
+    while work:
+        visit(*work.pop())
+    return defs, reached
+
+
+def test_no_library_code_only_tests_reach():
+    """Every top-level qamd_spark function and class is reached from a
+    command, the registry, the benchmarks or the scripts (see
+    _reached_library). Code that only tests call is dead to users: delete
+    it with its test, or name it in _TEST_ONLY_LIBRARY with the reason."""
+    defs, reached = _reached_library()
+    unreached = sorted(
+        (m, n) for m, n in defs
+        if m.startswith("qamd_spark") and (m, n) not in reached
+        and not n.endswith(("_py", "_pdf")) and (m, n) not in _TEST_ONLY_LIBRARY
+    )
+    assert unreached == []
+    assert set(_TEST_ONLY_LIBRARY) <= set(defs) - reached
+
+
 def test_entry_runs(spark):
     df = E.entry(spark)
     assert df.count() > 0

@@ -1,12 +1,12 @@
 """Training-data ops: dedup (minhash/simhash/jaccard), similarity search,
-text analysis, multimodal plumbing."""
+text analysis."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from qamd_spark.ops import dedup, multimodal, similarity, text as text_ops
+from qamd_spark.ops import dedup, similarity, text as text_ops
 
 SF = "/root/testdata/sf0.001"
 
@@ -119,47 +119,18 @@ def test_text_profile(spark):
          (4, "a normal english sentence with reasonable words inside it")],
         "id long, text string",
     )
-    out = {r["id"]: r for r in text_ops.profile(df).collect()}
-    assert out[1]["tok_ws"] == 3
-    assert out[1]["tok_bpe"] == 5  # Hello, WORLD, 42, !, !
+    out = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            text_ops.punct_ratio(F.col("text")).alias("punct_ratio"),
+            text_ops.quality_score(F.col("text")).alias("quality"),
+        ).collect()
+    }
     assert out[1]["punct_ratio"] > 0.1
-    assert out[2]["tok_ws"] == 0 and out[3]["tok_ws"] == 0
+    assert out[2]["punct_ratio"] == 0.0 and out[3]["punct_ratio"] == 0.0
     assert out[4]["quality"] == 1.0
     assert out[2]["quality"] == 0.0
-    # fingerprint invariant to whitespace runs + case
-    df2 = spark.createDataFrame(
-        [(1, "hello   world  42!!")], "id long, text string"
-    )
-    fp2 = text_ops.profile(df2).collect()[0]["fingerprint64"]
-    assert fp2 == out[1]["fingerprint64"]
-
-
-def test_multimodal_features(spark):
-    media = multimodal.synth_media(spark, n=30)
-    feats = multimodal.extract_features(media).toPandas()
-    assert len(feats) == 30
-    assert (feats["features"].map(len) == 16).all()
-    assert feats["sha256"].nunique() == 30
-    # determinism across partitionings
-    f2 = multimodal.extract_features(media.repartition(5)).toPandas()
-    a = feats.sort_values("media_id")["sha256"].tolist()
-    b = f2.sort_values("media_id")["sha256"].tolist()
-    assert a == b
-
-
-def test_multimodal_decode_stub_raises(spark):
-    media = multimodal.synth_media(spark, n=3)
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        multimodal.extract_features(media, decode_stub=False).collect()
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synth_media(spark, n=9)
-    plan = multimodal.frame_sample_plan(media, every_ms=1000).toPandas()
-    # videos are ids 2,5,8 with duration 3500ms → 3 frames each
-    assert sorted(plan["media_id"].unique()) == [2, 5, 8]
-    assert (plan.groupby("media_id").size() == 3).all()
-    assert plan["frame_ts_ms"].max() == 2000
 
 
 def test_lsh_plan_is_compact(spark):
@@ -207,24 +178,6 @@ def test_lsh_neardup_pairs_planted(spark):
     assert (got["sim"] >= 0.9).all()
     # keep-first: dup_of is always the smaller id
     assert (got["dup_of"] < got["vec_id"]).all()
-
-
-def test_resize_images_stub(spark):
-    media = multimodal.synth_media(spark, n=12)
-    out = multimodal.resize_images(media, width=8, height=8).toPandas()
-    n_images = media.filter("meta.media_type = 'image'").count()
-    assert len(out) == n_images > 0
-    assert (out["width"] == 8).all() and (out["height"] == 8).all()
-    assert all(len(p) == 64 for p in out["payload"])
-    # deterministic across partitionings
-    out2 = multimodal.resize_images(media.repartition(4), width=8, height=8).toPandas()
-    a = dict(zip(out["media_id"], out["payload"]))
-    b = dict(zip(out2["media_id"], out2["payload"]))
-    assert a == b
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="PIL"):
-        multimodal.resize_images(media, decode_stub=False).collect()
 
 
 def test_conv_features_grouped_map(spark):
@@ -339,35 +292,6 @@ def test_winnow_rejects_window_wider_than_kgram(spark):
         tx.winnow_fingerprints(df, k=4, w=6).collect()
     # boundary w == k is allowed
     assert tx.winnow_fingerprints(df, k=4, w=4).count() > 0
-
-
-def test_multimodal_real_codec_path(spark):
-    """Real-codec integration (r2 VERDICT item 6): runs only where PIL is
-    installed (skipped in this offline container). Encodes a real PNG,
-    then drives extract_features/resize_images with decode_stub=False."""
-    import io as _io
-
-    PIL_Image = pytest.importorskip("PIL.Image")
-
-    img = PIL_Image.new("RGB", (32, 32))
-    px = img.load()
-    for x in range(32):
-        for y in range(32):
-            px[x, y] = (x * 8 % 256, y * 8 % 256, (x + y) % 256)
-    buf = _io.BytesIO()
-    img.save(buf, format="PNG")
-    payload = buf.getvalue()
-    media = spark.createDataFrame(
-        [(0, payload, {"media_type": "image", "mime": "image/png",
-                       "width": 32, "height": 32, "duration_ms": None})],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    feats = multimodal.extract_features(media, decode_stub=False).toPandas()
-    assert len(feats) == 1
-    f = np.asarray(feats["features"].iloc[0])
-    assert len(f) == 16 and abs(f.sum() - 1.0) < 1e-5  # L1-normalized histogram
-    out = multimodal.resize_images(media, width=8, height=8, decode_stub=False).toPandas()
-    assert len(out) == 1 and len(out["payload"].iloc[0]) == 64
 
 
 def test_grouped_topk_ties_match_row_number(spark):
@@ -673,7 +597,7 @@ def test_luhn_cards_known_numbers(spark):
     """Known Luhn-valid test numbers pass; off-by-one checksum, too-short
     and too-long runs are rejected; separators are tolerated. The JVM
     fold agrees with the pure-Python twin on every candidate."""
-    from qamd_spark.rules.pii import luhn_cards, luhn_valid_py
+    from qamd_spark.rules.pii import luhn_candidates, luhn_valid, luhn_valid_py
 
     rows = [
         (1, "pay 4111111111111111 now"),          # valid visa test number
@@ -688,7 +612,10 @@ def test_luhn_cards_known_numbers(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r["cards"]
-        for r in d.select("doc_id", luhn_cards(F.col("text")).alias("cards")).collect()
+        for r in d.select(
+            "doc_id",
+            F.filter(luhn_candidates(F.col("text")), luhn_valid).alias("cards"),
+        ).collect()
     }
     assert out[1] == ["4111111111111111"]
     assert out[2] == ["4111 1111 1111 1111"]
@@ -870,73 +797,6 @@ def test_line_dedup_keep_first_semantics(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan and "Python" not in plan
-
-
-def test_phash_neardups_match_pandas_twin(spark):
-    """Banded Hamming join + min-per-bucket resolution must equal the
-    single-node twin exactly (same signatures, same resolution)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    base = multimodal.synth_media(spark, n=60, seed=11)
-    copies = base.filter(F.col("media_id") % 5 == 0).select(
-        (F.col("media_id") + 1000).alias("media_id"),
-        F.concat("payload", "payload").alias("payload"),
-        "meta",
-    )
-    media = base.unionByName(copies)
-    got = (
-        multimodal.phash_neardups(media, max_hamming=2)
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    mpdf = media.select("media_id", "payload").toPandas()
-    want = (
-        multimodal.phash_neardups_pdf(mpdf, max_hamming=2)
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-    assert len(got) > 0
-
-
-def test_phash_planted_doubles_link_at_hamming_zero(spark):
-    """A payload-doubled copy has the identical normalized histogram,
-    hence the identical signature: it must link somewhere at Hamming 0
-    (min-per-bucket may resolve it to an even smaller equal-signature
-    row, so assert the distance, not the exact partner)."""
-    from pyspark.sql import functions as F
-
-    base = multimodal.synth_media(spark, n=40, seed=11)
-    copies = base.select(
-        (F.col("media_id") + 1000).alias("media_id"),
-        F.concat("payload", "payload").alias("payload"),
-        "meta",
-    )
-    out = {
-        r["media_id"]: r
-        for r in multimodal.phash_neardups(
-            base.unionByName(copies), max_hamming=2
-        ).collect()
-    }
-    linked = [mid for mid in range(1000, 1040) if mid in out]
-    assert len(linked) >= 35  # min-per-bucket can miss a few
-    assert all(out[m]["hamming"] == 0 for m in linked)
-
-
-def test_phash_signature_stage_is_jvm_after_decode(spark):
-    """Signature packing must not add a second Python stage: exactly
-    one MapInPandas (the decode), everything after it JVM."""
-    media = multimodal.synth_media(spark, n=10, seed=11)
-    plan = (
-        multimodal.phash_signatures(media)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("MapInPandas") == 1
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_sketch_profile_errors_bounded(spark):
@@ -1315,63 +1175,6 @@ def test_kcenter_greedy_two_approximation_on_planted_clusters(spark):
     assert sel["radius_sq"].dropna().iloc[-1] > 1.0  # 3rd pick still far
 
 
-def test_wav_features_match_python_twin_bit_exact(spark):
-    """The numpy sample math in the Spark stage must bit-match the pure
-    struct.unpack twin on genuine RIFF/WAVE payloads (including the
-    planted corrupt + empty dead-letter rows)."""
-    import pandas as pd
-
-    from oracle import oracle
-    from qamd_spark.ops import multimodal as mm
-
-    media = mm.synth_wav_media(spark, n=48, seed=11)
-    got = (
-        mm.wav_features(media)
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        oracle.wav_features_pdf(media.toPandas())
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=0, rtol=0)
-    # dead-letter convention: planted corrupt (13 mod 16) and empty
-    # (15 mod 16) payloads yield NULL-rate rows, never a job failure
-    bad = got[got["media_id"] % 16 == 13]
-    assert bad["sample_rate"].isna().all() and len(bad) == 3
-    assert got["sample_rate"].notna().sum() == 48 - 6
-
-
-def test_wav_decode_tone_goldens(spark):
-    """Real-decode goldens: a 1000 ms clip at 8 kHz must decode to
-    exactly 8000 mono frames; a square tone at frequency f crosses zero
-    2f-ish times per second; peak equals the encoded amplitude."""
-    from qamd_spark.ops import multimodal as mm
-
-    rows = {
-        int(r["media_id"]): r
-        for r in mm.wav_features(mm.synth_wav_media(spark, n=48, seed=11))
-        .collect()
-        if r["sample_rate"] is not None
-    }
-    for mid, r in rows.items():
-        assert r["sample_rate"] == 8000 and r["n_channels"] == 1
-        dur = (125, 250, 500, 1000)[mid % 4]
-        assert r["duration_ms"] == dur
-        assert r["n_frames"] == 8000 * dur // 1000
-        freq = 220 + 44 * ((mid * 7 + 11) % 11)
-        # zero crossings of a tone ~ 2 * freq * seconds (within one)
-        expect = 2 * freq * dur / 1000
-        assert abs(r["zero_crossings"] - expect) <= max(2, expect * 0.02)
-        if mid % 2:  # square wave: peak == amplitude, rms ~ amplitude
-            assert r["peak"] == 12000
-            assert r["rms"] > 11000
-        else:  # sine: rms ~ peak / sqrt(2)
-            assert 0.68 < r["rms"] / r["peak"] < 0.73
-
-
 def test_pava_antitonic_golden_and_properties():
     """Hand-computed golden: rates (1.0, .25, .5, 0) pool the middle
     violator pair into 3/8; mass preservation and monotonicity hold."""
@@ -1680,10 +1483,8 @@ def test_bootstrap_keep_statistics(spark):
 
 def test_procrustes_recovers_signed_permutation(spark):
     """The trainer must recover the exact signed-permutation rotation
-    used to synthesize the 'new' embedding space, the residual must
-    collapse to SVD precision, and R must be orthogonal."""
-    import __spark_entry__ as entry
-
+    used to synthesize the 'new' embedding space, and R must be
+    orthogonal."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pairs = emb.select(
         "vec_id",
@@ -1705,10 +1506,6 @@ def test_procrustes_recovers_signed_permutation(spark):
         R_true[(13 * j + 5) % 64, j] = -1.0 if j % 3 == 0 else 1.0
     assert np.abs(rot - R_true).max() < 1e-8
     assert np.abs(rot.T @ rot - np.eye(64)).max() < 1e-10
-    out = similarity.procrustes_apply(pairs, rot).toPandas()
-    assert len(out) == 500
-    assert out["align_err"].max() < 1e-9
-    assert out["pre_err"].mean() > 1.0  # naive reuse would be wrong
 
 
 def test_embedding_align_query_contract(spark):

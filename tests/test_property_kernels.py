@@ -228,56 +228,3 @@ def test_gumbel_keys_deterministic_and_finite(ids, salt):
     b = smp.gumbel_keys(arr, salt)
     assert (a == b).all()
     assert np.isfinite(a).all()
-
-
-PNG_SHAPE = st.tuples(
-    st.integers(min_value=1, max_value=17),  # h
-    st.integers(min_value=1, max_value=13),  # w
-    st.integers(min_value=1, max_value=4),   # nch
-)
-PNG_FILTERS = st.lists(
-    st.integers(min_value=0, max_value=4), min_size=1, max_size=6
-)
-
-
-@settings(max_examples=80, deadline=None)
-@given(PNG_SHAPE, PNG_FILTERS, st.integers(min_value=0, max_value=2**31 - 1))
-def test_png_roundtrip_property(shape, filters, seed):
-    """decode(encode(a, any per-row filter mix)) == a for arbitrary
-    shapes, channel counts, and pixel contents — the five filter
-    reconstructions (incl. Paeth tie-breaks and the Sub cumsum-mod-256
-    vectorization) must be exact inverses of the encoder's filters at
-    every h/w/nch edge (1-pixel rows, single columns, channel
-    boundaries where the 'left' neighbor is the previous PIXEL, not the
-    previous byte)."""
-    from qamd_spark.ops import multimodal as mm
-
-    h, w, nch = shape
-    rng = np.random.RandomState(seed)
-    a = rng.randint(0, 256, (h, w, nch)).astype(np.uint8)
-    out = mm._png_decode(mm._png_encode(a, row_filters=filters))
-    assert out.shape == a.shape
-    assert (out == a).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(PNG_SHAPE, st.integers(min_value=0, max_value=2**31 - 1))
-def test_png_profile_means_match_bigint_reference(shape, seed):
-    """png_profile's per-channel means (computed int64-exactly in the
-    Spark stage) equal an independent Python big-int reference on the
-    decoded pixels — the exactness contract that makes the profile
-    twin-stable across engines."""
-    from qamd_spark.ops import multimodal as mm
-
-    h, w, nch = shape
-    rng = np.random.RandomState(seed)
-    a = rng.randint(0, 256, (h, w, nch)).astype(np.uint8)
-    px = mm._png_decode(mm._png_encode(a))
-    sums = px.reshape(h * w, nch).astype(np.int64).sum(axis=0)
-    want = [int(sum(int(a[y, x, c]) for y in range(h) for x in range(w)))
-            for c in range(nch)]
-    assert [int(s) for s in sums] == want
-    # one IEEE division each — bit-stable
-    assert [float(s / (h * w)) for s in sums] == [
-        float(wv / (h * w)) for wv in want
-    ]

@@ -4,8 +4,6 @@ incremental (new files only)."""
 
 import os
 
-from pyspark.sql import functions as F
-
 from qamd_spark import pipeline, streaming, synth
 from qamd_spark.config import QamdConfig
 
@@ -67,113 +65,16 @@ def test_streaming_config_strips_cross_row_rules():
     assert scfg.enabled("pii") and scfg.enabled("langid")
 
 
-def test_stateful_stream_dedup_across_batches(spark, tmp_path):
-    """applyInPandasWithState dedup: a text first seen in micro-batch A is
-    flagged as duplicate when it reappears in micro-batch B after a
-    restart from the same checkpoint (state survives in the state store)."""
-    import pandas as pd
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    def _write(fname, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        for c in ("conv_id", "role", "text", "tool"):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(os.path.join(src, fname))
-
-    _write("a.parquet", [
-        ("c1", 0, "user", "hello world", None, None),
-        ("c1", 1, "user", "unique one", None, None),
-        ("c2", 0, "user", "hello world", None, None),  # dup within batch
-        ("c2", 1, "user", "", None, None),             # empty: never dup
-    ])
-    q = streaming.stream_dedup(spark, src, out, ckpt)
-    q.awaitTermination(120)
-
-    _write("b.parquet", [
-        ("c3", 0, "user", "hello world", None, None),  # dup ACROSS batches
-        ("c3", 1, "user", "", None, None),             # empty still never dup
-        ("c3", 2, "user", "fresh text", None, None),
-    ])
-    q2 = streaming.stream_dedup(spark, src, out, ckpt)
-    q2.awaitTermination(120)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["is_dup"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {
-        ("c1", 0): False, ("c1", 1): False,
-        ("c2", 0): True, ("c2", 1): False,
-        ("c3", 0): True, ("c3", 1): False, ("c3", 2): False,
-    }
-
-
-def test_windowed_counts_with_watermark_drop_late(spark, tmp_path):
-    """Tumbling-window counts finalize once the watermark passes; a row
-    arriving in a later batch with a timestamp older than the watermark
-    is dropped (its already-emitted window does not change)."""
-    import pandas as pd
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    def _write(fname, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        for c in ("conv_id", "role", "text", "tool"):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(os.path.join(src, fname))
-
-    _write("a.parquet", [
-        ("c1", 0, "user", "hi", None, "2024-01-01T00:00:10"),
-        ("c1", 1, "user", "", None, "2024-01-01T00:00:40"),
-        ("c2", 0, "user", "yo", None, "2024-01-01T00:05:00"),  # advances watermark
-    ])
-    q = streaming.stream_windowed_counts(spark, src, out, ckpt)
-    q.awaitTermination(120)
-    first = {
-        (str(r["window_start"]), r["role"]): (r["n_turns"], r["n_empty"])
-        for r in spark.read.parquet(out).collect()
-    }
-    # watermark = 00:05:00 - 2min = 00:03:00 > the first window's end, so
-    # window [00:00, 00:01) finalized with 2 turns / 1 empty
-    assert first[("2024-01-01 00:00:00", "user")] == (2, 1)
-
-    _write("b.parquet", [
-        ("c3", 0, "user", "too late", None, "2024-01-01T00:00:20"),  # < watermark
-        ("c3", 1, "user", "on time", None, "2024-01-01T00:09:00"),
-    ])
-    q2 = streaming.stream_windowed_counts(spark, src, out, ckpt)
-    q2.awaitTermination(120)
-    got = {
-        (str(r["window_start"]), r["role"]): (r["n_turns"], r["n_empty"])
-        for r in spark.read.parquet(out).collect()
-    }
-    # the late row did NOT reopen the finalized window
-    assert got[("2024-01-01 00:00:00", "user")] == (2, 1)
-    # the on-time row's window [00:09, 00:10) is finalized only when a
-    # later watermark passes; the 00:05 window IS final after batch b
-    assert got[("2024-01-01 00:05:00", "user")] == (1, 0)
-
-
-def test_cli_stream_subcommand(tmp_path, spark, synth_path):
+def test_cli_stream_subcommand(tmp_path, spark, synth_path, count_jobs):
     """The stream CLI: first invocation labels all current files; a
     rerun with the same checkpoint ingests only NEW files (no
-    reprocessing — row count grows by exactly the new file's rows)."""
-    import json as _json
+    reprocessing — row count grows by exactly the new file's rows).
+
+    Job budget: Spark runs a streaming query's micro-batch jobs under the
+    query's own job group, its runId, so count_jobs sees only the jobs
+    the command starts itself: the schema read and count of the sink that
+    report its row count (3 jobs). The micro-batch write is one more job
+    in the runId group, not an ungrouped one."""
     import shutil
 
     from qamd_spark import main
@@ -182,18 +83,17 @@ def test_cli_stream_subcommand(tmp_path, spark, synth_path):
     os.makedirs(src)
     shutil.copy(synth_path, src + "/part-0.parquet")
     out = str(tmp_path / "out")
-    rc = main.main(["stream", "--input", src, "--output", out,
-                    "--master", "local[4]"])
-    assert rc == 0
+    argv = ["stream", "--input", src, "--output", out, "--master", "local[4]"]
+    rc, jobs, escaped = count_jobs(lambda: main.main(argv))
+    assert rc == 0 and jobs <= 3 and escaped == 0
     n1 = spark.read.parquet(out + "/data").count()
     assert n1 == spark.read.parquet(synth_path).count()
     # second invocation with one new file: only its rows are appended
     from qamd_spark import synth as _synth
 
     _synth.write_parquet(src + "/part-1.parquet", n_convs=5, seed=99)
-    rc = main.main(["stream", "--input", src, "--output", out,
-                    "--master", "local[4]"])
-    assert rc == 0
+    rc, jobs, escaped = count_jobs(lambda: main.main(argv))
+    assert rc == 0 and jobs <= 3 and escaped == 0
     n2 = spark.read.parquet(out + "/data").count()
     n_new = spark.read.parquet(src + "/part-1.parquet").count()
     assert n2 == n1 + n_new
@@ -276,158 +176,6 @@ def test_stream_over_jsonl_source(spark, tmp_path):
     assert got == exp and len(got) == 2
 
 
-def test_stream_dedup_keep_first_spans_arrow_chunks(spark, tmp_path):
-    """applyInPandasWithState hands the group to fn as an ITERATOR of
-    Arrow chunks; the kept 'first' row must be the group's global
-    (conv_id, turn_idx) minimum even when the minimum arrives in a later
-    chunk. Shrinking maxRecordsPerBatch forces multi-chunk groups."""
-    import pandas as pd
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    # 9 copies of one text, written in DESCENDING conv_id order so the
-    # true first row ("c0", 0) lands in the LAST Arrow chunk
-    rows = [(f"c{i}", 0, "user", "same text", None, None) for i in range(8, -1, -1)]
-    pdf = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-    for c in ("conv_id", "role", "text", "tool"):
-        pdf[c] = pdf[c].astype("string")
-    pdf.to_parquet(os.path.join(src, "a.parquet"))
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
-        q = streaming.stream_dedup(spark, src, out, ckpt)
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["is_dup"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[("c0", 0)] is False
-    assert sum(v for v in got.values()) == 8  # every other copy flagged
-
-
-def test_windowed_counts_surface_null_ts_drops(spark, tmp_path):
-    """NULL-ts rows cannot be windowed; they are filtered explicitly and
-    reported via the lineage_drops observed metric instead of vanishing."""
-    import pandas as pd
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    rows = [
-        ("c1", 0, "user", "hello", None, "2024-01-01T00:00:01"),
-        ("c1", 1, "assistant", "hi", None, "2024-01-01T00:00:02"),
-        ("c2", 0, "user", "no clock", None, None),  # NULL ts
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-    for c in ("conv_id", "role", "text", "tool"):
-        pdf[c] = pdf[c].astype("string")
-    pdf.to_parquet(os.path.join(src, "a.parquet"))
-
-    q = streaming.stream_windowed_counts(spark, src, out, ckpt)
-    drops = 0
-    q.awaitTermination(120)
-    for p in q.recentProgress:
-        om = p["observedMetrics"] if isinstance(p, dict) else p.observedMetrics
-        m = (om or {}).get("lineage_drops")
-        if m is not None and m["null_ts_rows"] is not None:
-            drops += m["null_ts_rows"]
-    assert drops == 1
-
-
-def test_session_counts_finalize_and_match_batch(spark, tmp_path):
-    """Session windows emit exactly once (when the watermark passes the
-    session end) and the streamed rows equal the SAME session_window
-    aggregation run in batch over the complete input, restricted to
-    finalized sessions."""
-    import pandas as pd
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    def _write(fname, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        for c in ("conv_id", "role", "text", "tool"):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(os.path.join(src, fname))
-
-    # c1 has two turns 10 min apart (one session, gap=30m); c2 at 02:00
-    # pushes the watermark to 01:00 > c1's session end (00:40)
-    _write("a.parquet", [
-        ("c1", 0, "user", "hi", None, "2024-01-01T00:00:00"),
-        ("c1", 1, "assistant", "hello", None, "2024-01-01T00:10:00"),
-        ("c2", 0, "user", "yo", None, "2024-01-01T02:00:00"),
-    ])
-    q = streaming.stream_session_counts(spark, src, out, ckpt)
-    q.awaitTermination(120)
-    got1 = {
-        (r["conv_id"], str(r["session_start"])): (
-            str(r["session_end"]), r["n_turns"], r["first_turn"], r["last_turn"]
-        )
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got1 == {
-        ("c1", "2024-01-01 00:00:00"): ("2024-01-01 00:40:00", 2, 0, 1),
-    }
-
-    # a second batch: c1 reappears at 03:00 (NEW session — the first one
-    # is closed and must not reopen) and c3 at 05:00 pushes the
-    # watermark to 04:00, finalizing c2's and the new c1 session
-    _write("b.parquet", [
-        ("c1", 2, "user", "again", None, "2024-01-01T03:00:00"),
-        ("c3", 0, "user", "mover", None, "2024-01-01T05:00:00"),
-    ])
-    q2 = streaming.stream_session_counts(spark, src, out, ckpt)
-    q2.awaitTermination(120)
-    streamed = spark.read.parquet(out)
-
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "conv_id", "n_turns", "first_turn", "last_turn",
-        )
-        # final watermark = 05:00 - 1h = 04:00; finalized sessions only
-        .filter(F.col("session_end") <= F.lit("2024-01-01 04:00:00").cast("timestamp"))
-    )
-    key = ["conv_id", "session_start"]
-    s = {tuple(str(r[k]) for k in key): (str(r["session_end"]), r["n_turns"])
-         for r in streamed.collect()}
-    b = {tuple(str(r[k]) for k in key): (str(r["session_end"]), r["n_turns"])
-         for r in batch.collect()}
-    assert s == b
-    assert ("c1", "2024-01-01 03:00:00") in s  # the reopened conv = new session
-
-
 def test_stream_applies_compression_rule(spark, tmp_path):
     """The compression rule is per-row, so it survives the cross-row
     strip and fires identically in the streamed plan (repetitive long
@@ -473,207 +221,3 @@ def test_stream_applies_compression_rule(spark, tmp_path):
     }
     assert "compression" in got[1]
     assert "compression" not in got[0] and "compression" not in got[2]
-
-
-def test_stream_flag_join_interval_and_restart(spark, tmp_path):
-    """Stream-stream interval join: a flag covers the turns of its
-    conversation within [flag_ts, flag_ts + 60s); the streamed matches
-    equal the identical batch join over the complete inputs, and a
-    checkpointed restart joins only the new files."""
-    import pandas as pd
-
-    turns_src = str(tmp_path / "turns")
-    flags_src = str(tmp_path / "flags")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(turns_src, exist_ok=True)
-    os.makedirs(flags_src, exist_ok=True)
-
-    def _turns(fname, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
-        for c in ("conv_id", "role", "text", "tool"):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(os.path.join(turns_src, fname))
-
-    def _flags(fname, rows):
-        pdf = pd.DataFrame(rows, columns=["conv_id", "flag_ts", "flag"])
-        pdf["flag_ts"] = pd.to_datetime(pdf["flag_ts"]).astype("datetime64[us]")
-        for c in ("conv_id", "flag"):
-            pdf[c] = pdf[c].astype("string")
-        pdf.to_parquet(os.path.join(flags_src, fname))
-
-    _turns("a.parquet", [
-        ("c1", 0, "user", "hi", None, "2024-01-01T00:00:00"),
-        ("c1", 1, "assistant", "hello", None, "2024-01-01T00:00:30"),
-        ("c1", 2, "user", "later", None, "2024-01-01T00:02:00"),
-        ("c2", 0, "user", "yo", None, "2024-01-01T00:00:10"),
-    ])
-    _flags("a.parquet", [
-        ("c1", "2024-01-01T00:00:00", "pii"),     # covers idx 0, 1 only
-        ("c2", "2024-01-01T00:05:00", "spam"),    # covers nothing
-    ])
-    q = streaming.stream_flag_join(spark, turns_src, flags_src, out, ckpt)
-    q.awaitTermination(120)
-    got1 = sorted(
-        (r["conv_id"], r["turn_idx"], r["flag"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert got1 == [("c1", 0, "pii"), ("c1", 1, "pii")]
-
-    # restart with ONE new file per side: only the new pair joins, the
-    # already-emitted matches are not re-emitted (sink checkpoint)
-    _turns("b.parquet", [
-        ("c3", 0, "user", "new", None, "2024-01-01T00:10:00"),
-    ])
-    _flags("b.parquet", [
-        ("c3", "2024-01-01T00:09:30", "tox"),     # 00:10:00 in [09:30,10:30)
-    ])
-    q2 = streaming.stream_flag_join(spark, turns_src, flags_src, out, ckpt)
-    q2.awaitTermination(120)
-    streamed = sorted(
-        (r["conv_id"], r["turn_idx"], r["flag"], str(r["ts"]), str(r["flag_ts"]))
-        for r in spark.read.parquet(out).collect()
-    )
-    assert len(streamed) == 3
-
-    # batch parity: identical predicate over the complete inputs
-    t = spark.read.parquet(turns_src)
-    f = (
-        spark.read.schema(streaming.FLAG_SCHEMA).parquet(flags_src)
-        .withColumnRenamed("conv_id", "f_conv_id")
-    )
-    batch = t.join(
-        f,
-        (F.col("conv_id") == F.col("f_conv_id"))
-        & (F.col("ts") >= F.col("flag_ts"))
-        & (F.col("ts") < F.col("flag_ts") + F.expr("INTERVAL 60 SECONDS")),
-        "inner",
-    ).select("conv_id", "turn_idx", "ts", "flag", "flag_ts")
-    want = sorted(
-        (r["conv_id"], r["turn_idx"], r["flag"], str(r["ts"]), str(r["flag_ts"]))
-        for r in batch.collect()
-    )
-    assert streamed == want
-
-
-def _exact_token_counts(spark, src):
-    return {
-        (r["token"], r["c"])
-        for r in (
-            spark.read.parquet(src)
-            .select(
-                F.explode(
-                    F.split(
-                        F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                        r"\s+",
-                        -1,
-                    )
-                ).alias("token")
-            )
-            .filter(F.col("token") != "")
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-    }
-
-
-def _live_summary(spark, out):
-    """The append-sink contract: live summary = max-batch rows per shard."""
-    df = spark.read.parquet(out)
-    last = df.groupBy("shard").agg(F.max("batch").alias("batch"))
-    return df.join(last, ["shard", "batch"]).collect()
-
-
-def test_stream_heavy_hitters_exact_when_capacity_generous(spark, tmp_path):
-    """capacity >= distinct tokens per shard => no evictions: SpaceSaving
-    counts are EXACT (err=0) and the union over shards equals the batch
-    token histogram."""
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(src, "a.parquet", n_convs=12, seed=5)
-
-    q = streaming.stream_heavy_hitters(
-        spark, src, out, ckpt, capacity=10_000, n_shards=4
-    )
-    q.awaitTermination(120)
-
-    rows = _live_summary(spark, out)
-    assert all(r["err"] == 0 for r in rows)
-    got = {(r["token"], r["count"]) for r in rows}
-    assert got == _exact_token_counts(spark, src)
-
-
-def test_stream_heavy_hitters_spacesaving_bounds_under_eviction(
-    spark, tmp_path
-):
-    """Tight capacity: every stored count obeys true <= count <= true+err,
-    and every token more frequent than n_shard/capacity IS in its shard's
-    summary (the SpaceSaving guarantee)."""
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(src, "a.parquet", n_convs=20, seed=7)
-
-    cap = 8
-    q = streaming.stream_heavy_hitters(
-        spark, src, out, ckpt, capacity=cap, n_shards=4
-    )
-    q.awaitTermination(120)
-
-    exact = dict(_exact_token_counts(spark, src))
-    rows = _live_summary(spark, out)
-    assert rows
-    n_shard = {r["shard"]: r["n_shard"] for r in rows}
-    stored = {(r["shard"], r["token"]) for r in rows}
-    for r in rows:
-        true = exact.get(r["token"], 0)
-        assert true <= r["count"] <= true + r["err"], r
-        assert r["err"] <= n_shard[r["shard"]] / cap, r
-    # completeness: frequent tokens cannot be missing from their shard
-    shard_of = {
-        r["token"]: r["shard"]
-        for r in spark.createDataFrame(
-            [(t,) for t in exact], "token string"
-        )
-        .select(
-            "token",
-            F.pmod(F.xxhash64("token"), F.lit(4)).cast("int").alias("shard"),
-        )
-        .collect()
-    }
-    for tok, true in exact.items():
-        sh = shard_of[tok]
-        if true > n_shard[sh] / cap:
-            assert (sh, tok) in stored, (tok, true, sh)
-
-
-def test_stream_heavy_hitters_state_merges_across_restart(spark, tmp_path):
-    """Restart with the same checkpoint: the second run's summary equals
-    one run over both files (no-eviction regime, so merging is exact) and
-    n_shard accumulates across batches."""
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(src, "a.parquet", n_convs=8, seed=11)
-
-    q = streaming.stream_heavy_hitters(
-        spark, src, out, ckpt, capacity=10_000, n_shards=4
-    )
-    q.awaitTermination(120)
-
-    _write_batch(src, "b.parquet", n_convs=6, seed=12)
-    q2 = streaming.stream_heavy_hitters(
-        spark, src, out, ckpt, capacity=10_000, n_shards=4
-    )
-    q2.awaitTermination(120)
-
-    rows = _live_summary(spark, out)
-    got = {(r["token"], r["count"]) for r in rows}
-    assert got == _exact_token_counts(spark, src)
-    assert all(r["err"] == 0 for r in rows)
