@@ -4,23 +4,20 @@
 sf0.001 documents table (each document = a single-turn conversation, per
 FIXTURES.md §5). ``queries()`` exposes the operator inventory from
 SURVEY.md §2 (plus the training-data-pipeline and event-analytics
-extensions) re-expressed over the driver's parquet tables;
-each entry has a DuckDB ``oracle_sql()`` twin unless the operator is
-genuinely non-SQL-expressible. The rows-only entries all carry exact
-pandas twins or recall/quality tests instead (see OPERATORS.md for the
-per-query evidence map): pandas-UDF scoring (langid_docs,
-transcript_pipeline, ccnet_buckets), deterministic-hash ops (minhash,
-simhash(+neardup), ngram_jaccard, winnow(+containment), dedup_clusters,
-dedup_canonical — exact twins in oracle/), ANN (ann_lsh_topk and
-embedding_neardup_lsh exact twins; ann_ivf_topk recall-pinned;
-prototypicality exact twin), tokenizer training (bpe_train /
-unigram_lm_train — one Spark pass for the word histogram, then driver
-learners; BPE bit-exact vs a naive spec), iterative graph
-fixpoints (pagerank — integer fixed-point, bit-exact Python twin;
-components — union-find twin), physical-layout audits whose oracles
-cannot see file paths or index internals (file_stats — pyarrow footer
-twin; ann_recall — recall floors). Every query reads its tables under
-``sf_dir``; none builds its own synthetic input.
+extensions) re-expressed over ``documents.parquet`` and
+``events.parquet`` (tests/test_entry_contract.py fails on any other
+table); each entry has a DuckDB ``oracle_sql()`` twin unless the
+operator is genuinely non-SQL-expressible. The rows-only entries all
+carry exact pandas twins or recall/quality tests instead (see
+OPERATORS.md for the per-query evidence map): pandas-UDF scoring
+(langid_docs, transcript_pipeline, ccnet_buckets), deterministic-hash
+ops (minhash, simhash(+neardup), ngram_jaccard, winnow(+containment),
+dedup_clusters, dedup_canonical — exact twins in oracle/), tokenizer
+training (bpe_train / unigram_lm_train — one Spark pass for the word
+histogram, then driver learners; BPE bit-exact vs a naive spec),
+iterative graph fixpoints (pagerank — integer fixed-point, bit-exact
+Python twin; components — union-find twin). Every query reads its
+tables under ``sf_dir``; none builds its own synthetic input.
 
 One definition per rule: the pipeline's checks (odd characters, length
 bounds, stopwords, PII scrub, sentinels, custom regex, repetition, rare
@@ -35,8 +32,8 @@ Column-name and float-determinism discipline:
 - every computed column is aliased identically on both sides;
 - ratios are single divisions of exact integer aggregates (IEEE-identical
   in Spark and DuckDB);
-- cosine similarities are left-fold double sums in both engines (verified
-  bit-exact) and rounded defensively before output.
+- a double sum over many terms is an order-pinned left fold in both
+  engines (verified bit-exact) and rounded defensively before output.
 
 Known cross-engine caveat (documented, not hit by these corpora): the
 ``\\s`` class differs between Java regex (includes vertical tab \\x0B)
@@ -376,39 +373,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def _txt():
     return F.coalesce(F.col("text"), F.lit(""))
-
-
-def _fold_dot(a: str, b: str):
-    """Fixed-order left-fold dot product — THE bit-exactness contract
-    with DuckDB's list_dot_product (every cosine in this file must go
-    through these helpers; a drift in fold semantics would silently
-    desync only the operators that hand-rolled their own copy)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _fold_norm(c: str):
-    """sqrt of the left-fold sum of squares (same contract as above)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def _fold_cosine(a: str = "e", b: str = "qe"):
-    return _fold_dot(a, b) / (_fold_norm(a) * _fold_norm(b))
 
 
 def _sql_list(values) -> str:
@@ -528,37 +494,6 @@ def q_lang_distribution(spark, sf_dir):
 
 def q_fingerprint(spark, sf_dir):
     return _docs(spark, sf_dir).select("doc_id", F.md5(_txt()).alias("fp"))
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-10 for query vectors vec_id < 5.
-
-    Broadcast the (tiny) query side; dot/norm are sequential left-fold
-    double sums — verified bit-identical to DuckDB's list_dot_product —
-    and rounded to 9 dp defensively. Scale path: the same plan over
-    LSH/IVF candidate buckets instead of a full crossJoin (see
-    qamd_spark/ops/similarity.py).
-    """
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    sim = _fold_cosine()
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        pairs.select("qid", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor"),
-            F.round(F.col("sim"), 9).alias("sim"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
 
 
 def q_gopher_repetition(spark, sf_dir):
@@ -701,20 +636,6 @@ def q_dedup_canonical(spark, sf_dir):
 
     d = _docs(spark, sf_dir)
     return canonical_keepers(d, minhash_duplicates(d))
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): semantic near-duplicate removal over
-    the embeddings table — coarse k-means clusters (deterministic IVF
-    trainer), then keep-first cosine dedup ONLY within clusters. Rows-only
-    by design (the iterative trainer + Arrow assignment stage are
-    non-SQL-expressible); exact pandas twin:
-    tests/test_hash_oracles.py::test_semantic_dedup_matches_pandas_twin."""
-    from qamd_spark.ops.similarity import ivf_train, semantic_dedup
-
-    e = _emb(spark, sf_dir)
-    cent = ivf_train(e, n_clusters=8, n_iters=2)
-    return semantic_dedup(e, cent, threshold=0.25)
 
 
 def q_tfidf_topk(spark, sf_dir):
@@ -3432,99 +3353,6 @@ def q_dedup_survivorship(spark, sf_dir):
     return flow
 
 
-def _procrustes_closed_R():
-    """Column-major closed-form rotation for the signed-permutation
-    synthetic re-embedding: v_new[j] = s_j * v_old[p(j)] with
-    p(j) = (13j+5) mod 64 and s_j = -1 iff j % 3 == 0, so the exact
-    minimizer of ||V_new - V_old R||_F is R[p(j)][j] = s_j. Returned
-    as Rcols[j][k] = R[k][j] (one column of R per outer entry — the
-    layout both the Spark apply fold and the DuckDB oracle consume).
-    Entries are exactly 0.0 / ±1.0, so the apply-side dot products stay
-    float-EXACT on both engines."""
-    cols = []
-    for j in range(64):
-        s = -1.0 if j % 3 == 0 else 1.0
-        p = (13 * j + 5) % 64
-        cols.append([s if k == p else 0.0 for k in range(64)])
-    return cols
-
-
-def q_embedding_align(spark, sf_dir):
-    """Embedding-version migration via orthogonal Procrustes
-    (ops/similarity.procrustes_train — Schönemann 1966): when a corpus
-    is re-embedded with a new model, every index, centroid table, and
-    cached neighbor list built on the old space dies unless the spaces
-    are aligned; the best orthogonal map has the closed form R = U·Vᵀ
-    from the SVD of V_oldᵀ·V_new. The 'new' version here is a SIGNED
-    PERMUTATION of the old (v_new[j] = ±v_old[p(j)], p(j) = (13j+5)
-    mod 64 — orthogonal and float-EXACT: ±1 products introduce zero
-    rounding), built JVM-side with transform/element_at. Training is
-    the pca_train bounded-coordination shape (one d×d partial per
-    Arrow batch, fsum-combined, driver SVD on 64×64). The trained R is
-    then rounded to 6 dp — which collapses to the EXACT closed-form
-    signed permutation iff recovery succeeded (recovery error is
-    ~1e-8, pinned by tests/test_ops.py; a training drift would leave a
-    non-closed-form literal and the oracle hash goes red) — and the
-    apply runs JVM-side with that literal R via the ann_cosine_topk
-    left-fold discipline, making the whole query DuckDB-oracled.
-    Apply-side planted drift (vec_id % 17 == 0 gets +0.25 on
-    component 0, AFTER training) exercises align_err as a per-item
-    semantic-drift detector: aligned rows read exactly 0, drifted rows
-    read the residual of the perturbation. Scale path: training
-    traffic is one d×d partial per batch; the apply is one narrow
-    codegen projection, no shuffle."""
-    from qamd_spark.ops.similarity import procrustes_train
-
-    emb = _emb(spark, sf_dir)
-    v_new = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda jj: F.element_at(F.col("embedding"), ((13 * jj + 5) % 64 + 1).cast("int")).cast("double")
-        * F.when(jj % 3 == 0, F.lit(-1.0)).otherwise(F.lit(1.0)),
-    )
-    pairs = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v_old"),
-        v_new.alias("v_new"),
-    ).persist()
-    rot = procrustes_train(pairs)
-    # 6-dp round: recovery error is ~1e-8 << 0.5e-6, so this is the
-    # exact signed permutation when training is healthy. "+ 0.0"
-    # normalizes -0.0 so zero entries match the oracle's literal.
-    Rcols_py = [[float(round(float(rot[k][j]), 6)) + 0.0 for k in range(64)] for j in range(64)]
-    Rcols = F.array(*[F.array(*[F.lit(v) for v in col]) for col in Rcols_py])
-    drift = F.when(F.col("vec_id") % 17 == 0, F.lit(0.25)).otherwise(F.lit(0.0))
-    v_new_d = F.transform(
-        F.col("v_new"), lambda x, i: F.when(i == 0, x + drift).otherwise(x)
-    )
-    aligned = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda j: F.aggregate(
-            F.zip_with(F.col("v_old"), F.get(Rcols, j), lambda x, r: x * r),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-    def _l2(diff):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(diff, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    staged = pairs.select("vec_id", "v_old", v_new_d.alias("v_new_d"))
-    pre = _l2(F.zip_with(F.col("v_new_d"), F.col("v_old"), lambda a, b: a - b))
-    post = _l2(F.zip_with(F.col("v_new_d"), aligned, lambda a, b: a - b))
-    return staged.select(
-        "vec_id",
-        F.round(pre, 9).alias("pre_err"),
-        F.round(post, 9).alias("align_err"),
-        (F.col("vec_id") % 17 == 0).alias("drifted"),
-    )
-
-
 def q_markdown_audit(spark, sf_dir):
     """Markdown structural QA per doc — the format-validation gate
     SFT/code corpora run before training on rendered text: an UNCLOSED
@@ -4382,33 +4210,6 @@ def q_fertility_by_lang(spark, sf_dir):
     )
 
 
-def q_embedding_norm_profile(spark, sf_dir):
-    """Embedding-space QA per label cluster: exact L2-norm distribution
-    (min / median / max) — collapsed or exploded norms flag a broken
-    encoder or a mis-scaled shard before ANN indexes are built. The
-    norm is the bit-exact left-fold dot product (the ann_cosine_topk
-    discipline, DuckDB list_dot_product ≡ Spark aggregate fold); the
-    median is the shared lo + (hi-lo)*frac interpolation. min/max are
-    order-free; no float SUM crosses rows (averages are deliberately
-    absent — their order-dependence would break the hash gate)."""
-    e = _emb(spark, sf_dir).select(
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform("e", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    d = e.select("label", norm.alias("nrm"))
-    return d.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.round(F.min("nrm"), 9).alias("min_norm"),
-        F.round(F.expr("percentile(nrm, 0.5D)"), 9).alias("median_norm"),
-        F.round(F.max("nrm"), 9).alias("max_norm"),
-    )
-
-
 def q_normalize_text(spark, sf_dir):
     """Whitespace/control normalization — the cheap canonicalization
     every curation pipeline runs before hashing/dedup so that
@@ -4956,90 +4757,6 @@ def _doc_transcripts(spark, sf_dir):
         "text",
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"),
-    )
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs (a < b, sim > threshold) over
-    a bounded id range — the pairwise variant of ANN (SQL-checkable).
-    Scale path: LSH bucketing (ops/similarity.lsh_topk) replaces the
-    bounded self-join."""
-    emb = (
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id") < 500)
-        .select(
-            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-        )
-    )
-    b = emb.select(F.col("vec_id").alias("b_id"), F.col("e").alias("be"))
-    pairs = emb.join(F.broadcast(b), F.col("vec_id") < F.col("b_id"))
-    dot = F.aggregate(
-        F.zip_with("e", "be", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    sim = dot / (norm("e") * norm("be"))
-    # threshold membership uses the SAME round-to-9 quantization as the
-    # emitted value, so a sim within 1 ulp of 0.2 can't pass in one engine
-    # and fail in the other
-    return (
-        pairs.select(
-            F.col("vec_id").alias("a"),
-            F.col("b_id").alias("b"),
-            F.round(sim, 9).alias("sim"),
-        )
-        .filter(F.col("sim") > 0.2)
-    )
-
-
-def q_embedding_neardup_lsh(spark, sf_dir):
-    """Corpus-scale embedding near-dup pairs via whole-table LSH
-    bucketing + exact-cosine verify (ops/similarity.lsh_neardup_pairs) —
-    the scale path that replaces q_embedding_neardup's bounded self-join.
-    Rows-only in the driver gate (recall < 1 by construction); planted-
-    pair recall/precision pinned in tests/test_ops.py."""
-    from qamd_spark.ops import similarity as sim
-
-    return sim.lsh_neardup_pairs(
-        _emb(spark, sf_dir), threshold=0.25, bits=4, n_tables=16, dim=64
-    ).select("vec_id", "dup_of", F.round("sim", 9).alias("sim"))
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF-bucketed approximate cosine top-k (the clustered-corpus scale
-    path; ops/similarity.ivf_train/ivf_topk — deterministic Lloyd
-    iterations, driver-coordinated). Rows-only: recall < 1 by
-    construction; clustered-data recall pinned in tests/test_ops.py."""
-    from qamd_spark.ops import similarity as sim
-
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cent = sim.ivf_train(emb, n_clusters=16, n_iters=2)
-    out = sim.ivf_topk(emb, q, cent, k=10, n_probe=8)
-    return out.select(
-        "qid", "neighbor", F.round("sim", 9).alias("sim"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    """LSH-bucketed approximate cosine top-k (the 100TB-scale ANN path;
-    qamd_spark/ops/similarity.lsh_topk). Rows-only: recall < 1 by
-    construction, so the brute-force twin is its quality baseline in
-    tests/test_ops.py, not an equality oracle."""
-    from qamd_spark.ops import similarity as sim
-
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    out = sim.lsh_topk(emb, q, k=10, dim=64)
-    return out.select(
-        "qid", "neighbor", F.round("sim", 9).alias("sim"),
-        F.col("rank").cast("int").alias("rank"),
     )
 
 
@@ -5592,53 +5309,6 @@ def q_rule_ablation(spark, sf_dir):
     )
 
 
-def q_embedding_quantize(spark, sf_dir):
-    """Int8 scalar quantization QA for ANN indexes: per-vector symmetric
-    scale (max|x|/127), quantize with the EXPLICIT deterministic
-    rounding floor(x/scale + 0.5) — not round(), whose half-tie rule
-    differs across engines — then report the post-quantization cosine
-    and max absolute reconstruction error per vector. This is the 4x
-    memory-reduction check run before swapping an ANN index to int8:
-    cos_deq ~ 1 and small max_err mean the index can be quantized.
-    Pure projection over the embeddings scan (no shuffle); all float
-    reductions are left folds / order-free maxima, bit-identical in
-    DuckDB (list_dot_product is a sequential fold), rounded
-    defensively at 9 places on both sides. All-zero vectors (scale 0)
-    are filtered identically on both sides."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    amax = F.array_max(F.transform("e", lambda x: F.abs(x)))
-    s = e.select("vec_id", "e", (amax / F.lit(127.0)).alias("scale")).where(
-        F.col("scale") > 0
-    )
-    deq = F.transform(
-        "e", lambda x: F.floor(x / F.col("scale") + F.lit(0.5)) * F.col("scale")
-    )
-    d = s.select("vec_id", "e", "scale", deq.alias("deq"))
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = _dot(F.col("e"), F.col("deq")) / (
-        F.sqrt(_dot(F.col("e"), F.col("e"))) * F.sqrt(_dot(F.col("deq"), F.col("deq")))
-    )
-    max_err = F.array_max(
-        F.zip_with("e", "deq", lambda x, y: F.abs(x - y))
-    )
-    return d.select(
-        "vec_id",
-        F.round("scale", 9).alias("scale"),
-        F.round(cos, 9).alias("cos_deq"),
-        F.round(max_err, 9).alias("max_err"),
-    )
-
-
 def q_html_strip(spark, sf_dir):
     """Web-corpus markup removal (ops/text.strip_html): tag strip +
     named-entity decode (fixed order, &amp; last) + whitespace collapse.
@@ -5764,23 +5434,6 @@ def q_ccnet_buckets(spark, sf_dir):
             .alias("bucket"),
         )
     )
-
-
-def q_prototypicality(spark, sf_dir):
-    """SSL-prototype pruning scores (Sorscher et al. 2022): cosine of
-    each embedding to its assigned k-means centroid — the ranking key
-    for prototype-based data pruning (drop the most prototypical /
-    redundant examples first at scale). Deterministic IVF trainer +
-    BLAS-free Arrow scoring stage (ops/similarity.prototype_scores);
-    rows-only by design (iterative trainer), exact pandas twin in
-    tests/test_ops.py. proto is rounded defensively for display; the
-    twin test compares the raw kernel output bit-for-bit."""
-    from qamd_spark.ops.similarity import ivf_train, prototype_scores
-
-    e = _emb(spark, sf_dir)
-    cent = ivf_train(e, n_clusters=8, n_iters=2)
-    out = prototype_scores(e, cent)
-    return out.select("vec_id", "cluster", F.round("proto", 9).alias("proto"))
 
 
 def q_bpe_train(spark, sf_dir):
@@ -5938,8 +5591,7 @@ def q_ngram_novelty(spark, sf_dir):
     8-grams that occur in no other document (RefinedWeb-style uniqueness
     ranking — high-novelty docs carry information the corpus doesn't
     already have; low-novelty docs are near-boilerplate even when no
-    single duplicate pair fires). Inverse of q_prototypicality's
-    redundancy ranking, at exact n-gram rather than embedding level.
+    single duplicate pair fires), at exact n-gram level.
 
     Scale: grams are distinct-per-doc before the corpus-wide gram count
     (one hash aggregate each); the count table joins back on gram (hash
@@ -6090,28 +5742,6 @@ def q_event_latency(spark, sf_dir):
         ),
         (F.col("med2").cast("double") / F.lit(2.0)).alias("median_gap_us"),
     )
-
-
-def q_embedding_pca(spark, sf_dir):
-    """PCA projection of the embedding table to 4 principal components
-    plus per-vector reconstruction error — the dimensionality-reduction
-    front end for embedding pipelines (cheaper ANN, whitening before
-    clustering, and the variance-explained QA check that catches a
-    collapsed encoder). Rows-only by design (eigendecomposition is not
-    SQL); tests/test_ops.py pins the projection bit-exact against a
-    local numpy twin and checks orthonormality + variance ordering.
-
-    Scale: the covariance is accumulated as per-batch partial (n, sum,
-    gram) rows — only #batches × (d + d²) floats reach the driver, the
-    same bounded-coordination shape as ivf_train's centroid collect; the
-    projection is one narrow Arrow stage, no shuffle."""
-    from qamd_spark.ops.similarity import pca_project, pca_train
-
-    e = _emb(spark, sf_dir)
-    model = pca_train(e, k=4)
-    out = pca_project(e, model)
-    cols = [F.round(F.col(f"pc{i}"), 9).alias(f"pc{i}") for i in range(1, 5)]
-    return out.select("vec_id", *cols, F.round("recon_err", 9).alias("recon_err"))
 
 
 def q_lang_source_chi2(spark, sf_dir):
@@ -8112,154 +7742,6 @@ def q_unicode_nfc(spark, sf_dir):
     )
 
 
-def q_key_skew(spark, sf_dir):
-    """Shuffle-skew advisor: for each candidate join/grouping key,
-    measure the key-cardinality facts that decide whether a shuffle on
-    that key survives 100 TB — row count, distinct keys, the hottest
-    key's row count, and the skew factor max_rows * n_keys / n_rows
-    (1.0 = perfectly uniform; >> 1 means one reducer gets the hot key
-    and AQE skew-split / salting is required). This is the measurement
-    the brief's skew story acts on: run it BEFORE choosing partition
-    keys. Each audit is one partial+final hash aggregate over the key
-    histogram; output is one row per audited key. The skew factor is a
-    single division of exact int64 products — IEEE-identical on both
-    engines."""
-    def audit(df, name, key):
-        per = df.groupBy(F.col(key).cast("string").alias("k")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        return per.agg(
-            F.lit(name).alias("key"),
-            F.sum("c").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_keys"),
-            F.max("c").alias("max_key_rows"),
-        ).select(
-            "key", "n_rows", "n_keys", "max_key_rows",
-            (
-                (F.col("max_key_rows") * F.col("n_keys")).cast("double")
-                / F.col("n_rows").cast("double")
-            ).alias("skew_factor"),
-        )
-
-    docs = _docs(spark, sf_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    parts = [
-        audit(docs, "documents.source", "source"),
-        audit(docs, "documents.lang", "lang"),
-        audit(ev, "events.user_id", "user_id"),
-        audit(ev, "events.event_type", "event_type"),
-        audit(li, "lineitem.l_orderkey", "l_orderkey"),
-        audit(li, "lineitem.l_suppkey", "l_suppkey"),
-    ]
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
-
-
-def q_join_cardinality(spark, sf_dir):
-    """Join-fanout audit: predict the EXACT output cardinality of a
-    join before paying for it — sum over join keys of cnt_left *
-    cnt_right, plus the hottest key's fanout product. At 100 TB this is
-    the difference between a join that fits and one that explodes (a
-    many-to-many key with 10^4 x 10^4 rows emits 10^8 rows for that key
-    alone); the audit costs two key histograms and an equi-join on the
-    (tiny) histogram tables, never touching the wide rows. All counts
-    and products are exact int64; output is one row per audited join
-    edge."""
-    def audit(name, l, lk, r, rk):
-        lh = l.groupBy(F.col(lk).alias("k")).agg(
-            F.count(F.lit(1)).alias("cl")
-        )
-        rh = r.groupBy(F.col(rk).alias("k")).agg(
-            F.count(F.lit(1)).alias("cr")
-        )
-        j = lh.join(rh, "k").select(
-            "k", (F.col("cl") * F.col("cr")).alias("fan")
-        )
-        return j.agg(
-            F.lit(name).alias("join_edge"),
-            F.count(F.lit(1)).alias("n_matching_keys"),
-            F.sum("fan").alias("out_rows"),
-            F.max("fan").alias("max_key_fanout"),
-        )
-
-    def audit_self(name, df, k):
-        # self-join fanout needs ONE histogram, squared — no second scan,
-        # no histogram-to-itself shuffle join
-        h = df.groupBy(F.col(k).alias("k")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        return h.agg(
-            F.lit(name).alias("join_edge"),
-            F.count(F.lit(1)).alias("n_matching_keys"),
-            F.sum(F.col("c") * F.col("c")).alias("out_rows"),
-            F.max(F.col("c") * F.col("c")).alias("max_key_fanout"),
-        )
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = audit("lineitem*orders@orderkey", li, "l_orderkey", o, "o_orderkey")
-    b = audit_self("orders*orders@custkey", o, "o_custkey")
-    c = audit_self("events*events@user_id", ev, "user_id")
-    return a.unionByName(b).unionByName(c)
-
-
-def q_table_stats(spark, sf_dir):
-    """ANALYZE-style column statistics — the optimizer-stats collection
-    pass (row count, null count, exact NDV, min/max, quartile
-    boundaries per column) that cost-based planning, partition sizing
-    and key_skew/join_cardinality decisions read at 100 TB. Exact NDV
-    is the two-level aggregate (distinct hash-agg then count — no
-    count-distinct Expand, and at true scale the documented swap is
-    approx_count_distinct's HLL, see sketch_profile); quartiles use
-    Spark's exact percentile / DuckDB's quantile_cont, which share the
-    lo + (hi-lo)*frac interpolation (the percentile_profile precedent).
-    One row per audited column; the 1-row stat frames combine with
-    crossJoins that never touch data."""
-    def stats(df, name, col):
-        d = df.select(F.col(col).cast("double").alias("x"))
-        q = F.expr("percentile(x, array(0.25D, 0.5D, 0.75D))")
-        base = d.agg(
-            F.lit(name).alias("column"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("x").isNull().cast("long")).alias("n_nulls"),
-            F.min("x").alias("min_v"),
-            F.max("x").alias("max_v"),
-            q.alias("q"),
-        )
-        ndv = (
-            d.filter(F.col("x").isNotNull())
-            .select("x")
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n_distinct"))
-        )
-        return base.crossJoin(ndv).select(
-            "column", "n_rows", "n_nulls", "n_distinct", "min_v", "max_v",
-            F.col("q")[0].alias("p25"),
-            F.col("q")[1].alias("p50"),
-            F.col("q")[2].alias("p75"),
-        )
-
-    docs = _docs(spark, sf_dir)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    parts = [
-        stats(docs, "documents.n_chars", "n_chars"),
-        stats(docs, "documents.doc_id", "doc_id"),
-        stats(ev, "events.value", "value"),
-        stats(ev, "events.user_id", "user_id"),
-        stats(li, "lineitem.l_quantity", "l_quantity"),
-        stats(li, "lineitem.l_extendedprice", "l_extendedprice"),
-    ]
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
-
-
 ZORDER_BITS = 16
 
 
@@ -8465,74 +7947,6 @@ def q_inverted_index(spark, sf_dir):
     )
 
 
-def q_ann_recall(spark, sf_dir):
-    """ANN index quality audit: recall@10 of the two approximate paths
-    (LSH buckets, IVF probes) against the exact brute-force top-10 on
-    the SAME query set — the measurement you run before trusting an
-    index at 100 TB (an index with silent recall collapse looks
-    healthy until a user searches). Composes the three existing ANN
-    queries; the exact side defines ground truth, hits are a LeftSemi
-    on (qid, neighbor), and recall is one division of exact counts.
-    Rows-only (the approximate paths have no SQL twins by design);
-    evidence = the per-method recall floors pinned in tests/test_ops.py
-    plus this audit's own floor in tests/test_entry_contract.py.
-    The exact truth set is localCheckpointed: it feeds its own count
-    agg plus BOTH methods' semi-joins, and each branch re-ran the
-    brute-force scan before materialization (the dedup_recall_audit
-    move)."""
-    truth = (
-        q_ann_cosine_topk(spark, sf_dir)
-        .select("qid", "neighbor")
-        .localCheckpoint(eager=True)
-    )
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-
-    def against(name, df):
-        hits = df.select("qid", "neighbor").join(
-            truth, ["qid", "neighbor"], "left_semi"
-        )
-        h = hits.agg(F.count(F.lit(1)).alias("n_hits"))
-        return h.crossJoin(n_truth).select(
-            F.lit(name).alias("method"),
-            F.lit(10).cast("long").alias("k"),
-            "n_truth",
-            "n_hits",
-            (
-                F.col("n_hits").cast("double")
-                / F.col("n_truth").cast("double")
-            ).alias("recall"),
-        )
-
-    a = against("lsh", q_ann_lsh_topk(spark, sf_dir))
-    b = against("ivf", q_ann_ivf_topk(spark, sf_dir))
-    return a.unionByName(b)
-
-
-def q_file_stats(spark, sf_dir):
-    """Small-files / compaction advisor: rows per physical input file
-    for each table — THE operational audit at 100 TB, where a table
-    fragmented into millions of tiny files spends more time in task
-    scheduling and footer reads than in scanning (the fix is compaction
-    / OPTIMIZE; zorder_key chooses the order, this measures the need).
-    Spark side: group by input_file_name() — one partial+final hash
-    aggregate, no extra metadata pass. Rows-only (the oracle views hide
-    file paths); evidence = exact pyarrow footer twin
-    (tests/test_graph.py)."""
-    parts = []
-    for t in ("documents", "events", "lineitem"):
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        per = df.groupBy(
-            F.regexp_extract(
-                F.input_file_name(), r"([^/]+\.parquet)", 1
-            ).alias("file")
-        ).agg(F.count(F.lit(1)).alias("n_rows"))
-        parts.append(per.select(F.lit(t).alias("table"), "file", "n_rows"))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
-
-
 PR_NODES = 97  # deterministic synthetic domain-graph size
 
 
@@ -8731,12 +8145,28 @@ BM25_QUERIES = [
 ]
 
 
-def _bm25_scores(spark, sf_dir):
-    """Shared BM25 scorer: returns (qid, doc_id, score) for every doc
-    matching at least one term of BM25_QUERIES, score UNROUNDED (the
-    query wrappers round). Kept as one helper so bm25_search and
-    hybrid_search can never drift apart."""
-    from qamd_spark.ops.text import grouped_topk  # noqa: F401 (doc parity)
+def q_bm25_search(spark, sf_dir):
+    """BM25 retrieval scoring over the corpus for a fixed query set —
+    the consumer of the inverted-index build (inverted_index emits the
+    postings; this ranks). k1=1.2, b=0.75, expressed as exact int64
+    rationals so the per-term score is ONE IEEE division of two exact
+    integers (bit-identical cross-engine, the repo float rule):
+
+        tf_sat = tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
+               = 44*tf*sumdl / (20*tf*sumdl + 6*sumdl + 18*dl*N)
+
+    with avgdl = sumdl/N multiplied through. The classic log idf is
+    replaced by the exact rational (N-df+1)/(df+1) (same monotone
+    direction; ln() is libm-dependent — the tfidf_topk precedent).
+    Per-doc totals are a term-ordered left fold (sort_array + aggregate
+    vs DuckDB list(ORDER BY)+list_reduce), so the cross-term double sum
+    is order-pinned. int64 bounds: 44*tf*sumdl*(N-df+1) ~ 5e16 at
+    sf0.1 — safe; at sf>=10 swap the rational to double scoring
+    (ranking tolerance) or decimal. Scale shape: tf table persisted
+    (feeds dl, df, probe); query set + df-of-query-terms broadcast; one
+    shuffle equi-join on doc_id for dl; top-10 per query via the
+    window-free two-phase grouped_topk (no hot-query task)."""
+    from qamd_spark.ops.text import grouped_topk
 
     d = _docs(spark, sf_dir)
     toks = d.select(
@@ -8786,172 +8216,11 @@ def _bm25_scores(spark, sf_dir):
     score = F.aggregate(
         F.col("ts"), F.lit(0.0), lambda acc, x: acc + x["s"]
     )
-    return doc.select("qid", "doc_id", score.alias("score"))
-
-
-def q_bm25_search(spark, sf_dir):
-    """BM25 retrieval scoring over the corpus for a fixed query set —
-    the consumer of the inverted-index build (inverted_index emits the
-    postings; this ranks). k1=1.2, b=0.75, expressed as exact int64
-    rationals so the per-term score is ONE IEEE division of two exact
-    integers (bit-identical cross-engine, the repo float rule):
-
-        tf_sat = tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
-               = 44*tf*sumdl / (20*tf*sumdl + 6*sumdl + 18*dl*N)
-
-    with avgdl = sumdl/N multiplied through. The classic log idf is
-    replaced by the exact rational (N-df+1)/(df+1) (same monotone
-    direction; ln() is libm-dependent — the tfidf_topk precedent).
-    Per-doc totals are a term-ordered left fold (sort_array + aggregate
-    vs DuckDB list(ORDER BY)+list_reduce), so the cross-term double sum
-    is order-pinned. int64 bounds: 44*tf*sumdl*(N-df+1) ~ 5e16 at
-    sf0.1 — safe; at sf>=10 swap the rational to double scoring
-    (ranking tolerance) or decimal. Scale shape: tf table persisted
-    (feeds dl, df, probe); query set + df-of-query-terms broadcast; one
-    shuffle equi-join on doc_id for dl; top-10 per query via the
-    window-free two-phase grouped_topk (no hot-query task)."""
-    from qamd_spark.ops.text import grouped_topk
-
-    sc = _bm25_scores(spark, sf_dir)
+    sc = doc.select("qid", "doc_id", score.alias("score"))
     top = grouped_topk(sc, "qid", "score", "doc_id", 10)
     return top.select(
         "qid", "doc_id", F.round(F.col("score"), 9).alias("score"), "rank"
     )
-
-
-def _semantic_sims(spark, sf_dir):
-    """Shared semantic scorer: (qid, doc_id, sim) — cosine of every
-    embedding row against the query embeddings (vec_id == qid of
-    BM25_QUERIES), dot and norms as fixed-order left-folds. One helper
-    so hybrid_search and rank_rbo can never drift apart (the same
-    discipline as _bm25_scores)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    qids = [qid for qid, _ in BM25_QUERIES]
-    q = emb.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").cast("int").alias("qid"), F.col("e").alias("qe")
-    )
-    return emb.crossJoin(F.broadcast(q)).select(
-        "qid",
-        F.col("vec_id").alias("doc_id"),
-        _fold_cosine().alias("sim"),
-    )
-
-
-def q_hybrid_search(spark, sf_dir):
-    """Hybrid retrieval via reciprocal-rank fusion (Cormack, Clarke &
-    Buettcher 2009): the lexical BM25 top-30 (shared _bm25_scores
-    helper) fused with a semantic cosine top-30 (query embedding =
-    the embedding row whose vec_id equals the qid) by
-    rrf = 1/(60+lex_rank) + 1/(60+sem_rank), one-sided hits keep the
-    single term — each term is ONE IEEE division of small exact ints
-    and the sum is two fixed-order double adds, so cross-engine
-    bit-equality holds without any log/exp. Docs without an embedding
-    row (sf0.1 has 5000 docs but 2000 vectors) are simply absent from
-    the semantic list — RRF's standard one-sided behaviour. Both
-    candidate lists come from the window-free two-phase grouped_topk;
-    only the FUSED set (<= 60 rows per qid by construction) goes
-    through a row_number window, so the final sort is over bounded
-    per-query groups, never the corpus."""
-    from qamd_spark.ops.text import grouped_topk
-
-    lex = grouped_topk(
-        _bm25_scores(spark, sf_dir), "qid", "score", "doc_id", 30
-    ).select("qid", "doc_id", F.col("rank").cast("int").alias("lex_rank"))
-    sims = _semantic_sims(spark, sf_dir)
-    sem = grouped_topk(sims, "qid", "sim", "doc_id", 30).select(
-        "qid", "doc_id", F.col("rank").cast("int").alias("sem_rank")
-    )
-    fused = lex.join(sem, ["qid", "doc_id"], "full_outer")
-    term = lambda c: F.when(  # noqa: E731
-        F.col(c).isNotNull(), F.lit(1.0) / (F.lit(60) + F.col(c))
-    ).otherwise(F.lit(0.0))
-    scored = fused.select(
-        "qid", "doc_id", "lex_rank", "sem_rank",
-        (term("lex_rank") + term("sem_rank")).alias("rrf"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "qid", "doc_id", "lex_rank", "sem_rank",
-            F.round(F.col("rrf"), 9).alias("rrf_score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-
-RBO_K = 10  # rank-biased overlap truncation depth
-
-
-def q_rank_rbo(spark, sf_dir):
-    """Rank-biased overlap (Webber, Moffat & Zobel, TOIS 2010) between
-    the lexical BM25 top-10 and the semantic cosine top-10, per query —
-    the agreement metric behind hybrid retrieval: RBO ~ 1 means the two
-    retrievers see the same ranking (fusion adds nothing), RBO ~ 0
-    means they are complementary (fusion is load-bearing). Truncated
-    prefix form at depth K with persistence p = 1/2:
-    RBO@K = sum_{d=1..K} overlap_d / (d * 2^d), overlap_d the size of
-    the intersection of the two depth-d prefixes.
-
-    Bit-exactness discipline: with p = 1/2 every weight (1-p)*p^(d-1)
-    is the dyadic 2^-d, so each term is ONE IEEE division of the exact
-    int overlap_d by the PLAN-TIME constant d*2^d, and the sum is a
-    fixed left-associated chain d = 1..K — written identically in the
-    DuckDB twin, hence bit-equal with no log/exp/pow at runtime.
-
-    Shape for 100 TB: both top-10 lists come from the window-free
-    two-phase grouped_topk (skew-safe); the per-query ordered arrays
-    are <= K elements, so the RBO math runs on a |queries|-row relation
-    — the prefix intersections never touch the corpus."""
-    from qamd_spark.ops.text import grouped_topk
-
-    lex = grouped_topk(
-        _bm25_scores(spark, sf_dir), "qid", "score", "doc_id", RBO_K
-    )
-    sem = grouped_topk(
-        _semantic_sims(spark, sf_dir), "qid", "sim", "doc_id", RBO_K
-    )
-
-    def ordered(df, name):
-        return df.groupBy("qid").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("rank"), F.col("doc_id")))
-                ),
-                lambda s: s.getField("doc_id"),
-            ).alias(name)
-        )
-
-    j = ordered(lex, "la").join(ordered(sem, "lb"), "qid")
-    inter_at = lambda d: F.size(  # noqa: E731
-        F.array_intersect(
-            F.slice(F.col("la"), 1, d), F.slice(F.col("lb"), 1, d)
-        )
-    ).cast("long")
-    # explicit left-fold (not a bare + chain, which Catalyst may
-    # reassociate) — mirrors the DuckDB twin's list_reduce exactly
-    rbo = F.aggregate(
-        F.array(
-            *[
-                inter_at(d).cast("double") / F.lit(float(d * (1 << d)))
-                for d in range(1, RBO_K + 1)
-            ]
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return j.select(
-        "qid",
-        F.size("la").cast("long").alias("n_lex"),
-        F.size("lb").cast("long").alias("n_sem"),
-        inter_at(RBO_K).alias("overlap_topk"),
-        F.round(rbo, 9).alias("rbo"),
-    ).withColumn("qid", F.col("qid").cast("int"))
 
 
 VIEW_CUTOFF = "2024-01-16"
@@ -9029,101 +8298,6 @@ def q_view_maintain(spark, sf_dir):
     )
 
 
-BITEXT_K = 4  # neighborhood size for the margin denominators
-
-
-def q_bitext_mine(spark, sf_dir):
-    """Margin-based bitext mining (Artetxe & Schwenk 2019): for each
-    query vector on side A (even label, vec_id < 40 — the bounded query
-    slab), the best side-B match (odd label) by cosine, scored by the
-    ratio margin  2*cos(x,y) / (meanK_fwd(x) + meanK_bwd(y))  that
-    suppresses hubness — the standard mined-parallel-corpus filter.
-    Determinism: cosines are the ann_cosine_topk left-fold (bit-equal
-    to DuckDB list_dot_product); both top-K selections tie-break on id;
-    the K-neighborhood means fold in rank order (sort_array vs
-    list(ORDER BY rank)); margin is one division of bit-identical
-    doubles. Scale shape: both directions are grouped_topk (two-phase,
-    no hot-query window task); the A query slab and the <=40 matched
-    B vectors broadcast; at 100 TB the crossJoin side swaps for LSH/IVF
-    candidate buckets (ops/similarity.py) with the same margin algebra."""
-    from qamd_spark.ops.text import grouped_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    a_all = emb.filter(F.col("label") % 2 == 0)
-    b_all = emb.filter(F.col("label") % 2 == 1).select(
-        F.col("vec_id").alias("bid"), F.col("e").alias("be")
-    )
-    qs = a_all.filter(F.col("vec_id") < 40).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-
-    def cos(x, y):
-        dot = F.aggregate(
-            F.zip_with(x, y, lambda p, r: p * r),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        nrm = lambda c: F.sqrt(  # noqa: E731
-            F.aggregate(
-                F.transform(c, lambda v: v * v),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-        return dot / (nrm(x) * nrm(y))
-
-    fwd = b_all.crossJoin(F.broadcast(qs)).select(
-        "qid", "bid", cos(F.col("be"), F.col("qe")).alias("cos")
-    )
-    topf = grouped_topk(fwd, "qid", "cos", "bid", BITEXT_K).persist()
-
-    def mean_fold(df, key):
-        lst = F.sort_array(
-            F.collect_list(F.struct(F.col("rank"), F.col("cos")))
-        )
-        total = F.aggregate(
-            lst, F.lit(0.0), lambda acc, x: acc + x["cos"]
-        )
-        return df.groupBy(key).agg(
-            (total / F.size(lst).cast("double")).alias(f"mean_{key}")
-        )
-
-    den_a = mean_fold(topf, "qid")
-    match = topf.filter(F.col("rank") == 1).select("qid", "bid", "cos")
-    cands = match.select("bid").distinct().join(
-        b_all, "bid"
-    )  # <= |qs| matched B vectors, with vectors re-attached
-    bwd = a_all.crossJoin(F.broadcast(cands)).select(
-        "bid", F.col("vec_id").alias("aid"),
-        cos(F.col("e"), F.col("be")).alias("cos"),
-    )
-    topb = grouped_topk(bwd, "bid", "cos", "aid", BITEXT_K)
-    den_b = mean_fold(topb, "bid")
-    out = (
-        match.join(den_a, "qid")
-        .join(den_b, "bid")
-        .select(
-            "qid",
-            F.col("bid").alias("match"),
-            F.round(F.col("cos"), 9).alias("cos"),
-            F.round(
-                F.lit(2.0) * F.col("cos")
-                / (F.col("mean_qid") + F.col("mean_bid")),
-                9,
-            ).alias("margin"),
-            (
-                F.lit(2.0) * F.col("cos")
-                / (F.col("mean_qid") + F.col("mean_bid"))
-                > F.lit(1.0)
-            ).alias("accepted"),
-        )
-    )
-    return out
-
-
 PRUNE_D1, PRUNE_D2 = "2024-01-10", "2024-01-19"
 PRUNE_U1, PRUNE_U2 = 30, 59
 UID_BUCKET_W = 15
@@ -9138,7 +8312,7 @@ def q_pruning_audit(spark, sf_dir):
     value itself is out of range — never listed), pruned_stats (listed,
     but min/max uid disjoint from the range — footer-skipped), scan
     (must be read). This is the audit that tells you whether the layout
-    zorder_key/file_stats propose actually skips for your workload —
+    zorder_key proposes actually skips for your workload —
     the scan fraction IS the benefit. Classification is pure integer/
     date arithmetic over one partial+final hash aggregate; the oracle
     recomputes it relationally, so the gate proves the stats math."""
@@ -9383,65 +8557,6 @@ def q_scd2_build(spark, sf_dir):
         F.col("ts").alias("valid_from"),
         F.coalesce(lead_ts, hi).alias("valid_to"),
         lead_ts.isNull().alias("is_current"),
-    )
-
-
-TRIPLET_NQ = 30  # bounded query slab for contrastive mining
-
-
-def q_triplet_mine(spark, sf_dir):
-    """Contrastive training-triplet mining over the embedding table:
-    for each query vector (vec_id < 30), the hardest POSITIVE (top
-    cosine among same-label vectors, self excluded) and the hardest
-    NEGATIVE (top cosine among different-label vectors — the classic
-    'hard negative'), with margin = cos_pos - cos_neg and a valid flag
-    (margin > 0) — the (anchor, positive, negative) mining step of
-    embedding-model training data. Cosines are the left-fold idiom
-    (bit-equal to DuckDB list_dot_product); both top-1 selections are
-    window-free grouped_topk with id tie-breaks; margin is a difference
-    of bit-identical doubles. Scale: query slab broadcast; the scale
-    path replaces the crossJoin with LSH/IVF candidate buckets per side
-    (ops/similarity.py) and the same selection algebra."""
-    from qamd_spark.ops.text import grouped_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    qs = emb.filter(F.col("vec_id") < TRIPLET_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("e").alias("qe"),
-    )
-    pairs = (
-        emb.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (F.col("label") == F.col("qlabel")).alias("same"),
-            _fold_cosine().alias("cos"),
-        )
-    )
-    top_pos = grouped_topk(
-        pairs.filter(F.col("same")), "qid", "cos", "vec_id", 1
-    ).select("qid", F.col("vec_id").alias("pos"), F.col("cos").alias("cp"))
-    top_neg = grouped_topk(
-        pairs.filter(~F.col("same")), "qid", "cos", "vec_id", 1
-    ).select(
-        F.col("qid").alias("qid2"),
-        F.col("vec_id").alias("neg"),
-        F.col("cos").alias("cn"),
-    )
-    j = top_pos.join(top_neg, F.col("qid") == F.col("qid2"), "inner")
-    return j.select(
-        "qid",
-        "pos",
-        "neg",
-        F.round(F.col("cp"), 9).alias("cos_pos"),
-        F.round(F.col("cn"), 9).alias("cos_neg"),
-        F.round(F.col("cp") - F.col("cn"), 9).alias("margin"),
-        (F.col("cp") > F.col("cn")).alias("valid"),
     )
 
 
@@ -9857,192 +8972,6 @@ def q_l_diversity(spark, sf_dir):
     )
 
 
-def q_ann_dim_audit(spark, sf_dir):
-    """Matryoshka truncation audit (Kusupati et al. NeurIPS'22): how
-    much of the exact cosine top-10 survives when embeddings are
-    truncated to their first 16 of 64 dims — the measurement behind
-    the store-fewer-dims cost decision (half the bytes ⇒ how much
-    retrieval agreement?). For each query (vec_id % 25 == 0), runs the
-    verified brute-force top-k at both dims and counts the overlap.
-
-    Rows-only by design (two ANN rankings are not SQL-expressible in
-    the harness); evidence: the ranking core is ann_cosine_topk's
-    oracle-GREEN left-fold kernel (ops/similarity.brute_force_topk),
-    and the overlap join-count is pinned by a pandas recount twin +
-    a full-vs-full control (overlap == k) pytest.
-
-    Scale: both rankings are broadcast-query crossJoin scans (documented
-    tiny-Q baseline; the LSH/IVF paths are the big-Q swap); the overlap
-    is an equi-join on (qid, neighbor) + one hash aggregate."""
-    from qamd_spark.ops.similarity import brute_force_topk
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    full = brute_force_topk(emb, qs, k=10)
-    emb16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
-    q16 = qs.select("qid", F.slice("qe", 1, 16).alias("qe"))
-    trunc = brute_force_topk(emb16, q16, k=10)
-    hits = full.select("qid", "neighbor").join(
-        trunc.select(F.col("qid").alias("_q"), F.col("neighbor").alias("_n")),
-        (F.col("qid") == F.col("_q")) & (F.col("neighbor") == F.col("_n")),
-    )
-    counts = hits.groupBy("qid").agg(F.count(F.lit(1)).alias("n_overlap"))
-    return (
-        qs.select("qid")
-        .join(counts, "qid", "left")
-        .select(
-            "qid",
-            F.lit(10).alias("k"),
-            F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap"),
-            (
-                F.coalesce(F.col("n_overlap"), F.lit(0)).cast("double") / F.lit(10.0)
-            ).alias("overlap_frac"),
-        )
-    )
-
-
-def q_ann_pq(spark, sf_dir):
-    """Product-quantization retrieval audit (Jégou et al. TPAMI 2011):
-    recall@10 of PQ asymmetric-distance ranking (m=16 sub-codes over a
-    32-entry codebook — 16 five-bit codes stored per vector instead of
-    64 floats, the ~25x memory lever that makes billion-vector ANN fit
-    a cluster)
-    against the exact cosine top-10 on the same query set. Codebooks
-    are trained by the deterministic distributed Lloyd in
-    ops/similarity.pq_train (no RNG; int64-quantized centroid sums so
-    retraining is partitioning-invariant); ADC rank arithmetic is
-    order-free integer sums, so the measured recall is REPRODUCIBLE —
-    an audit number you can regress against, not a point sample.
-
-    Rows-only by design (codebook training + ADC ranking are not
-    SQL-expressible); evidence: bit-exact pure-numpy twins for train/
-    encode/ADC in tests/test_ops.py plus the pinned recall floor.
-
-    Scale: train jobs shuffle only m*k*dsub partial rows per batch; the
-    ranking scan reads the m-int code relation, the lookup join is a
-    broadcast of |Q|*m*32 rows, and top-k windows over bounded per-qid
-    sets."""
-    from qamd_spark.ops.similarity import (
-        brute_force_topk,
-        pq_adc_topk,
-        pq_train,
-    )
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cb = pq_train(emb, m=16, k=32, n_iters=2)
-    approx = pq_adc_topk(emb, qs, cb, k=10)
-    truth = brute_force_topk(emb, qs, k=10)
-    hits = truth.select("qid", "neighbor").join(
-        approx.select("qid", "neighbor"), ["qid", "neighbor"], "left_semi"
-    )
-    counts = hits.groupBy("qid").agg(F.count(F.lit(1)).alias("n_hit"))
-    return (
-        qs.select("qid")
-        .join(counts, "qid", "left")
-        .select(
-            "qid",
-            F.lit(10).cast("long").alias("k"),
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            (
-                F.coalesce(F.col("n_hit"), F.lit(0)).cast("double") / F.lit(10.0)
-            ).alias("recall"),
-        )
-    )
-
-
-def q_ann_ivfpq(spark, sf_dir):
-    """IVF-PQ stacked-index audit (FAISS IVFPQ shape; Jégou TPAMI'11
-    §V): recall@10 of the coarse-prune + code-rank composition against
-    the exact cosine top-10, per query, alongside cand_frac — the
-    fraction of the corpus each query actually scanned (the pruning
-    lever: at 100 TB the fine ranking touches ~n_probe/n_clusters of
-    the CODE relation, never the raw vectors). Read together, recall
-    and cand_frac are the two axes of the index tuning curve; the
-    plain-PQ audit (ann_pq, cand_frac = 1) isolates how much loss is
-    ranking vs pruning.
-
-    Rows-only by design; evidence: both layers' bit-exact twins
-    (ivf_train's deterministic retrain test, pq_* numpy twins), the
-    integer-ADC order-free ranking, and this audit's own reproducibility
-    + floor pytest.
-
-    Scale: see ops/similarity.ivfpq_topk — bounded driver collects
-    (query slab, probe list, LUT), broadcast joins, one window over the
-    pruned per-qid candidate set."""
-    from qamd_spark.ops.similarity import (
-        _assign_stage,
-        brute_force_topk,
-        ivf_train,
-        ivfpq_topk,
-        pq_train,
-    )
-
-    emb = _emb(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cent = ivf_train(emb, n_clusters=16, n_iters=2)
-    cb = pq_train(emb, m=16, k=32, n_iters=2)
-    approx = ivfpq_topk(emb, qs, cent, cb, k=10, n_probe=4)
-    truth = brute_force_topk(emb, qs, k=10)
-    hits = truth.select("qid", "neighbor").join(
-        approx.select("qid", "neighbor"), ["qid", "neighbor"], "left_semi"
-    )
-    counts = hits.groupBy("qid").agg(F.count(F.lit(1)).alias("n_hit"))
-    # pruning audit: candidates each query scanned = rows of its probed
-    # clusters (same coarse assignment the index uses), over corpus size
-    e_base = emb.select(
-        F.col("vec_id").alias("_nid"), F.col("embedding").alias("_e")
-    )
-    sizes = (
-        _assign_stage(e_base, cent, "_nid", "_e")
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("c_rows"))
-    )
-    qn = qs.select("qid")
-    import numpy as np
-
-    Cn = cent / np.maximum(
-        np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
-    )
-    probes = []
-    for r in qs.select("qid", "qe").collect():
-        qv = np.asarray(r["qe"], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-12)
-        for c in np.argsort(-(Cn @ qv), kind="stable")[:4]:
-            probes.append((int(r["qid"]), int(c)))
-    probe_df = spark.createDataFrame(probes, "qid long, cluster int")
-    n_total = emb.count()
-    cand = (
-        probe_df.join(F.broadcast(sizes), "cluster")
-        .groupBy("qid")
-        .agg(F.sum("c_rows").alias("n_cand"))
-    )
-    return (
-        qn.join(counts, "qid", "left")
-        .join(cand, "qid", "left")
-        .select(
-            "qid",
-            F.lit(10).cast("long").alias("k"),
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            (
-                F.coalesce(F.col("n_hit"), F.lit(0)).cast("double")
-                / F.lit(10.0)
-            ).alias("recall"),
-            F.coalesce(F.col("n_cand"), F.lit(0)).cast("long").alias("n_cand"),
-            (
-                F.coalesce(F.col("n_cand"), F.lit(0)).cast("double")
-                / F.lit(float(n_total))
-            ).alias("cand_frac"),
-        )
-    )
-
-
 def q_dedup_recall_audit(spark, sf_dir):
     """Pair-level precision/recall of the PROBABILISTIC dedup path
     (minhash LSH keep-first edges) measured against the EXACT
@@ -10095,20 +9024,6 @@ def q_dedup_recall_audit(spark, sf_dir):
             (F.col("n_hit").cast("double") / F.col("n_truth").cast("double")).alias("recall"),
         )
     )
-
-
-def q_kcenter_coreset(spark, sf_dir):
-    """Greedy k-center coreset over the embeddings table (Gonzalez
-    2-approximation; ops/similarity.kcenter_select): the 8 mutually
-    farthest vectors plus the coverage-radius sequence — the diverse-
-    subset selection pass of embedding-space curation (the diversity
-    complement of prototypicality's redundancy pruning). Rows-only by
-    design (iterative arg-max is not SQL-expressible); evidence is the
-    bit-exact pure-Python twin test (oracle.kcenter_select_pdf) plus a
-    2-approximation property test."""
-    from qamd_spark.ops.similarity import kcenter_select
-
-    return kcenter_select(_emb(spark, sf_dir), k=8)
 
 
 # --------------------------------------------------------------------------
@@ -10693,9 +9608,6 @@ def q_shuffle_quality(spark, sf_dir):
 
 
 ROUGEL_MAX_TOKS = 256   # per-side token cap bounds the O(n·m) LCS DP
-SEMLEAK_TAU = 0.999     # cosine floor for a semantic-leak verdict
-SEMLEAK_PLANT = 100000  # planted-leak id offset
-SEMLEAK_CTRL = 200000   # non-leak control id offset
 
 
 def q_response_rouge_l(spark, sf_dir):
@@ -10767,38 +9679,6 @@ def q_response_rouge_l(spark, sf_dir):
     return pairs.mapInPandas(run, schema=schema)
 
 
-def q_split_leakage_semantic(spark, sf_dir):
-    """Embedding-space cross-split contamination (ops/similarity.
-    cross_set_leakage): the semantic complement of split_leakage's
-    lexical keys — a paraphrased or re-embedded eval item leaks with
-    zero shared text but cosine ≈ 1.  Probe set = planted exact copies
-    of train vectors (vec_id%19==0, +100000 — true leaks the detector
-    MUST find: identical vectors share every LSH table's signature, so
-    exact-dup recall is 1 by construction) plus reversed-vector controls
-    (vec_id%19==7, +200000 — cosine far below τ, must NOT match).
-    Direct (tbl, sig) bucket join at bits=12 with probe-side distance-1
-    multi-probe (r5: the r4 bits=4 coarse buckets made unrelated pairs
-    collide at p≈1/16/table — effectively quadratic candidates; see
-    cross_set_leakage's selectivity math), exact-cosine verify at
-    τ=0.999, best-match per probe.  Rows-only: LSH bucketing is not
-    SQL-expressible; evidence is the planted-recall/control pytest."""
-    from qamd_spark.ops import similarity as sim
-
-    emb = _emb(spark, sf_dir)
-    planted = emb.filter(F.col("vec_id") % 19 == 0).select(
-        (F.col("vec_id") + SEMLEAK_PLANT).alias("vec_id"), "embedding"
-    )
-    controls = emb.filter(F.col("vec_id") % 19 == 7).select(
-        (F.col("vec_id") + SEMLEAK_CTRL).alias("vec_id"),
-        F.reverse("embedding").alias("embedding"),
-    )
-    probe = planted.unionByName(controls)
-    out = sim.cross_set_leakage(
-        emb, probe, threshold=SEMLEAK_TAU, bits=12, n_tables=16, dim=64
-    )
-    return out.select("probe_id", "train_id", F.round("sim", 9).alias("sim"))
-
-
 def q_json_keys_profile(spark, sf_dir):
     """Semi-structured schema audit over the events props column: key
     presence counts and rates after deterministic enrichment (extra
@@ -10853,12 +9733,6 @@ def q_json_keys_profile(spark, sf_dir):
     )
 
 
-KNN_PURITY_K = 10       # neighbors per query for the label-purity audit
-KNN_PURITY_MOD = 25     # query sample: vec_id % 25 == 0 ...
-KNN_PURITY_MAXID = 500  # ... AND vec_id < 500: bounded query count at
-                        # ANY corpus size (broadcast stays constant)
-
-
 def q_source_vocab_overlap(spark, sf_dir):
     """Pairwise source-vocabulary Jaccard matrix — the domain-similarity
     input to mixture design (two sources with near-identical vocabularies
@@ -10909,53 +9783,6 @@ def q_source_vocab_overlap(spark, sf_dir):
                 / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
             ).alias("jaccard"),
         )
-    )
-
-
-def q_knn_label_purity(spark, sf_dir):
-    """Embedding-space label consistency: for sampled query vectors, the
-    fraction of their exact-cosine top-k neighbors sharing the query's
-    label — the supervised probe of embedding quality (a good space
-    puts same-label points together; purity near the label prior means
-    the embedding carries no signal).  The ann_cosine_topk machinery
-    (broadcast query crossJoin, the shared _fold_cosine kernel,
-    (sim desc, id) rank) with labels joined in; purity is an exact
-    integer count over k with ONE division, so the gate never compares
-    raw similarities.  The query set is BOUNDED by construction
-    (vec_id % 25 == 0 AND vec_id < 500 → ≤ 20 queries at any corpus
-    size — a %-only sample would broadcast N/25 vectors and build
-    N²/25 pairs at the 100 TB tier)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    q = emb.filter(
-        (F.col("vec_id") % KNN_PURITY_MOD == 0)
-        & (F.col("vec_id") < KNN_PURITY_MAXID)
-    ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("q_label"),
-        F.col("e").alias("qe"),
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    sim = _fold_cosine()
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    top = (
-        pairs.select("qid", "q_label", "vec_id", "label", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_PURITY_K)
-    )
-    return top.groupBy("qid", "q_label").agg(
-        F.sum(
-            F.when(F.col("label") == F.col("q_label"), 1).otherwise(0)
-        ).alias("n_match"),
-        (
-            F.sum(
-                F.when(F.col("label") == F.col("q_label"), 1).otherwise(0)
-            ).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("purity"),
     )
 
 
@@ -11243,27 +10070,6 @@ def q_chunk_anomaly(spark, sf_dir):
     )
 
 
-def q_ann_multiprobe_topk(spark, sf_dir):
-    """Multi-probe LSH top-k (ops/similarity.lsh_multiprobe_topk, Lv et
-    al. 2007): the same signatures as ann_lsh_topk, but each query also
-    probes every distance-1 bit-flip bucket — recall recovered at query
-    time instead of by multiplying the table count (whose cost is L×
-    the corpus signature relation).  Rows-only: recall < 1 by
-    construction; evidence is the candidate-superset + recall-ordering
-    test vs lsh_topk and the brute-force baseline in tests/test_ops.py."""
-    from qamd_spark.ops import similarity as sim
-
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    out = sim.lsh_multiprobe_topk(emb, q, k=10, dim=64)
-    return out.select(
-        "qid", "neighbor", F.round("sim", 9).alias("sim"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
 def q_dedup_transitivity(spark, sf_dir):
     """Transitivity audit of the near-dup relation: wedges a~b~c where
     a~c does NOT hold, over the levenshtein_neardup pair set — edit
@@ -11463,7 +10269,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "missing_fraction_by_source": q_missing_fraction_by_source,
         "lang_distribution": q_lang_distribution,
         "fingerprint": q_fingerprint,
-        "ann_cosine_topk": q_ann_cosine_topk,
         "text_profile": q_text_profile,
         "quality_topk_lang": q_quality_topk_lang,
         "refusal_scan": q_refusal_scan,
@@ -11495,7 +10300,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "runs_test": q_runs_test,
         "markdown_audit": q_markdown_audit,
         "number_grounding": q_number_grounding,
-        "embedding_align": q_embedding_align,
         "conformal_gate": q_conformal_gate,
         "dedup_survivorship": q_dedup_survivorship,
         "shapley_pipeline": q_shapley_pipeline,
@@ -11519,7 +10323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_profile": q_sketch_profile,
         "heavy_hitters_sketch": q_heavy_hitters_sketch,
         "fertility_by_lang": q_fertility_by_lang,
-        "embedding_norm_profile": q_embedding_norm_profile,
         "normalize_text": q_normalize_text,
         "conv_export": q_conv_export,
         "secrets_scan": q_secrets_scan,
@@ -11535,17 +10338,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "setsim_join": q_setsim_join,
         "typo_mine": q_typo_mine,
         "quantile_norm": q_quantile_norm,
-        "kcenter_coreset": q_kcenter_coreset,
         "l_diversity": q_l_diversity,
         "header_footer_strip": q_header_footer_strip,
         "isotonic_calibrate": q_isotonic_calibrate,
         "threshold_sweep": q_threshold_sweep,
         "bootstrap_keep": q_bootstrap_keep,
-        "ann_dim_audit": q_ann_dim_audit,
-        "ann_pq": q_ann_pq,
-        "ann_ivfpq": q_ann_ivfpq,
         "dedup_recall_audit": q_dedup_recall_audit,
-        "rank_rbo": q_rank_rbo,
         "corpus_curate": q_corpus_curate,
         "gopher_repetition": q_gopher_repetition,
         "gopher_quality": q_gopher_quality,
@@ -11555,11 +10353,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_ngrams": q_boilerplate_ngrams,
         "span_dedup": q_span_dedup,
         "substr_dedup": q_substr_dedup,
-        "hybrid_search": q_hybrid_search,
         "encoding_profile": q_encoding_profile,
         "corpus_transform": q_corpus_transform,
         "dedup_canonical": q_dedup_canonical,
-        "semantic_dedup": q_semantic_dedup,
         "tfidf_topk": q_tfidf_topk,
         "conv_pipeline_sql": q_conv_pipeline_sql,
         "conv_features": q_conv_features,
@@ -11589,11 +10385,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_props": q_json_props,
         "token_topk": q_token_topk,
         "length_histogram": q_length_histogram,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
         "metadata": q_metadata,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
         "langid_docs": q_langid_docs,
         "transcript_pipeline": q_transcript_pipeline,
         "minhash_dedup": q_minhash_dedup,
@@ -11608,7 +10400,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_train": q_bpe_train,
         "zipf_profile": q_zipf_profile,
         "quality_gate_by_source": q_quality_gate_by_source,
-        "prototypicality": q_prototypicality,
         "ccnet_buckets": q_ccnet_buckets,
         "html_strip": q_html_strip,
         "url_normalize": q_url_normalize,
@@ -11616,7 +10407,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_text": q_chunk_text,
         "soft_dedup": q_soft_dedup,
         "source_overlap": q_source_overlap,
-        "embedding_quantize": q_embedding_quantize,
         "rule_ablation": q_rule_ablation,
         "sft_pairs": q_sft_pairs,
         "ks_drift": q_ks_drift,
@@ -11624,7 +10414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_novelty": q_ngram_novelty,
         "event_latency": q_event_latency,
         "turn_latency": q_turn_latency,
-        "embedding_pca": q_embedding_pca,
         "lang_source_chi2": q_lang_source_chi2,
         "quality_calibration": q_quality_calibration,
         "k_anonymity": q_k_anonymity,
@@ -11660,16 +10449,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shard_plan": q_shard_plan,
         "unigram_lm_train": q_unigram_lm_train,
         "unicode_nfc": q_unicode_nfc,
-        "key_skew": q_key_skew,
-        "join_cardinality": q_join_cardinality,
         "pagerank": q_pagerank,
         "triangles": q_triangles,
         "components": q_components,
         "rate_anomaly": q_rate_anomaly,
-        "table_stats": q_table_stats,
         "zorder_key": q_zorder_key,
-        "ann_recall": q_ann_recall,
-        "file_stats": q_file_stats,
         "merge_upsert": q_merge_upsert,
         "gap_fill": q_gap_fill,
         "hopping_counts": q_hopping_counts,
@@ -11677,13 +10461,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "inverted_index": q_inverted_index,
         "bm25_search": q_bm25_search,
         "view_maintain": q_view_maintain,
-        "bitext_mine": q_bitext_mine,
         "pruning_audit": q_pruning_audit,
         "window_suite": q_window_suite,
         "changepoint_cusum": q_changepoint_cusum,
         "concurrency_profile": q_concurrency_profile,
         "scd2_build": q_scd2_build,
-        "triplet_mine": q_triplet_mine,
         "trend_slope": q_trend_slope,
         "winnow": q_winnow,
         "winnow_containment": q_winnow_containment,
@@ -11700,17 +10482,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bidi_scan": q_bidi_scan,
         "shuffle_quality": q_shuffle_quality,
         "response_rouge_l": q_response_rouge_l,
-        "split_leakage_semantic": q_split_leakage_semantic,
         "json_keys_profile": q_json_keys_profile,
         "source_vocab_overlap": q_source_vocab_overlap,
-        "knn_label_purity": q_knn_label_purity,
         "ngram_entropy": q_ngram_entropy,
         "lpa_communities": q_lpa_communities,
         "keep_by_position": q_keep_by_position,
         "degree_profile": q_degree_profile,
         "entropy_secrets": q_entropy_secrets,
         "chunk_anomaly": q_chunk_anomaly,
-        "ann_multiprobe_topk": q_ann_multiprobe_topk,
         "dedup_transitivity": q_dedup_transitivity,
         "degree_assortativity": q_degree_assortativity,
         "length_gini": q_length_gini,
@@ -11758,14 +10537,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 0.0 END AS cjk_frac
             FROM d
         """
-    )
-    _rcols_sql = (
-        "["
-        + ", ".join(
-            "[" + ", ".join(repr(v) for v in col) + "]"
-            for col in _procrustes_closed_R()
-        )
-        + "]"
     )
     from qamd_spark.rules.refusal import DEFAULT_REFUSAL_PHRASES as _RFP
 
@@ -13524,29 +12295,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'all_stopwords', n_a, u_a, n_docs FROM a
         """,
-        "embedding_quantize": """
-            WITH d AS (
-              SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-            s AS (
-              SELECT vec_id, e,
-                     list_max(list_transform(e, x -> abs(x))) / 127.0
-                       AS scale
-              FROM d),
-            q AS (
-              SELECT vec_id, e, scale,
-                     list_transform(e, x -> floor(x / scale + 0.5) * scale)
-                       AS deq
-              FROM s WHERE scale > 0)
-            SELECT vec_id,
-                   round(scale, 9) AS scale,
-                   round(list_dot_product(e, deq)
-                         / (sqrt(list_dot_product(e, e))
-                            * sqrt(list_dot_product(deq, deq))), 9)
-                     AS cos_deq,
-                   round(list_max(list_transform(list_zip(e, deq),
-                         p -> abs(p[1] - p[2]))), 9) AS max_err
-            FROM q
-        """,
         "soft_dedup": """
             SELECT doc_id,
                    (count(*) OVER (PARTITION BY md5(coalesce(text,''))))
@@ -13687,18 +12435,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN sum(bpe)::DOUBLE / sum(ws)::DOUBLE
                         ELSE 0.0 END AS fertility
             FROM p GROUP BY lang
-        """,
-        "embedding_norm_profile": """
-            WITH d AS (
-              SELECT label,
-                     sqrt(list_dot_product(embedding::DOUBLE[],
-                                           embedding::DOUBLE[])) AS nrm
-              FROM embeddings)
-            SELECT label, count(*)::BIGINT AS n_vecs,
-                   round(min(nrm), 9) AS min_norm,
-                   round(quantile_cont(nrm, 0.5), 9) AS median_norm,
-                   round(max(nrm), 9) AS max_norm
-            FROM d GROUP BY label
         """,
         "cohort_retention": """
             WITH e AS (
@@ -14434,73 +13170,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'distinct_sources', count(DISTINCT source)::BIGINT FROM documents
             UNION ALL
             SELECT 'n_source_' || source, count(*)::BIGINT FROM documents GROUP BY source
-        """,
-        "embedding_neardup": """
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-                       WHERE vec_id < 500)
-            SELECT a.vec_id AS a, b.vec_id AS b,
-                   round(list_dot_product(a.e, b.e)
-                         / (sqrt(list_dot_product(a.e, a.e))
-                            * sqrt(list_dot_product(b.e, b.e))), 9) AS sim
-            FROM e a, e b
-            WHERE a.vec_id < b.vec_id
-              AND round(list_dot_product(a.e, b.e)
-                  / (sqrt(list_dot_product(a.e, a.e))
-                     * sqrt(list_dot_product(b.e, b.e))), 9) > 0.2
-        """,
-        "ann_cosine_topk": """
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-            q AS (SELECT vec_id AS qid, e AS qe FROM e WHERE vec_id < 5),
-            sims AS (
-              SELECT qid, vec_id,
-                     list_dot_product(e.e, q.qe)
-                       / (sqrt(list_dot_product(e.e, e.e))
-                          * sqrt(list_dot_product(q.qe, q.qe))) AS sim
-              FROM e, q WHERE e.vec_id != q.qid),
-            ranked AS (
-              SELECT qid, vec_id AS neighbor, sim,
-                     row_number() OVER (ORDER BY qid, sim DESC, vec_id ASC) AS _rn,
-                     row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC)
-                       AS rank
-              FROM sims)
-            SELECT qid, neighbor, round(sim, 9) AS sim, rank::INT AS rank
-            FROM ranked WHERE rank <= 10
-        """,
-        # Apply-side Procrustes twin: the synthetic re-embedding is a
-        # signed permutation, so the true rotation is closed-form
-        # (exactly 0/±1 entries — float-exact dot products). The Spark
-        # side trains R distributed and rounds to 6 dp, which equals
-        # this literal iff recovery succeeded; a training drift turns
-        # this row red. Folds mirror ann_cosine_topk's proven
-        # left-fold ≡ list_dot_product discipline.
-        "embedding_align": f"""
-            WITH r AS (SELECT {_rcols_sql} AS rc),
-            e AS (SELECT vec_id, embedding::DOUBLE[] AS v_old FROM embeddings),
-            p AS (
-              SELECT vec_id, v_old,
-                     list_transform(generate_series(0,63), j ->
-                       (CASE WHEN j % 3 = 0 THEN -1.0 ELSE 1.0 END)
-                         * v_old[(13*j+5) % 64 + 1]
-                       + (CASE WHEN j = 0 AND vec_id % 17 = 0
-                               THEN 0.25 ELSE 0.0 END)) AS v_new_d
-              FROM e),
-            a AS (
-              SELECT vec_id, v_old, v_new_d,
-                     list_transform(generate_series(0,63), j ->
-                       list_dot_product(v_old, rc[j+1])) AS aligned
-              FROM p CROSS JOIN r),
-            d AS (
-              SELECT vec_id,
-                     list_transform(generate_series(0,63), j ->
-                       v_new_d[j+1] - v_old[j+1]) AS pd,
-                     list_transform(generate_series(0,63), j ->
-                       v_new_d[j+1] - aligned[j+1]) AS ad
-              FROM a)
-            SELECT vec_id,
-                   round(sqrt(list_dot_product(pd, pd)), 9) AS pre_err,
-                   round(sqrt(list_dot_product(ad, ad)), 9) AS align_err,
-                   (vec_id % 17 = 0) AS drifted
-            FROM d
         """,
         "cjk_token_count": _cjk_sql,
         "role_alternation": """
@@ -15771,34 +14440,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes sa ON sa.source = source_a
             JOIN sizes sb ON sb.source = source_b
         """,
-        "knn_label_purity": f"""
-            WITH e AS (
-              SELECT vec_id, label, embedding::DOUBLE[] AS e
-              FROM embeddings),
-            q AS (
-              SELECT vec_id AS qid, label AS q_label, e AS qe
-              FROM e WHERE vec_id % {KNN_PURITY_MOD} = 0
-                AND vec_id < {KNN_PURITY_MAXID}),
-            sims AS (
-              SELECT qid, q_label, vec_id, label,
-                     list_dot_product(e.e, q.qe)
-                       / (sqrt(list_dot_product(e.e, e.e))
-                          * sqrt(list_dot_product(q.qe, q.qe))) AS sim
-              FROM e, q WHERE e.vec_id != q.qid),
-            ranked AS (
-              SELECT qid, q_label, label,
-                     row_number() OVER (
-                       PARTITION BY qid ORDER BY sim DESC, vec_id ASC
-                     ) AS rank
-              FROM sims)
-            SELECT qid, q_label,
-                   sum(CASE WHEN label = q_label THEN 1 ELSE 0 END)::BIGINT
-                     AS n_match,
-                   sum(CASE WHEN label = q_label THEN 1 ELSE 0 END)::DOUBLE
-                     / count(*)::DOUBLE AS purity
-            FROM ranked WHERE rank <= {KNN_PURITY_K}
-            GROUP BY qid, q_label
-        """,
         "ngram_entropy": r"""
             WITH arrs AS (
               SELECT source, doc_id,
@@ -16155,28 +14796,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT node, coalesce(n_triangles, 0)::BIGINT AS n_triangles
         FROM nodes LEFT JOIN cnt USING (node)
     """
-    def _stats_sql(name, table, col):
-        return f"""
-          SELECT '{name}' AS "column", count(*)::BIGINT AS n_rows,
-                 sum((x IS NULL)::INT)::BIGINT AS n_nulls,
-                 count(DISTINCT x)::BIGINT AS n_distinct,
-                 min(x) AS min_v, max(x) AS max_v,
-                 quantile_cont(x, 0.25) AS p25,
-                 quantile_cont(x, 0.5) AS p50,
-                 quantile_cont(x, 0.75) AS p75
-          FROM (SELECT {col}::DOUBLE AS x FROM {table})"""
 
-    sqls["table_stats"] = " UNION ALL ".join(
-        _stats_sql(n, t, c)
-        for n, t, c in [
-            ("documents.n_chars", "documents", "n_chars"),
-            ("documents.doc_id", "documents", "doc_id"),
-            ("events.value", "events", "value"),
-            ("events.user_id", "events", "user_id"),
-            ("lineitem.l_quantity", "lineitem", "l_quantity"),
-            ("lineitem.l_extendedprice", "lineitem", "l_extendedprice"),
-        ]
-    )
     _z_terms = " + ".join(
         f"((a >> {i}) & 1) * {1 << (2 * i + 1)}"
         f" + ((b >> {i}) & 1) * {1 << (2 * i)}"
@@ -16292,57 +14912,6 @@ def oracle_sql() -> dict[str, str]:
                     ELSE FALSE END AS spike
         FROM g
     """
-    sqls["key_skew"] = """
-        WITH src AS (
-          SELECT 'documents.source' AS key, source::VARCHAR AS k
-          FROM documents
-          UNION ALL
-          SELECT 'documents.lang', lang::VARCHAR FROM documents
-          UNION ALL
-          SELECT 'events.user_id', user_id::VARCHAR FROM events
-          UNION ALL
-          SELECT 'events.event_type', event_type::VARCHAR FROM events
-          UNION ALL
-          SELECT 'lineitem.l_orderkey', l_orderkey::VARCHAR FROM lineitem
-          UNION ALL
-          SELECT 'lineitem.l_suppkey', l_suppkey::VARCHAR FROM lineitem),
-        per AS (
-          SELECT key, k, count(*)::BIGINT AS c FROM src GROUP BY 1, 2)
-        SELECT key, sum(c)::BIGINT AS n_rows, count(*)::BIGINT AS n_keys,
-               max(c)::BIGINT AS max_key_rows,
-               (max(c) * count(*))::DOUBLE / sum(c)::DOUBLE AS skew_factor
-        FROM per GROUP BY key
-    """
-    sqls["join_cardinality"] = """
-        WITH lo AS (
-          SELECT l_orderkey AS k, count(*)::BIGINT AS cl
-          FROM lineitem GROUP BY 1),
-        oo AS (
-          SELECT o_orderkey AS k, count(*)::BIGINT AS cr
-          FROM orders GROUP BY 1),
-        oc AS (
-          SELECT o_custkey AS k, count(*)::BIGINT AS c
-          FROM orders GROUP BY 1),
-        eu AS (
-          SELECT user_id AS k, count(*)::BIGINT AS c
-          FROM events GROUP BY 1),
-        a AS (
-          SELECT 'lineitem*orders@orderkey' AS join_edge,
-                 count(*)::BIGINT AS n_matching_keys,
-                 sum(cl * cr)::BIGINT AS out_rows,
-                 max(cl * cr)::BIGINT AS max_key_fanout
-          FROM lo JOIN oo USING (k)),
-        b AS (
-          SELECT 'orders*orders@custkey', count(*)::BIGINT,
-                 sum(c * c)::BIGINT, max(c * c)::BIGINT
-          FROM oc),
-        cc AS (
-          SELECT 'events*events@user_id', count(*)::BIGINT,
-                 sum(c * c)::BIGINT, max(c * c)::BIGINT
-          FROM eu)
-        SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL
-        SELECT * FROM cc
-    """
     sqls["curriculum_buckets"] = """
         WITH th AS (
           SELECT source,
@@ -16374,7 +14943,8 @@ def oracle_sql() -> dict[str, str]:
     _bm25_vals = ", ".join(
         f"({qid}, '{t}')" for qid, ts in BM25_QUERIES for t in ts
     )
-    _bm25_core = f"""
+    sqls["bm25_search"] = f"""
+        WITH
         raw AS (
           SELECT doc_id,
                  unnest(regexp_split_to_array(lower(coalesce(text, '')),
@@ -16402,10 +14972,7 @@ def oracle_sql() -> dict[str, str]:
                  list_reduce(list_prepend(0.0::DOUBLE,
                                           list(s ORDER BY term)),
                              (acc, x) -> acc + x)::DOUBLE AS score
-          FROM per GROUP BY 1, 2)
-    """
-    sqls["bm25_search"] = f"""
-        WITH {_bm25_core},
+          FROM per GROUP BY 1, 2),
         rk AS (
           SELECT qid, doc_id, score,
                  row_number() OVER (PARTITION BY qid
@@ -16414,97 +14981,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT qid::INT AS qid, doc_id, round(score, 9) AS score,
                rank::INT AS rank
         FROM rk WHERE rank <= 10
-    """
-    # hybrid_search twin: the SAME bm25 core CTEs + cosine side +
-    # reciprocal-rank fusion; one-sided hits keep their single term.
-    sqls["hybrid_search"] = f"""
-        WITH {_bm25_core},
-        lexr AS (
-          SELECT qid, doc_id,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY score DESC, doc_id)
-                   AS lex_rank
-          FROM doc),
-        lex AS (SELECT * FROM lexr WHERE lex_rank <= 30),
-        e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        qe AS (SELECT vec_id AS qid, e AS qe FROM e
-               WHERE vec_id IN ({", ".join(str(q) for q, _ in BM25_QUERIES)})),
-        sims AS (
-          SELECT qid, vec_id AS doc_id,
-                 list_dot_product(e.e, qe.qe)
-                   / (sqrt(list_dot_product(e.e, e.e))
-                      * sqrt(list_dot_product(qe.qe, qe.qe))) AS sim
-          FROM e, qe),
-        semr AS (
-          SELECT qid, doc_id,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY sim DESC, doc_id)
-                   AS sem_rank
-          FROM sims),
-        sem AS (SELECT * FROM semr WHERE sem_rank <= 30),
-        fused AS (
-          SELECT coalesce(l.qid, s.qid) AS qid,
-                 coalesce(l.doc_id, s.doc_id) AS doc_id,
-                 l.lex_rank, s.sem_rank,
-                 coalesce(1.0 / (60 + l.lex_rank), 0.0)
-                   + coalesce(1.0 / (60 + s.sem_rank), 0.0) AS rrf
-          FROM lex l FULL OUTER JOIN sem s
-            ON l.qid = s.qid AND l.doc_id = s.doc_id),
-        rk AS (
-          SELECT qid, doc_id, lex_rank, sem_rank, rrf,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY rrf DESC, doc_id) AS rank
-          FROM fused)
-        SELECT qid::INT AS qid, doc_id,
-               lex_rank::INT AS lex_rank, sem_rank::INT AS sem_rank,
-               round(rrf, 9) AS rrf_score, rank::INT AS rank
-        FROM rk WHERE rank <= 10
-    """
-    # rank_rbo twin: same bm25 + cosine cores; RBO@10 with p=1/2 — each
-    # term divides the exact prefix-overlap int by the PLAN-TIME dyadic
-    # constant d*2^d, folded left in the identical order as the Spark
-    # F.aggregate, so the double is bit-equal with no pow() call.
-    _rbo_terms = ", ".join(
-        f"len(list_intersect(la[1:{d}], lb[1:{d}]))::DOUBLE"
-        f" / {float(d * (1 << d))}"
-        for d in range(1, 11)
-    )
-    _rbo_sum = (
-        f"list_reduce(list_prepend(0.0::DOUBLE, [{_rbo_terms}]),"
-        " (acc, x) -> acc + x)"
-    )
-    sqls["rank_rbo"] = f"""
-        WITH {_bm25_core},
-        lexr AS (
-          SELECT qid, doc_id,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY score DESC, doc_id)
-                   AS lex_rank
-          FROM doc),
-        lexl AS (SELECT qid, list(doc_id ORDER BY lex_rank) AS la
-                 FROM lexr WHERE lex_rank <= 10 GROUP BY qid),
-        e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        qe AS (SELECT vec_id AS qid, e AS qe FROM e
-               WHERE vec_id IN ({", ".join(str(q) for q, _ in BM25_QUERIES)})),
-        sims AS (
-          SELECT qid, vec_id AS doc_id,
-                 list_dot_product(e.e, qe.qe)
-                   / (sqrt(list_dot_product(e.e, e.e))
-                      * sqrt(list_dot_product(qe.qe, qe.qe))) AS sim
-          FROM e, qe),
-        semr AS (
-          SELECT qid, doc_id,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY sim DESC, doc_id)
-                   AS sem_rank
-          FROM sims),
-        seml AS (SELECT qid, list(doc_id ORDER BY sem_rank) AS lb
-                 FROM semr WHERE sem_rank <= 10 GROUP BY qid)
-        SELECT qid::INT AS qid,
-               len(la)::BIGINT AS n_lex, len(lb)::BIGINT AS n_sem,
-               len(list_intersect(la, lb))::BIGINT AS overlap_topk,
-               round({_rbo_sum}, 9) AS rbo
-        FROM lexl JOIN seml USING (qid)
     """
     # The twin RECOMPUTES the view from the full table on purpose: the
     # Spark side maintains it incrementally (base FULL OUTER delta), so
@@ -16520,60 +14996,6 @@ def oracle_sql() -> dict[str, str]:
                  AS max_value
         FROM events WHERE ts IS NOT NULL
         GROUP BY 1, 2
-    """
-    sqls["bitext_mine"] = f"""
-        WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS e
-                   FROM embeddings),
-        a_all AS (SELECT vec_id, e FROM e WHERE label % 2 = 0),
-        b_all AS (SELECT vec_id AS bid, e AS be FROM e WHERE label % 2 = 1),
-        qs AS (SELECT vec_id AS qid, e AS qe FROM a_all WHERE vec_id < 40),
-        fwd AS (
-          SELECT qid, bid,
-                 list_dot_product(be, qe)
-                   / (sqrt(list_dot_product(be, be))
-                      * sqrt(list_dot_product(qe, qe))) AS cos
-          FROM b_all, qs),
-        topf AS (
-          SELECT qid, bid, cos,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY cos DESC, bid) AS rank
-          FROM fwd QUALIFY rank <= {BITEXT_K}),
-        den_a AS (
-          SELECT qid,
-                 list_reduce(list_prepend(0.0::DOUBLE,
-                                          list(cos ORDER BY rank)),
-                             (acc, x) -> acc + x)::DOUBLE
-                   / count(*)::DOUBLE AS mean_qid
-          FROM topf GROUP BY qid),
-        mtch AS (SELECT qid, bid, cos FROM topf WHERE rank = 1),
-        cands AS (
-          SELECT b_all.bid, b_all.be FROM b_all
-          WHERE b_all.bid IN (SELECT bid FROM mtch)),
-        bwd AS (
-          SELECT c.bid, a.vec_id AS aid,
-                 list_dot_product(a.e, c.be)
-                   / (sqrt(list_dot_product(a.e, a.e))
-                      * sqrt(list_dot_product(c.be, c.be))) AS cos
-          FROM a_all a, cands c),
-        topb AS (
-          SELECT bid, aid, cos,
-                 row_number() OVER (PARTITION BY bid
-                                    ORDER BY cos DESC, aid) AS rank
-          FROM bwd QUALIFY rank <= {BITEXT_K}),
-        den_b AS (
-          SELECT bid,
-                 list_reduce(list_prepend(0.0::DOUBLE,
-                                          list(cos ORDER BY rank)),
-                             (acc, x) -> acc + x)::DOUBLE
-                   / count(*)::DOUBLE AS mean_bid
-          FROM topb GROUP BY bid)
-        SELECT m.qid, m.bid AS match,
-               round(m.cos, 9) AS cos,
-               round(2.0 * m.cos / (da.mean_qid + db.mean_bid), 9) AS margin,
-               (2.0 * m.cos / (da.mean_qid + db.mean_bid)) > 1.0 AS accepted
-        FROM mtch m
-        JOIN den_a da ON da.qid = m.qid
-        JOIN den_b db ON db.bid = m.bid
     """
     sqls["pruning_audit"] = f"""
         WITH per AS (
@@ -16684,33 +15106,6 @@ def oracle_sql() -> dict[str, str]:
                (lead(ts, 1) OVER w IS NULL) AS is_current
         FROM events WHERE ts IS NOT NULL
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """
-    sqls["triplet_mine"] = f"""
-        WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS e
-                   FROM embeddings),
-        qs AS (SELECT vec_id AS qid, label AS qlabel, e AS qe
-               FROM e WHERE vec_id < {TRIPLET_NQ}),
-        pairs AS (
-          SELECT qid, vec_id, (label = qlabel) AS same,
-                 list_dot_product(e.e, qs.qe)
-                   / (sqrt(list_dot_product(e.e, e.e))
-                      * sqrt(list_dot_product(qs.qe, qs.qe))) AS cos
-          FROM e, qs WHERE e.vec_id != qs.qid),
-        p AS (SELECT qid, vec_id, cos,
-                     row_number() OVER (PARTITION BY qid
-                                        ORDER BY cos DESC, vec_id) AS rn
-              FROM pairs WHERE same),
-        n AS (SELECT qid, vec_id, cos,
-                     row_number() OVER (PARTITION BY qid
-                                        ORDER BY cos DESC, vec_id) AS rn
-              FROM pairs WHERE NOT same)
-        SELECT p.qid, p.vec_id AS pos, n.vec_id AS neg,
-               round(p.cos, 9) AS cos_pos,
-               round(n.cos, 9) AS cos_neg,
-               round(p.cos - n.cos, 9) AS margin,
-               (p.cos > n.cos) AS valid
-        FROM p JOIN n ON n.qid = p.qid AND n.rn = 1
-        WHERE p.rn = 1
     """
     sqls["trend_slope"] = """
         WITH grid AS (

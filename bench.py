@@ -30,7 +30,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 # of __spark_entry__.queries() (tests/test_entry_contract.py checks it)
 BENCH_QUERIES = (
     "dedup_exact",
-    "ann_cosine_topk",
     "minhash_dedup",
     "simhash_neardup",
     "dedup_clusters",
@@ -41,10 +40,8 @@ BENCH_QUERIES = (
     "gopher_repetition",
     "span_dedup",
     "substr_dedup",
-    "hybrid_search",
     "spearman_signals",
     "corpus_transform",
-    "semantic_dedup",
     "tfidf_topk",
     "quality_classifier",
     "source_divergence",
@@ -58,17 +55,14 @@ BENCH_QUERIES = (
     "sketch_profile",
     "bpe_train",
     "echo_detect",
-    "prototypicality",
     "quality_gate_by_source",
     "chunk_text",
     "soft_dedup",
     "source_overlap",
-    "embedding_quantize",
     "rule_ablation",
     "ks_drift",
     "length_outliers",
     "ngram_novelty",
-    "embedding_pca",
     "lang_source_chi2",
     "token_concentration",
     "collocations",
@@ -87,16 +81,11 @@ BENCH_QUERIES = (
     "shard_plan",
     "unigram_lm_train",
     "unicode_nfc",
-    "key_skew",
-    "join_cardinality",
     "pagerank",
     "triangles",
     "components",
     "rate_anomaly",
-    "table_stats",
     "zorder_key",
-    "ann_recall",
-    "file_stats",
     "merge_upsert",
     "gap_fill",
     "hopping_counts",
@@ -104,32 +93,25 @@ BENCH_QUERIES = (
     "inverted_index",
     "bm25_search",
     "view_maintain",
-    "bitext_mine",
     "pruning_audit",
     "window_suite",
     "changepoint_cusum",
     "concurrency_profile",
     "scd2_build",
-    "triplet_mine",
     "trend_slope",
     "tool_assoc",
     "weighted_sample",
     "skyline_docs",
     "setsim_join",
-    "rank_rbo",
     "typo_mine",
     "quantile_norm",
-    "kcenter_coreset",
     "l_diversity",
     "header_footer_strip",
     "isotonic_calibrate",
     "threshold_sweep",
-    "ann_dim_audit",
     "dedup_recall_audit",
     "response_rouge",
     "special_tokens",
-    "ann_pq",
-    "ann_ivfpq",
     "bootstrap_keep",
     "blocklist_phrases",
     "dangling_tools",
@@ -159,7 +141,6 @@ BENCH_QUERIES = (
     "runs_test",
     "markdown_audit",
     "number_grounding",
-    "embedding_align",
     "conformal_gate",
     "dedup_survivorship",
     "shapley_pipeline",
@@ -181,17 +162,14 @@ BENCH_QUERIES = (
     "bidi_scan",
     "shuffle_quality",
     "response_rouge_l",
-    "split_leakage_semantic",
     "json_keys_profile",
     "source_vocab_overlap",
-    "knn_label_purity",
     "ngram_entropy",
     "lpa_communities",
     "keep_by_position",
     "degree_profile",
     "entropy_secrets",
     "chunk_anomaly",
-    "ann_multiprobe_topk",
     "dedup_transitivity",
     "degree_assortativity",
     "length_gini",

@@ -510,85 +510,6 @@ def winnow_containment_pdf(pdf: pd.DataFrame, k: int = 5, w: int = 4,
     ).astype({"doc_id": np.int64, "src_of": np.int64, "shared_fp": np.int64})
 
 
-def _seq_cosine(a: np.ndarray, b: np.ndarray) -> float:
-    """Sequential left-fold cosine — matches Spark's F.aggregate fold
-    order bit-for-bit (numpy dot uses pairwise/SIMD summation, which can
-    differ in the last ulp)."""
-    dot = 0.0
-    na = 0.0
-    nb = 0.0
-    for x, y in zip(a.tolist(), b.tolist()):
-        dot += x * y
-        na += x * x
-        nb += y * y
-    import math
-
-    return dot / (math.sqrt(na) * math.sqrt(nb))
-
-
-def _lsh_sigs(V: np.ndarray, bits: int, n_tables: int) -> np.ndarray:
-    from qamd_spark.ops.similarity import _all_hyperplanes
-
-    planes = _all_hyperplanes(V.shape[1], bits, n_tables)
-    flat = planes.reshape(n_tables * bits, V.shape[1])
-    on = (V @ flat.T >= 0).reshape(len(V), n_tables, bits)
-    return (on * (1 << np.arange(bits, dtype=np.int64))).sum(axis=2)
-
-
-def lsh_topk_pdf(emb: pd.DataFrame, qids: list, k: int = 10, bits: int = 4,
-                 n_tables: int = 16) -> pd.DataFrame:
-    """Exact twin of ops.similarity.lsh_topk (same hyperplanes, same
-    any-table bucket match, same sequential-fold rescore and
-    (-sim, neighbor) ranking)."""
-    ids = emb["vec_id"].to_numpy()
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    sigs = _lsh_sigs(V, bits, n_tables)
-    pos = {int(i): n for n, i in enumerate(ids)}
-    rows = []
-    for q in qids:
-        qi = pos[q]
-        cand = np.flatnonzero((sigs == sigs[qi][None, :]).any(axis=1))
-        scored = [
-            (ids[c], _seq_cosine(V[c], V[qi])) for c in cand if ids[c] != q
-        ]
-        scored.sort(key=lambda t: (-t[1], t[0]))
-        for r, (nid, s) in enumerate(scored[:k], start=1):
-            rows.append((q, int(nid), s, r))
-    return pd.DataFrame(rows, columns=["qid", "neighbor", "sim", "rank"])
-
-
-def lsh_neardup_pairs_pdf(emb: pd.DataFrame, threshold: float = 0.25,
-                          bits: int = 4, n_tables: int = 16) -> pd.DataFrame:
-    """Exact twin of ops.similarity.lsh_neardup_pairs (min-per-bucket
-    candidate resolution + sequential-fold verify + keep-first)."""
-    ids = emb["vec_id"].to_numpy()
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    sigs = _lsh_sigs(V, bits, n_tables)
-    best: dict = {}
-    for t in range(sigs.shape[1]):
-        col = sigs[:, t]
-        order = np.argsort(ids, kind="stable")
-        bucket_min: dict = {}
-        for i in order:
-            bucket_min.setdefault(col[i], ids[i])
-        for i in range(len(ids)):
-            m = bucket_min[col[i]]
-            if m < ids[i]:
-                best.setdefault(ids[i], set()).add(m)
-    rows = []
-    pos = {int(i): n for n, i in enumerate(ids)}
-    for did, cands in best.items():
-        verified = []
-        for c in sorted(cands):
-            s = _seq_cosine(V[pos[did]], V[pos[c]])
-            if s >= threshold:
-                verified.append((c, s))
-        if verified:
-            c, s = min(verified)  # min struct(cand, sim): smallest cand
-            rows.append((int(did), int(c), s))
-    return pd.DataFrame(rows, columns=["vec_id", "dup_of", "sim"])
-
-
 def quality_score_np(texts) -> np.ndarray:
     """Exact float64 twin of ops/text.quality_score (same fixed-order
     double arithmetic: len gate minus punct/caps/digit penalties,
@@ -636,103 +557,6 @@ def canonical_keepers_pdf(pdf: pd.DataFrame, pairs: pd.DataFrame) -> pd.DataFram
     m["keeper_id"] = m["cluster_id"].map(keep).astype(np.int64)
     m["is_canonical"] = m["doc_id"] == m["keeper_id"]
     return m[["doc_id", "cluster_id", "keeper_id", "is_canonical"]]
-
-
-def semantic_dedup_pdf(
-    emb: pd.DataFrame, cent: np.ndarray, threshold: float = 0.8
-) -> pd.DataFrame:
-    """Exact twin of ops.similarity.semantic_dedup: BLAS-free centroid
-    assignment (same np.add.reduce kernel as _assign_stage_exact), then
-    within-cluster keep-first — v duplicates the SMALLEST u < v with
-    sequential-fold cosine >= threshold."""
-    ids = emb["vec_id"].to_numpy(dtype=np.int64)
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    C = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-    scores = np.add.reduce(Vn[:, None, :] * C[None, :, :], axis=2)
-    cl = scores.argmax(axis=1)
-    by_cluster: dict = {}
-    for i in np.argsort(ids, kind="stable"):
-        by_cluster.setdefault(int(cl[i]), []).append(i)
-    rows = []
-    for c, idxs in by_cluster.items():
-        for pos, j in enumerate(idxs):
-            for u in idxs[:pos]:  # ascending id — smallest hit wins
-                s = _seq_cosine(V[u], V[j])
-                if s >= threshold:
-                    rows.append((int(ids[j]), c, int(ids[u]), s))
-                    break
-    return pd.DataFrame(
-        rows, columns=["vec_id", "cluster", "dup_of", "sim"]
-    ).astype({"vec_id": np.int64, "cluster": np.int32, "dup_of": np.int64})
-
-
-def prototype_scores_pdf(emb: pd.DataFrame, cent: np.ndarray) -> pd.DataFrame:
-    """Exact twin of ops.similarity.prototype_scores (same np.add.reduce
-    kernel; the dim-axis reduction makes it batch-invariant)."""
-    ids = emb["vec_id"].to_numpy(dtype=np.int64)
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    C = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-    scores = np.add.reduce(Vn[:, None, :] * C[None, :, :], axis=2)
-    am = scores.argmax(axis=1)
-    return pd.DataFrame(
-        {
-            "vec_id": ids,
-            "cluster": am.astype(np.int32),
-            "proto": scores[np.arange(len(am)), am],
-        }
-    )
-
-
-def pca_project_pdf(emb: pd.DataFrame, model) -> pd.DataFrame:
-    """Exact twin of ops.similarity.pca_project (same np.add.reduce kernel
-    and axis order, so the Spark stage must match bit-for-bit)."""
-    ids = emb["vec_id"].to_numpy(dtype=np.int64)
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    W = np.asarray(model.components, dtype=np.float64)
-    mu = np.asarray(model.mean, dtype=np.float64)
-    X = V - mu
-    Y = np.add.reduce(X[:, None, :] * W[None, :, :], axis=2)
-    R = X - np.add.reduce(Y[:, :, None] * W[None, :, :], axis=1)
-    err = np.sqrt(np.add.reduce(R * R, axis=1))
-    out = {"vec_id": ids}
-    for i in range(W.shape[0]):
-        out[f"pc{i + 1}"] = Y[:, i]
-    out["recon_err"] = err
-    return pd.DataFrame(out)
-
-
-def kcenter_select_pdf(
-    emb: pd.DataFrame, k: int = 8, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> pd.DataFrame:
-    """Exact twin of ops.similarity.kcenter_select: pure-Python
-    sequential left-fold squared-L2 (NOT numpy pairwise summation —
-    the fold order must match Spark's F.aggregate bit-for-bit),
-    min-over-centers, arg-max with (dist desc, id asc) tie-break."""
-    rows = sorted(
-        (int(i), [float(x) for x in v])
-        for i, v in zip(emb[id_col], emb[vec_col])
-    )
-
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    centers = [rows[0]]
-    out = [(0, rows[0][0], None)]
-    for _ in range(1, k):
-        best_id, best_vec, best_md = None, None, -1.0
-        for rid, rvec in rows:
-            md = min(d2(rvec, cv) for _, cv in centers)
-            if md > best_md or (md == best_md and rid < best_id):
-                best_id, best_vec, best_md = rid, rvec, md
-        centers.append((best_id, best_vec))
-        out.append((len(centers) - 1, best_id, best_md))
-    return pd.DataFrame(out, columns=["sel_order", "vec_id", "radius_sq"])
 
 
 def cdc_chunks_pdf(pdf, min_size: int = 16, max_size: int = 256,

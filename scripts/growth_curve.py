@@ -1,10 +1,8 @@
-"""sf0.01 -> sf0.1 -> sf1 growth curve for the heavy near-dup family
-(r3 VERDICT item 5; split_leakage_semantic added per r4 item 2):
-setsim_join, levenshtein_neardup, dedup_recall_audit,
-winnow_containment, split_leakage_semantic are the slowest bench
-queries and the only ones whose candidate sets could grow
-superlinearly. This script times them at three decades of corpus size
-and reports the empirical per-decade exponent
+"""sf0.01 -> sf0.1 -> sf1 growth curve for the heavy near-dup family:
+setsim_join, levenshtein_neardup, dedup_recall_audit and
+winnow_containment are the slowest bench queries and the only ones whose
+candidate sets could grow superlinearly. This script times them at three
+decades of corpus size and reports the empirical per-decade exponent
 alpha = log10(t_next / t_prev) (1.0 = linear, 2.0 = quadratic).
 
 sf1 does not exist in /root/testdata, so a 10x documents table is
@@ -34,7 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 OPS = ["setsim_join", "levenshtein_neardup", "dedup_recall_audit",
-       "winnow_containment", "split_leakage_semantic"]
+       "winnow_containment"]
 SF1_DIR = os.path.join(REPO, ".bench_cache", "sf1_docs")
 
 
@@ -47,7 +45,6 @@ def build_sf1(src="/root/testdata/sf0.1", factor=10, seed=7):
 
     out = os.path.join(SF1_DIR, "documents.parquet")
     if os.path.exists(out):
-        _build_sf1_embeddings(src, factor, seed)  # own cache guard
         return SF1_DIR
     os.makedirs(SF1_DIR, exist_ok=True)
     base = pd.read_parquet(f"{src}/documents.parquet")
@@ -79,40 +76,7 @@ def build_sf1(src="/root/testdata/sf0.1", factor=10, seed=7):
     )
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), out,
                    row_group_size=20_000)
-    _build_sf1_embeddings(src, factor, seed)
     return SF1_DIR
-
-
-def _build_sf1_embeddings(src, factor, seed):
-    """10x embeddings table for split_leakage_semantic's growth decade:
-    fresh iid standard-normal draws (same fresh-draw discipline as the
-    documents synth — replicated vectors would plant near-dup cliques
-    and measure the replication, not the operator). The query plants
-    its own exact copies / reversed controls via vec_id arithmetic, so
-    iid base vectors are exactly the near-uniform regime the r4 VERDICT
-    flagged (every unrelated pair a potential bucket collision)."""
-    import numpy as _np
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = os.path.join(SF1_DIR, "embeddings.parquet")
-    if os.path.exists(out):
-        return
-    base = pd.read_parquet(f"{src}/embeddings.parquet")
-    dim = len(base["embedding"].iloc[0])
-    n = len(base) * factor
-    rng = _np.random.RandomState(seed)
-    vecs = rng.standard_normal((n, dim)).astype(_np.float32)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": pd.array(range(n), dtype="int64"),
-            "embedding": [v for v in vecs],
-            "label": pd.array([i % 7 for i in range(n)], dtype="int32"),
-        }
-    )
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), out,
-                   row_group_size=20_000)
 
 
 def main():

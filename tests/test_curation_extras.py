@@ -259,28 +259,6 @@ def test_response_rouge_l_bounds(spark):
         assert 0.0 <= r["rouge_l_f1"] <= 1.0
 
 
-def test_split_leakage_semantic_planted_recall_and_controls(spark):
-    rows = entry.q_split_leakage_semantic(spark, SF).collect()
-    found = {r["probe_id"]: r for r in rows}
-    import duckdb
-
-    ids = [
-        v
-        for (v,) in duckdb.sql(
-            f"SELECT vec_id FROM '{SF}/embeddings.parquet'"
-        ).fetchall()
-    ]
-    planted = {v + 100000 for v in ids if v % 19 == 0}
-    controls = {v + 200000 for v in ids if v % 19 == 7}
-    # every planted exact copy is found (LSH exact-dup recall = 1) ...
-    assert set(found) == planted
-    # ... no reversed control sneaks past the cosine floor
-    assert not (set(found) & controls)
-    for pid, r in found.items():
-        assert r["sim"] >= 0.999
-        assert r["train_id"] in ids
-
-
 def test_source_vocab_overlap_crafted(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("svo"))
     _write_docs(
@@ -301,26 +279,6 @@ def test_source_vocab_overlap_crafted(spark, tmp_path_factory):
     assert r["jaccard"] == 2 / 4
     # zero-overlap pairs are absent by construction
     assert ("s0", "s2") not in rows and ("s1", "s2") not in rows
-
-
-def test_knn_label_purity_bounds_and_separable_case(spark, tmp_path_factory):
-    # clustered embeddings: label == spatial cluster -> purity 1.0
-    import pandas as pd
-
-    d = str(tmp_path_factory.mktemp("knn"))
-    rows = []
-    for i in range(100):
-        lab = i % 2
-        base = [10.0 * lab] * 4 + [0.0] * 60
-        base[4 + (i % 8)] = 1.0 + 0.01 * i  # distinct, same-cluster
-        rows.append((i, base, lab))
-    pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]).to_parquet(
-        f"{d}/embeddings.parquet"
-    )
-    got = entry.q_knn_label_purity(spark, d).collect()
-    assert len(got) == 4  # vec_id % 25 == 0 -> 0, 25, 50, 75
-    for r in got:
-        assert r["n_match"] == 10 and r["purity"] == 1.0
 
 
 def test_ngram_entropy_relations(spark):

@@ -14,10 +14,7 @@ import pytest
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "events"]
 
 
 @pytest.fixture(scope="module")
@@ -192,11 +189,13 @@ def _reached_library():
     the scripts main.py, bench.py, perfbench/*.py and scripts/*.py) and
     the bodies of queries(), oracle_sql() and entry() in
     __spark_entry__.py. A reached function or class has its whole body
-    walked. Names resolve through the module's own top-level definitions
+    walked; so is a module-level assignment once a name it binds is
+    reached. Names resolve through the module's own top-level definitions
     and through its imports, wherever in the file they are (lazy imports
     included), so ``dd.f`` after ``from qamd_spark.ops import dedup as
     dd`` reaches ``qamd_spark.ops.dedup.f``. Returns every top-level
-    definition and the reached ones, as (module, name) keys. oracle/ is
+    function and class, every name a module-level assignment or import
+    binds, and the reached ones, as (module, name) keys. oracle/ is
     walked only where reached code calls it: its twins serve the tests."""
     import ast
     from pathlib import Path
@@ -215,6 +214,21 @@ def _reached_library():
     scopes = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
     defs = {(m, n.name): n for m, t in trees.items() for n in t.body
             if isinstance(n, scopes)}
+    # module-level `X = ...` / `X, Y = ...`: walked lazily, like a def
+    values = {}
+    for m, t in trees.items():
+        for n in t.body:
+            if isinstance(n, (ast.Assign, ast.AnnAssign)):
+                targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+                if all(isinstance(x, (ast.Name, ast.Tuple)) for x in targets):
+                    for x in targets:
+                        for v in ast.walk(x):
+                            if isinstance(v, ast.Name):
+                                values[m, v.id] = n
+    bound = {(m, (a.asname or a.name).split(".")[0])
+             for m, t in trees.items() for n in t.body
+             if isinstance(n, (ast.Import, ast.ImportFrom))
+             and getattr(n, "module", None) != "__future__" for a in n.names}
 
     # per module: local name -> {(module, None) | (module, attr)}
     imports = {m: {} for m in trees}
@@ -233,11 +247,14 @@ def _reached_library():
     reached, work = set(), []
 
     def reach(mod, name, seen=frozenset()):
-        if (mod, name) in defs:
+        node = defs.get((mod, name)) or values.get((mod, name))
+        if node is not None:
             if (mod, name) not in reached:
                 reached.add((mod, name))
-                work.append((mod, defs[mod, name]))
+                work.append((mod, node))
         elif mod in imports and (mod, name) not in seen:  # imported by mod
+            if (mod, name) in bound:
+                reached.add((mod, name))
             for tgt_mod, attr in imports[mod].get(name, ()):
                 if attr is not None:
                     reach(tgt_mod, attr, seen | {(mod, name)})
@@ -262,18 +279,19 @@ def _reached_library():
                             break
                         cur = f"{cur}.{part}"
 
+    lazy = set(values.values())
     for m, t in trees.items():
         for stmt in t.body:
             if isinstance(stmt, scopes):
                 for d in stmt.decorator_list:
                     visit(m, d)
-            elif not m.startswith("oracle"):
+            elif not m.startswith("oracle") and stmt not in lazy:
                 visit(m, stmt)
     for name in ("queries", "oracle_sql", "entry"):
         reach("__spark_entry__", name)
     while work:
         visit(*work.pop())
-    return defs, reached
+    return defs, set(values) | bound, reached
 
 
 def test_no_library_code_only_tests_reach():
@@ -281,7 +299,7 @@ def test_no_library_code_only_tests_reach():
     command, the registry, the benchmarks or the scripts (see
     _reached_library). Code that only tests call is dead to users: delete
     it with its test, or name it in _TEST_ONLY_LIBRARY with the reason."""
-    defs, reached = _reached_library()
+    defs, _, reached = _reached_library()
     unreached = sorted(
         (m, n) for m, n in defs
         if m.startswith("qamd_spark") and (m, n) not in reached
@@ -289,6 +307,30 @@ def test_no_library_code_only_tests_reach():
     )
     assert unreached == []
     assert set(_TEST_ONLY_LIBRARY) <= set(defs) - reached
+
+
+def test_registry_module_has_no_dead_names():
+    """Every top-level function of __spark_entry__.py, and every name a
+    module-level assignment or import there binds, is reached from a
+    program root (see _reached_library; tests/ is not a root). A query's
+    helper or constant left behind when the query goes fails here."""
+    defs, names, reached = _reached_library()
+    top = {k for k in (*defs, *names) if k[0] == "__spark_entry__"}
+    assert sorted(n for _, n in top - reached) == []
+
+
+def test_registry_reads_only_documents_and_events():
+    """The pipeline's input is one transcript table; of the test-data
+    tables only documents.parquet has its shape (FIXTURES.md §5). The
+    registry reads it and the events clickstream, nothing else: no
+    embeddings, no TPC-H table. Fails on any other ``*.parquet`` named in
+    __spark_entry__.py, a computed name included."""
+    import re
+
+    with open(E.__file__, encoding="utf-8") as f:
+        src = f.read()
+    named = set(re.findall(r"([\w{}]+)\.parquet\b(?!\()", src))
+    assert named == {"documents", "events"}
 
 
 def test_entry_runs(spark):

@@ -104,46 +104,6 @@ def test_pagerank_rejects_empty_edges(spark):
         pagerank(df, iters=1)
 
 
-def test_file_stats_matches_pyarrow_footers(spark):
-    """file_stats (rows per physical file) equals the parquet footer
-    row counts read directly with pyarrow."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    import __spark_entry__ as E
-
-    got = {
-        (r["table"], r["file"]): r["n_rows"]
-        for r in E.q_file_stats(spark, SF).collect()
-    }
-    want = {}
-    for t in ("documents", "events", "lineitem"):
-        path = f"{SF}/{t}.parquet"
-        files = [path] if os.path.isfile(path) else sorted(
-            glob.glob(path + "/*.parquet")
-        )
-        for f in files:
-            want[(t, os.path.basename(f))] = pq.ParquetFile(f).metadata.num_rows
-    assert got == want
-
-
-def test_ann_recall_floor(spark):
-    """The ann_recall audit reports sane recall for both index paths on
-    the sf0.001 embeddings (floors mirror the tests/test_ops.py pins)."""
-    import __spark_entry__ as E
-
-    rows = {r["method"]: r for r in E.q_ann_recall(spark, SF).collect()}
-    assert set(rows) == {"lsh", "ivf"}
-    for m, r in rows.items():
-        assert r["n_truth"] == 50  # 5 queries x top-10
-        assert 0.0 <= r["recall"] <= 1.0
-        assert r["n_hits"] == round(r["recall"] * r["n_truth"])
-    assert rows["ivf"]["recall"] >= 0.5
-    assert rows["lsh"]["recall"] >= 0.3
-
-
 def test_kcore_matches_python_peel_twin(spark):
     import __spark_entry__ as E
     from qamd_spark.ops.graph import kcore_py

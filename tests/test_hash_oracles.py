@@ -172,42 +172,6 @@ def test_winnow_guarantee_shared_substring(spark):
     assert not (s1 & s3) and not (s2 & s3)
 
 
-def test_lsh_topk_matches_pandas_twin(spark):
-    import __spark_entry__ as E
-
-    got = (
-        E.q_ann_lsh_topk(spark, SF)
-        .toPandas()
-        .sort_values(["qid", "rank"])
-        .reset_index(drop=True)
-    )
-    emb = pd.read_parquet(f"{SF}/embeddings.parquet")
-    want = oracle.lsh_topk_pdf(emb, qids=[0, 1, 2, 3, 4], k=10)
-    want["sim"] = want["sim"].round(9)
-    want = want.sort_values(["qid", "rank"]).reset_index(drop=True)
-    assert len(got) == len(want)
-    for c in ["qid", "neighbor", "rank", "sim"]:
-        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-
-
-def test_lsh_neardup_pairs_match_pandas_twin(spark):
-    import __spark_entry__ as E
-
-    got = (
-        E.q_embedding_neardup_lsh(spark, SF)
-        .toPandas()
-        .sort_values(["vec_id"])
-        .reset_index(drop=True)
-    )
-    emb = pd.read_parquet(f"{SF}/embeddings.parquet")
-    want = oracle.lsh_neardup_pairs_pdf(emb, threshold=0.25)
-    want["sim"] = want["sim"].round(9)
-    want = want.sort_values(["vec_id"]).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    for c in ["vec_id", "dup_of", "sim"]:
-        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-
-
 def test_simhash_neardups_survive_bucket_min_crowding(spark):
     """Planted crowd-out scenario (r2 ADVICE): B and C are hamming-1
     neighbors, but a far-away smaller-id doc A shares EVERY chunk bucket
@@ -409,62 +373,6 @@ def test_canonical_keepers_prefer_quality_then_min_id(spark):
     assert all(r["keeper_id"] == 12 for r in got.values())
     assert got[12]["is_canonical"]
     assert not got[11]["is_canonical"] and not got[13]["is_canonical"]
-
-
-def test_semantic_dedup_matches_pandas_twin(spark):
-    from qamd_spark.ops.similarity import ivf_train, semantic_dedup
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cent = ivf_train(e, n_clusters=8, n_iters=2)
-    got = (
-        semantic_dedup(e, cent, threshold=0.25)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        oracle.semantic_dedup_pdf(
-            pd.read_parquet(f"{SF}/embeddings.parquet"), cent, threshold=0.25
-        )
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-    # keep-first: every dup points at a strictly smaller id
-    assert (got["dup_of"] < got["vec_id"]).all()
-
-
-def test_semantic_dedup_planted_within_cluster_only(spark):
-    # two orthogonal cluster directions; 10/11/12 colinear near axis 0
-    # (exact dups of each other), 20 near axis 1. The cross-cluster pair
-    # (10, 20) is orthogonal and must never be compared; within the
-    # cluster both dups resolve to the SMALLEST id (10).
-    import numpy as np
-
-    from qamd_spark.ops.similarity import semantic_dedup
-
-    cent = np.zeros((2, 4))
-    cent[0, 0] = 1.0
-    cent[1, 1] = 1.0
-    rows = [
-        (10, [1.0, 0.1, 0.0, 0.0]),
-        (11, [1.0, 0.1, 0.0, 0.0]),
-        (12, [2.0, 0.2, 0.0, 0.0]),  # scaled copy: cosine exactly 1
-        (20, [0.0, 1.0, 0.0, 0.0]),
-        (21, [0.0, -1.0, 0.3, 0.0]),  # same cluster as 20, far below 0.9
-    ]
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        r["vec_id"]: r
-        for r in semantic_dedup(emb, cent, threshold=0.9).collect()
-    }
-    assert set(got) == {11, 12}
-    assert got[11]["dup_of"] == 10 and got[12]["dup_of"] == 10
-    assert got[11]["sim"] == pytest.approx(1.0)
 
 
 def test_conv_dup_stats_match_pandas_twin(spark, synth_pdf):
@@ -779,21 +687,6 @@ def test_setsim_join_planted_pair_and_threshold_edge(spark):
     r = got[(got.doc_a == 1) & (got.doc_b == 2)].iloc[0]
     assert (r.inter, r.na, r.nb) == (9, 9, 10)
     assert r.jaccard == 9 / 10
-
-
-def test_rank_rbo_invariants_and_identity_bound(spark):
-    """RBO@10 with p=1/2 lies in [0, 1 - 2^-10]; the upper bound is hit
-    exactly iff the two rankings agree on all 10 prefixes; the top-k
-    overlap can never exceed either list."""
-    import __spark_entry__ as E
-
-    out = E.q_rank_rbo(spark, SF).toPandas()
-    assert len(out) > 0
-    ub = 1.0 - 2.0 ** -10
-    assert (out.rbo >= 0).all() and (out.rbo <= ub + 1e-12).all()
-    assert (out.overlap_topk <= out[["n_lex", "n_sem"]].min(axis=1)).all()
-    ident = out[out.rbo == ub]
-    assert (ident.overlap_topk == 10).all()
 
 
 def test_edit_join_matches_bruteforce_levenshtein(spark):

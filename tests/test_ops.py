@@ -1,12 +1,11 @@
-"""Training-data ops: dedup (minhash/simhash/jaccard), similarity search,
-text analysis."""
+"""Training-data ops: dedup (minhash/simhash/jaccard), text analysis."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from qamd_spark.ops import dedup, similarity, text as text_ops
+from qamd_spark.ops import dedup, text as text_ops
 
 SF = "/root/testdata/sf0.001"
 
@@ -61,58 +60,6 @@ def test_ngram_jaccard(near_dup_docs, spark):
     assert j[(0, 3)] < 0.05
 
 
-def test_brute_force_topk_matches_numpy(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    got = (
-        similarity.brute_force_topk(emb, q, k=5)
-        .toPandas()
-        .sort_values(["qid", "rank"])
-        .reset_index(drop=True)
-    )
-    pdf = emb.toPandas()
-    M = np.stack(pdf["embedding"].map(np.asarray)).astype(np.float64)
-    ids = pdf["vec_id"].to_numpy()
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    for qid in range(3):
-        qv = Mn[ids == qid][0]
-        sims = Mn @ qv
-        order = [
-            i for i in np.lexsort((ids, -sims)) if ids[i] != qid
-        ][:5]
-        expect = [int(ids[i]) for i in order]
-        assert got[got["qid"] == qid]["neighbor"].tolist() == expect
-
-
-def test_lsh_topk_recall(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    exact = similarity.brute_force_topk(emb, q, k=5).toPandas()
-    approx = similarity.lsh_topk(emb, q, k=5, bits=4, n_tables=16, dim=64).toPandas()
-    # the sf embeddings are i.i.d. random (near-orthogonal) — the hard
-    # case for LSH. Theory for 16 tables × 4 bits at sim≈0.3 gives ~0.5+
-    # recall; assert a conservative floor and that the candidate set is
-    # actually sub-quadratic (the point of LSH).
-    hits = 0
-    for qid in exact["qid"].unique():
-        e = set(exact[exact["qid"] == qid]["neighbor"])
-        a = set(approx[approx["qid"] == qid]["neighbor"])
-        hits += len(e & a)
-    recall = hits / len(exact)
-    assert recall >= 0.3
-    assert (approx["rank"] <= 5).all()
-    # approx output is a subset-ranking: sims must match brute force where
-    # the pair appears in both
-    merged = approx.merge(
-        exact, on=["qid", "neighbor"], suffixes=("_a", "_e"), how="inner"
-    )
-    assert np.allclose(merged["sim_a"], merged["sim_e"], rtol=0, atol=0)
-
-
 def test_text_profile(spark):
     df = spark.createDataFrame(
         [(1, "Hello WORLD 42!!"), (2, ""), (3, None),
@@ -131,53 +78,6 @@ def test_text_profile(spark):
     assert out[2]["punct_ratio"] == 0.0 and out[3]["punct_ratio"] == 0.0
     assert out[4]["quality"] == 1.0
     assert out[2]["quality"] == 0.0
-
-
-def test_lsh_plan_is_compact(spark):
-    """Signatures must come from the Arrow-batched matmul stage, not from
-    per-plane Column expressions: the old formulation emitted bits x dim
-    F.lit nodes per table (~4k literals at dim=64, ~50k at dim=768) and
-    blew up Catalyst plan size/codegen. Assert the physical plan stays
-    small and carries exactly two MapInPandas (corpus + query signature
-    stages)."""
-    import re
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    df = similarity.lsh_topk(emb, q, k=5, bits=4, n_tables=16, dim=64)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2, plan
-    # the literal-array formulation produced a multi-hundred-KB plan
-    assert len(plan) < 40_000, len(plan)
-
-
-def test_lsh_neardup_pairs_planted(spark):
-    """Planted near-duplicate embeddings (base + small noise) must be
-    found with high recall; precision is 1 by the exact-cosine verify."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    base = rng.standard_normal((40, 64))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((2 * i, [float(x) for x in v]))
-        d = v + 0.03 * rng.standard_normal(64)  # noise norm ~0.24 -> cos ~0.97
-        d /= np.linalg.norm(d)
-        rows.append((2 * i + 1, [float(x) for x in d]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = similarity.lsh_neardup_pairs(emb, threshold=0.9, bits=8, n_tables=8).toPandas()
-    found = {(r.dup_of, r.vec_id) for r in got.itertuples()}
-    planted = {(2 * i, 2 * i + 1) for i in range(40)}
-    recall = len(found & planted) / 40
-    assert recall >= 0.9, (recall, sorted(found)[:5])
-    assert (got["sim"] >= 0.9).all()
-    # keep-first: dup_of is always the smaller id
-    assert (got["dup_of"] < got["vec_id"]).all()
 
 
 def test_conv_features_grouped_map(spark):
@@ -201,40 +101,6 @@ def test_conv_features_grouped_map(spark):
     # order independence: shuffled input gives identical features
     out2 = {r["conv_id"]: r for r in cv.conv_features(df.orderBy(F.rand(7))).collect()}
     assert {k: tuple(v) for k, v in out.items()} == {k: tuple(v) for k, v in out2.items()}
-
-
-def test_ivf_topk_on_clustered_data(spark):
-    """IVF must achieve high recall on a clustered corpus with few probes
-    (its design regime); sims must be exact where pairs overlap brute
-    force."""
-    rng = np.random.RandomState(3)
-    centers = rng.standard_normal((4, 64)) * 3
-    rows = []
-    vid = 0
-    for ci in range(4):
-        for _ in range(60):
-            v = centers[ci] + rng.standard_normal(64)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = emb.filter(F.col("vec_id").isin([0, 61, 122, 183])).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cent = similarity.ivf_train(emb, n_clusters=4, n_iters=2)
-    assert cent.shape == (4, 64)
-    approx = similarity.ivf_topk(emb, q, cent, k=5, n_probe=2).toPandas()
-    exact = similarity.brute_force_topk(emb, q, k=5).toPandas()
-    hits = 0
-    for qid in exact["qid"].unique():
-        e = set(exact[exact["qid"] == qid]["neighbor"])
-        a = set(approx[approx["qid"] == qid]["neighbor"])
-        hits += len(e & a)
-    assert hits / len(exact) >= 0.9, hits / len(exact)
-    merged = approx.merge(exact, on=["qid", "neighbor"], suffixes=("_a", "_e"))
-    assert np.allclose(merged["sim_a"], merged["sim_e"], rtol=0, atol=0)
-    # determinism: same centroids on re-train
-    cent2 = similarity.ivf_train(emb, n_clusters=4, n_iters=2)
-    assert (cent == cent2).all()
 
 
 def test_conv_features_null_roles_match_sql_convention(spark):
@@ -833,51 +699,6 @@ def test_heavy_hitters_sketch_matches_exact_top(spark):
         assert got.get(r["tok"]) == r["count"], (r["tok"], r["count"], got.get(r["tok"]))
 
 
-def test_prototype_scores_match_pandas_twin(spark):
-    import pandas as pd
-
-    from oracle import oracle
-    from qamd_spark.ops.similarity import ivf_train, prototype_scores
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    e = spark.read.parquet(path)
-    cent = ivf_train(e, n_clusters=8, n_iters=2)
-    got = (
-        prototype_scores(e, cent)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        oracle.prototype_scores_pdf(pd.read_parquet(path), cent)
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=0, rtol=0)
-    assert got["proto"].between(-1.0, 1.0 + 1e-12).all()
-
-
-def test_prototype_scores_planted_ordering(spark):
-    import numpy as np
-
-    from qamd_spark.ops.similarity import prototype_scores
-
-    cent = np.zeros((2, 4))
-    cent[0, 0] = 1.0
-    cent[1, 1] = 1.0
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),   # exactly the centroid: proto == 1
-        (2, [1.0, 1.0, 0.0, 0.0]),   # between the two: proto == cos(45deg)
-        (3, [0.0, 2.0, 0.0, 0.0]),   # scaled centroid 1: proto == 1
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: (r["cluster"], r["proto"]) for r in
-           prototype_scores(df, cent).collect()}
-    assert got[1][0] == 0 and abs(got[1][1] - 1.0) < 1e-12
-    assert got[3][0] == 1 and abs(got[3][1] - 1.0) < 1e-12
-    assert abs(got[2][1] - 2 ** -0.5) < 1e-12  # the "hard" example scores lower
-
-
 def test_ccnet_buckets_match_pandas_twin(spark):
     """ccnet_buckets: raw perplexity AND bucket labels bit-exact vs a
     pandas twin that shares the scorer (turnscore.score_pdf) and
@@ -945,80 +766,6 @@ def test_ccnet_buckets_match_pandas_twin(spark):
     # terciles: each lang's buckets split roughly in thirds
     share = got.groupby(["lang", "bucket"]).size() / got.groupby("lang").size()
     assert (share > 0.1).all(), share
-
-
-def test_pca_projection_matches_numpy_twin(spark):
-    import pandas as pd
-
-    from oracle import oracle
-    from qamd_spark.ops.similarity import pca_project, pca_train
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    e = spark.read.parquet(path)
-    model = pca_train(e, k=4)
-    got = (
-        pca_project(e, model)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        oracle.pca_project_pdf(pd.read_parquet(path), model)
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    # same np.add.reduce kernel and axis order on both sides => bit-exact
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=0, rtol=0)
-
-
-def test_pca_model_properties(spark):
-    import numpy as np
-    import pandas as pd
-
-    from qamd_spark.ops.similarity import pca_train
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    e = spark.read.parquet(path)
-    model = pca_train(e, k=4)
-    W = np.asarray(model.components)
-    # orthonormal rows, deterministic sign (largest-|w| entry positive)
-    assert np.allclose(W @ W.T, np.eye(4), atol=1e-10)
-    for row in W:
-        assert row[int(np.argmax(np.abs(row)))] > 0
-    # eigenvalues descending, non-negative, sane explained ratios
-    ev = np.asarray(model.eigvals)
-    assert (ev[:-1] >= ev[1:] - 1e-15).all() and (ev >= -1e-10).all()
-    er = np.asarray(model.explained_ratio)
-    assert 0.0 < er.sum() <= 1.0 + 1e-12
-    # subspace agrees with a direct local covariance eigendecomposition:
-    # compare the rank-k projector matrices, which are basis-independent
-    pdf = pd.read_parquet(path)
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    C = np.cov(V, rowvar=False, bias=True)
-    lv, lw = np.linalg.eigh(C)
-    Wl = lw[:, np.argsort(lv)[::-1][:4]].T
-    assert np.allclose(W.T @ W, Wl.T @ Wl, atol=1e-6)
-
-
-def test_pca_planted_rank_k_reconstruction(spark):
-    import numpy as np
-
-    from qamd_spark.ops.similarity import pca_project, pca_train
-
-    # data exactly on a 2-D plane in 6-D => k=2 reconstructs exactly
-    rng = np.random.default_rng(11)
-    A = rng.normal(size=(200, 2))
-    B = np.zeros((2, 6))
-    B[0, 0] = 3.0
-    B[1, 3] = 2.0
-    V = A @ B + np.array([1.0, 0, 0, 0, 0, 0])
-    rows = [(i, V[i].tolist()) for i in range(len(V))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    model = pca_train(df, k=2)
-    out = pca_project(df, model).toPandas()
-    assert float(out["recon_err"].max()) < 1e-9
-    # the two planted directions carry all the variance
-    assert float(np.asarray(model.explained_ratio).sum()) > 1.0 - 1e-9
 
 
 # ------------------------------------------------------------ compression
@@ -1134,47 +881,6 @@ def test_spearman_signals_matches_pandas(spark):
         assert abs(got_rho - rho) < 1e-12, (src, got_rho, rho)
 
 
-def test_kcenter_select_matches_python_twin_bit_exact(spark):
-    import pandas as pd
-
-    from oracle import oracle
-    from qamd_spark.ops.similarity import kcenter_select
-
-    path = "/root/testdata/sf0.001/embeddings.parquet"
-    got = kcenter_select(spark.read.parquet(path), k=8).toPandas()
-    want = oracle.kcenter_select_pdf(pd.read_parquet(path), k=8)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=0, rtol=0)
-    # coverage radius sequence is non-increasing (greedy invariant)
-    r = got["radius_sq"].dropna().to_numpy()
-    assert (r[:-1] >= r[1:]).all()
-    assert got["vec_id"].is_unique
-
-
-def test_kcenter_greedy_two_approximation_on_planted_clusters(spark):
-    """Four tight planted clusters, k=4: greedy must pick one center per
-    cluster (optimal radius = intra-cluster eps; any same-cluster double
-    pick would leave a cluster uncovered at distance >> 2*opt)."""
-    import numpy as np
-
-    from qamd_spark.ops.similarity import kcenter_select
-
-    rng = np.random.RandomState(11)
-    anchors = np.array(
-        [[10.0, 0, 0, 0], [0, 10.0, 0, 0], [0, 0, 10.0, 0], [0, 0, 0, 10.0]]
-    )
-    rows = []
-    for i in range(40):
-        c = i % 4
-        v = anchors[c] + rng.uniform(-0.05, 0.05, 4)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    sel = kcenter_select(df, k=4).toPandas()
-    picked_clusters = sorted(int(v) % 4 for v in sel["vec_id"])
-    assert picked_clusters == [0, 1, 2, 3]
-    # after one center per cluster, coverage radius collapses to eps scale
-    assert sel["radius_sq"].dropna().iloc[-1] > 1.0  # 3rd pick still far
-
-
 def test_pava_antitonic_golden_and_properties():
     """Hand-computed golden: rates (1.0, .25, .5, 0) pool the middle
     violator pair into 3/8; mass preservation and monotonicity hold."""
@@ -1231,226 +937,6 @@ def test_isotonic_calibrate_monotone_and_mass_preserving(spark):
         assert r["iso_rate"] == r["iso_num"] / r["iso_den"]
 
 
-def test_ann_dim_audit_overlap_counts_match_pandas_recount(spark):
-    """The overlap join-count must equal a pandas recount over the two
-    collected top-k frames; the full-vs-full control overlaps at k."""
-    import pandas as pd
-
-    import __spark_entry__ as E
-    from pyspark.sql import functions as F
-    from qamd_spark.ops.similarity import brute_force_topk
-
-    sf = "/root/testdata/sf0.001"
-    got = E.q_ann_dim_audit(spark, sf).toPandas().sort_values("qid").reset_index(drop=True)
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    full = brute_force_topk(emb, qs, k=10).toPandas()
-    emb16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
-    q16 = qs.select("qid", F.slice("qe", 1, 16).alias("qe"))
-    trunc = brute_force_topk(emb16, q16, k=10).toPandas()
-    f = full.groupby("qid")["neighbor"].apply(set)
-    t = trunc.groupby("qid")["neighbor"].apply(set)
-    want = {int(q): len(f[q] & t[q]) for q in f.index}
-    assert {int(r.qid): int(r.n_overlap) for r in got.itertuples()} == want
-    assert got["n_overlap"].between(0, 10).all()
-    assert len(got) == qs.count()
-    # control: full vs full overlaps at exactly k for every query
-    self_hits = (
-        full.merge(full, on=["qid", "neighbor"]).groupby("qid").size()
-    )
-    assert (self_hits == 10).all()
-    # truncation must still carry signal on this corpus (not all-zero)
-    assert got["n_overlap"].sum() > 0
-
-
-def _pq_twin_train(V_sorted, m, k, n_iters):
-    """Pure-numpy twin of ops/similarity.pq_train: same seeds, same
-    assignment expression, same int64-quantized centroid update (global
-    bincount == the distributed batch-partial sum at test scale because
-    all float64 intermediates stay below 2^53)."""
-    import numpy as np
-
-    from qamd_spark.ops.similarity import (
-        PQ_TRAIN_SCALE,
-        _pq_assign_np,
-        _pq_normalize,
-    )
-
-    Vn = _pq_normalize(V_sorted)
-    d = Vn.shape[1]
-    dsub = d // m
-    S = Vn[:k]
-    cb = np.stack([S[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)])
-    for _ in range(n_iters):
-        codes = _pq_assign_np(Vn, cb)
-        Vq = np.rint(Vn * PQ_TRAIN_SCALE)
-        new = cb.copy()
-        for s in range(m):
-            cnt = np.bincount(codes[:, s], minlength=k)
-            for j in range(dsub):
-                w = np.bincount(
-                    codes[:, s], weights=Vq[:, s * dsub + j], minlength=k
-                )
-                mask = cnt > 0
-                new[s, mask, j] = (
-                    w[mask].astype(np.int64).astype(np.float64)
-                    / cnt[mask].astype(np.float64)
-                ) / PQ_TRAIN_SCALE
-        cb = new
-    return cb
-
-
-def test_pq_train_bit_equals_twin_and_partitioning_invariant(spark):
-    import numpy as np
-
-    from qamd_spark.ops.similarity import pq_train
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
-    V = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    twin = _pq_twin_train(V, m=8, k=16, n_iters=2)
-    got = pq_train(emb, m=8, k=16, n_iters=2)
-    assert np.array_equal(got, twin)
-    got7 = pq_train(emb.repartition(7), m=8, k=16, n_iters=2)
-    assert np.array_equal(got7, twin)
-
-
-def test_pq_encode_and_adc_match_numpy_recount(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from qamd_spark.ops.similarity import (
-        PQ_ADC_SCALE,
-        _pq_assign_np,
-        _pq_normalize,
-        pq_adc_topk,
-        pq_encode,
-        pq_train,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cb = pq_train(emb, m=8, k=16, n_iters=2)
-    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    V = _pq_normalize(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    )
-    codes = _pq_assign_np(V, cb)
-    got = {
-        int(r["vec_id"]): list(r["codes"]) for r in pq_encode(emb, cb).collect()
-    }
-    assert got == {int(i): list(map(int, c)) for i, c in zip(ids, codes)}
-
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    adc = pq_adc_topk(emb, qs, cb, k=5).collect()
-    m, kk, dsub = cb.shape
-    # per-query integer lookup tables, exactly as pq_adc_topk builds them
-    lut = {}
-    for qi in [int(i) for i in ids if i % 25 == 0]:
-        qv = V[np.where(ids == qi)[0][0]]
-        t = np.empty((m, kk), dtype=np.int64)
-        for s in range(m):
-            diff = cb[s] - qv[s * dsub : (s + 1) * dsub][None, :]
-            t[s] = np.rint((diff * diff).sum(axis=1) * PQ_ADC_SCALE).astype(
-                np.int64
-            )
-        lut[qi] = t
-    want = {}
-    for qi, t in lut.items():
-        dists = [
-            (int(t[range(m), codes[j]].sum()), int(ids[j]))
-            for j in range(len(ids))
-            if int(ids[j]) != qi
-        ]
-        dists.sort()
-        want[qi] = dists[:5]
-    got_adc = {}
-    for r in adc:
-        got_adc.setdefault(int(r["qid"]), []).append(
-            (int(r["rank"]), int(r["adc_dist"]), int(r["neighbor"]))
-        )
-    for qi, lst in got_adc.items():
-        lst.sort()
-        assert [(d, n) for _, d, n in lst] == want[qi]
-    assert set(got_adc) == set(want)
-
-
-def test_ann_pq_recall_floor_and_reproducibility(spark):
-    import __spark_entry__ as E
-
-    a = {
-        int(r["qid"]): (int(r["n_hit"]), r["recall"])
-        for r in E.q_ann_pq(spark, "/root/testdata/sf0.001").collect()
-    }
-    b = {
-        int(r["qid"]): (int(r["n_hit"]), r["recall"])
-        for r in E.q_ann_pq(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert a == b  # order-free integer ADC => reproducible audit
-    mean_recall = sum(v[1] for v in a.values()) / len(a)
-    # near-uniform random 64-dim corpus is PQ's hard case; the audit's
-    # job is to MEASURE that. Floor pinned below the observed 0.51.
-    assert mean_recall >= 0.35
-    assert all(0 <= v[0] <= 10 for v in a.values())
-
-
-def test_ann_ivfpq_pruning_invariant_and_floor(spark):
-    """Every IVF-PQ-retrieved neighbor must live in one of its query's
-    probed clusters (the pruning layer can only REMOVE candidates);
-    the audit is reproducible (integer ADC) and its recall floor and
-    pruning ratio hold on the corpus."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as E
-    from qamd_spark.ops.similarity import (
-        _assign_stage,
-        ivf_train,
-        ivfpq_topk,
-        pq_train,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cent = ivf_train(emb, n_clusters=16, n_iters=2)
-    cb = pq_train(emb, m=16, k=32, n_iters=2)
-    got = ivfpq_topk(emb, qs, cent, cb, k=10, n_probe=4).collect()
-
-    e_base = emb.select(
-        F.col("vec_id").alias("_nid"), F.col("embedding").alias("_e")
-    )
-    cluster_of = {
-        int(r["_nid"]): int(r["cluster"])
-        for r in _assign_stage(e_base, cent, "_nid", "_e").collect()
-    }
-    Cn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    probes = {}
-    for r in qs.collect():
-        qv = np.asarray(r["qe"], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-12)
-        probes[int(r["qid"])] = set(
-            int(c) for c in np.argsort(-(Cn @ qv), kind="stable")[:4]
-        )
-    for r in got:
-        assert cluster_of[int(r["neighbor"])] in probes[int(r["qid"])]
-
-    a = {(int(r["qid"]), int(r["n_hit"])) for r in E.q_ann_ivfpq(spark, sf).collect()}
-    b = {(int(r["qid"]), int(r["n_hit"])) for r in E.q_ann_ivfpq(spark, sf).collect()}
-    assert a == b
-    rows = E.q_ann_ivfpq(spark, sf).collect()
-    mean_recall = sum(r["recall"] for r in rows) / len(rows)
-    mean_cf = sum(r["cand_frac"] for r in rows) / len(rows)
-    assert mean_recall >= 0.25  # observed 0.365
-    assert mean_cf < 0.5  # pruning actually prunes (observed 0.252)
-
-
 def test_bootstrap_keep_statistics(spark):
     """Poisson(1) weights: each replicate's total weight is ~N (mean 1);
     the bootstrap rates bracket the point keep rate; everything is
@@ -1479,104 +965,3 @@ def test_bootstrap_keep_statistics(spark):
     assert rates[0] <= point <= rates[-1]  # band brackets the point est
     again = {int(r["b"]): r["rate"] for r in E.q_bootstrap_keep(spark, sf).collect()}
     assert again == {int(r["b"]): r["rate"] for r in rows}
-
-
-def test_procrustes_recovers_signed_permutation(spark):
-    """The trainer must recover the exact signed-permutation rotation
-    used to synthesize the 'new' embedding space, and R must be
-    orthogonal."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pairs = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "v_old"
-        ),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda j: F.element_at(
-                F.col("embedding"), ((13 * j + 5) % 64 + 1).cast("int")
-            ).cast("double")
-            * F.when(j % 3 == 0, F.lit(-1.0)).otherwise(F.lit(1.0)),
-        ).alias("v_new"),
-    )
-    rot = similarity.procrustes_train(pairs)
-    # ground truth: v_new[j] = s_j * v_old[p(j)]  =>  R[p(j), j] = s_j
-    R_true = np.zeros((64, 64))
-    for j in range(64):
-        R_true[(13 * j + 5) % 64, j] = -1.0 if j % 3 == 0 else 1.0
-    assert np.abs(rot - R_true).max() < 1e-8
-    assert np.abs(rot.T @ rot - np.eye(64)).max() < 1e-10
-
-
-def test_embedding_align_query_contract(spark):
-    import __spark_entry__ as entry
-
-    out = entry.q_embedding_align(spark, "/root/testdata/sf0.001").toPandas()
-    assert list(out.columns) == ["vec_id", "pre_err", "align_err", "drifted"]
-    assert len(out) == 500
-    clean = out[~out["drifted"]]
-    drifted = out[out["drifted"]]
-    # aligned clean rows collapse exactly: the trained R rounds to the
-    # closed-form signed permutation, making every product float-exact
-    assert (clean["align_err"] == 0.0).all()
-    # planted apply-side drift (+0.25 on component 0) survives
-    # alignment and is detected per-row; pre_err stays O(||v||)
-    assert len(drifted) == 500 // 17 + 1
-    assert (drifted["align_err"] > 0.2).all()
-    assert (drifted["align_err"] < 0.3).all()
-    assert out["pre_err"].mean() > 1.0
-
-
-def test_embedding_align_trained_R_rounds_to_closed_form(spark):
-    """The oracle's validity hinges on round(trained_R, 6) equalling
-    the closed-form signed permutation — pin that collapse directly."""
-    import __spark_entry__ as entry
-    from qamd_spark.ops.similarity import procrustes_train
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v_new = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda jj: F.element_at(
-            F.col("embedding"), ((13 * jj + 5) % 64 + 1).cast("int")
-        ).cast("double")
-        * F.when(jj % 3 == 0, F.lit(-1.0)).otherwise(F.lit(1.0)),
-    )
-    pairs = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v_old"),
-        v_new.alias("v_new"),
-    )
-    rot = procrustes_train(pairs)
-    got = [
-        [float(round(float(rot[k][j]), 6)) + 0.0 for k in range(64)]
-        for j in range(64)
-    ]
-    assert got == entry._procrustes_closed_R()
-
-
-def test_multiprobe_recall_dominates_single_probe(spark):
-    """Multi-probe's candidate set is a superset of single-probe's (the
-    flip set contains flip 0 = the exact bucket), so its recall vs the
-    brute-force truth can never be lower at the same (bits, n_tables)."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    exact = similarity.brute_force_topk(emb, q, k=5).toPandas()
-    single = similarity.lsh_topk(emb, q, k=5, bits=4, n_tables=16, dim=64).toPandas()
-    multi = similarity.lsh_multiprobe_topk(
-        emb, q, k=5, bits=4, n_tables=16, dim=64
-    ).toPandas()
-
-    def recall(approx):
-        hits = 0
-        for qid in exact["qid"].unique():
-            e = set(exact[exact["qid"] == qid]["neighbor"])
-            a = set(approx[approx["qid"] == qid]["neighbor"])
-            hits += len(e & a)
-        return hits / len(exact)
-
-    r1, rm = recall(single), recall(multi)
-    assert rm >= r1, (rm, r1)
-    assert rm >= 0.5  # 5 probes/table on the near-orthogonal corpus
-    assert (multi["rank"] <= 5).all()

@@ -65,16 +65,18 @@ def test_streaming_config_strips_cross_row_rules():
     assert scfg.enabled("pii") and scfg.enabled("langid")
 
 
-def test_cli_stream_subcommand(tmp_path, spark, synth_path, count_jobs):
+def test_cli_stream_subcommand(tmp_path, spark, synth_path, count_jobs, capsys):
     """The stream CLI: first invocation labels all current files; a
     rerun with the same checkpoint ingests only NEW files (no
-    reprocessing — row count grows by exactly the new file's rows).
+    reprocessing — row count grows by exactly the new file's rows, and
+    the command prints that count as rows_appended).
 
     Job budget: Spark runs a streaming query's micro-batch jobs under the
     query's own job group, its runId, so count_jobs sees only the jobs
-    the command starts itself: the schema read and count of the sink that
-    report its row count (3 jobs). The micro-batch write is one more job
-    in the runId group, not an ungrouped one."""
+    the command starts itself: none, since the printed count comes from
+    the query's progress, not from a read of the sink. The micro-batch
+    write is one more job in the runId group, not an ungrouped one."""
+    import json
     import shutil
 
     from qamd_spark import main
@@ -85,18 +87,22 @@ def test_cli_stream_subcommand(tmp_path, spark, synth_path, count_jobs):
     out = str(tmp_path / "out")
     argv = ["stream", "--input", src, "--output", out, "--master", "local[4]"]
     rc, jobs, escaped = count_jobs(lambda: main.main(argv))
-    assert rc == 0 and jobs <= 3 and escaped == 0
+    assert rc == 0 and jobs == 0 and escaped == 0
     n1 = spark.read.parquet(out + "/data").count()
     assert n1 == spark.read.parquet(synth_path).count()
+    assert json.loads(capsys.readouterr().out.splitlines()[-1]) == {
+        "status": "ok", "output": out, "rows_appended": n1}
     # second invocation with one new file: only its rows are appended
     from qamd_spark import synth as _synth
 
     _synth.write_parquet(src + "/part-1.parquet", n_convs=5, seed=99)
     rc, jobs, escaped = count_jobs(lambda: main.main(argv))
-    assert rc == 0 and jobs <= 3 and escaped == 0
+    assert rc == 0 and jobs == 0 and escaped == 0
     n2 = spark.read.parquet(out + "/data").count()
     n_new = spark.read.parquet(src + "/part-1.parquet").count()
     assert n2 == n1 + n_new
+    status = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert status["rows_appended"] == n_new
 
 
 def test_stream_applies_refusal_rule(spark, tmp_path):
