@@ -3,10 +3,10 @@
 ``entry(spark)`` runs the flagship transcript-quality pipeline on the
 sf0.001 documents table (each document = a single-turn conversation, per
 FIXTURES.md §5). ``queries()`` exposes the operator inventory from
-SURVEY.md §2 (plus the training-data-pipeline and event-analytics
-extensions) re-expressed over ``documents.parquet`` and
-``events.parquet`` (tests/test_entry_contract.py fails on any other
-table); each entry has a DuckDB ``oracle_sql()`` twin unless the
+SURVEY.md §2 (plus the training-data-pipeline extensions) re-expressed
+over ``documents.parquet``, the one table with the transcript's shape
+(tests/test_entry_contract.py fails on any other table); each entry
+has a DuckDB ``oracle_sql()`` twin unless the
 operator is genuinely non-SQL-expressible. The rows-only entries all
 carry exact pandas twins or recall/quality tests instead (see
 OPERATORS.md for the per-query evidence map): pandas-UDF scoring
@@ -307,7 +307,6 @@ def _encoding_profile_sql() -> str:
                {fixed} <> {t} AS was_damaged
         FROM documents
     """
-
 
 
 def _url_canon_sql() -> str:
@@ -803,166 +802,6 @@ def q_conv_pipeline_sql(spark, sf_dir):
         | (n > 8000)
     )
     return j.select("conv", "turn", is_dup.alias("is_dup"), keep.alias("keep"))
-
-
-def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization over the events stream: a new session
-    starts when the per-user gap exceeds 30 minutes. Window lag + running
-    sum — partitioned by user, so the shuffle is one exchange on user_id
-    and a hot user is bounded by their own event count."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag(F.unix_micros(F.col("ts").cast("timestamp"))).over(w)
-    new_s = (
-        prev.isNull() | ((F.unix_micros(F.col("ts").cast("timestamp")) - prev) > SESSION_GAP_US)
-    ).cast("long")
-    return (
-        _events(spark, sf_dir)
-        .select("user_id", "event_id", "ts", new_s.alias("_ns"))
-        .withColumn(
-            "session_idx",
-            F.sum("_ns").over(
-                Window.partitionBy("user_id")
-                .orderBy("ts", "event_id")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .select("user_id", "event_id", F.col("session_idx").cast("long").alias("session_idx"))
-    )
-
-
-def q_asof_join(spark, sf_dir):
-    """As-of join (brief's custom-operator example): for every 'error'
-    event, the most recent signup AT OR BEFORE it for the same user —
-    expressed as a composition of existing ops (single ordered window
-    with last-non-null carry-forward), NOT a per-row lookup: one shuffle
-    on user_id, no range explosion."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ev = _events(spark, sf_dir).select("user_id", "event_id", "ts", "event_type")
-    carried = ev.withColumn(
-        "asof_signup_us",
-        F.last(
-            F.when(F.col("event_type") == "signup", F.unix_micros(F.col("ts").cast("timestamp"))),
-            ignorenulls=True,
-        ).over(w),
-    )
-    return carried.filter(F.col("event_type") == "error").select(
-        "user_id", "event_id", "asof_signup_us"
-    )
-
-
-RANGE_JOIN_US = 5 * 60 * 1_000_000  # 5 min
-
-
-def q_range_join(spark, sf_dir):
-    """Range join (brief's custom-operator example): pairs of events from
-    the same user within 5 minutes of each other (a < b by event_id).
-    Scale shape: time-BIN join — build side keeps its own bin, probe side
-    explodes DOWNWARD to {bin-1, bin} only, then an asymmetric exact
-    filter (build.bin < probe.bin, or equal bins with id ordering) emits
-    each qualifying pair exactly once — an equi-join whose candidate
-    count is bounded by events per 5-minute bin, with no dropDuplicates
-    exchange (the 3-bin symmetric form needed one; r2 VERDICT item 8)."""
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_id", us.alias("us"),
-        F.floor(us / F.lit(RANGE_JOIN_US)).alias("bin"),
-    )
-    probe = ev.select(
-        "user_id", F.col("event_id").alias("b_id"), F.col("us").alias("b_us"),
-        F.col("bin").alias("b_bin"),
-        F.explode(F.array(F.col("bin") - 1, F.col("bin"))).alias("bin"),
-    )
-    # each |Δt|<=R pair has bins differing by at most 1: bins unequal →
-    # matched once with build = earlier-bin side (via probe's bin-1 row);
-    # bins equal → both orientations join, keep one by id order
-    once = (F.col("bin") < F.col("b_bin")) | (
-        (F.col("bin") == F.col("b_bin")) & (F.col("event_id") < F.col("b_id"))
-    )
-    a_first = F.col("event_id") < F.col("b_id")  # output labels: a < b by id
-    pairs = (
-        ev.join(probe, ["user_id", "bin"])
-        .filter(once & (F.abs(F.col("us") - F.col("b_us")) <= RANGE_JOIN_US))
-        .select(
-            "user_id",
-            F.when(a_first, F.col("event_id")).otherwise(F.col("b_id")).alias("a"),
-            F.when(a_first, F.col("b_id")).otherwise(F.col("event_id")).alias("b"),
-            F.when(a_first, F.col("b_us") - F.col("us"))
-            .otherwise(F.col("us") - F.col("b_us"))
-            .alias("delta_us"),
-        )
-    )
-    return pairs
-
-
-FUNNEL_WINDOW_US = 3600 * 1_000_000  # 1 hour
-
-
-def q_funnel(spark, sf_dir):
-    """Event funnel: for every signup, did the same user hit an 'error'
-    within the following hour. Same scale shape as range_join — the
-    per-user theta-join becomes a time-bin equi-join (errors explode to
-    {bin-1, bin}, so a signup's candidate errors are bounded per hour
-    bin), then an exists-style max aggregate per signup. The DuckDB twin
-    is the straightforward correlated EXISTS."""
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    ev = _events(spark, sf_dir)
-    sig = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", "event_id", us.alias("us"),
-        F.floor(us / F.lit(FUNNEL_WINDOW_US)).alias("bin"),
-    )
-    err = ev.filter(F.col("event_type") == "error").select(
-        "user_id", us.alias("e_us"),
-        F.explode(
-            F.array(
-                F.floor(us / F.lit(FUNNEL_WINDOW_US)) - 1,
-                F.floor(us / F.lit(FUNNEL_WINDOW_US)),
-            )
-        ).alias("bin"),
-    )
-    hit = F.coalesce(
-        (F.col("e_us") > F.col("us"))
-        & (F.col("e_us") <= F.col("us") + FUNNEL_WINDOW_US),
-        F.lit(False),
-    )
-    return (
-        sig.join(err, ["user_id", "bin"], "left")
-        .groupBy("event_id")
-        .agg(F.max(hit).alias("converted"))
-    )
-
-
-TS_LO_YEAR, TS_HI_YEAR = 2000, 2100
-
-
-def q_ts_sanity(spark, sf_dir):
-    """Typed-timestamp sanity — the DateFormat-check analogue for a typed
-    ts column (reference src/check/variable.rs:20-44 validates date
-    STRINGS against configured patterns; with a typed schema the failure
-    modes left are nulls, out-of-range epochs, and per-user time
-    regressions).
-    Window lag on (user_id, event_id) order: one exchange on user_id."""
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    ts = F.col("ts").cast("timestamp")
-    prev = F.lag(ts).over(w)
-    return _events(spark, sf_dir).select(
-        "event_id",
-        ts.isNull().alias("ts_null"),
-        F.coalesce(
-            (F.year(ts) >= TS_LO_YEAR) & (F.year(ts) < TS_HI_YEAR), F.lit(False)
-        ).alias("in_range"),
-        F.coalesce(ts < prev, F.lit(False)).alias("regressed"),
-    )
 
 
 def q_field_odd_chars(spark, sf_dir):
@@ -1483,31 +1322,6 @@ def q_bloom_dedup(spark, sf_dir):
     )
 
 
-def q_time_rollup(spark, sf_dir):
-    """Hypertable-style continuous-aggregate rollup: hourly buckets per
-    event_type with count and value sum. Float sums are partition-order-
-    dependent, so the sum goes through exact integer cents (value is
-    2-dp) and one final division — engine-exact and order-free."""
-    hour = F.date_trunc("hour", F.col("ts"))
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    return (
-        _events(spark, sf_dir)
-        .groupBy(hour.alias("hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(cents).cast("double") / F.lit(100.0)).alias("sum_value"),
-        )
-    )
-
-
-def q_json_props(spark, sf_dir):
-    """JSON scalar extraction from the semi-structured props column."""
-    return _events(spark, sf_dir).select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-    )
-
-
 def q_conv_verdicts(spark, sf_dir):
     """Conversation-level verdict from per-turn keeps (ops/conversation.
     conv_verdicts, integer-exact threshold). keep here is a
@@ -1917,51 +1731,6 @@ def q_tool_args_valid(spark, sf_dir):
     )
 
 
-def q_bot_detect(spark, sf_dir):
-    """Bot / scripted-traffic detection on the events stream — the
-    curation filter that keeps machine-generated interaction data out
-    of behavioral corpora: human inter-arrival gaps are bursty
-    (CV ≈ 1 for Poisson-like arrivals), schedulers fire on a clock
-    (CV ≈ 0). Per user: squared coefficient of variation of the
-    inter-event gap in WHOLE SECONDS, cv² = (n·Σg² − S²)/S², one
-    division of exact bigints; the bot gate 100·(n·Σg² − S²) < S² is an
-    integer compare (cv < 0.1). Every 17th user's timestamps are
-    replaced by a fixed 30-second grid (the planted scheduler), exactly
-    mirrored in the twin. One lag window over (user, ts) — a single
-    exchange — then a partial+final hash aggregate. int64 headroom:
-    gaps ≤ 2.6e6 s (a month), Σg² ≤ 4.7e15 per 1k-event user — safe
-    past 10^5 events/user; per-epoch decimals are the documented swap."""
-    ev = _events(spark, sf_dir).select("user_id", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # integer epoch seconds; the planted scheduler replaces them with a
-    # 30 s grid over the user's event RANK (same window, no 2nd
-    # exchange). Within a user every row takes the same branch, so any
-    # session-timezone offset in unix_timestamp cancels in the gaps.
-    epoch = F.when(
-        F.col("user_id") % 17 == 0,
-        F.lit(1704067200) + 30 * (F.row_number().over(w) - 1).cast("long"),
-    ).otherwise(F.unix_timestamp("ts"))
-    g = ev.select(
-        "user_id",
-        (epoch - F.lag(epoch).over(w)).alias("gap"),
-    ).filter(F.col("gap").isNotNull())
-    agg = g.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.sum("gap").alias("s1"),
-        F.sum(F.col("gap") * F.col("gap")).alias("s2"),
-    )
-    num = F.col("n_gaps") * F.col("s2") - F.col("s1") * F.col("s1")
-    return (
-        agg.filter((F.col("n_gaps") >= 5) & (F.col("s1") > 0))
-        .select(
-            "user_id",
-            "n_gaps",
-            (num / (F.col("s1") * F.col("s1"))).alias("cv2"),
-            (100 * num < F.col("s1") * F.col("s1")).alias("bot_flag"),
-        )
-    )
-
-
 def q_conv_fork_detect(spark, sf_dir):
     """Regenerated-branch (fork) detection for chat transcripts — the
     conversation-level dedup chat-UI exports need: when a user hits
@@ -2176,65 +1945,6 @@ def q_kendall_tau(spark, sf_dir):
     )
 
 
-def q_km_survival(spark, sf_dir):
-    """Kaplan-Meier survival estimate of user lifetime over the events
-    stream — the survival-analysis rung of the retention family
-    (cohort_retention gives period-over-period grids; KM gives the
-    censoring-correct lifetime curve a growth analysis needs when the
-    observation window truncates newer users). Per user: lifetime =
-    whole days between first and last event; users whose last event
-    falls within 7 days of the corpus horizon (global max ts) are
-    CENSORED (still alive), the rest are churn events. Classic KM at
-    each distinct lifetime t: n_risk = users with lifetime >= t,
-    n_events = churns at exactly t, S(t) = prod_{t_i <= t}
-    (1 - d_i/n_i). Determinism: every count is exact; each factor is
-    one IEEE division; S(t) is a LEFT-FOLD ordered product over the
-    bounded per-duration table (F.aggregate over a window-collected
-    factor list in Spark, list_reduce over an ordered list in DuckDB —
-    same fold order, bit-identical; no exp(sum(ln)) drift). Plan: one
-    hash agg per user (single exchange on user_id), then all KM math on
-    the <=N_distinct_durations aggregated table (a scalar-bounded
-    single-partition window, the locators-cap shape — fine because the
-    table is tiny by construction, not by data luck)."""
-    ev = _events(spark, sf_dir).select("user_id", "ts")
-    # persisted: both the horizon branch and the lifetime branch
-    # consume it — without the persist the horizon max would rescan
-    # raw events (the multi-consumer-intermediate pattern).
-    per = ev.groupBy("user_id").agg(
-        F.min(F.unix_timestamp("ts")).alias("first_s"),
-        F.max(F.unix_timestamp("ts")).alias("last_s"),
-    ).persist()
-    horizon = per.agg(F.max("last_s").alias("h"))
-    u = per.crossJoin(F.broadcast(horizon)).select(
-        "user_id",
-        F.floor((F.col("last_s") - F.col("first_s")) / 86400).cast("long").alias("life_d"),
-        (F.col("last_s") >= F.col("h") - 7 * 86400).alias("censored"),
-    )
-    byd = u.groupBy("life_d").agg(
-        F.sum((~F.col("censored")).cast("long")).alias("n_events"),
-        F.sum(F.col("censored").cast("long")).alias("n_censored"),
-        F.count(F.lit(1)).alias("n_at"),
-    )
-    w = Window.orderBy("life_d").rowsBetween(Window.unboundedPreceding, 0)
-    wfut = Window.orderBy("life_d").rowsBetween(0, Window.unboundedFollowing)
-    risk = F.sum("n_at").over(wfut).alias("n_risk")
-    k = byd.select("life_d", "n_events", "n_censored", risk)
-    factor = F.lit(1.0) - F.col("n_events").cast("double") / F.col("n_risk").cast(
-        "double"
-    )
-    factors = F.collect_list(factor.cast("double")).over(w)
-    surv = F.aggregate(
-        factors, F.lit(1.0), lambda acc, x: acc * x
-    )
-    return k.select(
-        "life_d",
-        "n_risk",
-        "n_events",
-        "n_censored",
-        surv.alias("survival"),
-    )
-
-
 _TOX_PANEL = ["damn", "hell", "idiot", "stupid"]
 
 
@@ -2430,78 +2140,6 @@ def q_mann_whitney(spark, sf_dir):
     )
 
 
-def _dp_noise_table(epsilon: float = 0.5, bins: int = 256) -> list[int]:
-    """256-bin inverse-CDF quantization of the DISCRETE Laplace
-    (two-sided geometric) distribution with parameter exp(-epsilon) —
-    integer noise values, computed once on the driver with exact
-    Python floats and embedded as literals in BOTH engines, so the
-    released counts are integers and the cross-engine gate is exact
-    (no ln() in either engine's hot path)."""
-    import math
-
-    p = math.exp(-epsilon)
-    # P(K = k) ∝ p^|k|: P(K = 0) = (1-p)/(1+p), P(|K| = k) = 2·that·p^k.
-    norm = (1 - p) / (1 + p)
-    out = []
-    for j in range(bins):
-        u = (j + 0.5) / bins
-        w = 2 * u - 1  # signed uniform in (-1, 1)
-        # smallest k with P(|K| <= k) >= |w|, walked outward from 0
-        cdf, k = norm, 0
-        while cdf < abs(w) and k < 64:
-            k += 1
-            cdf += 2 * norm * p**k
-        out.append(k if w >= 0 else -k)
-    return out
-
-
-def _sql_dp_table() -> str:
-    """The same noise table as a DuckDB list literal (1-based index)."""
-    return "[" + ", ".join(str(v) for v in _dp_noise_table()) + "]"
-
-
-def q_dp_release(spark, sf_dir):
-    """Differentially-private count release over event types — the
-    noise-addition step of the privacy-release ladder after
-    k_anonymity / l_diversity / t_closeness (those audit; this
-    RELEASES): each per-type count gets discrete-Laplace noise
-    (Ghosh-Roughgarden-Sundararajan's geometric mechanism — the
-    integer-valued, utility-optimal Laplace analogue) calibrated to
-    sensitivity 1 / epsilon 0.5. The noise is drawn via a 256-bin
-    inverse-CDF table computed ONCE on the driver and indexed by the
-    md5 of the released cell key — INTEGER noise end to end, so the
-    engines agree exactly and no ln() nondeterminism exists. CAVEAT
-    (documented, honest): hash-seeded noise is DETERMINISTIC, which
-    demonstrates the mechanism's plumbing and calibration but is NOT
-    differentially private — production swaps the md5 index for fresh
-    randomness per release (rand() — one-line change); the table, the
-    clamping, and the release shape are the real, tested parts. Plan:
-    one partial+final hash aggregate + a literal-array lookup on the
-    aggregated rows (256 int literals — far below the LSH plan-size
-    lesson's threshold)."""
-    tab = _dp_noise_table()
-    g = _events(spark, sf_dir).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("true_count")
-    )
-    idx = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("event_type"), F.lit("|dp-v1"))), 1, 2),
-            16,
-            10,
-        ).cast("long")
-        % 256
-    )
-    noise = F.element_at(F.array(*[F.lit(v) for v in tab]), (idx + 1).cast("int"))
-    return g.select(
-        "event_type",
-        "true_count",
-        noise.cast("long").alias("noise"),
-        F.greatest(F.col("true_count") + noise, F.lit(0)).cast("long").alias(
-            "released_count"
-        ),
-    )
-
-
 _BH_D = 1 << 30  # common p-value denominator (2^30)
 _BH_BUCKETS = 4096
 
@@ -2607,133 +2245,6 @@ def q_mcnemar(spark, sf_dir):
         "c",
         F.when(tot > 0, (diff * diff) / tot).alias("chi2"),
         ((tot > 0) & (1000 * diff * diff > 3841 * tot)).alias("versions_differ"),
-    )
-
-
-def q_theil_sen(spark, sf_dir):
-    """Theil-Sen robust trend over daily event counts per event type —
-    the median-of-pairwise-slopes estimator that trend_slope's OLS is
-    not: one corrupted day (an outage, a bot burst) drags the OLS line
-    but moves the pairwise-slope MEDIAN not at all (29.5% breakdown
-    point). Pair enumeration is a self-join on the AGGREGATED daily
-    grid (≤ n_days² pairs per type — bounded by the calendar, not the
-    data); each slope is one exact-int difference ratio; the median is
-    the LOWER median selected by row_number over the total order
-    (slope, d1, d2) — deterministic under ties, identical in the twin
-    (no averaging of middle elements: avoids a second float op).
-    Plan: one hash aggregate to the grid (persisted — both the pair
-    join's sides read it), a per-type bounded self-join, one ranked
-    window partitioned by type."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.expr("unix_timestamp(ts) div 86400")
-    grid = (
-        ev.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .persist()
-    )
-    g1 = grid.select(
-        F.col("event_type").alias("et"),
-        F.col("d").alias("d1"),
-        F.col("y").alias("y1"),
-    )
-    g2 = grid.select(
-        F.col("event_type").alias("et2"),
-        F.col("d").alias("d2"),
-        F.col("y").alias("y2"),
-    )
-    pairs = g1.join(
-        g2, (F.col("et") == F.col("et2")) & (F.col("d1") < F.col("d2"))
-    ).select(
-        "et",
-        "d1",
-        "d2",
-        ((F.col("y2") - F.col("y1")) / (F.col("d2") - F.col("d1"))).alias(
-            "slope"
-        ),
-    )
-    wr = Window.partitionBy("et").orderBy("slope", "d1", "d2")
-    cnt = Window.partitionBy("et")
-    ranked = pairs.select(
-        "et",
-        "slope",
-        F.row_number().over(wr).alias("rn"),
-        F.count(F.lit(1)).over(cnt).alias("n_pairs"),
-    )
-    med = ranked.filter(F.col("rn") == F.expr("(n_pairs + 1) div 2"))
-    days = grid.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    return days.join(
-        med.select(
-            F.col("et").alias("event_type"),
-            F.col("n_pairs"),
-            F.col("slope").alias("ts_slope"),
-        ),
-        "event_type",
-    )
-
-
-def q_mann_kendall(spark, sf_dir):
-    """Mann-Kendall trend significance test over daily event counts —
-    the nonparametric significance companion to theil_sen's slope (the
-    classic pairing in environmental/ops time series: MK says WHETHER
-    a monotone trend exists, Theil-Sen says how steep): S = Σ sign
-    pairs over the bounded daily grid (exact int), tie-corrected
-    variance 18·Var = n(n−1)(2n+5) − Σt(t−1)(2t+5) (exact int from the
-    per-value tie histogram), continuity-corrected
-    z = (S∓1)/sqrt(var18/18). OLS t-tests assume normal residuals a
-    count series violates; MK needs only exchangeability under H0.
-    All heavy terms exact bigints; z is a fixed float expression. Plan:
-    one hash aggregate to the grid (persisted — the pair join's sides
-    and the tie histogram read it), a per-type bounded self-join, two
-    tiny aggs — the theil_sen shape plus the tie branch."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.expr("unix_timestamp(ts) div 86400")
-    grid = (
-        ev.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .persist()
-    )
-    g1 = grid.select(
-        F.col("event_type").alias("et"), F.col("d").alias("d1"), F.col("y").alias("y1")
-    )
-    g2 = grid.select(
-        F.col("event_type").alias("et2"), F.col("d").alias("d2"), F.col("y").alias("y2")
-    )
-    s = (
-        g1.join(g2, (F.col("et") == F.col("et2")) & (F.col("d1") < F.col("d2")))
-        .groupBy("et")
-        .agg(F.sum(F.signum(F.col("y2") - F.col("y1")).cast("long")).alias("s"))
-    )
-    ties = (
-        grid.groupBy(F.col("event_type").alias("et"), "y")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("et")
-        .agg(
-            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)).alias(
-                "tie18"
-            )
-        )
-    )
-    nd = grid.groupBy(F.col("event_type").alias("et")).agg(
-        F.count(F.lit(1)).alias("n_days")
-    )
-    j = nd.join(s, "et").join(ties, "et")
-    n = F.col("n_days")
-    var18 = n * (n - 1) * (2 * n + 5) - F.col("tie18")
-    sd = F.sqrt(var18.cast("double") / 18)
-    z = (
-        F.when(F.col("s") > 0, (F.col("s") - 1) / sd)
-        .when(F.col("s") < 0, (F.col("s") + 1) / sd)
-        .otherwise(F.lit(0.0))
-    )
-    return j.select(
-        F.col("et").alias("event_type"),
-        "n_days",
-        "s",
-        F.col("tie18").alias("tie_term18"),
-        F.when(var18 > 0, z).alias("z"),
-        F.coalesce(
-            F.when(var18 > 0, F.abs(z) > 1.96), F.lit(False)
-        ).alias("trending"),
     )
 
 
@@ -2974,10 +2485,9 @@ def q_emd_drift(spark, sf_dir):
     """Earth-mover (Wasserstein-1) drift per source vs the rest of the
     corpus over doc length — the AREA between the two ECDFs, completing
     the drift-distance family: ks_drift measures the worst POINT gap
-    (insensitive to how long distributions diverge), t_closeness' TV
-    ignores the metric structure of the support (off-by-one-bucket
-    costs as much as off-by-a-mile), W1 integrates gap × distance and
-    is the standard two-sample distance for distribution shift.
+    (insensitive to how long distributions diverge), W1 integrates
+    gap × distance and is the standard two-sample distance for
+    distribution shift.
     Discrete closed form on the shared support: W1 = Σ_i |F_s(v_i) −
     F_rest(v_i)| · (v_{i+1} − v_i) — with the common denominator
     n_s·n_rest the numerator Σ|cumS·nR − cumR·nS|·gap is an EXACT
@@ -3453,104 +2963,6 @@ def q_number_grounding(spark, sf_dir):
     )
 
 
-def q_weekday_profile(spark, sf_dir):
-    """Exposure-correct day-of-week seasonality per event type — the
-    load-shape audit behind alert baselines and capacity planning,
-    done WITHOUT the classic observation-window bias: over a 30-day
-    window some weekdays occur 5 times and others 4, so comparing raw
-    weekday counts against a flat n/7 expectation manufactures fake
-    seasonality; the expectation must be n·d_wd/D (d_wd = how many
-    times that weekday was observed, D = total observed days).
-    Per (event_type, weekday): observed count, exposure days, rate/day
-    and expected/day (each ONE exact division), and a deviation flag
-    as the integer cross-multiplication 5·|O·D − n·d_wd| > n·d_wd
-    (±20% of expected) — zero float in the decision. Weekday from the
-    epoch day ((day + 4) % 7: 1970-01-01 was a Thursday — no timezone
-    or locale dependence, identical arithmetic in both engines). Plan:
-    one hash aggregate to the (type, day) grid (persisted — the
-    weekday rollup and the per-type totals both read it), then all
-    math on the bounded grid."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.expr("unix_timestamp(ts) div 86400")
-    grid = (
-        ev.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .persist()
-    )
-    wd = ((F.col("d") + 4) % 7).alias("weekday")
-    per = grid.groupBy("event_type", wd).agg(
-        F.sum("y").alias("o"),
-        F.count(F.lit(1)).alias("d_wd"),
-    )
-    tot = grid.groupBy("event_type").agg(
-        F.sum("y").alias("n"),
-        F.count(F.lit(1)).alias("d_total"),
-    )
-    j = per.join(tot, "event_type")
-    dev = F.abs(F.col("o") * F.col("d_total") - F.col("n") * F.col("d_wd"))
-    return j.select(
-        "event_type",
-        "weekday",
-        F.col("o").alias("n_events"),
-        "d_wd",
-        (F.col("o") / F.col("d_wd")).alias("rate_per_day"),
-        (F.col("n") / F.col("d_total")).alias("expected_per_day"),
-        (5 * dev > F.col("n") * F.col("d_wd")).alias("seasonal_dev"),
-    )
-
-
-def q_autocorr_lag1(spark, sf_dir):
-    """Lag-1 autocorrelation of daily event counts per type — the
-    serial-dependence statistic the trend family (trend_slope OLS,
-    theil_sen median, mann_kendall sign test) cannot give: a series
-    can be trend-free yet strongly autocorrelated (multi-day incident
-    decay, load echo), and r1 near zero is the i.i.d. sanity check
-    alert thresholds silently assume. Exactness: the textbook
-    r1 = Σ(y_t−ȳ)(y_{t+1}−ȳ)/Σ(y_t−ȳ)² is cleared of the rational
-    mean by scaling BOTH sides by n² — numerator·n² = n²·Σy_t·y_{t+1}
-    − n·S·(2S − y_first − y_last) + (n−1)·S², denominator·n² =
-    n·(n·Σy² − S²) — every term an exact bigint (first/last via
-    min_by/max_by on the unique day), r1 ONE division. int64
-    headroom: n²·Σy·y' ~ n³·ymax² — safe past 3 years of days at
-    10^6 events/day; decimal(38) is the swap. Plan: one hash
-    aggregate to the daily grid (persisted), one lag window per type
-    over the bounded grid, one final agg."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.expr("unix_timestamp(ts) div 86400")
-    grid = (
-        ev.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .persist()
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = grid.select(
-        "event_type",
-        "d",
-        "y",
-        (F.col("y") * F.lag("y").over(w)).alias("yy"),
-    )
-    a = lagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("y").alias("s"),
-        F.sum(F.col("y") * F.col("y")).alias("s2"),
-        F.sum("yy").alias("syy"),
-        F.min_by("y", "d").alias("y_first"),
-        F.max_by("y", "d").alias("y_last"),
-    )
-    n = F.col("n_days")
-    num = (
-        n * n * F.col("syy")
-        - n * F.col("s") * (2 * F.col("s") - F.col("y_first") - F.col("y_last"))
-        + (n - 1) * F.col("s") * F.col("s")
-    )
-    den = n * (n * F.col("s2") - F.col("s") * F.col("s"))
-    return a.select(
-        "event_type",
-        "n_days",
-        F.when((n >= 3) & (den > 0), num / den).alias("r1"),
-    )
-
-
 def q_runs_test(spark, sf_dir):
     """Wald-Wolfowitz runs test on the keep/drop sequence per source —
     the corruption-clustering detector: a gate can drop the right
@@ -3613,64 +3025,6 @@ def q_runs_test(spark, sf_dir):
         F.coalesce(F.when(defined, F.abs(z) > 1.96), F.lit(False)).alias(
             "order_suspect"
         ),
-    )
-
-
-def q_t_closeness(spark, sf_dir):
-    """t-closeness audit (Li et al. ICDE'07) — the third rung of the
-    privacy-release ladder after k_anonymity (class size) and
-    l_diversity (distinct sensitive values): a class can be k-large and
-    l-diverse yet still leak if its sensitive-value DISTRIBUTION skews
-    far from the corpus-wide one. Distance is total variation
-    TV = 0.5 * sum_v |p_class(v) - p_global(v)|, computed EXACTLY in
-    scaled integers: with class-value counts c_v, class size n, global
-    counts g_v, total N,
-
-        2*n*N*TV = n*N + sum_{v in class} (|c_v*N - g_v*n| - g_v*n)
-
-    (absent values contribute g_v*n, which telescopes to n*N minus the
-    present-value correction) — so no per-class enumeration of the full
-    value domain, every addend is a bigint, and the one division
-    tv/(2nN) plus the integer comparison tv > nN (t > 0.5) are
-    engine-exact. Plan: two hash aggregates + a broadcast join of the
-    tiny (class size / global count / total) sides onto the class-value
-    counts, then one partial+final aggregate per class. Reference
-    analogue: SystemMissingOverThreshold's ratio-gate shape
-    (src/check/post.rs) lifted to distribution distance."""
-    ev = (
-        _events(spark, sf_dir)
-        .select(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).alias("day"),
-            F.get_json_object("props", "$.k").cast("long").alias("s"),
-        )
-        .filter(F.col("s").isNotNull())
-    )
-    cv = ev.groupBy("event_type", "day", "s").agg(F.count(F.lit(1)).alias("c"))
-    g = ev.groupBy("s").agg(F.count(F.lit(1)).alias("gc"))
-    tot = ev.agg(F.count(F.lit(1)).alias("totn"))
-    n_per = cv.groupBy("event_type", "day").agg(F.sum("c").alias("n"))
-    j = (
-        cv.join(F.broadcast(n_per), ["event_type", "day"])
-        .join(F.broadcast(g), "s")
-        .crossJoin(F.broadcast(tot))
-    )
-    term = F.abs(F.col("c") * F.col("totn") - F.col("gc") * F.col("n")) - F.col(
-        "gc"
-    ) * F.col("n")
-    agg = j.groupBy("event_type", "day").agg(
-        F.min("n").alias("class_size"),
-        F.min("totn").alias("_N"),
-        F.sum(term).alias("_t"),
-    )
-    tv = F.col("class_size") * F.col("_N") + F.col("_t")
-    return agg.select(
-        "event_type",
-        "day",
-        "class_size",
-        tv.alias("tv_scaled"),
-        (tv / (F.lit(2) * F.col("class_size") * F.col("_N"))).alias("t_distance"),
-        (tv > F.col("class_size") * F.col("_N")).alias("t_violation"),
     )
 
 
@@ -3737,67 +3091,6 @@ def q_fleiss_kappa(spark, sf_dir):
     )
     return agg.select(
         "source", "n_docs", "a_sum", b.alias("b_sum"), kappa.alias("kappa")
-    )
-
-
-def q_fd_mine(spark, sf_dir):
-    """Functional-dependency profiling (TANE-style candidate check,
-    Huhtala et al. 1999) — the schema-quality audit a data-quality tool
-    runs to learn which column implications actually hold: for each
-    candidate det -> dep pair, count determinant groups whose dependent
-    takes more than one value. The whole panel evaluates in ONE shuffle:
-    each row explodes into (fd, det, dep) string triples, then a
-    partial+final hash aggregate on (fd, det) feeds a second tiny
-    aggregate per fd. A violated FD here is a data signal (user_id does
-    not determine event_type), a held FD is a key candidate (event_id
-    -> user_id). violation_rate is the one exact long/long division.
-    Reference analogue: VariablesWithUniqueValues' uniqueness profiling
-    (src/check/cross.rs) generalized to implications between columns."""
-    ev = _events(spark, sf_dir)
-    k = F.get_json_object("props", "$.k")
-    pairs = F.array(
-        F.struct(
-            F.lit("event_id->user_id").alias("fd"),
-            F.col("event_id").cast("string").alias("det"),
-            F.col("user_id").cast("string").alias("dep"),
-        ),
-        F.struct(
-            F.lit("user_id->event_type").alias("fd"),
-            F.col("user_id").cast("string").alias("det"),
-            F.col("event_type").alias("dep"),
-        ),
-        F.struct(
-            F.lit("event_type->user_id").alias("fd"),
-            F.col("event_type").alias("det"),
-            F.col("user_id").cast("string").alias("dep"),
-        ),
-        F.struct(
-            F.lit("props_k->event_type").alias("fd"),
-            k.alias("det"),
-            F.col("event_type").alias("dep"),
-        ),
-    )
-    e = ev.select(F.explode(pairs).alias("p")).select("p.fd", "p.det", "p.dep")
-    gd = e.groupBy("fd", "det").agg(
-        F.count_distinct("dep").alias("nd"), F.count(F.lit(1)).alias("cnt")
-    )
-    return (
-        gd.groupBy("fd")
-        .agg(
-            F.sum("cnt").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum((F.col("nd") > 1).cast("long")).alias("n_violations"),
-            F.max("nd").alias("max_distinct"),
-        )
-        .select(
-            "fd",
-            "n_rows",
-            "n_groups",
-            "n_violations",
-            "max_distinct",
-            (F.col("n_violations") / F.col("n_groups")).alias("violation_rate"),
-            (F.col("n_violations") == 0).alias("fd_holds"),
-        )
     )
 
 
@@ -4056,43 +3349,6 @@ def q_dsir_resample(spark, sf_dir):
     ).select("doc_id", "dsir_logw", F.round("gumbel_key", 9).alias("gumbel_key"))
 
 
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention over the events table — the classic
-    product-analytics matrix (cohort = user's first-seen ISO week;
-    cell = users of that cohort active N weeks later, plus the
-    retention fraction). Three hash aggregates and one equi-join on
-    user_id; the (user, week) activity table is pre-distinct'd so the
-    cell count is a plain count(*), and week arithmetic stays in exact
-    integer days (datediff div 7 — both truncations are Mondays, so
-    the division is exact). Retention is a single exact division."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull()).select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("week")
-    )
-    firsts = ev.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    act = ev.distinct()
-    week_n = (
-        F.datediff(F.col("week").cast("date"), F.col("cohort_week").cast("date"))
-        / F.lit(7)
-    ).cast("int")
-    per = (
-        act.join(firsts, "user_id")
-        .groupBy("cohort_week", week_n.alias("week_n"))
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-    sizes = firsts.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).alias("cohort_size")
-    )
-    return per.join(sizes, "cohort_week").select(
-        "cohort_week",
-        "week_n",
-        "n_active",
-        "cohort_size",
-        (F.col("n_active").cast("double") / F.col("cohort_size").cast("double")).alias(
-            "retention"
-        ),
-    )
-
-
 def q_pack_efficiency(spark, sf_dir):
     """One-row packing-efficiency summary on top of pack_sequences:
     total docs/tokens, pack count, utilization of the fixed-length
@@ -4269,14 +3525,13 @@ def q_conv_export(spark, sf_dir):
 
 def q_spearman_signals(spark, sf_dir):
     """Per-source Spearman rank correlation between two per-doc quality
-    signals (char length vs whitespace token count) — the rank-based
-    sibling of value_correlation's Pearson, robust to the signals'
-    heavy tails. Cross-engine exact: tied ranks use the average-rank
+    signals (char length vs whitespace token count) — rank-based, so
+    robust to the signals' heavy tails. Cross-engine exact: tied ranks use the average-rank
     convention carried as 2*avg_rank (an integer: 2*cum - cnt + 1 on
     the cumulative tie-block counts), and rho is invariant under that
     linear scaling. Centering by (n+1) (the exact mean of 2*avg_rank)
     makes the cross sums exact int64 (|c| < n, so sum(cx*cy) < n^3 —
-    safe to ~2e6 docs per source, the trend_slope bound discipline)
+    safe to ~2e6 docs per source)
     and rho = ONE IEEE division sxy / (sqrt(sxx)*sqrt(syy)) of exact
     integers. Skew shape: ranks are NOT a whole-source row window —
     each signal aggregates to its (source, value, cnt) grid first, the
@@ -4335,37 +3590,6 @@ def q_spearman_signals(spark, sf_dir):
         "source", F.col("n_docs").cast("long").alias("n_docs"),
         rho.alias("spearman_rho"),
     ).orderBy("source")
-
-
-def q_value_correlation(spark, sf_dir):
-    """Pearson correlation of hour-of-day vs spend per event type —
-    the statistics capability row, made cross-engine EXACT: built-in
-    corr() accumulates floats in engine-internal order, so instead the
-    five sufficient statistics are exact integer sums (hour, cents,
-    hour*cents, squares — all << 2^53) and r is assembled in one fixed
-    IEEE op order on both sides. One partial+final hash aggregate."""
-    x = F.hour("ts").cast("long")
-    y = F.round(F.col("value") * 100, 0).cast("long")  # exact cents
-    d = _events(spark, sf_dir).filter(
-        F.col("ts").isNotNull() & F.col("value").isNotNull()
-    )
-    agg = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    cov_n = (F.col("sxy") * n - sx * sy).cast("double")
-    varx_n = (F.col("sxx") * n - sx * sx).cast("double")
-    vary_n = (F.col("syy") * n - sy * sy).cast("double")
-    r = F.when(
-        (varx_n > 0) & (vary_n > 0),
-        cov_n / (F.sqrt(varx_n) * F.sqrt(vary_n)),
-    ).otherwise(F.lit(0.0))
-    return agg.select("event_type", "n", r.alias("pearson_r"))
 
 
 URL_RX = r"https?://[A-Za-z0-9.\-/]+"
@@ -4449,51 +3673,6 @@ def q_url_scan(spark, sf_dir):
         F.regexp_extract(
             F.try_element_at(urls, F.lit(1)), r"https?://([A-Za-z0-9.\-]+)", 1
         ).alias("first_domain"),
-    )
-
-
-def q_rollup_sets(spark, sf_dir):
-    """ROLLUP grouping-sets aggregate over events: (source-day,
-    event_type) cells plus per-day subtotals plus the grand total in
-    ONE pass (Spark expands grouping sets before the partial aggregate
-    — no second scan, no union of three jobs). grouping_id
-    disambiguates subtotal rows from genuine NULL keys, exactly as
-    DuckDB's GROUPING() does."""
-    day = F.date_format(F.col("ts"), "yyyy-MM-dd")
-    agg = (
-        _events(spark, sf_dir)
-        .filter(F.col("ts").isNotNull())
-        .rollup(day.alias("day"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.grouping_id().cast("int").alias("gid"),
-        )
-    )
-    # subtotal keys surface as the explicit 'ALL' sentinel, not NULL —
-    # NULL-vs-NaT comparison semantics differ across engines/pandas and
-    # would poison the value-hash; gid still disambiguates
-    return agg.select(
-        F.coalesce(F.col("day"), F.lit("ALL")).alias("day"),
-        F.coalesce(F.col("event_type"), F.lit("ALL")).alias("event_type"),
-        "n_events",
-        "gid",
-    )
-
-
-def q_pivot_counts(spark, sf_dir):
-    """Hour-of-day × event-type pivot (the wide activity matrix an
-    analytics user reads directly). The pivot values are DECLARED, not
-    discovered — an undeclared pivot runs an extra distinct job and
-    produces schema drift between runs at 100 TB. Twin is conditional
-    aggregation (what a pivot lowers to)."""
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    return (
-        _events(spark, sf_dir)
-        .filter(F.col("ts").isNotNull())
-        .groupBy(F.hour("ts").alias("hod"))
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, kinds)
     )
 
 
@@ -5633,117 +4812,6 @@ def q_ngram_novelty(spark, sf_dir):
     )
 
 
-def q_turn_latency(spark, sf_dir):
-    """Role-transition response-latency profile over the event stream
-    read AS a transcript (conv = user_id; role U/A/T stamped by
-    event_id arithmetic, the role_alternation registry convention):
-    for each turn, the µs gap to the SAME conversation's previous turn
-    in (ts, event_id) order, attributed to the TRANSITION
-    prev_role->role. 'U->A' is assistant response latency, 'A->U' user
-    think time, 'A->T'/'T->A' tool dispatch/return — the dialogue-
-    timing QA run before transcript latencies are trusted (implausibly
-    uniform gaps fingerprint synthetic data; negative/zero gaps are
-    clock or stitching faults — n_nonpos counts them, the timing
-    sibling of ts_sanity). Complements event_latency, which profiles
-    inter-arrival per event TYPE; this conditions on the conversational
-    hand-off.
-
-    Exactness: unix_micros (Spark) and epoch_us (DuckDB) are the same
-    exact int64 epoch-µs, so gaps/sums/min/max are exact bigints and
-    mean_gap_us is ONE IEEE division. int64 headroom: per-transition
-    sum <= n_convs x per-conv time span ~ 1e4 x 3e13 µs/yr = 3e17 at
-    bench scale — three decimal orders below 2^63; decimal(38) is the
-    documented swap past ~1e6 conv-years per transition. Plan: ONE
-    exchange on user_id for the lag window (both lags share it), then
-    a partial+final hash aggregate on the 9-value transition key; no
-    join, no second shuffle (bot_detect's shape)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    role = (
-        F.when(F.col("event_id") % 3 == 0, F.lit("U"))
-        .when(F.col("event_id") % 3 == 1, F.lit("A"))
-        .otherwise(F.lit("T"))
-    )
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    t = (
-        _events(spark, sf_dir)
-        .select("user_id", "event_id", "ts")
-        .withColumn("role", role)
-    )
-    g = t.select(
-        F.concat(F.lag("role").over(w), F.lit("->"), F.col("role")).alias(
-            "transition"
-        ),
-        (us - F.lag(us).over(w)).alias("gap_us"),
-    ).filter(F.col("gap_us").isNotNull())
-    return (
-        g.groupBy("transition")
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            F.sum("gap_us").alias("sum_gap_us"),
-            F.min("gap_us").alias("min_gap_us"),
-            F.max("gap_us").alias("max_gap_us"),
-            F.sum((F.col("gap_us") <= 0).cast("long")).alias("n_nonpos"),
-        )
-        .select(
-            "transition",
-            "n_gaps",
-            "sum_gap_us",
-            (
-                F.col("sum_gap_us").cast("double")
-                / F.col("n_gaps").cast("double")
-            ).alias("mean_gap_us"),
-            "min_gap_us",
-            "max_gap_us",
-            "n_nonpos",
-        )
-    )
-
-
-def q_event_latency(spark, sf_dir):
-    """Per-event-type inter-arrival latency profile: for each event, the
-    gap to the SAME USER's previous event (any type), attributed to the
-    later event's type — n, min, max, exact mean and exact median gap in
-    microseconds (the latency decomposition an agent-traffic dashboard
-    needs before setting session gaps or timeout budgets; q_sessionize's
-    30-min constant comes from exactly this distribution).
-
-    Exactness: mean is ONE division of an exact bigint sum; the median
-    uses the same integer histogram order-statistic trick as
-    q_length_outliers (2×median exact, halved once for display).
-
-    Scale: one exchange on user_id for the lag, then histogram-grid
-    medians. The exact median is the ORACLE-GATE path; at 10^12 events
-    the production answer is q_sketch_profile's mergeable KLL quantiles
-    — this query is its ground-truth checker at test scale."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gaps = (
-        _events(spark, sf_dir)
-        .select("user_id", "event_id", "ts", "event_type")
-        .withColumn("gap_us", us - F.lag(us).over(w))
-        .filter(F.col("gap_us").isNotNull())
-        .select(F.col("event_type").alias("source"), "gap_us")
-    )
-    hist = gaps.groupBy("source", "gap_us").agg(F.count(F.lit(1)).alias("c"))
-    med2 = _median2_from_hist(hist, "gap_us", "c", "med2")
-    agg = gaps.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.min("gap_us").alias("min_gap_us"),
-        F.max("gap_us").alias("max_gap_us"),
-        F.sum("gap_us").alias("_sum"),
-    )
-    return agg.join(med2, "source").select(
-        F.col("source").alias("event_type"),
-        "n_gaps",
-        "min_gap_us",
-        "max_gap_us",
-        (F.col("_sum").cast("double") / F.col("n_gaps").cast("double")).alias(
-            "mean_gap_us"
-        ),
-        (F.col("med2").cast("double") / F.lit(2.0)).alias("median_gap_us"),
-    )
-
-
 def q_lang_source_chi2(spark, sf_dir):
     """Chi-square independence test on the language × source contingency
     table (+ Cramér's V effect size) — the corpus-mix QA check for
@@ -6102,37 +5170,6 @@ def _bootstrap_keep_sql() -> str:
                  / sum(w)::DOUBLE AS rate
         FROM w GROUP BY b
     """
-
-
-K_ANON = 5
-
-
-def q_k_anonymity(spark, sf_dir):
-    """k-anonymity audit over the events stream: equivalence classes on
-    the quasi-identifier pair (event_type, hour) with record count and
-    distinct-user count; a class smaller than k=5 records re-identifies
-    its members and must be suppressed or generalized before the table
-    is released (the privacy gate a training-data pipeline runs on
-    telemetry-derived corpora, complementing the content-level pii/
-    secrets scans). One partial+final hash aggregate — count_distinct
-    is exact here by design (the release decision is per-class and
-    binary); approx_count_distinct is the declared 10^12-row swap."""
-    hour = F.date_trunc("hour", F.col("ts"))
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.col("event_type"), hour.alias("hour"))
-        .agg(
-            F.count(F.lit(1)).alias("class_size"),
-            F.count_distinct(F.col("user_id")).alias("n_users"),
-        )
-        .select(
-            "event_type",
-            "hour",
-            "class_size",
-            "n_users",
-            (F.col("class_size") < K_ANON).alias("k_violation"),
-        )
-    )
 
 
 def q_token_concentration(spark, sf_dir):
@@ -7742,42 +6779,6 @@ def q_unicode_nfc(spark, sf_dir):
     )
 
 
-ZORDER_BITS = 16
-
-
-def q_zorder_key(spark, sf_dir):
-    """Z-order (Morton) layout keys for multi-dimensional data
-    clustering — the storage-layout half of the 100 TB story: writing
-    events sorted by the bit-interleaved (user_id, hour) key co-locates
-    rows that are close in BOTH dimensions, so min/max file statistics
-    prune scans filtered on either one (the Delta/Iceberg OPTIMIZE
-    ZORDER recipe, computed here as a pure-JVM projection). Bit
-    extraction is integer div/mod arithmetic — identical semantics on
-    both engines by construction (no shift-builtin differences); the
-    file bucket is the top 10 bits of the z-key, i.e. the write-time
-    partition a sorted writer would target. Zero shuffle; at scale this
-    feeds repartitionByRange(zkey) + sortWithinPartitions before the
-    write."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = F.pmod(F.col("user_id"), F.lit(1 << ZORDER_BITS)).cast("long")
-    # epoch seconds div 3600: both positive, so integer div == floor
-    b = F.pmod(
-        F.expr("unix_timestamp(ts) div 3600"), F.lit(1 << ZORDER_BITS)
-    ).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(ZORDER_BITS):
-        bit_a = F.shiftright(a, i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(b, i).bitwiseAND(F.lit(1))
-        z = z + bit_a * F.lit(1 << (2 * i + 1)) + bit_b * F.lit(1 << (2 * i))
-    return ev.filter(F.col("ts").isNotNull()).select(
-        "event_id",
-        "user_id",
-        b.alias("hour_bucket"),
-        z.alias("zkey"),
-        F.shiftright(z, 2 * ZORDER_BITS - 10).alias("file_bucket"),
-    )
-
-
 def q_merge_upsert(spark, sf_dir):
     """Warehouse MERGE INTO (upsert) applied as one declarative plan:
     a CDC changeset of inserts / updates / deletes is merged into the
@@ -7826,81 +6827,13 @@ def q_merge_upsert(spark, sf_dir):
     return merged
 
 
-def q_gap_fill(spark, sf_dir):
-    """Time-series gap filling with forward fill: densify each user's
-    daily activity onto a complete min..max day grid (sequence +
-    explode — no driver-side calendar), LEFT-join the observed daily
-    aggregates, and forward-fill the last observed value with
-    last(ignorenulls) over a per-user ordered window. The window runs
-    over the GRID (users x bounded calendar days), never the raw
-    events, so the sort is bounded per user regardless of event volume;
-    the daily aggregate uses max(value) (order-free — a float SUM here
-    would be partitioning-dependent) and an exact event count. The
-    DuckDB twin is generate_series + last_value IGNORE NULLS, proving
-    the fill exact."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    obs = ev.groupBy(
-        "user_id", F.date_trunc("DAY", F.col("ts")).alias("day")
-    ).agg(
-        F.max("value").alias("day_max"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    bounds = obs.groupBy(F.col("user_id").alias("u")).agg(
-        F.min("day").alias("mn"), F.max("day").alias("mx")
-    )
-    grid = bounds.select(
-        "u",
-        F.explode(
-            F.sequence("mn", "mx", F.expr("INTERVAL 1 DAY"))
-        ).alias("gday"),
-    )
-    j = grid.join(
-        obs,
-        (F.col("u") == F.col("user_id")) & (F.col("gday") == F.col("day")),
-        "left",
-    )
-    w = (
-        Window.partitionBy("u")
-        .orderBy("gday")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return j.select(
-        F.col("u").alias("user_id"),
-        F.col("gday").alias("day"),
-        F.col("day_max").isNotNull().alias("observed"),
-        F.last("day_max", ignorenulls=True).over(w).alias("filled"),
-        F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"),
-    )
-
-
-def q_hopping_counts(spark, sf_dir):
-    """Hopping (sliding) window aggregation in batch: event counts per
-    type over 1-hour windows sliding every 15 minutes — the overlap
-    structure streaming alerting reads (each event lands in exactly 4
-    windows). Spark's built-in F.window(slide) expands each row to its
-    member windows BEFORE the partial aggregate, so map-side combine
-    sees the per-(window, type) keys immediately — never a self-join
-    of time bins. The twin reconstructs the same 4 windows arithmetically
-    (epoch div 900 - k) so the engines must agree on window alignment,
-    not just counts."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    agg = ev.groupBy(
-        F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    return agg.select(
-        F.col("w.start").alias("w_start"), "event_type", "n_events"
-    )
-
-
 def q_cube_counts(spark, sf_dir):
     """CUBE grouping sets over (source, lang): all four aggregation
     granularities — per cell, per source, per lang, grand total — in
     ONE pass (Spark expands the grouping sets before the partial
     aggregate; a union of four jobs would rescan the corpus four
-    times). Complements rollup_sets (ROLLUP lacks the column-wise
-    subtotals). Subtotal keys surface as the 'ALL' sentinel with
-    grouping_id disambiguating genuine 'ALL' values, the rollup_sets
-    convention."""
+    times). Subtotal keys surface as the 'ALL' sentinel with
+    grouping_id disambiguating genuine 'ALL' values."""
     agg = (
         _docs(spark, sf_dir)
         .cube("source", "lang")
@@ -8064,59 +6997,6 @@ def q_components(spark, sf_dir):
     return duplicate_clusters(e)
 
 
-RATE_TRAIL = 24  # trailing window (observed hours) for the anomaly base
-
-
-def q_rate_anomaly(spark, sf_dir):
-    """Event-rate anomaly detection: per (event_type, hour) count
-    compared to that type's trailing-24-observed-hours mean — the
-    ops-monitoring staple (ingest spike / outage detection) over the
-    events stream. The window is ROWS-based over OBSERVED hours (gap
-    hours are skipped, documented; identical semantics on both
-    engines). Scale: raw events reduce to the (type × hour) grid in one
-    partial+final hash aggregate FIRST; the lag window runs over that
-    tiny aggregated grid partitioned by event_type — never over raw
-    rows (the event_latency / ks_drift discipline). The anomaly flag is
-    the all-integer comparison cnt * n_trail > 3 * sum_trail; the ratio
-    is one division of exact int64 products."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hourly = (
-        ev.filter(F.col("ts").isNotNull())
-        .groupBy(
-            "event_type", F.date_trunc("hour", "ts").alias("hour")
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(-RATE_TRAIL, -1)
-    )
-    g = hourly.select(
-        "event_type",
-        "hour",
-        "cnt",
-        F.sum("cnt").over(w).alias("sum_trail"),
-        F.count(F.lit(1)).over(w).alias("n_trail"),
-    )
-    return g.select(
-        "event_type",
-        "hour",
-        "cnt",
-        F.coalesce("sum_trail", F.lit(0)).alias("sum_trail"),
-        F.coalesce("n_trail", F.lit(0)).alias("n_trail"),
-        F.when(
-            F.col("n_trail") > 0,
-            (F.col("cnt") * F.col("n_trail")).cast("double")
-            / F.col("sum_trail").cast("double"),
-        ).alias("rate_ratio"),
-        F.when(
-            F.col("n_trail") > 0,
-            F.col("cnt") * F.col("n_trail") > 3 * F.col("sum_trail"),
-        ).otherwise(F.lit(False)).alias("spike"),
-    )
-
-
 def q_pagerank(spark, sf_dir):
     """PageRank over the deterministic domain link graph — the
     link-authority quality prior of web-corpus curation (rank source
@@ -8220,393 +7100,6 @@ def q_bm25_search(spark, sf_dir):
     top = grouped_topk(sc, "qid", "score", "doc_id", 10)
     return top.select(
         "qid", "doc_id", F.round(F.col("score"), 9).alias("score"), "rank"
-    )
-
-
-VIEW_CUTOFF = "2024-01-16"
-
-
-def q_view_maintain(spark, sf_dir):
-    """Incremental materialized-view maintenance: a daily per-event_type
-    aggregate view 'materialized' over events before the cutoff, then a
-    CDC insert batch (events at/after the cutoff) merged in WITHOUT
-    rescanning the base — new = base FULL OUTER delta on the group key,
-    counters summed, min/max maintained (both are insert-maintainable
-    monoids; deletes would need a re-aggregate, documented out). The
-    DuckDB twin recomputes the view from the full table, so the gate
-    proves the textbook IVM equation incremental == recompute. Float
-    sums go through exact integer cents (value is 2-dp; time_rollup
-    idiom), so the merge is order-free and engine-exact. Scale: each
-    side is one partial+final hash aggregate (the delta side scans only
-    the new partition), merge is ONE equi-join on the tiny group key —
-    at 100 TB the base side is a stored table, not a scan."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))  # timestamp: cross-engine-safe
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-
-    def view(df):
-        return df.groupBy(
-            F.col("event_type").alias("et"), day.alias("dy")
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("c"),
-            F.min(cents).alias("mn"),
-            F.max(cents).alias("mx"),
-        )
-
-    base = view(ev.filter(F.col("ts") < F.lit(VIEW_CUTOFF).cast("timestamp")))
-    delta = view(
-        ev.filter(F.col("ts") >= F.lit(VIEW_CUTOFF).cast("timestamp"))
-    ).select(
-        F.col("et").alias("et2"), F.col("dy").alias("dy2"),
-        F.col("n").alias("n2"), F.col("c").alias("c2"),
-        F.col("mn").alias("mn2"), F.col("mx").alias("mx2"),
-    )
-    j = base.join(
-        delta,
-        (F.col("et") == F.col("et2")) & (F.col("dy") == F.col("dy2")),
-        "full_outer",
-    )
-
-    def merge_extreme(a, b, fn):
-        # engine-independent NULL handling: only fn() when both present
-        return (
-            F.when(F.col(a).isNull(), F.col(b))
-            .when(F.col(b).isNull(), F.col(a))
-            .otherwise(fn(F.col(a), F.col(b)))
-        )
-
-    zero = F.lit(0).cast("long")
-    return j.select(
-        F.coalesce("et", "et2").alias("event_type"),
-        F.coalesce("dy", "dy2").alias("day"),
-        (F.coalesce(F.col("n"), zero) + F.coalesce(F.col("n2"), zero)).alias(
-            "n_events"
-        ),
-        (
-            (
-                F.coalesce(F.col("c"), zero) + F.coalesce(F.col("c2"), zero)
-            ).cast("double")
-            / F.lit(100.0)
-        ).alias("sum_value"),
-        (merge_extreme("mn", "mn2", F.least).cast("double") / F.lit(100.0)).alias(
-            "min_value"
-        ),
-        (merge_extreme("mx", "mx2", F.greatest).cast("double") / F.lit(100.0)).alias(
-            "max_value"
-        ),
-    )
-
-
-PRUNE_D1, PRUNE_D2 = "2024-01-10", "2024-01-19"
-PRUNE_U1, PRUNE_U2 = 30, 59
-UID_BUCKET_W = 15
-
-
-def q_pruning_audit(spark, sf_dir):
-    """Partition-pruning + zone-map skipping audit: events laid out as a
-    writer clustered on (day, user_id-bucket) would write them — one
-    'file' per (day partition, uid bucket of width 15) — with per-file
-    min/max statistics, then a conjunctive predicate (day range AND
-    user range) classified per file: pruned_partition (the partition
-    value itself is out of range — never listed), pruned_stats (listed,
-    but min/max uid disjoint from the range — footer-skipped), scan
-    (must be read). This is the audit that tells you whether the layout
-    zorder_key proposes actually skips for your workload —
-    the scan fraction IS the benefit. Classification is pure integer/
-    date arithmetic over one partial+final hash aggregate; the oracle
-    recomputes it relationally, so the gate proves the stats math."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))  # timestamp: cross-engine-safe
-    # integer div (not / + cast: Spark / is double division; uid >= 0)
-    ub = F.expr(f"user_id div {UID_BUCKET_W}").cast("long")
-    per = ev.groupBy(day.alias("day"), ub.alias("uid_bucket")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("user_id").alias("min_uid"),
-        F.max("user_id").alias("max_uid"),
-    )
-    in_days = F.col("day").between(
-        F.lit(PRUNE_D1).cast("timestamp"), F.lit(PRUNE_D2).cast("timestamp")
-    )
-    stats_hit = (F.col("max_uid") >= PRUNE_U1) & (
-        F.col("min_uid") <= PRUNE_U2
-    )
-    status = (
-        F.when(~in_days, F.lit("pruned_partition"))
-        .when(~stats_hit, F.lit("pruned_stats"))
-        .otherwise(F.lit("scan"))
-    )
-    return per.select(
-        "day", "uid_bucket", "n_rows", "min_uid", "max_uid",
-        status.alias("status"),
-    )
-
-
-def q_window_suite(spark, sf_dir):
-    """The analytic window-function family demonstrated end-to-end on
-    one bounded surface: per-(user, day) daily spend (aggregated FIRST,
-    so every window below runs over the <=31-row user grid, never raw
-    events — the 100 TB rule for windows), then running total,
-    trailing-7-row moving average, dense_rank of days by spend, ntile
-    quartiles in day order, and the lag delta. Exactness: spend flows
-    as integer cents; the moving average is ONE division of an exact
-    window sum by 100*count; dense_rank ties are integer-exact; ntile
-    and lag order on the unique day. All window partitions are
-    per-user day grids — bounded, no hot task at any scale."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    grid = ev.groupBy(F.col("user_id"), day.alias("day")).agg(
-        F.sum(cents).alias("c"), F.count(F.lit(1)).alias("n_events")
-    )
-    wd = Window.partitionBy("user_id").orderBy("day")
-    wt = wd.rowsBetween(-6, 0)
-    wr = Window.partitionBy("user_id").orderBy(F.desc("c"))
-    return grid.select(
-        "user_id",
-        "day",
-        "n_events",
-        (F.col("c").cast("double") / F.lit(100.0)).alias("day_spend"),
-        (
-            F.sum("c").over(
-                wd.rowsBetween(Window.unboundedPreceding, 0)
-            ).cast("double")
-            / F.lit(100.0)
-        ).alias("running_total"),
-        (
-            F.sum("c").over(wt).cast("double")
-            / (F.lit(100).cast("long") * F.count(F.lit(1)).over(wt)).cast(
-                "double"
-            )
-        ).alias("move_avg_7"),
-        F.dense_rank().over(wr).cast("int").alias("spend_rank"),
-        F.ntile(4).over(wd).cast("int").alias("quartile"),
-        (
-            (F.col("c") - F.lag("c", 1).over(wd)).cast("double")
-            / F.lit(100.0)
-        ).alias("delta_prev"),
-    )
-
-
-CHANGEPOINT_STAT_MIN = 50.0
-
-
-def q_changepoint_cusum(spark, sf_dir):
-    """At-most-one-changepoint (AMOC) detection over the daily event
-    count series per event_type — the CUSUM-family split statistic via
-    exact prefix sums: for each candidate split day k of n,
-
-        stat_k = (pre_k*(n-k) - (tot-pre_k)*k)^2 / (k*(n-k))
-
-    (the squared between-segment contrast, the quantity CUSUM
-    maximizes). pre/tot/k/n are exact int64, so stat is ONE division of
-    exact integers — bit-identical cross-engine — and the argmax
-    (stat desc, day asc) picks the same split everywhere. The per-type
-    series is the bounded day grid (aggregated first), so the prefix-sum
-    window runs over <=31 rows per type, never raw events. Output: the
-    best split per type, the means before/after (one exact division
-    each), and a changed flag."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))
-    grid = ev.groupBy(F.col("event_type"), day.alias("day")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    wd = Window.partitionBy("event_type").orderBy("day")
-    wall = Window.partitionBy("event_type")
-    pre = F.sum("x").over(wd.rowsBetween(Window.unboundedPreceding, 0))
-    k = F.row_number().over(wd).cast("long")
-    # whole-partition window aggregates instead of a groupBy + join-back:
-    # one scan, one shuffle, and the grid is never materialized twice
-    cur = grid.select(
-        "event_type",
-        "day",
-        pre.alias("pre"),
-        k.alias("k"),
-        F.sum("x").over(wall).alias("tot"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-    ).filter(F.col("k") < F.col("n"))  # interior splits only
-    num = (
-        F.col("pre") * (F.col("n") - F.col("k"))
-        - (F.col("tot") - F.col("pre")) * F.col("k")
-    )
-    stat = (num * num).cast("double") / (
-        F.col("k") * (F.col("n") - F.col("k"))
-    ).cast("double")
-    scored = cur.select(
-        "event_type", "day", "pre", "k", "tot", "n", stat.alias("stat")
-    )
-    wbest = Window.partitionBy("event_type").orderBy(
-        F.desc("stat"), F.asc("day")
-    )
-    best = scored.withColumn("rn", F.row_number().over(wbest)).filter(
-        F.col("rn") == 1
-    )
-    return best.select(
-        "event_type",
-        F.col("day").alias("split_day"),
-        F.round(F.col("stat"), 9).alias("stat"),
-        (F.col("pre").cast("double") / F.col("k").cast("double")).alias(
-            "mean_before"
-        ),
-        (
-            (F.col("tot") - F.col("pre")).cast("double")
-            / (F.col("n") - F.col("k")).cast("double")
-        ).alias("mean_after"),
-        (F.col("stat") > F.lit(float(CHANGEPOINT_STAT_MIN))).alias("changed"),
-    )
-
-
-CONC_DUR_S = 300  # each event holds a resource for 5 minutes
-
-
-def q_concurrency_profile(spark, sf_dir):
-    """Peak concurrency per event_type by sweep line: every event is an
-    interval [ts, ts+300s); +1/-1 edges sorted by (t, delta, id) — ends
-    close BEFORE starts at the same instant (delta asc), the standard
-    convention — and the running edge sum is the live concurrency. The
-    running sum is the range-chunked TWO-PHASE prefix sum
-    (ops/sampling.token_budget_sample's shape): per-(type, hour-chunk)
-    partial sums roll into chunk offsets over the tiny chunk table, and
-    the raw-edge window partitions on (type, chunk) — bounded by an
-    hour of edges, never a whole type's history in one task (the
-    single-window form is the twin, so the gate proves the two-phase
-    decomposition exact). Peak selection is the window-free
-    grouped_topk (conc desc, earliest instant on ties)."""
-    from qamd_spark.ops.text import grouped_topk
-
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull()).select(
-        "event_id", "event_type", "ts"
-    )
-    edges = ev.select(
-        "event_type",
-        "event_id",
-        F.explode(
-            F.array(
-                F.struct(F.col("ts").alias("t"), F.lit(1).alias("d")),
-                F.struct(
-                    (
-                        F.col("ts")
-                        + F.expr(f"INTERVAL {CONC_DUR_S} SECONDS")
-                    ).alias("t"),
-                    F.lit(-1).alias("d"),
-                ),
-            )
-        ).alias("e"),
-    ).select(
-        "event_type", "event_id",
-        F.col("e.t").alias("t"), F.col("e.d").alias("d"),
-    )
-    d = edges.withColumn(
-        "_chunk", F.expr("unix_timestamp(t) div 3600")
-    ).persist()  # feeds the chunk-sum branch AND the running-sum probe
-    chunk_sums = d.groupBy("event_type", "_chunk").agg(
-        F.sum("d").alias("_s")
-    )
-    woff = (
-        Window.partitionBy("event_type")
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = chunk_sums.select(
-        "event_type", "_chunk",
-        F.coalesce(F.sum("_s").over(woff), F.lit(0)).alias("_off"),
-    )
-    wrun = (
-        Window.partitionBy("event_type", "_chunk")
-        .orderBy("t", "d", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = d.join(F.broadcast(offs), ["event_type", "_chunk"]).select(
-        "event_type", "t",
-        (F.col("_off") + F.sum("d").over(wrun)).alias("conc"),
-    )
-    top = grouped_topk(run, "event_type", "conc", "t", 1)
-    return top.select(
-        "event_type",
-        F.col("conc").cast("long").alias("peak"),
-        F.col("t").alias("peak_at"),
-    )
-
-
-def q_scd2_build(spark, sf_dir):
-    """Slowly-Changing-Dimension Type 2 build: the event stream treated
-    as attribute-change records per user (state = event_type at ts)
-    becomes a versioned dimension — one row per change with
-    [valid_from, valid_to) validity (valid_to = next change's ts, the
-    2200-01-01 high-date sentinel while current — the SCD2 open-ended
-    convention, chosen inside pandas' datetime64[ns] range because
-    9999-12-31 overflows the Arrow->pandas ns path to NaT, and NaT
-    poisons ordered comparison), a monotonically increasing version,
-    and an is_current flag. The warehouse sibling of merge_upsert: upsert
-    overwrites, SCD2 preserves history. Total order inside a user is
-    (ts, event_id) — deterministic under timestamp ties. One scan, one
-    shuffle on user_id; window partitions are per-user change histories
-    (bounded by a user's activity, the natural grain — a hot user is
-    still one ordered pass, and the AQE skew story covers the join-side
-    uses downstream)."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull()).select(
-        "user_id", "event_id", "ts", F.col("event_type").alias("state")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    lead_ts = F.lead("ts", 1).over(w)
-    hi = F.lit("2200-01-01").cast("timestamp")
-    return ev.select(
-        "user_id",
-        F.row_number().over(w).cast("int").alias("version"),
-        "state",
-        F.col("ts").alias("valid_from"),
-        F.coalesce(lead_ts, hi).alias("valid_to"),
-        lead_ts.isNull().alias("is_current"),
-    )
-
-
-def q_trend_slope(spark, sf_dir):
-    """Per-event_type activity trend: ordinary-least-squares slope and
-    intercept of hourly event counts against the hour index — the
-    is-this-metric-growing primitive behind dashboard trend arrows and
-    alert baselines (the regression sibling of rate_anomaly's z-score
-    and changepoint_cusum's split test). All five OLS moments (n, Σx,
-    Σy, Σxy, Σx²) are exact int64 — x is the hour RELATIVE to each
-    type's first hour, which both centers the magnitudes (Σy·Σx² stays
-    ~1e15 at sf1, far from int64 edge; absolute epoch-hours would not)
-    and makes the intercept the value at the series start. slope and
-    intercept are each ONE division of exact integers (the textbook
-    closed forms with common denominator n·Σx²−(Σx)²) — bit-identical
-    cross-engine. One scan; the hourly grid is aggregated first and
-    every window/aggregate after it runs at grid grain."""
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
-    hour = F.expr("unix_timestamp(ts) div 3600")
-    grid = ev.groupBy(F.col("event_type"), hour.alias("h")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    x = (F.col("h") - F.min("h").over(Window.partitionBy("event_type"))).alias(
-        "x"
-    )
-    g = grid.select("event_type", x, "y")
-    agg = g.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = (
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-        / den.cast("double")
-    )
-    intercept = (
-        (F.col("sy") * F.col("sxx") - F.col("sx") * F.col("sxy")).cast(
-            "double"
-        )
-        / den.cast("double")
-    )
-    return agg.select(
-        "event_type",
-        F.col("n").alias("n_hours"),
-        F.round(slope, 9).alias("slope"),
-        F.round(intercept, 9).alias("intercept"),
-        (slope > F.lit(0.0)).alias("trending_up"),
     )
 
 
@@ -8941,37 +7434,6 @@ def q_header_footer_strip(spark, sf_dir):
     )
 
 
-def q_l_diversity(spark, sf_dir):
-    """l-diversity audit (Machanavajjhala et al. ICDE'06 — the
-    refinement of k_anonymity's class-size gate): within each
-    quasi-identifier class (event_type, hour), count DISTINCT values of
-    the sensitive attribute (the `k` field inside props). A class where
-    every member shares one sensitive value leaks it even when the
-    class is k-large, so the release gate is l >= 3 distinct values.
-    One partial+final hash aggregate over the QI pair; exact
-    count_distinct by design (binary per-class release decision) —
-    approx_count_distinct is the declared 10^12-row swap. The JSON
-    extraction reuses json_props' proven cross-engine expression."""
-    hour = F.date_trunc("hour", F.col("ts"))
-    sens = F.get_json_object("props", "$.k").cast("long")
-    return (
-        _events(spark, sf_dir)
-        .select("event_type", hour.alias("hour"), sens.alias("s"))
-        .groupBy("event_type", "hour")
-        .agg(
-            F.count(F.lit(1)).alias("class_size"),
-            F.count_distinct(F.col("s")).alias("l_distinct"),
-        )
-        .select(
-            "event_type",
-            "hour",
-            "class_size",
-            "l_distinct",
-            (F.col("l_distinct") < 3).alias("l_violation"),
-        )
-    )
-
-
 def q_dedup_recall_audit(spark, sf_dir):
     """Pair-level precision/recall of the PROBABILISTIC dedup path
     (minhash LSH keep-first edges) measured against the EXACT
@@ -9200,8 +7662,7 @@ def q_pseudonymize(spark, sf_dir):
     pepper/width (n_sharing_pseudo = 1 for every row).  Two bounded
     hash aggregates (per conv, then per pseudonym) + one equi-join —
     no Python, no window, salt-free reproducibility (the hash_sample
-    design).  Complements k_anonymity / l_diversity / dp_release: those
-    audit the released aggregates, this protects the keys themselves."""
+    design)."""
     conv = (F.col("doc_id") % 97).cast("string").alias("conv_id")
     per = (
         _docs(spark, sf_dir)
@@ -9677,60 +8138,6 @@ def q_response_rouge_l(spark, sf_dir):
             yield pd.DataFrame(out)
 
     return pairs.mapInPandas(run, schema=schema)
-
-
-def q_json_keys_profile(spark, sf_dir):
-    """Semi-structured schema audit over the events props column: key
-    presence counts and rates after deterministic enrichment (extra
-    keys stamped by event_id arithmetic, mirrored in the twin, so the
-    profile sees a heterogeneous document set — the schema-inference /
-    drift check run before trusting spark.read.json's sampled schema).
-    json_object_keys is JVM-side; one explode + one partial+final hash
-    aggregate on a tiny key space + broadcast total join."""
-    ev = _events(spark, sf_dir)
-    # re-emit k as a QUOTED, escaped JSON string: get_json_object returns
-    # raw unquoted values, so splicing them back verbatim would produce
-    # malformed JSON the moment k is non-numeric (Spark would silently
-    # drop the row, DuckDB would raise — a gate-blind divergence)
-    k = F.get_json_object("props", "$.k")
-    esc = F.replace(
-        F.replace(k, F.lit("\\"), F.lit("\\\\")),
-        F.lit('"'),
-        F.lit('\\"'),
-    )
-    kpart = F.when(k.isNull(), F.lit('"k": null')).otherwise(
-        F.concat(F.lit('"k": "'), esc, F.lit('"'))
-    )
-    stamped = F.concat(
-        F.lit("{"),
-        kpart,
-        F.when(F.col("event_id") % 3 == 0, F.lit(', "tag": "a"')).otherwise(
-            F.lit("")
-        ),
-        F.when(F.col("event_id") % 5 == 1, F.lit(', "arr": [1, 2]')).otherwise(
-            F.lit("")
-        ),
-        F.when(
-            F.col("event_id") % 7 == 2, F.lit(', "nested": {"x": 1}')
-        ).otherwise(F.lit("")),
-        F.lit("}"),
-    )
-    keys = ev.select(
-        F.explode(F.json_object_keys(stamped)).alias("key")
-    )
-    tot = ev.agg(F.count(F.lit(1)).alias("n_tot"))
-    return (
-        keys.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n_present"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "key",
-            "n_present",
-            (
-                F.col("n_present").cast("double") / F.col("n_tot").cast("double")
-            ).alias("presence_rate"),
-        )
-    )
 
 
 def q_source_vocab_overlap(spark, sf_dir):
@@ -10277,26 +8684,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "watermark_scan": q_watermark_scan,
         "citation_check": q_citation_check,
         "tool_args_valid": q_tool_args_valid,
-        "bot_detect": q_bot_detect,
         "conv_fork_detect": q_conv_fork_detect,
         "homoglyph_scan": q_homoglyph_scan,
         "kendall_tau": q_kendall_tau,
-        "km_survival": q_km_survival,
         "toxicity_escalation": q_toxicity_escalation,
         "wilson_winrate": q_wilson_winrate,
         "mann_whitney": q_mann_whitney,
-        "dp_release": q_dp_release,
         "bh_fdr": q_bh_fdr,
         "mcnemar": q_mcnemar,
-        "theil_sen": q_theil_sen,
-        "mann_kendall": q_mann_kendall,
         "krippendorff_alpha": q_krippendorff_alpha,
         "shapley_rules": q_shapley_rules,
         "user_retry_detect": q_user_retry_detect,
         "pii_echo": q_pii_echo,
         "emd_drift": q_emd_drift,
-        "weekday_profile": q_weekday_profile,
-        "autocorr_lag1": q_autocorr_lag1,
         "runs_test": q_runs_test,
         "markdown_audit": q_markdown_audit,
         "number_grounding": q_number_grounding,
@@ -10307,9 +8707,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rule_phi": q_rule_phi,
         "leet_scan": q_leet_scan,
         "conv_quality_card": q_conv_quality_card,
-        "t_closeness": q_t_closeness,
         "fleiss_kappa": q_fleiss_kappa,
-        "fd_mine": q_fd_mine,
         "cdc_dedup": q_cdc_dedup,
         "conv_shape": q_conv_shape,
         "conv_lang_consistency": q_conv_lang_consistency,
@@ -10318,7 +8716,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_weights": q_dsir_weights,
         "percentile_profile": q_percentile_profile,
         "dsir_resample": q_dsir_resample,
-        "cohort_retention": q_cohort_retention,
         "pack_efficiency": q_pack_efficiency,
         "sketch_profile": q_sketch_profile,
         "heavy_hitters_sketch": q_heavy_hitters_sketch,
@@ -10326,11 +8723,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "normalize_text": q_normalize_text,
         "conv_export": q_conv_export,
         "secrets_scan": q_secrets_scan,
-        "rollup_sets": q_rollup_sets,
-        "pivot_counts": q_pivot_counts,
         "gopher_lines": q_gopher_lines,
         "url_scan": q_url_scan,
-        "value_correlation": q_value_correlation,
         "spearman_signals": q_spearman_signals,
         "tool_assoc": q_tool_assoc,
         "weighted_sample": q_weighted_sample,
@@ -10338,7 +8732,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "setsim_join": q_setsim_join,
         "typo_mine": q_typo_mine,
         "quantile_norm": q_quantile_norm,
-        "l_diversity": q_l_diversity,
         "header_footer_strip": q_header_footer_strip,
         "isotonic_calibrate": q_isotonic_calibrate,
         "threshold_sweep": q_threshold_sweep,
@@ -10361,11 +8754,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conv_features": q_conv_features,
         "conv_verdicts": q_conv_verdicts,
         "hash_sample": q_hash_sample,
-        "sessionize": q_sessionize,
-        "range_join": q_range_join,
-        "time_rollup": q_time_rollup,
-        "ts_sanity": q_ts_sanity,
-        "funnel": q_funnel,
         "field_odd_chars": q_field_odd_chars,
         "line_filter": q_line_filter,
         "pii_luhn": q_pii_luhn,
@@ -10381,8 +8769,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "role_alternation": q_role_alternation,
         "corpus_diff": q_corpus_diff,
         "contamination_ngrams": q_contamination_ngrams,
-        "asof_join": q_asof_join,
-        "json_props": q_json_props,
         "token_topk": q_token_topk,
         "length_histogram": q_length_histogram,
         "metadata": q_metadata,
@@ -10412,11 +8798,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ks_drift": q_ks_drift,
         "length_outliers": q_length_outliers,
         "ngram_novelty": q_ngram_novelty,
-        "event_latency": q_event_latency,
-        "turn_latency": q_turn_latency,
         "lang_source_chi2": q_lang_source_chi2,
         "quality_calibration": q_quality_calibration,
-        "k_anonymity": q_k_anonymity,
         "token_concentration": q_token_concentration,
         "collocations": q_collocations,
         "tool_usage": q_tool_usage,
@@ -10452,21 +8835,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank": q_pagerank,
         "triangles": q_triangles,
         "components": q_components,
-        "rate_anomaly": q_rate_anomaly,
-        "zorder_key": q_zorder_key,
         "merge_upsert": q_merge_upsert,
-        "gap_fill": q_gap_fill,
-        "hopping_counts": q_hopping_counts,
         "cube_counts": q_cube_counts,
         "inverted_index": q_inverted_index,
         "bm25_search": q_bm25_search,
-        "view_maintain": q_view_maintain,
-        "pruning_audit": q_pruning_audit,
-        "window_suite": q_window_suite,
-        "changepoint_cusum": q_changepoint_cusum,
-        "concurrency_profile": q_concurrency_profile,
-        "scd2_build": q_scd2_build,
-        "trend_slope": q_trend_slope,
         "winnow": q_winnow,
         "winnow_containment": q_winnow_containment,
         "dedup_clusters": q_dedup_clusters,
@@ -10482,7 +8854,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bidi_scan": q_bidi_scan,
         "shuffle_quality": q_shuffle_quality,
         "response_rouge_l": q_response_rouge_l,
-        "json_keys_profile": q_json_keys_profile,
         "source_vocab_overlap": q_source_vocab_overlap,
         "ngram_entropy": q_ngram_entropy,
         "lpa_communities": q_lpa_communities,
@@ -10748,33 +9119,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) = sum(ok) AS args_clean
             FROM v GROUP BY conv
         """,
-        "bot_detect": """
-            WITH e AS (
-              SELECT user_id, ts, event_id,
-                     row_number() OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS rn
-              FROM events),
-            x AS (
-              SELECT user_id, ts, event_id,
-                     (CASE WHEN user_id % 17 = 0
-                           THEN 1704067200 + 30 * (rn - 1)
-                           ELSE epoch_us(ts) // 1000000 END)::BIGINT AS ep
-              FROM e),
-            g AS (
-              SELECT user_id,
-                     ep - lag(ep) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS gap
-              FROM x),
-            a AS (
-              SELECT user_id, count(*)::BIGINT AS n_gaps,
-                     sum(gap)::BIGINT AS s1,
-                     sum(gap*gap)::BIGINT AS s2
-              FROM g WHERE gap IS NOT NULL GROUP BY user_id)
-            SELECT user_id, n_gaps,
-                   (n_gaps*s2 - s1*s1) / (s1*s1) AS cv2,
-                   100*(n_gaps*s2 - s1*s1) < s1*s1 AS bot_flag
-            FROM a WHERE n_gaps >= 5 AND s1 > 0
-        """,
         "conv_fork_detect": """
             WITH t AS (
               SELECT (doc_id % 97)::BIGINT AS conv,
@@ -10874,45 +9218,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN txs t1 ON m.source = t1.source
             JOIN tys t2 ON m.source = t2.source
             LEFT JOIN pairs p ON m.source = p.s
-        """,
-        "km_survival": """
-            WITH per AS (
-              SELECT user_id,
-                     min(epoch_us(ts) // 1000000)::BIGINT AS first_s,
-                     max(epoch_us(ts) // 1000000)::BIGINT AS last_s
-              FROM events GROUP BY user_id),
-            u AS (
-              SELECT user_id,
-                     ((last_s - first_s) // 86400)::BIGINT AS life_d,
-                     last_s >= (SELECT max(last_s) FROM per) - 7 * 86400
-                       AS censored
-              FROM per),
-            byd AS (
-              SELECT life_d,
-                     sum(CASE WHEN censored THEN 0 ELSE 1 END)::BIGINT
-                       AS n_events,
-                     sum(CASE WHEN censored THEN 1 ELSE 0 END)::BIGINT
-                       AS n_censored,
-                     count(*)::BIGINT AS n_at
-              FROM u GROUP BY life_d),
-            k AS (
-              SELECT life_d, n_events, n_censored,
-                     sum(n_at) OVER (ORDER BY life_d
-                                     ROWS BETWEEN CURRENT ROW
-                                     AND UNBOUNDED FOLLOWING)::BIGINT
-                       AS n_risk
-              FROM byd),
-            f AS (
-              SELECT life_d, n_risk, n_events, n_censored,
-                     list((1.0::DOUBLE - n_events::DOUBLE / n_risk::DOUBLE))
-                       OVER (ORDER BY life_d
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS factors
-              FROM k)
-            SELECT life_d, n_risk, n_events, n_censored,
-                   list_reduce(list_prepend(1.0::DOUBLE, factors),
-                               (a, b) -> a * b) AS survival
-            FROM f
         """,
         "toxicity_escalation": """
             WITH t AS (
@@ -11039,24 +9344,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE FALSE END AS length_drift
             FROM u CROSS JOIN tot
         """,
-        "dp_release": f"""
-            WITH g AS (
-              SELECT event_type, count(*)::BIGINT AS true_count
-              FROM events GROUP BY event_type),
-            n AS (
-              SELECT event_type, true_count,
-                     ({_sql_dp_table()})[
-                       ((strpos('0123456789abcdef',
-                                substr(md5(event_type || '|dp-v1'), 1, 1)) - 1)
-                          * 16
-                        + (strpos('0123456789abcdef',
-                                  substr(md5(event_type || '|dp-v1'), 2, 1))
-                           - 1)) % 256 + 1]::BIGINT AS noise
-              FROM g)
-            SELECT event_type, true_count, noise,
-                   greatest(true_count + noise, 0)::BIGINT AS released_count
-            FROM n
-        """,
         "bh_fdr": """
             WITH d AS (
               SELECT doc_id,
@@ -11116,86 +9403,6 @@ def oracle_sql() -> dict[str, str]:
                     1000 * (b - c) * (b - c) > 3841 * (b + c))
                      AS versions_differ
             FROM a
-        """,
-        "theil_sen": """
-            WITH grid AS (
-              SELECT event_type,
-                     (epoch_us(ts) // 1000000 // 86400)::BIGINT AS d,
-                     count(*)::BIGINT AS y
-              FROM events WHERE ts IS NOT NULL
-              GROUP BY event_type, d),
-            pairs AS (
-              SELECT g1.event_type AS et, g1.d AS d1, g2.d AS d2,
-                     (g2.y - g1.y) / (g2.d - g1.d) AS slope
-              FROM grid g1 JOIN grid g2
-                ON g1.event_type = g2.event_type AND g1.d < g2.d),
-            ranked AS (
-              SELECT et, slope,
-                     row_number() OVER (PARTITION BY et
-                                        ORDER BY slope, d1, d2) AS rn,
-                     count(*) OVER (PARTITION BY et)::BIGINT AS n_pairs
-              FROM pairs),
-            med AS (
-              SELECT et, n_pairs, slope AS ts_slope
-              FROM ranked WHERE rn = (n_pairs + 1) // 2),
-            days AS (
-              SELECT event_type, count(*)::BIGINT AS n_days
-              FROM grid GROUP BY event_type)
-            SELECT d.event_type, d.n_days, m.n_pairs, m.ts_slope
-            FROM days d JOIN med m ON d.event_type = m.et
-        """,
-        "mann_kendall": """
-            WITH grid AS (
-              SELECT event_type,
-                     (epoch_us(ts) // 1000000 // 86400)::BIGINT AS d,
-                     count(*)::BIGINT AS y
-              FROM events WHERE ts IS NOT NULL
-              GROUP BY event_type, d),
-            sp AS (
-              SELECT g1.event_type AS et,
-                     sum(CASE WHEN g2.y > g1.y THEN 1
-                              WHEN g2.y < g1.y THEN -1 ELSE 0 END)::BIGINT
-                       AS s
-              FROM grid g1 JOIN grid g2
-                ON g1.event_type = g2.event_type AND g1.d < g2.d
-              GROUP BY g1.event_type),
-            ties AS (
-              SELECT et, sum(t * (t - 1) * (2 * t + 5))::BIGINT AS tie18
-              FROM (SELECT event_type AS et, y, count(*)::BIGINT AS t
-                    FROM grid GROUP BY event_type, y)
-              GROUP BY et),
-            nd AS (
-              SELECT event_type AS et, count(*)::BIGINT AS n_days
-              FROM grid GROUP BY event_type)
-            SELECT nd.et AS event_type, nd.n_days, sp.s,
-                   t.tie18 AS tie_term18,
-                   CASE WHEN nd.n_days * (nd.n_days - 1)
-                             * (2 * nd.n_days + 5) - t.tie18 > 0
-                        THEN CASE
-                          WHEN sp.s > 0 THEN (sp.s - 1)
-                            / sqrt((nd.n_days * (nd.n_days - 1)
-                                    * (2 * nd.n_days + 5)
-                                    - t.tie18)::DOUBLE / 18)
-                          WHEN sp.s < 0 THEN (sp.s + 1)
-                            / sqrt((nd.n_days * (nd.n_days - 1)
-                                    * (2 * nd.n_days + 5)
-                                    - t.tie18)::DOUBLE / 18)
-                          ELSE 0.0 END
-                        END AS z,
-                   coalesce(CASE WHEN nd.n_days * (nd.n_days - 1)
-                                      * (2 * nd.n_days + 5) - t.tie18 > 0
-                                 THEN abs(CASE
-                                   WHEN sp.s > 0 THEN (sp.s - 1)
-                                     / sqrt((nd.n_days * (nd.n_days - 1)
-                                             * (2 * nd.n_days + 5)
-                                             - t.tie18)::DOUBLE / 18)
-                                   WHEN sp.s < 0 THEN (sp.s + 1)
-                                     / sqrt((nd.n_days * (nd.n_days - 1)
-                                             * (2 * nd.n_days + 5)
-                                             - t.tie18)::DOUBLE / 18)
-                                   ELSE 0.0 END) > 1.96
-                                 END, FALSE) AS trending
-            FROM nd JOIN sp ON nd.et = sp.et JOIN ties t ON nd.et = t.et
         """,
         "krippendorff_alpha": """
             WITH v AS (
@@ -11360,58 +9567,6 @@ def oracle_sql() -> dict[str, str]:
               GROUP BY source, n_s, n_r)
             SELECT source, n_s, num AS w1_numer,
                    num / (n_s * n_r) AS w1
-            FROM a
-        """,
-        "weekday_profile": """
-            WITH grid AS (
-              SELECT event_type,
-                     (epoch_us(ts) // 1000000 // 86400)::BIGINT AS d,
-                     count(*)::BIGINT AS y
-              FROM events WHERE ts IS NOT NULL
-              GROUP BY event_type, d),
-            per AS (
-              SELECT event_type, ((d + 4) % 7)::BIGINT AS weekday,
-                     sum(y)::BIGINT AS o, count(*)::BIGINT AS d_wd
-              FROM grid GROUP BY event_type, weekday),
-            tot AS (
-              SELECT event_type, sum(y)::BIGINT AS n,
-                     count(*)::BIGINT AS d_total
-              FROM grid GROUP BY event_type)
-            SELECT p.event_type, p.weekday, p.o AS n_events, p.d_wd,
-                   p.o / p.d_wd AS rate_per_day,
-                   t.n / t.d_total AS expected_per_day,
-                   5 * abs(p.o * t.d_total - t.n * p.d_wd)
-                     > t.n * p.d_wd AS seasonal_dev
-            FROM per p JOIN tot t ON p.event_type = t.event_type
-        """,
-        "autocorr_lag1": """
-            WITH grid AS (
-              SELECT event_type,
-                     (epoch_us(ts) // 1000000 // 86400)::BIGINT AS d,
-                     count(*)::BIGINT AS y
-              FROM events WHERE ts IS NOT NULL
-              GROUP BY event_type, d),
-            lagged AS (
-              SELECT event_type, d, y,
-                     y * lag(y) OVER (PARTITION BY event_type ORDER BY d)
-                       AS yy
-              FROM grid),
-            a AS (
-              SELECT event_type, count(*)::BIGINT AS n_days,
-                     sum(y)::BIGINT AS s,
-                     sum(y * y)::BIGINT AS s2,
-                     sum(yy)::BIGINT AS syy,
-                     arg_min(y, d)::BIGINT AS y_first,
-                     arg_max(y, d)::BIGINT AS y_last
-              FROM lagged GROUP BY event_type)
-            SELECT event_type, n_days,
-                   CASE WHEN n_days >= 3
-                         AND n_days * (n_days * s2 - s * s) > 0
-                        THEN (n_days * n_days * syy
-                              - n_days * s * (2 * s - y_first - y_last)
-                              + (n_days - 1) * s * s)
-                             / (n_days * (n_days * s2 - s * s))
-                        END AS r1
             FROM a
         """,
         "runs_test": """
@@ -11621,39 +9776,6 @@ def oracle_sql() -> dict[str, str]:
                      AS evasion_detected
             FROM n
         """,
-        "t_closeness": """
-            WITH e AS (
-              SELECT event_type, date_trunc('day', ts) AS day,
-                     (props ->> '$.k')::BIGINT AS s
-              FROM events
-              WHERE (props ->> '$.k') IS NOT NULL),
-            cv AS (
-              SELECT event_type, day, s, count(*)::BIGINT AS c
-              FROM e GROUP BY 1, 2, 3),
-            gg AS (
-              SELECT s, count(*)::BIGINT AS gc FROM e GROUP BY 1),
-            np AS (
-              SELECT event_type, day, sum(c)::BIGINT AS n
-              FROM cv GROUP BY 1, 2),
-            tot AS (SELECT count(*)::BIGINT AS totn FROM e),
-            j AS (
-              SELECT cv.event_type, cv.day, cv.c, gg.gc, np.n, tot.totn
-              FROM cv
-              JOIN np USING (event_type, day)
-              JOIN gg USING (s)
-              CROSS JOIN tot),
-            a AS (
-              SELECT event_type, day,
-                     min(n)::BIGINT AS class_size,
-                     min(totn)::BIGINT AS nn,
-                     sum(abs(c*totn - gc*n) - gc*n)::BIGINT AS tsum
-              FROM j GROUP BY 1, 2)
-            SELECT event_type, day, class_size,
-                   (class_size*nn + tsum)::BIGINT AS tv_scaled,
-                   (class_size*nn + tsum) / (2*class_size*nn) AS t_distance,
-                   (class_size*nn + tsum) > class_size*nn AS t_violation
-            FROM a
-        """,
         "fleiss_kappa": """
             WITH d AS (
               SELECT source, n_chars::BIGINT AS nc FROM documents),
@@ -11691,34 +9813,6 @@ def oracle_sql() -> dict[str, str]:
                              / (2*(9*n_docs*n_docs - (t0*t0+t1*t1+t2*t2)))
                         ELSE NULL END AS kappa
             FROM a
-        """,
-        "fd_mine": """
-            WITH p AS (
-              SELECT 'event_id->user_id' AS fd,
-                     CAST(event_id AS VARCHAR) AS det,
-                     CAST(user_id AS VARCHAR) AS dep FROM events
-              UNION ALL
-              SELECT 'user_id->event_type', CAST(user_id AS VARCHAR),
-                     event_type FROM events
-              UNION ALL
-              SELECT 'event_type->user_id', event_type,
-                     CAST(user_id AS VARCHAR) FROM events
-              UNION ALL
-              SELECT 'props_k->event_type', props ->> '$.k',
-                     event_type FROM events),
-            g AS (
-              SELECT fd, det, count(DISTINCT dep)::BIGINT AS nd,
-                     count(*)::BIGINT AS cnt
-              FROM p GROUP BY 1, 2)
-            SELECT fd, sum(cnt)::BIGINT AS n_rows,
-                   count(*)::BIGINT AS n_groups,
-                   sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-                     AS n_violations,
-                   max(nd)::BIGINT AS max_distinct,
-                   sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) / count(*)
-                     AS violation_rate,
-                   sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) = 0 AS fd_holds
-            FROM g GROUP BY fd
         """,
         "conv_shape": """
             WITH t AS (
@@ -11904,16 +9998,6 @@ def oracle_sql() -> dict[str, str]:
                      chr(10)) AS cleaned_text
             FROM j
         """,
-        "l_diversity": """
-            SELECT event_type, date_trunc('hour', ts) AS hour,
-                   count(*)::BIGINT AS class_size,
-                   count(DISTINCT (props ->> '$.k')::BIGINT)::BIGINT
-                     AS l_distinct,
-                   count(DISTINCT (props ->> '$.k')::BIGINT) < 3
-                     AS l_violation
-            FROM events
-            GROUP BY event_type, date_trunc('hour', ts)
-        """,
         "quantile_norm": """
             WITH d AS (
               SELECT doc_id, source, n_chars::BIGINT AS chars
@@ -12019,27 +10103,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 0.0 END AS spearman_rho
             FROM a ORDER BY source
         """,
-        "value_correlation": """
-            WITH d AS (
-              SELECT event_type,
-                     hour(ts)::BIGINT AS x,
-                     round(value * 100, 0)::BIGINT AS y
-              FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-            a AS (
-              SELECT event_type,
-                     count(*)::BIGINT AS n,
-                     sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-                     sum(x*y)::BIGINT AS sxy,
-                     sum(x*x)::BIGINT AS sxx, sum(y*y)::BIGINT AS syy
-              FROM d GROUP BY event_type)
-            SELECT event_type, n,
-                   CASE WHEN (sxx*n - sx*sx) > 0 AND (syy*n - sy*sy) > 0
-                        THEN (sxy*n - sx*sy)::DOUBLE
-                             / (sqrt((sxx*n - sx*sx)::DOUBLE)
-                                * sqrt((syy*n - sy*sy)::DOUBLE))
-                        ELSE 0.0 END AS pearson_r
-            FROM a
-        """,
         "gopher_lines": f"""
             WITH w AS (
               SELECT doc_id, str_split(coalesce(text,''), ' ') AS words
@@ -12124,30 +10187,6 @@ def oracle_sql() -> dict[str, str]:
                    regexp_extract(urls[1], 'https?://([A-Za-z0-9.\\-]+)', 1)
                      AS first_domain
             FROM u
-        """,
-        "rollup_sets": """
-            SELECT coalesce(strftime(ts, '%Y-%m-%d'), 'ALL') AS day,
-                   coalesce(event_type, 'ALL') AS event_type,
-                   count(*)::BIGINT AS n_events,
-                   GROUPING(strftime(ts, '%Y-%m-%d'), event_type)::INT
-                     AS gid
-            FROM events WHERE ts IS NOT NULL
-            GROUP BY ROLLUP (strftime(ts, '%Y-%m-%d'), event_type)
-        """,
-        "pivot_counts": """
-            SELECT hour(ts)::INT AS hod,
-                   sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
-                       END)::BIGINT AS click,
-                   sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0
-                       END)::BIGINT AS error,
-                   sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                       END)::BIGINT AS purchase,
-                   sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0
-                       END)::BIGINT AS signup,
-                   sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0
-                       END)::BIGINT AS view
-            FROM events WHERE ts IS NOT NULL
-            GROUP BY hour(ts)
         """,
         "secrets_scan": f"""
             WITH t AS (
@@ -12435,25 +10474,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN sum(bpe)::DOUBLE / sum(ws)::DOUBLE
                         ELSE 0.0 END AS fertility
             FROM p GROUP BY lang
-        """,
-        "cohort_retention": """
-            WITH e AS (
-              SELECT user_id, date_trunc('week', ts) AS week
-              FROM events WHERE ts IS NOT NULL),
-            f AS (SELECT user_id, min(week) AS cohort_week
-                  FROM e GROUP BY user_id),
-            a AS (SELECT DISTINCT user_id, week FROM e),
-            j AS (SELECT a.user_id, f.cohort_week,
-                         ((a.week::DATE - f.cohort_week::DATE) // 7)::INT
-                           AS week_n
-                  FROM a JOIN f USING (user_id)),
-            p AS (SELECT cohort_week, week_n, count(*)::BIGINT AS n_active
-                  FROM j GROUP BY 1, 2),
-            s AS (SELECT cohort_week, count(*)::BIGINT AS cohort_size
-                  FROM f GROUP BY 1)
-            SELECT p.cohort_week, p.week_n, p.n_active, s.cohort_size,
-                   p.n_active::DOUBLE / s.cohort_size::DOUBLE AS retention
-            FROM p JOIN s USING (cohort_week)
         """,
         "pack_efficiency": f"""
             WITH d AS (
@@ -12877,64 +10897,10 @@ def oracle_sql() -> dict[str, str]:
               ) AS keep
             FROM t LEFT JOIN fk2 ON t.text = fk2.text JOIN cs ON t.conv = cs.conv
         """,
-        "sessionize": f"""
-            WITH l AS (
-              SELECT user_id, event_id, ts,
-                     lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id) AS prev
-              FROM events),
-            f AS (
-              SELECT user_id, event_id, ts,
-                     (CASE WHEN prev IS NULL
-                            OR (epoch_us(ts) - prev) > {SESSION_GAP_US}
-                           THEN 1 ELSE 0 END)::BIGINT AS ns
-              FROM l)
-            SELECT user_id, event_id,
-                   sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     ::BIGINT AS session_idx
-            FROM f
-        """,
         "hash_sample": f"""
             SELECT doc_id, lang FROM documents
             WHERE (concat('0x', substr(md5(concat('{SAMPLE_SALT}', coalesce(text,''))), 1, 8)))::BIGINT
                   % 100 < {SAMPLE_PCT}
-        """,
-        "range_join": f"""
-            SELECT a.user_id,
-                   a.event_id AS a, b.event_id AS b,
-                   (epoch_us(b.ts) - epoch_us(a.ts))::BIGINT AS delta_us
-            FROM events a JOIN events b
-              ON a.user_id = b.user_id
-             AND a.event_id < b.event_id
-             AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= {RANGE_JOIN_US}
-        """,
-        "time_rollup": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   count(*)::BIGINT AS n_events,
-                   sum(round(value * 100, 0)::BIGINT)::DOUBLE / 100.0 AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "funnel": f"""
-            SELECT s.event_id,
-                   EXISTS (
-                     SELECT 1 FROM events e
-                     WHERE e.user_id = s.user_id
-                       AND e.event_type = 'error'
-                       AND epoch_us(e.ts) > epoch_us(s.ts)
-                       AND epoch_us(e.ts) <= epoch_us(s.ts) + {FUNNEL_WINDOW_US}
-                   ) AS converted
-            FROM events s WHERE s.event_type = 'signup'
-        """,
-        "ts_sanity": f"""
-            SELECT event_id,
-                   (ts IS NULL) AS ts_null,
-                   coalesce(year(ts) >= {TS_LO_YEAR} AND year(ts) < {TS_HI_YEAR},
-                            FALSE) AS in_range,
-                   coalesce(ts < lag(ts) OVER (PARTITION BY user_id
-                                               ORDER BY event_id),
-                            FALSE) AS regressed
-            FROM events
         """,
         "field_odd_chars": f"""
             SELECT doc_id,
@@ -13024,21 +10990,6 @@ def oracle_sql() -> dict[str, str]:
             FROM k
         """,
         "pii_luhn": _pii_luhn_sql(),
-        "asof_join": """
-            WITH c AS (
-              SELECT user_id, event_id, event_type,
-                     last_value(CASE WHEN event_type = 'signup'
-                                     THEN epoch_us(ts) END IGNORE NULLS)
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS asof_signup_us
-              FROM events)
-            SELECT user_id, event_id, asof_signup_us
-            FROM c WHERE event_type = 'error'
-        """,
-        "json_props": """
-            SELECT event_id, (props ->> '$.k')::BIGINT AS k FROM events
-        """,
         "conv_verdicts": f"""
             WITH t AS (
               SELECT (doc_id % 97)::BIGINT AS conv,
@@ -13381,64 +11332,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN pd p USING (doc_id)
             LEFT JOIN uq u USING (doc_id)
         """,
-        "turn_latency": """
-            WITH t AS (
-              SELECT user_id, event_id, ts,
-                     CASE WHEN event_id % 3 = 0 THEN 'U'
-                          WHEN event_id % 3 = 1 THEN 'A'
-                          ELSE 'T' END AS role
-              FROM events),
-            g0 AS (
-              SELECT lag(role) OVER w || '->' || role AS transition,
-                     epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-              FROM t
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            g AS (SELECT transition, gap_us FROM g0 WHERE gap_us IS NOT NULL)
-            SELECT transition,
-                   count(*)::BIGINT AS n_gaps,
-                   sum(gap_us)::BIGINT AS sum_gap_us,
-                   (sum(gap_us)::BIGINT)::DOUBLE
-                     / (count(*)::BIGINT)::DOUBLE AS mean_gap_us,
-                   min(gap_us)::BIGINT AS min_gap_us,
-                   max(gap_us)::BIGINT AS max_gap_us,
-                   sum(CASE WHEN gap_us <= 0 THEN 1 ELSE 0 END)::BIGINT
-                     AS n_nonpos
-            FROM g GROUP BY transition
-        """,
-        "event_latency": """
-            WITH g0 AS (
-              SELECT event_type,
-                     epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-              FROM events),
-            gaps AS (SELECT event_type AS source, gap_us
-                     FROM g0 WHERE gap_us IS NOT NULL),
-            hist AS (SELECT source, gap_us, count(*)::BIGINT AS c
-                     FROM gaps GROUP BY source, gap_us),
-            htot AS (SELECT source, sum(c)::BIGINT AS _n
-                     FROM hist GROUP BY source),
-            hcum AS (SELECT h.source, h.gap_us,
-                            sum(h.c) OVER (PARTITION BY h.source
-                                           ORDER BY h.gap_us) AS _cum,
-                            t._n
-                     FROM hist h JOIN htot t USING (source)),
-            med AS (SELECT source,
-                           min(CASE WHEN _cum >= floor((_n + 1) / 2)
-                                    THEN gap_us END)
-                         + min(CASE WHEN _cum >= floor((_n + 2) / 2)
-                                    THEN gap_us END) AS med2
-                    FROM hcum GROUP BY source),
-            agg AS (SELECT source, count(*)::BIGINT AS n_gaps,
-                           min(gap_us) AS min_gap_us,
-                           max(gap_us) AS max_gap_us,
-                           sum(gap_us)::BIGINT AS _sum
-                    FROM gaps GROUP BY source)
-            SELECT a.source AS event_type, a.n_gaps, a.min_gap_us,
-                   a.max_gap_us,
-                   a._sum::DOUBLE / a.n_gaps::DOUBLE AS mean_gap_us,
-                   m.med2::DOUBLE / 2.0 AS median_gap_us
-            FROM agg a JOIN med m USING (source)
-        """,
         "lang_source_chi2": """
             WITH o AS (SELECT lang, source, count(*)::BIGINT AS o
                        FROM documents GROUP BY lang, source),
@@ -13529,13 +11422,6 @@ def oracle_sql() -> dict[str, str]:
                    tp::DOUBLE / (tp + fn)::DOUBLE AS recall,
                    (2*tp)::DOUBLE / (2*tp + fp + fn)::DOUBLE AS f1
             FROM a
-        """,
-        "k_anonymity": """
-            SELECT event_type, date_trunc('hour', ts) AS hour,
-                   count(*)::BIGINT AS class_size,
-                   count(DISTINCT user_id)::BIGINT AS n_users,
-                   count(*) < 5 AS k_violation
-            FROM events GROUP BY event_type, date_trunc('hour', ts)
         """,
         "token_concentration": r"""
             WITH toks AS (
@@ -14390,31 +12276,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(term_e6)::BIGINT AS chi2_e6
             FROM terms GROUP BY shard
         """,
-        "json_keys_profile": """
-            WITH s AS (
-              SELECT event_id,
-                '{' || (CASE WHEN json_extract_string(props, '$.k')
-                               IS NULL
-                        THEN '"k": null'
-                        ELSE '"k": "' ||
-                          replace(replace(
-                            json_extract_string(props, '$.k'),
-                            '\\', '\\\\'), '"', '\\"')
-                          || '"' END)
-                || (CASE WHEN event_id % 3 = 0
-                         THEN ', "tag": "a"' ELSE '' END)
-                || (CASE WHEN event_id % 5 = 1
-                         THEN ', "arr": [1, 2]' ELSE '' END)
-                || (CASE WHEN event_id % 7 = 2
-                         THEN ', "nested": {"x": 1}' ELSE '' END)
-                || '}' AS j
-              FROM events),
-            k AS (SELECT u.key FROM s, unnest(json_keys(j)) AS u(key)),
-            tot AS (SELECT count(*)::BIGINT AS n_tot FROM s)
-            SELECT key, count(*)::BIGINT AS n_present,
-                   count(*)::DOUBLE / n_tot::DOUBLE AS presence_rate
-            FROM k, tot GROUP BY key, n_tot
-        """,
         "source_vocab_overlap": r"""
             WITH v AS (
               SELECT DISTINCT source, t.tok AS tok
@@ -14797,25 +12658,6 @@ def oracle_sql() -> dict[str, str]:
         FROM nodes LEFT JOIN cnt USING (node)
     """
 
-    _z_terms = " + ".join(
-        f"((a >> {i}) & 1) * {1 << (2 * i + 1)}"
-        f" + ((b >> {i}) & 1) * {1 << (2 * i)}"
-        for i in range(ZORDER_BITS)
-    )
-    sqls["zorder_key"] = f"""
-        WITH e AS (
-          SELECT event_id, user_id,
-                 user_id % {1 << ZORDER_BITS} AS a,
-                 (CAST(floor(epoch(ts)) AS BIGINT) // 3600)
-                   % {1 << ZORDER_BITS} AS b
-          FROM events WHERE ts IS NOT NULL),
-        z AS (
-          SELECT event_id, user_id, b, ({_z_terms})::BIGINT AS zkey
-          FROM e)
-        SELECT event_id, user_id, b AS hour_bucket, zkey,
-               (zkey >> {2 * ZORDER_BITS - 10})::BIGINT AS file_bucket
-        FROM z
-    """
     sqls["merge_upsert"] = """
         WITH d AS (SELECT doc_id, text FROM documents),
         ch AS (
@@ -14836,36 +12678,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE d.text END) AS text_md5
         FROM d FULL OUTER JOIN ch ON d.doc_id = ch.k
         WHERE op IS NULL OR op <> 'D'
-    """
-    sqls["gap_fill"] = """
-        WITH obs AS (
-          SELECT user_id, date_trunc('day', ts) AS day,
-                 max(value) AS day_max, count(*)::BIGINT AS n_events
-          FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        b AS (SELECT user_id, min(day) AS mn, max(day) AS mx
-              FROM obs GROUP BY 1),
-        grid AS (SELECT user_id,
-                        unnest(generate_series(mn, mx, INTERVAL 1 DAY))
-                          AS day
-                 FROM b)
-        SELECT g.user_id, g.day,
-               (o.day_max IS NOT NULL) AS observed,
-               last_value(o.day_max IGNORE NULLS) OVER (
-                 PARTITION BY g.user_id ORDER BY g.day
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS filled,
-               coalesce(o.n_events, 0)::BIGINT AS n_events
-        FROM grid g LEFT JOIN obs o
-          ON o.user_id = g.user_id AND o.day = g.day
-    """
-    sqls["hopping_counts"] = """
-        SELECT make_timestamp((bin - k) * 900 * 1000000) AS w_start,
-               event_type, count(*)::BIGINT AS n_events
-        FROM (SELECT event_type,
-                     epoch_us(ts) // 1000000 // 900 AS bin
-              FROM events WHERE ts IS NOT NULL) b,
-             (SELECT unnest([0, 1, 2, 3]) AS k) kk
-        GROUP BY 1, 2
     """
     sqls["inverted_index"] = r"""
         WITH raw AS (
@@ -14889,28 +12701,6 @@ def oracle_sql() -> dict[str, str]:
                GROUPING(source, lang)::INT AS gid
         FROM documents
         GROUP BY CUBE (source, lang)
-    """
-    sqls["rate_anomaly"] = f"""
-        WITH hourly AS (
-          SELECT event_type, date_trunc('hour', ts) AS hour,
-                 count(*)::BIGINT AS cnt
-          FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        g AS (
-          SELECT event_type, hour, cnt,
-                 coalesce(sum(cnt) OVER w, 0)::BIGINT AS sum_trail,
-                 count(*) OVER w AS n_trail
-          FROM hourly
-          WINDOW w AS (PARTITION BY event_type ORDER BY hour
-                       ROWS BETWEEN {RATE_TRAIL} PRECEDING
-                            AND 1 PRECEDING))
-        SELECT event_type, hour, cnt, sum_trail, n_trail::BIGINT AS n_trail,
-               CASE WHEN n_trail > 0
-                    THEN (cnt * n_trail)::DOUBLE / sum_trail::DOUBLE
-               END AS rate_ratio,
-               CASE WHEN n_trail > 0
-                    THEN cnt * n_trail > 3 * sum_trail
-                    ELSE FALSE END AS spike
-        FROM g
     """
     sqls["curriculum_buckets"] = """
         WITH th AS (
@@ -14981,155 +12771,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT qid::INT AS qid, doc_id, round(score, 9) AS score,
                rank::INT AS rank
         FROM rk WHERE rank <= 10
-    """
-    # The twin RECOMPUTES the view from the full table on purpose: the
-    # Spark side maintains it incrementally (base FULL OUTER delta), so
-    # the gate proves the IVM equation incremental == recompute.
-    sqls["view_maintain"] = """
-        SELECT event_type, date_trunc('day', ts) AS day,
-               count(*)::BIGINT AS n_events,
-               sum(round(value * 100, 0)::BIGINT)::DOUBLE / 100.0
-                 AS sum_value,
-               min(round(value * 100, 0)::BIGINT)::DOUBLE / 100.0
-                 AS min_value,
-               max(round(value * 100, 0)::BIGINT)::DOUBLE / 100.0
-                 AS max_value
-        FROM events WHERE ts IS NOT NULL
-        GROUP BY 1, 2
-    """
-    sqls["pruning_audit"] = f"""
-        WITH per AS (
-          SELECT date_trunc('day', ts) AS day,
-                 (user_id // {UID_BUCKET_W})::BIGINT AS uid_bucket,
-                 count(*)::BIGINT AS n_rows,
-                 min(user_id)::BIGINT AS min_uid,
-                 max(user_id)::BIGINT AS max_uid
-          FROM events WHERE ts IS NOT NULL
-          GROUP BY 1, 2)
-        SELECT day, uid_bucket, n_rows, min_uid, max_uid,
-               CASE
-                 WHEN NOT (day BETWEEN TIMESTAMP '{PRUNE_D1}'
-                                   AND TIMESTAMP '{PRUNE_D2}')
-                   THEN 'pruned_partition'
-                 WHEN NOT (max_uid >= {PRUNE_U1} AND min_uid <= {PRUNE_U2})
-                   THEN 'pruned_stats'
-                 ELSE 'scan'
-               END AS status
-        FROM per
-    """
-    sqls["window_suite"] = """
-        WITH grid AS (
-          SELECT user_id, date_trunc('day', ts) AS day,
-                 sum(round(value * 100, 0)::BIGINT)::BIGINT AS c,
-                 count(*)::BIGINT AS n_events
-          FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
-        SELECT user_id, day, n_events,
-               c::DOUBLE / 100.0 AS day_spend,
-               (sum(c) OVER (PARTITION BY user_id ORDER BY day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                ))::DOUBLE / 100.0 AS running_total,
-               (sum(c) OVER w7)::DOUBLE
-                 / (100 * count(*) OVER w7)::DOUBLE AS move_avg_7,
-               dense_rank() OVER (PARTITION BY user_id
-                                  ORDER BY c DESC)::INT AS spend_rank,
-               ntile(4) OVER (PARTITION BY user_id
-                              ORDER BY day)::INT AS quartile,
-               (c - lag(c, 1) OVER (PARTITION BY user_id
-                                    ORDER BY day))::DOUBLE / 100.0
-                 AS delta_prev
-        FROM grid
-        WINDOW w7 AS (PARTITION BY user_id ORDER BY day
-                      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-    """
-    sqls["changepoint_cusum"] = f"""
-        WITH grid AS (
-          SELECT event_type, date_trunc('day', ts) AS day,
-                 count(*)::BIGINT AS x
-          FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        cur AS (
-          SELECT event_type, day,
-                 sum(x) OVER (PARTITION BY event_type ORDER BY day
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                 )::BIGINT AS pre,
-                 row_number() OVER (PARTITION BY event_type
-                                    ORDER BY day)::BIGINT AS k,
-                 sum(x) OVER (PARTITION BY event_type)::BIGINT AS tot,
-                 count(*) OVER (PARTITION BY event_type)::BIGINT AS n
-          FROM grid),
-        scored AS (
-          SELECT event_type, day, pre, k, tot, n,
-                 ((pre * (n - k) - (tot - pre) * k)
-                  * (pre * (n - k) - (tot - pre) * k))::DOUBLE
-                   / (k * (n - k))::DOUBLE AS stat
-          FROM cur WHERE k < n),
-        best AS (
-          SELECT *, row_number() OVER (PARTITION BY event_type
-                                       ORDER BY stat DESC, day) AS rn
-          FROM scored)
-        SELECT event_type, day AS split_day,
-               round(stat, 9) AS stat,
-               pre::DOUBLE / k::DOUBLE AS mean_before,
-               (tot - pre)::DOUBLE / (n - k)::DOUBLE AS mean_after,
-               stat > {CHANGEPOINT_STAT_MIN} AS changed
-        FROM best WHERE rn = 1
-    """
-    sqls["concurrency_profile"] = f"""
-        WITH ev AS (SELECT event_id, event_type, ts FROM events
-                    WHERE ts IS NOT NULL),
-        edges AS (
-          SELECT event_type, event_id, ts AS t, 1 AS d FROM ev
-          UNION ALL
-          SELECT event_type, event_id,
-                 ts + INTERVAL {CONC_DUR_S} SECOND, -1 FROM ev),
-        run AS (
-          SELECT event_type, t,
-                 sum(d) OVER (PARTITION BY event_type
-                              ORDER BY t, d, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW)::BIGINT AS conc
-          FROM edges),
-        ranked AS (
-          SELECT event_type, conc, t,
-                 row_number() OVER (PARTITION BY event_type
-                                    ORDER BY conc DESC, t) AS rn
-          FROM run)
-        SELECT event_type, conc AS peak, t AS peak_at
-        FROM ranked WHERE rn = 1
-    """
-    sqls["scd2_build"] = """
-        SELECT user_id,
-               row_number() OVER w::INT AS version,
-               event_type AS state,
-               ts AS valid_from,
-               coalesce(lead(ts, 1) OVER w,
-                        TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
-               (lead(ts, 1) OVER w IS NULL) AS is_current
-        FROM events WHERE ts IS NOT NULL
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """
-    sqls["trend_slope"] = """
-        WITH grid AS (
-          SELECT event_type,
-                 (CAST(floor(epoch(ts)) AS BIGINT) // 3600) AS h,
-                 count(*)::BIGINT AS y
-          FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        g AS (
-          SELECT event_type,
-                 h - min(h) OVER (PARTITION BY event_type) AS x, y
-          FROM grid),
-        a AS (
-          SELECT event_type, count(*)::BIGINT AS n,
-                 sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-                 sum(x * y)::BIGINT AS sxy, sum(x * x)::BIGINT AS sxx
-          FROM g GROUP BY 1)
-        SELECT event_type, n AS n_hours,
-               round((n * sxy - sx * sy)::DOUBLE
-                     / (n * sxx - sx * sx)::DOUBLE, 9) AS slope,
-               round((sy * sxx - sx * sxy)::DOUBLE
-                     / (n * sxx - sx * sx)::DOUBLE, 9) AS intercept,
-               ((n * sxy - sx * sy)::DOUBLE
-                / (n * sxx - sx * sx)::DOUBLE) > 0.0 AS trending_up
-        FROM a
     """
     # conv_quality_card's twin is COMPOSED from its components' own
     # oracle SQL (one source of truth — the card cannot drift from its

@@ -51,7 +51,6 @@ BENCH_QUERIES = (
     "fingerprint",
     "dsir_weights",
     "refusal_scan",
-    "cohort_retention",
     "sketch_profile",
     "bpe_train",
     "echo_detect",
@@ -84,28 +83,16 @@ BENCH_QUERIES = (
     "pagerank",
     "triangles",
     "components",
-    "rate_anomaly",
-    "zorder_key",
     "merge_upsert",
-    "gap_fill",
-    "hopping_counts",
     "cube_counts",
     "inverted_index",
     "bm25_search",
-    "view_maintain",
-    "pruning_audit",
-    "window_suite",
-    "changepoint_cusum",
-    "concurrency_profile",
-    "scd2_build",
-    "trend_slope",
     "tool_assoc",
     "weighted_sample",
     "skyline_docs",
     "setsim_join",
     "typo_mine",
     "quantile_norm",
-    "l_diversity",
     "header_footer_strip",
     "isotonic_calibrate",
     "threshold_sweep",
@@ -118,26 +105,19 @@ BENCH_QUERIES = (
     "watermark_scan",
     "citation_check",
     "tool_args_valid",
-    "bot_detect",
     "conv_fork_detect",
     "homoglyph_scan",
     "kendall_tau",
-    "km_survival",
     "toxicity_escalation",
     "wilson_winrate",
     "mann_whitney",
-    "dp_release",
     "bh_fdr",
     "mcnemar",
-    "theil_sen",
-    "mann_kendall",
     "krippendorff_alpha",
     "shapley_rules",
     "user_retry_detect",
     "pii_echo",
     "emd_drift",
-    "weekday_profile",
-    "autocorr_lag1",
     "runs_test",
     "markdown_audit",
     "number_grounding",
@@ -148,9 +128,7 @@ BENCH_QUERIES = (
     "rule_phi",
     "leet_scan",
     "conv_quality_card",
-    "t_closeness",
     "fleiss_kappa",
-    "fd_mine",
     "cdc_dedup",
     "char_entropy",
     "truncation_scan",
@@ -162,7 +140,6 @@ BENCH_QUERIES = (
     "bidi_scan",
     "shuffle_quality",
     "response_rouge_l",
-    "json_keys_profile",
     "source_vocab_overlap",
     "ngram_entropy",
     "lpa_communities",
@@ -179,7 +156,6 @@ BENCH_QUERIES = (
     "heaps_law",
     "source_dup_affinity",
     "role_alternation",
-    "turn_latency",
 )
 
 

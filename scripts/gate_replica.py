@@ -22,7 +22,7 @@ sys.path.insert(0, REPO)
 import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
 
-TABLES = ["documents", "events"]
+TABLES = ["documents"]
 
 
 def _norm(df):

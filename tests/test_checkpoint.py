@@ -266,7 +266,6 @@ def test_reaudit_labeled_output(spark, synth_path, tmp_path, cfg):
 def test_input_fingerprint_identity(spark, synth_path, tmp_path):
     """r2 ADVICE (high): the fingerprint must track input identity for
     every input kind the runner accepts — never collapse to a constant."""
-    import os
     import time
 
     # missing/empty inputs refuse to fingerprint (a constant hash would

@@ -3,7 +3,6 @@ separation around the calibrated threshold, batch invariance, and
 retrain determinism (the executor-side rebuild must be bit-identical)."""
 
 import numpy as np
-import pytest
 
 from qamd_spark import classifier as C
 

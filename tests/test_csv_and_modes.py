@@ -292,8 +292,6 @@ def test_cli_curate_end_to_end(tmp_path, spark, count_jobs):
     its Spark job budget."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
     from qamd_spark import main
 
     src = "/root/testdata/sf0.001/documents.parquet"
@@ -563,8 +561,6 @@ def test_cli_validate(tmp_path):
     """validate: lints a rules.yaml — ok + enabled list on the default
     config, exit 1 + error string on an out-of-bounds setting."""
     import json as _json
-    import subprocess
-    import sys
 
     from qamd_spark import main
 
@@ -631,7 +627,7 @@ def test_cli_query_runner(tmp_path, spark, capsys, count_jobs):
     # --explain prints the formatted physical plan without running the
     # query (the plan-first workflow: verify pushdown/broadcast before
     # paying for a scan)
-    rc = main.main(["query", "--name", "pruning_audit",
+    rc = main.main(["query", "--name", "conv_pipeline_sql",
                     "--sf-dir", "/root/testdata/sf0.001",
                     "--explain", "--master", "local[4]"])
     assert rc == 0
@@ -639,7 +635,7 @@ def test_cli_query_runner(tmp_path, spark, capsys, count_jobs):
     assert "== Physical Plan ==" in out_text
     assert "PushedFilters" in out_text
     status = _json.loads(out_text.splitlines()[-1])
-    assert status == {"status": "ok", "query": "pruning_audit",
+    assert status == {"status": "ok", "query": "conv_pipeline_sql",
                       "explained": True}
 
     # unknown names fail loudly, not with a stack trace into Spark

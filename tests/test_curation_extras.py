@@ -8,7 +8,6 @@ computable."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 
@@ -520,49 +519,3 @@ def test_role_alternation_overlapping_runs(spark, tmp_path_factory):
     assert got2[3]["n_turns"] == 4
     assert got2[3]["n_double_user"] == 3  # UUUU -> three overlapping UU
     assert not got2[3]["alternation_ok"]
-
-
-def test_turn_latency_hand_computed(spark, tmp_path_factory):
-    """Two crafted conversations with microsecond-precise gaps: every
-    transition's n/sum/mean/min/max and the tied-timestamp zero gap
-    (ordering fault counted in n_nonpos, broken deterministically by
-    event_id) are pinned by hand."""
-    import datetime as _dt
-
-    d = str(tmp_path_factory.mktemp("tlat"))
-    t0 = _dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def at(us):
-        return t0 + _dt.timedelta(microseconds=us)
-
-    rows = [
-        # conv 1: U(id0) -> A(id1) -> T(id2) -> A(id4, SAME ts as id2)
-        # -> U(id3)
-        (0, at(0), 1, "x", 1.0, "{}"),           # U
-        (1, at(2_500_000), 1, "x", 1.0, "{}"),   # A: U->A gap 2.5e6
-        (2, at(2_750_000), 1, "x", 1.0, "{}"),   # T: A->T gap 0.25e6
-        (4, at(2_750_000), 1, "x", 1.0, "{}"),   # A: T->A gap 0 (tie)
-        (3, at(10_000_000), 1, "x", 1.0, "{}"),  # U: A->U gap 7.25e6
-        # conv 2: U(id6) -> A(id7)
-        (6, at(0), 2, "x", 1.0, "{}"),
-        (7, at(1_500_000), 2, "x", 1.0, "{}"),   # U->A gap 1.5e6
-    ]
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    got = {
-        r["transition"]: r.asDict()
-        for r in entry.q_turn_latency(spark, d).collect()
-    }
-    assert set(got) == {"U->A", "A->T", "T->A", "A->U"}
-    ua = got["U->A"]
-    assert (ua["n_gaps"], ua["sum_gap_us"]) == (2, 4_000_000)
-    assert ua["mean_gap_us"] == 2_000_000.0  # one exact division
-    assert (ua["min_gap_us"], ua["max_gap_us"]) == (1_500_000, 2_500_000)
-    assert ua["n_nonpos"] == 0
-    assert got["A->T"]["sum_gap_us"] == 250_000
-    ta = got["T->A"]  # tied timestamps: gap 0, flagged, not dropped
-    assert (ta["n_gaps"], ta["sum_gap_us"], ta["n_nonpos"]) == (1, 0, 1)
-    assert got["A->U"]["sum_gap_us"] == 7_250_000

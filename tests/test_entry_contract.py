@@ -14,7 +14,7 @@ import pytest
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
-TABLES = ["documents", "events"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")
@@ -119,8 +119,8 @@ def test_entry_restates_no_rule_parameter():
     Fails when its text spells out a PII pattern or PUNCT_CLASS, or holds
     a run of three quoted stopwords (a re-typed stopword list, in Python
     or in a SQL twin), or when a module-level name is bound to a literal
-    equal to a DEFAULT_SETTINGS value. Int settings (1, 25) are left to
-    review: small ints collide with unrelated query parameters."""
+    equal to a DEFAULT_SETTINGS value, int settings included (only bools
+    are skipped: True/False would match any 1/0)."""
     import ast
     import re
 
@@ -161,7 +161,7 @@ def test_entry_restates_no_rule_parameter():
 
     values = []
     for v in DEFAULT_SETTINGS.values():
-        if v is None or isinstance(v, int):  # bool is an int too
+        if v is None or isinstance(v, bool):
             continue
         values.append(norm(v))
         if isinstance(v, dict):
@@ -309,6 +309,54 @@ def test_no_library_code_only_tests_reach():
     assert set(_TEST_ONLY_LIBRARY) <= set(defs) - reached
 
 
+def _unused_imports(tree):
+    """(line, name) of each import whose bound name is never loaded in
+    the scope that binds it: the module for a module-level import (its
+    functions read module names too), else the enclosing function with
+    its nested functions. ``from __future__`` imports are exempt."""
+    import ast
+
+    scopes = (ast.FunctionDef, ast.AsyncFunctionDef)
+    bound = {}
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.Import, ast.ImportFrom)):
+                if getattr(child, "module", None) != "__future__":
+                    for a in child.names:
+                        name = a.asname or a.name.split(".")[0]
+                        bound.setdefault(scope, []).append((child.lineno, name))
+            visit(child, child if isinstance(child, scopes) else scope)
+
+    visit(tree, tree)
+    unused = []
+    for scope, pairs in bound.items():
+        loaded = {n.id for n in ast.walk(scope)
+                  if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        unused += [(line, name) for line, name in pairs if name not in loaded]
+    return sorted(unused)
+
+
+def test_no_unused_imports():
+    """No import binds a name its scope never reads, module-level or
+    function-local, in the program (qamd_spark/, oracle/, scripts/, the
+    top-level scripts) or in tests/. The project depends on no linter,
+    so this test is the check."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(E.__file__).resolve().parent
+    paths = [*repo.glob("*.py"), *repo.glob("qamd_spark/**/*.py"),
+             *repo.glob("oracle/*.py"), *repo.glob("scripts/*.py"),
+             *repo.glob("tests/**/*.py")]
+    unused = [
+        f"{p.relative_to(repo)}:{line} {name}"
+        for p in sorted(paths)
+        for line, name in _unused_imports(ast.parse(p.read_text(encoding="utf-8")))
+    ]
+    assert unused == []
+
+
 def test_registry_module_has_no_dead_names():
     """Every top-level function of __spark_entry__.py, and every name a
     module-level assignment or import there binds, is reached from a
@@ -319,10 +367,10 @@ def test_registry_module_has_no_dead_names():
     assert sorted(n for _, n in top - reached) == []
 
 
-def test_registry_reads_only_documents_and_events():
+def test_registry_reads_only_documents():
     """The pipeline's input is one transcript table; of the test-data
     tables only documents.parquet has its shape (FIXTURES.md §5). The
-    registry reads it and the events clickstream, nothing else: no
+    registry reads it and nothing else: no events clickstream, no
     embeddings, no TPC-H table. Fails on any other ``*.parquet`` named in
     __spark_entry__.py, a computed name included."""
     import re
@@ -330,7 +378,7 @@ def test_registry_reads_only_documents_and_events():
     with open(E.__file__, encoding="utf-8") as f:
         src = f.read()
     named = set(re.findall(r"([\w{}]+)\.parquet\b(?!\()", src))
-    assert named == {"documents", "events"}
+    assert named == {"documents"}
 
 
 def test_entry_runs(spark):
@@ -342,8 +390,6 @@ def test_lang_agreement_composes_from_langid_docs(spark):
     """lang_agreement (rows-only) must equal the direct composition of
     the langid prediction with the declared lang column — cell counts
     sum to the corpus size and match a pandas groupby of the same join."""
-    import pandas as pd
-
     got = (
         E.queries()["lang_agreement"](spark, SF)
         .toPandas()

@@ -14,8 +14,6 @@ just above each documented bound and pin both halves of the claim:
 The aggregates are one-row DataFrames — the point is the arithmetic
 cliff, not the aggregation plumbing (covered by each query's oracle)."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,42 +81,6 @@ def test_fleiss_kappa_headroom(spark, N, expect_overflow):
         assert status == "ok" and got == want_num
         st, gd = _overflows(spark, df, den)
         assert st == "ok" and gd == 2 * (9 * N * N - B)
-
-
-# --- bot_detect: gate 100·(n·Σg² − S²) < S²; Σg² per user is the cliff
-
-def test_bot_detect_headroom(spark):
-    # documented: gaps ≤ 2.6e6 s (a month), "safe past 10^5 events/user".
-    # At n events of gap g: Σg² = n·g², S = n·g; the gate's left side is
-    # 100·(n·Σg² − S²) ≤ 100·n²·g². n = 1e5, g = 2.6e6 → 100·n·Σg²
-    # = 6.76e25? No: cv² of a constant grid is 0, so worst case is
-    # maximal spread — bound 100·n·Σg² = 100·1e5·(1e5·2.6e6²) overflows
-    # naive forms; the SHIPPED form computes 100·(n·Σg² − S²) where the
-    # subtraction cancels first only in exact math. Pin the real cliff:
-    # n·Σg² must fit — n = 1e5, Σg² = 6.76e17 → n·Σg² = 6.76e22 > 2^63
-    # would overflow, so the documented "safe past 1e5 events/user"
-    # holds only for realistic gap scales; verify both regimes.
-    n, g = 10**5, 30  # a real 30 s scheduler grid: comfortably safe
-    s1, s2 = n * g, n * g * g
-    df = _one_row(spark, n=n, s1=s1, s2=s2)
-    lhs = 100 * (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
-    st, got = _overflows(spark, df, lhs)
-    assert st == "ok" and got == 100 * (n * s2 - s1 * s1) == 0  # CV=0 grid
-    # above the cliff: month-scale gaps at 1e5 events → n·Σg² > 2^63
-    g_big = 2_600_000
-    s2b = n * g_big * g_big  # 6.76e17, fits
-    df2 = _one_row(spark, n=n, s1=n * g_big, s2=s2b)
-    assert n * s2b > I64_MAX  # the product is the overflow site
-    st2, _ = _overflows(
-        spark, df2, 100 * (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
-    )
-    assert st2 == "overflow"
-    # decimal(38) swap (the documented per-epoch-decimal path) is exact
-    d = lambda c: F.col(c).cast("decimal(38,0)")
-    got_dec = df2.select(
-        (100 * (d("n") * d("s2") - d("s1") * d("s1"))).alias("v")
-    ).collect()[0]["v"]
-    assert int(got_dec) == 100 * (n * s2b - (n * g_big) ** 2)
 
 
 # --- kendall_tau: concordant count C ≤ n²/2 → products of cell counts

@@ -177,20 +177,6 @@ def test_aqe_splits_skewed_join(spark):
             spark.conf.set(k, v)
 
 
-def test_range_join_has_no_dedup_exchange(spark):
-    """The 2-bin asymmetric range join emits each pair exactly once, so
-    the plan needs no dropDuplicates aggregation and only the join's own
-    exchanges (r2 VERDICT item 8: the symmetric 3-bin form paid an extra
-    HashAggregate + Exchange to dedup double-emitted pairs)."""
-    import __spark_entry__ as E
-
-    df = E.q_range_join(spark, "/root/testdata/sf0.001")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "HashAggregate" not in plan and "SortAggregate" not in plan, plan
-
-
 def test_grouped_topk_has_no_window(spark):
     """grouped_topk must be the two-phase partial-agg shape — no Window
     operator (a window over PARTITION BY group pins every row of a hot
@@ -210,7 +196,6 @@ def test_new_ops_plans_have_no_nested_loop_joins(spark):
     join must stay an equi-join (hash/sort-merge/broadcast-hash) — a
     BroadcastNestedLoopJoin or CartesianProduct in these plans would be
     an all-pairs scale-killer."""
-    import __spark_entry__ as E
     from qamd_spark.ops import dedup as dd
     from qamd_spark.ops import text as tx
 
@@ -517,28 +502,11 @@ def test_curriculum_and_shard_plans(spark):
                      r"windowspecdefinition\(_chunk", plan), plan
 
 
-def test_rate_anomaly_window_over_aggregated_grid(spark):
-    """rate_anomaly: the lag window must run over the aggregated
-    (type × hour) grid — the plan shows the partial+final hash
-    aggregate BELOW the Window, and the window is partitioned (no
-    global single-partition sort), no Python stage."""
-    import __spark_entry__ as E
-
-    plan = _fmt_plan(E.q_rate_anomaly(spark, "/root/testdata/sf0.001"))
-    assert plan.count(") Window") == 1, plan
-    assert "HashAggregate" in plan and "partial_" in plan, plan
-    assert plan.index("HashAggregate") > plan.index("Window"), plan
-    assert "windowspecdefinition(event_type" in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_warehouse_timeseries_plans(spark):
+def test_merge_upsert_and_cube_counts_plans(spark):
     """merge_upsert: one FULL OUTER equi-join, no Python;
-    gap_fill: the forward-fill Window runs over the exploded grid
-    (Generate present) after a LEFT join, never over raw events;
-    hopping_counts / cube_counts: Spark expands rows to their
-    grouping-set / window memberships BEFORE the partial aggregate
-    (Expand + partial_, one scan each) — never a union of rescans."""
+    cube_counts: Spark expands rows to their grouping-set memberships
+    BEFORE the partial aggregate (Expand + partial_, one scan) — never a
+    union of rescans."""
     import __spark_entry__ as E
 
     sf = "/root/testdata/sf0.001"
@@ -546,16 +514,10 @@ def test_warehouse_timeseries_plans(spark):
     assert "FullOuter" in plan, plan
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
 
-    plan = _fmt_plan(E.q_gap_fill(spark, sf))
-    assert "Window" in plan and "Generate" in plan, plan
-    assert "LeftOuter" in plan, plan
+    plan = _fmt_plan(E.q_cube_counts(spark, sf))
+    assert "Expand" in plan and "partial_" in plan, plan
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-    for q in (E.q_hopping_counts, E.q_cube_counts):
-        plan = _fmt_plan(q(spark, sf))
-        assert "Expand" in plan and "partial_" in plan, plan
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-        assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
 
 
 def test_inverted_index_plan_bounds_collect_list(spark):
@@ -572,20 +534,6 @@ def test_inverted_index_plan_bounds_collect_list(spark):
     assert plan.count("InMemoryTableScan") >= 2, plan
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 1, plan
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_zorder_key_plan(spark):
-    """zorder_key: a pure codegen projection — zero Exchange, no
-    aggregate, no Python (the 32-term bit interleave fuses)."""
-    import __spark_entry__ as E
-
-    sf = "/root/testdata/sf0.001"
-    plan = _fmt_plan(E.q_zorder_key(spark, sf))
-    assert ") Exchange" not in plan, plan
-    assert "HashAggregate" not in plan and ") Window" not in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-    # '*' prefix = inside a WholeStageCodegen span in formatted plans
-    assert "* Project" in plan, plan
 
 
 def test_triangles_plan_is_equi_join_only(spark):
@@ -615,149 +563,23 @@ def test_unicode_nfc_plan_single_arrow_stage_no_shuffle(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_round3_capability_plans(spark):
-    """The round-3 capability batch keeps 100 TB-shaped plans:
-    bm25_search reuses one persisted tf table for dl/df/probe and
-    broadcasts the query set; view_maintain merges base and delta
-    partial aggregates with ONE full-outer equi-join; pruning_audit is one
-    partial+final hash aggregate, no join. No Python stage anywhere."""
+def test_bm25_search_plan(spark):
+    """bm25_search reuses one persisted tf table for dl/df/probe and
+    broadcasts the query set; no Python stage."""
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
-
-    plan = _fmt_plan(E.q_bm25_search(spark, sf))
+    plan = _fmt_plan(E.q_bm25_search(spark, "/root/testdata/sf0.001"))
     assert plan.count("InMemoryTableScan") >= 3, plan  # tf feeds 3 branches
     assert "BroadcastHashJoin" in plan, plan  # query set + df broadcast
     assert "partial_" in plan, plan
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
     assert ") Window" not in plan, plan  # top-10 is grouped_topk
 
-    plan = _fmt_plan(E.q_view_maintain(spark, sf))
-    assert "FullOuter" in plan, plan  # the IVM merge join
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2, plan
-    assert re.search(r"PushedFilters:.*IsNotNull\(ts\)", plan), plan
-    assert "partial_" in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-    plan = _fmt_plan(E.q_pruning_audit(spark, sf))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-    assert "Join" not in plan, plan
-    assert "partial_" in plan, plan
-    assert ") Sort" not in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_window_and_changepoint_plans(spark):
-    """window_suite / changepoint_cusum: every Window runs over the
-    pre-aggregated bounded day grid (one parquet scan feeding a
-    partial+final hash aggregate BEFORE any Window), never raw events;
-    no Python stage."""
-    import __spark_entry__ as E
-
-    for q in (E.q_window_suite, E.q_changepoint_cusum):
-        plan = _fmt_plan(q(spark, "/root/testdata/sf0.001"))
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-        assert "partial_" in plan, plan
-        assert ") Window" in plan, plan
-        # the aggregate appears BELOW the first Window in the tree
-        # (formatted plans list operators bottom-up by id: the scan is
-        # (1); assert the partial agg's id is smaller than the window's)
-        agg_id = int(re.search(r"\((\d+)\) HashAggregate", plan).group(1))
-        win_id = int(re.search(r"\((\d+)\) Window", plan).group(1))
-        assert agg_id < win_id, plan
-        assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_dynamic_partition_pruning_engages(spark, tmp_path):
-    """Partition-pruned fact ⋈ filtered dim must trigger Dynamic
-    Partition Pruning: the fact scan's partition filters gain a
-    dynamicpruningexpression fed from the dim's broadcast — the runtime
-    half of the pruning_audit story (the audit predicts what a layout
-    skips; DPP is Spark actually skipping at run time)."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").filter(
-        F.col("ts").isNotNull()
-    )
-    fact_path = str(tmp_path / "fact_by_day")
-    ev.withColumn("day", F.to_date("ts")).write.partitionBy("day").parquet(
-        fact_path
-    )
-    dim_path = str(tmp_path / "day_dim")
-    (
-        ev.select(F.to_date("ts").alias("day"))
-        .distinct()
-        .withColumn("dom", F.dayofmonth("day").cast("int"))
-        .write.parquet(dim_path)
-    )
-    fact = spark.read.parquet(fact_path)
-    # NB: the dim predicate must be a comparison — PartitionPruning only
-    # fires behind a "likely selective" filter (a bare boolean column is
-    # not one)
-    dim = spark.read.parquet(dim_path).filter(F.col("dom") <= 3)
-    joined = fact.join(dim.hint("broadcast"), "day").groupBy(
-        "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    plan = _fmt_plan(joined)
-    assert "dynamicpruning" in plan.lower(), plan
-    # and the pruned result is correct
-    n_days = 3
-    expected = (
-        fact.filter(F.dayofmonth("day") <= n_days)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    assert sorted(map(tuple, joined.collect())) == sorted(
-        map(tuple, expected)
-    )
-
-
-def test_concurrency_profile_two_phase_prefix_sum_plan(spark):
-    """concurrency_profile: the running concurrency is the range-chunked
-    two-phase prefix sum — exactly two Windows (chunk offsets over the
-    tiny chunk table + within-chunk running sum), both partitioned at
-    chunk grain; peak selection is grouped_topk, so no row_number and
-    no whole-type-history window task; one parquet scan, no Python."""
-    import __spark_entry__ as E
-
-    plan = _fmt_plan(E.q_concurrency_profile(spark, "/root/testdata/sf0.001"))
-    # the edge table persists once and feeds both branches
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    assert len(re.findall(r"\(\d+\) Window", plan)) == 2, plan
-    assert "row_number" not in plan, plan
-    assert "partial_" in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_scd2_build_plan(spark):
-    """scd2_build: one scan, ONE Exchange (the user_id shuffle feeding
-    the ordered window), no Python."""
-    import __spark_entry__ as E
-
-    plan = _fmt_plan(E.q_scd2_build(spark, "/root/testdata/sf0.001"))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert ") Window" in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_trend_slope_plan(spark):
-    """trend_slope: one scan; the hourly grid aggregates first and the
-    min-hour window + OLS moments run at grid grain; no Python."""
-    import __spark_entry__ as E
-
-    plan = _fmt_plan(E.q_trend_slope(spark, "/root/testdata/sf0.001"))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-    assert "partial_" in plan, plan
-    agg_id = int(re.search(r"\((\d+)\) HashAggregate", plan).group(1))
-    win_id = int(re.search(r"\((\d+)\) Window", plan).group(1))
-    assert agg_id < win_id, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
 
 def test_spearman_signals_plan(spark):
     """spearman_signals: ranks must come from prefix sums over the
     aggregated (source, value) grids — every Window sits ABOVE a
-    HashAggregate (agg-below-window, the window_suite discipline), so
+    HashAggregate (agg-below-window), so
     no whole-source raw-row window task exists; no Python stage."""
     import __spark_entry__ as E
 
@@ -1010,4 +832,3 @@ def test_levenshtein_neardup_prefix_blocking_plan(spark):
     agg_ids = [int(m) for m in _re.findall(r"\((\d+)\) HashAggregate", plan)]
     assert agg_ids, plan
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-

@@ -1,13 +1,10 @@
-"""Semantic pins for the agreement/privacy statistics queries:
-fleiss_kappa (perfect vs partial agreement) and t_closeness (uniform
-class vs collapsed class), each against hand-computed closed forms on
-planted fixtures — the behavioral layer on top of the DuckDB hash gate
-(which only proves Spark == SQL, not that the statistic is right)."""
-
-import datetime
+"""Semantic pins for the agreement and statistics queries, e.g.
+fleiss_kappa (perfect vs partial agreement), each against hand-computed
+closed forms or brute force on planted fixtures — the behavioral layer
+on top of the DuckDB hash gate (which only proves Spark == SQL, not that
+the statistic is right)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 
@@ -52,78 +49,6 @@ def test_fleiss_kappa_disagreement_below_one(spark, docs_dir):
     # kappa = (3*160*40 - 2*10400) / (2*(9*1600 - 10400)) = -1600/8000
     assert r["smix"]["a_sum"] == 160 and r["smix"]["b_sum"] == 10400
     assert r["smix"]["kappa"] == pytest.approx(-0.2, abs=0.0)
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    """events table, one day, two classes: event_type 'uniform' has the
-    same sensitive distribution as... itself+skewed pooled; 'skewed' is
-    collapsed onto one value — its distance must be larger and violate
-    t > 0.5 while the uniform class does not."""
-    d = tmp_path_factory.mktemp("tc")
-    ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
-    rows = []
-    for i in range(100):
-        rows.append((i, ts, 1, "uniform", 1.0, '{"k": %d}' % (i % 10)))
-    for i in range(100):
-        rows.append((100 + i, ts, 1, "skewed", 1.0, '{"k": 0}'))
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    return str(d)
-
-
-def test_t_closeness_hand_computed(spark, events_dir):
-    r = {
-        row["event_type"]: row.asDict()
-        for row in entry.q_t_closeness(spark, events_dir).collect()
-    }
-    # global: k=0 has 110 of 200; k=1..9 have 10 each. n=100, N=200.
-    # uniform class: c_v=10 for v=0..9.
-    #   TV = 0.5*(|10/100-110/200| + 9*|10/100-10/200|) = 0.5*(0.45+9*0.05)
-    #      = 0.45 -> tv_scaled = 2*n*N*TV = 2*100*200*0.45 = 18000
-    u = r["uniform"]
-    assert u["class_size"] == 100 and u["tv_scaled"] == 18000
-    assert u["t_distance"] == pytest.approx(0.45, abs=0.0)
-    assert not u["t_violation"]
-    # skewed class: c_0=100. TV = 0.5*(|1-0.55| + 9*0.05) = 0.45 as well?
-    #   |100/100 - 110/200| = 0.45; absent v=1..9 contribute 9*0.05 = 0.45
-    #   TV = 0.5*0.9 = 0.45 -> same distance, by construction of the pool
-    s = r["skewed"]
-    assert s["tv_scaled"] == 18000 and not s["t_violation"]
-
-
-def test_t_closeness_violation_fires_on_extreme_skew(spark, tmp_path_factory):
-    # 10 classes: nine uniform over k=0..9, one collapsed on k=0 ->
-    # the collapsed class is far from the (mostly uniform) global pool
-    d = tmp_path_factory.mktemp("tc2")
-    ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
-    rows = []
-    eid = 0
-    for cls in range(9):
-        for i in range(100):
-            rows.append((eid, ts, 1, f"u{cls}", 1.0, '{"k": %d}' % (i % 10)))
-            eid += 1
-    for i in range(100):
-        rows.append((eid, ts, 1, "skewed", 1.0, '{"k": 0}'))
-        eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    r = {
-        row["event_type"]: row.asDict()
-        for row in entry.q_t_closeness(spark, str(d)).collect()
-    }
-    # global: k=0 -> 190/1000; others 90/1000. skewed class (all k=0):
-    # TV = 0.5*(|1 - 0.19| + 9*0.09) = 0.81 > 0.5 -> violation
-    assert r["skewed"]["t_violation"]
-    assert r["skewed"]["t_distance"] == pytest.approx(0.81, abs=1e-12)
-    for cls in range(9):
-        assert not r[f"u{cls}"]["t_violation"]
 
 
 def test_watermark_scan_separates_stamped_docs(spark):
@@ -235,44 +160,6 @@ def test_kendall_tau_matches_bruteforce_pairs(spark):
         assert r["tau_b"] == pytest.approx(expect, rel=1e-12)
 
 
-@pytest.fixture(scope="module")
-def km_events_dir(spark, tmp_path_factory):
-    """Three users with hand-set lifetimes against a day-12 horizon:
-    u1 lives 10d (last day 10 -> censored), u2 lives 4d (last day 4,
-    more than 7d before horizon -> observed churn), u3 lives 4d
-    (days 8..12 -> censored; also sets the horizon)."""
-    d = tmp_path_factory.mktemp("km")
-    day = lambda k: datetime.datetime(2024, 1, 1) + datetime.timedelta(days=k)
-    rows = [
-        (1, day(0), 1, "e", 1.0, "{}"),
-        (2, day(10), 1, "e", 1.0, "{}"),
-        (3, day(0), 2, "e", 1.0, "{}"),
-        (4, day(4), 2, "e", 1.0, "{}"),
-        (5, day(8), 3, "e", 1.0, "{}"),
-        (6, day(12), 3, "e", 1.0, "{}"),
-    ]
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    return str(d)
-
-
-def test_km_survival_hand_computed(spark, km_events_dir):
-    r = {
-        row["life_d"]: row.asDict()
-        for row in entry.q_km_survival(spark, km_events_dir).collect()
-    }
-    # life 4: at-risk {u1,u2,u3}, one churn (u2), one censored (u3)
-    assert r[4]["n_risk"] == 3 and r[4]["n_events"] == 1
-    assert r[4]["n_censored"] == 1
-    assert r[4]["survival"] == pytest.approx(1 - 1 / 3, abs=0.0)
-    # life 10: at-risk {u1} only, censored -> survival carries forward
-    assert r[10]["n_risk"] == 1 and r[10]["n_events"] == 0
-    assert r[10]["survival"] == pytest.approx(1 - 1 / 3, abs=0.0)
-
-
 def test_toxicity_escalation_planted_trends(spark):
     out = {
         r["conv"]: r.asDict()
@@ -358,28 +245,6 @@ def test_mann_whitney_matches_bruteforce(spark, mw_docs_dir):
     assert out["short"]["z"] < -3 and out["short"]["length_drift"]
 
 
-def test_dp_noise_table_is_calibrated():
-    tab = entry._dp_noise_table()
-    assert len(tab) == 256
-    # antisymmetric by construction -> exactly zero-mean quantization
-    assert all(tab[255 - j] == -tab[j] for j in range(256))
-    assert sum(tab) == 0
-    # discrete Laplace at eps=0.5: sd ~ 2.9, table max well bounded
-    assert 5 <= max(tab) <= 20
-
-
-def test_dp_release_is_deterministic_and_clamped(spark):
-    a = entry.q_dp_release(spark, "/root/testdata/sf0.001").toPandas()
-    b = entry.q_dp_release(spark, "/root/testdata/sf0.001").toPandas()
-    a = a.sort_values("event_type").reset_index(drop=True)
-    b = b.sort_values("event_type").reset_index(drop=True)
-    assert a.equals(b)
-    tab = set(entry._dp_noise_table())
-    assert set(a["noise"]).issubset(tab)
-    assert (a["released_count"] >= 0).all()
-    assert (a["released_count"] == (a["true_count"] + a["noise"]).clip(lower=0)).all()
-
-
 def test_bh_fdr_matches_bruteforce_stepup(spark):
     import hashlib
 
@@ -433,56 +298,6 @@ def test_mcnemar_matches_bruteforce(spark):
         if b + c > 0:
             assert r["chi2"] == pytest.approx((b - c) ** 2 / (b + c), rel=1e-12)
             assert r["versions_differ"] == (1000 * (b - c) ** 2 > 3841 * (b + c))
-
-
-@pytest.fixture(scope="module")
-def ts_events_dir(spark, tmp_path_factory):
-    """One event type, 10 days, daily count 10 + 2*day — except day 5
-    spikes to 300 (an outage/bot burst). OLS is dragged by the spike;
-    the Theil-Sen median slope must stay exactly 2.0."""
-    d = tmp_path_factory.mktemp("ts")
-    rows = []
-    eid = 0
-    for day in range(10):
-        n = 300 if day == 5 else 10 + 2 * day
-        ts = datetime.datetime(2024, 3, 1) + datetime.timedelta(days=day)
-        for _ in range(n):
-            rows.append((eid, ts, eid % 7, "burst", 1.0, "{}"))
-            eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    return str(d)
-
-
-def test_theil_sen_robust_to_outlier_day(spark, ts_events_dir):
-    r = entry.q_theil_sen(spark, ts_events_dir).collect()[0]
-    assert r["n_days"] == 10 and r["n_pairs"] == 45
-    # clean pairwise slopes are exactly 2; only the 9 pairs touching
-    # day 5 deviate — the median is untouched by the spike
-    assert r["ts_slope"] == pytest.approx(2.0, abs=0.0)
-
-
-def test_mann_kendall_agrees_with_theil_sen_fixture(spark, ts_events_dir):
-    """On the ts fixture (monotone daily growth + one spike day) the
-    trend must be detected; S and the tie term are recomputed brute
-    force."""
-    r = entry.q_mann_kendall(spark, ts_events_dir).collect()[0]
-    ys = [300 if d == 5 else 10 + 2 * d for d in range(10)]
-    s = sum(
-        (1 if ys[j] > ys[i] else -1 if ys[j] < ys[i] else 0)
-        for i in range(10)
-        for j in range(i + 1, 10)
-    )
-    assert r["s"] == s and r["n_days"] == 10
-    assert r["tie_term18"] == 0  # all daily counts distinct
-    import math
-
-    var18 = 10 * 9 * 25
-    assert r["z"] == pytest.approx((s - 1) / math.sqrt(var18 / 18), rel=1e-12)
-    assert r["trending"]
 
 
 def test_krippendorff_alpha_bounds_and_bruteforce(spark):
@@ -593,38 +408,6 @@ def test_emd_drift_matches_bruteforce(spark, mw_docs_dir):
     # 'mid' sits between the two extremes -> smallest drift
     assert out["mid"]["w1"] < out["short"]["w1"]
     assert out["mid"]["w1"] < out["long"]["w1"]
-
-
-def test_weekday_profile_exposure_correct(spark, ts_events_dir):
-    """On the 10-day fixture starting Fri 2024-03-01 every weekday is
-    observed once or twice; expectations must use per-weekday exposure,
-    not n/7."""
-    rows = entry.q_weekday_profile(spark, ts_events_dir).collect()
-    by_wd = {r["weekday"]: r.asDict() for r in rows}
-    assert len(rows) == 7
-    # exposure: days 0..9 from Fri -> Fri/Sat/Sun appear twice (d_wd=2)
-    total_exposure = sum(r["d_wd"] for r in rows)
-    assert total_exposure == 10
-    assert sorted(r["d_wd"] for r in rows) == [1, 1, 1, 1, 2, 2, 2]
-    for r in rows:
-        assert r["rate_per_day"] == pytest.approx(
-            r["n_events"] / r["d_wd"], rel=1e-12
-        )
-    # the day-5 spike (300 events on one exposure day) must flag
-    spike = [r for r in rows if r["n_events"] >= 300]
-    assert spike and all(r["seasonal_dev"] for r in spike)
-
-
-def test_autocorr_lag1_matches_bruteforce(spark, ts_events_dir):
-    r = entry.q_autocorr_lag1(spark, ts_events_dir).collect()[0]
-    ys = [300 if d == 5 else 10 + 2 * d for d in range(10)]
-    ybar = sum(ys) / len(ys)
-    num = sum((ys[t] - ybar) * (ys[t + 1] - ybar) for t in range(9))
-    den = sum((y - ybar) ** 2 for y in ys)
-    assert r["n_days"] == 10
-    assert r["r1"] == pytest.approx(num / den, rel=1e-12)
-    # one isolated spike -> negative serial correlation
-    assert r["r1"] < 0
 
 
 @pytest.fixture(scope="module")

@@ -14,7 +14,6 @@ distinct values / turns) so the golden is semantically equivalent.
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from qamd_spark import pipeline, report

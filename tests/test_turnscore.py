@@ -82,7 +82,6 @@ def test_token_stats_marker_join_equals_rowwise():
     """The marker-joined tokenizer must equal per-row split(' ') semantics
     on adversarial inputs: empties, consecutive/leading/trailing spaces,
     single row, NUL fallback."""
-    import numpy as np
     import pandas as pd
 
     from qamd_spark import turnscore
